@@ -64,11 +64,11 @@ def _shingle_hash(col: Column, hash_mode: str) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(_MERSENNE_P))
 
 
-def _band_hash(col: Column, hash_mode: str) -> Column:
-    """Bucket key over a band's concatenated signature values: xxhash64
-    (8-byte shuffle key) by default, the md5 hex digest (16-byte,
-    engine-reproducible) in md5 mode."""
-    return F.md5(col) if hash_mode == "md5" else F.xxhash64(col)
+def _band_hash(hash_mode: str) -> str:
+    """SQL function that keys a bucket on a band's concatenated
+    signature values: xxhash64 (8-byte shuffle key) by default, the md5
+    hex digest (16-byte, engine-reproducible) in md5 mode."""
+    return "md5" if hash_mode == "md5" else "xxhash64"
 
 
 def base_hashes(shingle_col: Column, hash_mode: str = "xxhash64") -> Column:
@@ -185,12 +185,17 @@ def minhash_band_keys(
             F.col("_s").isNotNull(), _shingle_hash(F.col("_s"), hash_mode)
         ).alias("_h"),
     )
+    # The signature aggregates and the banding below are SQL text, one
+    # F.expr per aggregate and one for the whole banded array: built
+    # from F.* calls the same trees cost thousands of py4j round-trips
+    # per build (see functions/sql_text.py). Same literal types: every
+    # coefficient and p fit an int, exactly as F.lit typed them.
     sig = exploded.groupBy("_id").agg(
         *[
-            F.coalesce(
-                F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))),
-                F.lit(_MERSENNE_P),
-            ).alias(f"_m{i}")
+            F.expr(
+                f"coalesce(min(pmod(_h * {a} + {b}, {_MERSENNE_P})), "
+                f"{_MERSENNE_P}) AS _m{i}"
+            )
             for i, (a, b) in enumerate(coeffs)
         ]
     )
@@ -198,30 +203,17 @@ def minhash_band_keys(
     # first signature slot equals p has NO shingles at all (all slots are
     # the coalesce sentinel) — banding it would put every empty doc of
     # the corpus into the same bucket in every band
-    sig = sig.filter(F.col("_m0") < F.lit(_MERSENNE_P))
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        _band_hash(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"_m{b * rows_per_band + i}")
-                                    for i in range(rows_per_band)
-                                ],
-                            ),
-                            hash_mode,
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("_id", "band.band_id", "band.band_hash")
+    sig = sig.filter(f"_m0 < {_MERSENNE_P}")
+    band_hash = _band_hash(hash_mode)
+    bands_sql = ", ".join(
+        f"named_struct('band_id', {b}, 'band_hash', {band_hash}(concat_ws(',', "
+        + ", ".join(f"_m{b * rows_per_band + i}" for i in range(rows_per_band))
+        + ")))"
+        for b in range(bands)
+    )
+    banded = sig.selectExpr("_id", f"explode(array({bands_sql})) AS band").select(
+        "_id", "band.band_id", "band.band_hash"
+    )
     return banded.withColumnRenamed("_id", id_col)
 
 

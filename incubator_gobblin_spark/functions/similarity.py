@@ -29,6 +29,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from incubator_gobblin_spark.functions.sql_text import (
+    double_array,
+    double_array_col,
+    ident,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns (double)."""
@@ -177,7 +183,7 @@ def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
                 F.aggregate(
                     F.zip_with(
                         vec,
-                        F.array(*[F.lit(w) for w in plane]),
+                        double_array_col(plane),
                         lambda x, y: x.cast("double") * y,
                     ),
                     F.lit(0.0),
@@ -641,7 +647,7 @@ def ivf_assign(
         F.aggregate(
             F.zip_with(
                 F.col(vec_col),
-                F.array(*[F.lit(x) for x in c]),
+                double_array_col(c),
                 lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
             ),
             F.lit(0.0),
@@ -689,7 +695,7 @@ def ivf_topk(
                     F.aggregate(
                         F.zip_with(
                             col,
-                            F.array(*[F.lit(x) for x in c]),
+                            double_array_col(c),
                             lambda a, b: (a.cast("double") - b)
                             * (a.cast("double") - b),
                         ),
@@ -772,7 +778,7 @@ def semantic_dedup(
                 F.aggregate(
                     F.zip_with(
                         F.col(vec_col),
-                        F.array(*[F.lit(x) for x in c]),
+                        double_array_col(c),
                         lambda a, b: (a.cast("double") - b)
                         * (a.cast("double") - b),
                     ),
@@ -823,69 +829,59 @@ def _pq_argmin(
     sub_dim: int,
     book: list[list[float]],
     lut: list[float] | None,
-    unroll: bool,
 ) -> Column:
-    """Per-subspace nearest-centroid as ONE array_min over
-    (dist, cid[, lut_term]) structs — struct ordering breaks ties on
-    the lower centroid index, and every distance expression appears
-    exactly once in the plan.
+    """Per-subspace nearest centroid as ONE array_min over
+    (dist, cid[, lut_term]) structs, fully unrolled: the ``unroll=True``
+    formulation of :func:`_pq_argmin_sql` (see there for the trade-off).
+    Struct ordering breaks ties on the lower centroid index, and every
+    distance expression appears exactly once in the plan."""
+    structs = []
+    for ci, c in enumerate(book):
+        fields = [
+            _sub_l2(F.col(vec_col), j * sub_dim + 1, c).alias("d"),
+            F.lit(ci).cast("int").alias("c"),
+        ]
+        if lut is not None:
+            fields.append(F.lit(lut[ci]).alias("t"))
+        structs.append(F.struct(*fields))
+    return F.array_min(F.array(*structs))
+
+
+def _pq_argmin_sql(
+    vec_col: str, j: int, sub_dim: int, book: list[list[float]]
+) -> str:
+    """SQL text of subspace ``j``'s nearest centroid as a (d, c)
+    struct: an indexed ``transform`` over the codebook as one
+    nested-array literal, then ``array_min`` (struct ordering breaks
+    distance ties on the lower centroid index).
 
     Two formulations with IDENTICAL results (same IEEE accumulation
-    order, same rounding):
-    - ``unroll=False`` (default): indexed ``transform`` over the
-      codebook as ONE nested-array literal — a single py4j call, where
-      the naive per-centroid ``F.lit`` construction spent 1.5-2s of
-      DRIVER time on py4j round-trips per query build. Tiny expression
-      tree, milliseconds to build and plan; the lambda runs on the
-      interpreted evaluator (~10x slower per row than codegen) — right
-      up to ~10^8-row scans where driver plan/build time dominates.
-    - ``unroll=True``: fully unrolled element_at arithmetic — a large
-      tree Catalyst takes seconds to plan, but the scan is whole-stage
-      codegen. Right for the petabyte ADC/encode pass, where plan time
-      is constant and per-row throughput is everything.
+    order, same rounding, same literal types):
+    - default (``unroll=False``): this text. Callers put every
+      subspace into one ``F.expr``, so q99's whole 8-subspace ADC sum
+      costs 3 py4j commands and its full build 167 (measured), where
+      the same tree built from ``F.*`` calls sent 5,800 (3-13 per
+      call or Column operator, and ``F.lit(list)`` is one ``lit`` per
+      element). Tiny expression
+      tree, milliseconds to plan; the lambda runs on the interpreted
+      evaluator (~10x slower per row than codegen) — right up to
+      ~10^8-row scans where driver build time dominates.
+    - ``unroll=True`` (:func:`_pq_argmin`): fully unrolled element_at
+      arithmetic — a large tree Catalyst takes seconds to plan, but
+      the scan is whole-stage codegen. Right for the petabyte
+      ADC/encode pass, where plan time is constant and per-row
+      throughput is everything.
     """
-    sv = F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim)
-    if unroll:
-        structs = []
-        for ci, c in enumerate(book):
-            fields = [
-                _sub_l2(F.col(vec_col), j * sub_dim + 1, c).alias("d"),
-                F.lit(ci).cast("int").alias("c"),
-            ]
-            if lut is not None:
-                fields.append(F.lit(lut[ci]).alias("t"))
-            structs.append(F.struct(*fields))
-        return F.array_min(F.array(*structs))
-    book_arr = F.lit([[float(x) for x in c] for c in book])
-
-    def _score(v: Column, i: Column) -> Column:
-        d = F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        sv,
-                        v,
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            6,
-        )
-        # struct ordering (d, c): ties on distance break to the lower
-        # centroid index, exactly like the unrolled path
-        return F.struct(d.alias("d"), i.cast("int").alias("c"))
-
-    best = F.array_min(F.transform(book_arr, _score))
-    if lut is None:
-        return best
-    lut_arr = F.lit([float(x) for x in lut])
-    return F.struct(
-        best["d"].alias("d"),
-        best["c"].alias("c"),
-        F.element_at(lut_arr, best["c"] + 1).alias("t"),
+    book_sql = "array(" + ", ".join(double_array(c) for c in book) + ")"
+    sv = f"slice({ident(vec_col)}, {j * sub_dim + 1}, {sub_dim})"
+    diff = "(CAST(_pq_a AS DOUBLE) - _pq_b)"
+    ssq = (
+        f"aggregate(zip_with({sv}, _pq_v, (_pq_a, _pq_b) -> {diff} * {diff}), "
+        "0.0D, (_pq_acc, _pq_x) -> _pq_acc + _pq_x)"
+    )
+    return (
+        f"array_min(transform({book_sql}, (_pq_v, _pq_i) -> named_struct("
+        f"'d', round(sqrt({ssq}), 6), 'c', CAST(_pq_i AS INT))))"
     )
 
 
@@ -904,7 +900,7 @@ def pq_encode(
 
     Determinism: sub-distances round to 6 dp, argmin ties go to the
     lowest centroid index. ``unroll`` picks the plan/throughput
-    trade-off (see :func:`_pq_argmin`); results are identical.
+    trade-off (see :func:`_pq_argmin_sql`); results are identical.
 
     Scale: a pure Column projection against literal codebooks — no
     shuffle, no join, no UDF; encode the corpus ONCE with
@@ -914,11 +910,23 @@ def pq_encode(
     if m == 0:
         raise ValueError("codebooks must be non-empty")
     sub_dim = len(codebooks[0][0])
-    codes = [
-        _pq_argmin(vec_col, j, sub_dim, book, None, unroll)["c"]
-        for j, book in enumerate(codebooks)
-    ]
-    return vectors.select(F.col(id_col), F.array(*codes).alias("codes"))
+    if unroll:
+        codes = F.array(
+            *[
+                _pq_argmin(vec_col, j, sub_dim, book, None)["c"]
+                for j, book in enumerate(codebooks)
+            ]
+        )
+    else:
+        codes = F.expr(
+            "array("
+            + ", ".join(
+                f"{_pq_argmin_sql(vec_col, j, sub_dim, book)}.c"
+                for j, book in enumerate(codebooks)
+            )
+            + ")"
+        )
+    return vectors.select(F.col(id_col), codes.alias("codes"))
 
 
 def pq_topk(
@@ -943,7 +951,7 @@ def pq_topk(
     disagree with SQL on .5e-7 boundaries), and the final sum runs
     through an exact decimal — so both engines produce bit-identical
     approx_dist. ``unroll`` picks the plan/throughput trade-off (see
-    :func:`_pq_argmin`); results are identical either way.
+    :func:`_pq_argmin_sql`); results are identical either way.
 
     Scale: the distance lookup table is m×k literals folded into the
     projection (a real deployment broadcasts it; either way no join
@@ -963,27 +971,38 @@ def pq_topk(
             Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP)
         )
 
-    terms = []
+    luts = []
     for j, book in enumerate(codebooks):
         qsub = query[j * sub_dim : (j + 1) * sub_dim]
-        lut = [
+        luts.append([
             r6(
                 r6(math.sqrt(sum((a - b) * (a - b) for a, b in zip(qsub, c))))
                 ** 2
             )
             for c in book
+        ])
+    if unroll:
+        terms = [
+            _pq_argmin(vec_col, j, sub_dim, book, lut)["t"].cast("decimal(18,6)")
+            for j, (book, lut) in enumerate(zip(codebooks, luts))
         ]
-        terms.append(
-            _pq_argmin(vec_col, j, sub_dim, book, lut, unroll)["t"].cast(
-                "decimal(18,6)"
+        total = terms[0]
+        for t in terms[1:]:
+            total = total + t
+        total = total.cast("double")
+    else:
+        # the same left-to-right decimal sum, as one expression
+        total = F.expr(
+            "CAST("
+            + " + ".join(
+                f"CAST(element_at({double_array(lut)}, "
+                f"{_pq_argmin_sql(vec_col, j, sub_dim, book)}.c + 1) AS DECIMAL(18,6))"
+                for j, (book, lut) in enumerate(zip(codebooks, luts))
             )
+            + " AS DOUBLE)"
         )
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
     out = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        total.cast("double").alias("approx_dist"),
+        F.col(id_col).alias("neighbor_id"), total.alias("approx_dist")
     )
     if exclude_id is not None:
         out = out.filter(F.col("neighbor_id") != exclude_id)
@@ -1031,7 +1050,10 @@ def ivfpq_topk(
         for ci, c in enumerate(centroids)
     )
     probed = [ci for _, ci in dists[:n_probe]]
-    cell = _pq_argmin(vec_col, 0, dim, centroids, None, unroll)["c"]
+    if unroll:
+        cell = _pq_argmin(vec_col, 0, dim, centroids, None)["c"]
+    else:
+        cell = F.expr(f"{_pq_argmin_sql(vec_col, 0, dim, centroids)}.c")
     cand = vectors.filter(cell.isin(probed))
     return pq_topk(
         cand,

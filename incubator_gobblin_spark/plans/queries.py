@@ -33,6 +33,7 @@ from incubator_gobblin_spark.functions import (
     sketches,
     text,
 )
+from incubator_gobblin_spark.functions.sql_text import double_array_col
 from incubator_gobblin_spark.operators import converters as C
 from incubator_gobblin_spark.operators import dedup, joins, retention
 from incubator_gobblin_spark.operators.watermark import WatermarkInterval
@@ -1893,7 +1894,7 @@ def q55_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.aggregate(
                     F.zip_with(
                         F.col("embedding"),
-                        F.array(*[F.lit(x) for x in c]),
+                        double_array_col(c),
                         lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
                     ),
                     F.lit(0.0),
@@ -5178,7 +5179,7 @@ def q132_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.aggregate(
                     F.zip_with(
                         F.col("embedding"),
-                        F.array(*[F.lit(x) for x in c]),
+                        double_array_col(c),
                         lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
                     ),
                     F.lit(0.0),

@@ -337,3 +337,28 @@ def test_bench_artifact_preserves_unknown_keys(tmp_path):
     p.write_text(json.dumps(merged))
     again = merge_local_artifact(json.loads(p.read_text()), out)
     assert again == merged
+
+
+def test_bench_delta_only_at_the_same_core_count():
+    """bench.py's round-over-round delta compares like with like: a
+    previous artifact from another core count, or one that does not
+    record its core count, gives no delta but a recorded reason, and
+    a rewrite drops the stale delta of an earlier run."""
+    from bench import delta_vs_prev, merge_local_artifact
+
+    out = {"value": 3.0, "queries": {"q1": 1.0, "q2": 2.0}, "cpus": 8}
+    prev = {"value": 2.0, "queries": {"q1": 0.5, "q2": 1.5}, "cpus": 8}
+    d = delta_vs_prev(out, prev, "BENCH_r14_c8.json")
+    assert d["delta_vs"] == "BENCH_r14_c8.json" and "delta_skipped" not in d
+    assert d["delta_total"] == 1.0 and d["delta_queries"] == {"q1": 0.5, "q2": 0.5}
+    assert d["shared_ratio_vs_prev"] == 1.5
+    no_cpus = {k: v for k, v in prev.items() if k != "cpus"}
+    for other, why in (({**prev, "cpus": 32}, "ran on 32 cpus"),
+                       (no_cpus, "records no cpus")):
+        skipped = delta_vs_prev(out, other, "BENCH_r14.json")
+        assert skipped == {
+            "delta_skipped": f"BENCH_r14.json {why}, this run on 8"
+        }
+    merged = merge_local_artifact({**out, **d, "note": "kept"}, {**out, **skipped})
+    assert "shared_ratio_vs_prev" not in merged and "delta_vs" not in merged
+    assert merged["note"] == "kept" and "delta_skipped" in merged
