@@ -824,27 +824,24 @@ def _sub_l2(vec: Column, start: int, centroid: list[float]) -> Column:
 
 
 def _pq_argmin(
-    vec_col: str,
-    j: int,
-    sub_dim: int,
-    book: list[list[float]],
-    lut: list[float] | None,
+    vec_col: str, j: int, sub_dim: int, book: list[list[float]]
 ) -> Column:
-    """Per-subspace nearest centroid as ONE array_min over
-    (dist, cid[, lut_term]) structs, fully unrolled: the ``unroll=True``
-    formulation of :func:`_pq_argmin_sql` (see there for the trade-off).
-    Struct ordering breaks ties on the lower centroid index, and every
+    """Per-subspace nearest centroid as ONE array_min over (dist, cid)
+    structs, fully unrolled: the ``unroll=True`` formulation of
+    :func:`_pq_argmin_sql` (see there for the trade-off). Struct
+    ordering breaks ties on the lower centroid index, and every
     distance expression appears exactly once in the plan."""
-    structs = []
-    for ci, c in enumerate(book):
-        fields = [
-            _sub_l2(F.col(vec_col), j * sub_dim + 1, c).alias("d"),
-            F.lit(ci).cast("int").alias("c"),
-        ]
-        if lut is not None:
-            fields.append(F.lit(lut[ci]).alias("t"))
-        structs.append(F.struct(*fields))
-    return F.array_min(F.array(*structs))
+    return F.array_min(
+        F.array(
+            *[
+                F.struct(
+                    _sub_l2(F.col(vec_col), j * sub_dim + 1, c).alias("d"),
+                    F.lit(ci).cast("int").alias("c"),
+                )
+                for ci, c in enumerate(book)
+            ]
+        )
+    )
 
 
 def _pq_argmin_sql(
@@ -857,12 +854,11 @@ def _pq_argmin_sql(
 
     Two formulations with IDENTICAL results (same IEEE accumulation
     order, same rounding, same literal types):
-    - default (``unroll=False``): this text. Callers put every
-      subspace into one ``F.expr``, so q99's whole 8-subspace ADC sum
-      costs 3 py4j commands and its full build 167 (measured), where
-      the same tree built from ``F.*`` calls sent 5,800 (3-13 per
-      call or Column operator, and ``F.lit(list)`` is one ``lit`` per
-      element). Tiny expression
+    - default (``unroll=False``): this text, every subspace in one
+      ``F.expr`` (:func:`_pq_codes`), so q99's full build costs ~170
+      py4j commands (measured), where the same tree built from ``F.*``
+      calls sent 5,800 (3-13 per call or Column operator, and
+      ``F.lit(list)`` is one ``lit`` per element). Tiny expression
       tree, milliseconds to plan; the lambda runs on the interpreted
       evaluator (~10x slower per row than codegen) — right up to
       ~10^8-row scans where driver build time dominates.
@@ -882,6 +878,30 @@ def _pq_argmin_sql(
     return (
         f"array_min(transform({book_sql}, (_pq_v, _pq_i) -> named_struct("
         f"'d', round(sqrt({ssq}), 6), 'c', CAST(_pq_i AS INT))))"
+    )
+
+
+def _pq_codes(
+    vec_col: str, sub_dim: int, codebooks: list[list[list[float]]], unroll: bool
+) -> Column:
+    """array<int> of each subspace's nearest-centroid index, in the
+    formulation ``unroll`` picks (:func:`_pq_argmin_sql`). Project it
+    once and index into it (``codes[j]``): each argmin is then
+    evaluated once per row."""
+    if unroll:
+        return F.array(
+            *[
+                _pq_argmin(vec_col, j, sub_dim, book)["c"]
+                for j, book in enumerate(codebooks)
+            ]
+        )
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"{_pq_argmin_sql(vec_col, j, sub_dim, book)}.c"
+            for j, book in enumerate(codebooks)
+        )
+        + ")"
     )
 
 
@@ -910,22 +930,7 @@ def pq_encode(
     if m == 0:
         raise ValueError("codebooks must be non-empty")
     sub_dim = len(codebooks[0][0])
-    if unroll:
-        codes = F.array(
-            *[
-                _pq_argmin(vec_col, j, sub_dim, book, None)["c"]
-                for j, book in enumerate(codebooks)
-            ]
-        )
-    else:
-        codes = F.expr(
-            "array("
-            + ", ".join(
-                f"{_pq_argmin_sql(vec_col, j, sub_dim, book)}.c"
-                for j, book in enumerate(codebooks)
-            )
-            + ")"
-        )
+    codes = _pq_codes(vec_col, sub_dim, codebooks, unroll)
     return vectors.select(F.col(id_col), codes.alias("codes"))
 
 
@@ -981,29 +986,22 @@ def pq_topk(
             )
             for c in book
         ])
-    if unroll:
-        terms = [
-            _pq_argmin(vec_col, j, sub_dim, book, lut)["t"].cast("decimal(18,6)")
-            for j, (book, lut) in enumerate(zip(codebooks, luts))
-        ]
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        total = total.cast("double")
-    else:
-        # the same left-to-right decimal sum, as one expression
-        total = F.expr(
-            "CAST("
-            + " + ".join(
-                f"CAST(element_at({double_array(lut)}, "
-                f"{_pq_argmin_sql(vec_col, j, sub_dim, book)}.c + 1) AS DECIMAL(18,6))"
-                for j, (book, lut) in enumerate(zip(codebooks, luts))
-            )
-            + " AS DOUBLE)"
-        )
-    out = vectors.select(
-        F.col(id_col).alias("neighbor_id"), total.alias("approx_dist")
+    coded = vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        _pq_codes(vec_col, sub_dim, codebooks, unroll).alias("_pq_codes"),
     )
+    # left-to-right exact decimal sum of the looked-up terms, as one
+    # expression
+    total = F.expr(
+        "CAST("
+        + " + ".join(
+            f"CAST(element_at({double_array(lut)}, _pq_codes[{j}] + 1) "
+            "AS DECIMAL(18,6))"
+            for j, lut in enumerate(luts)
+        )
+        + " AS DOUBLE)"
+    )
+    out = coded.select("neighbor_id", total.alias("approx_dist"))
     if exclude_id is not None:
         out = out.filter(F.col("neighbor_id") != exclude_id)
     return out.orderBy(F.col("approx_dist").asc(), F.col("neighbor_id").asc()).limit(k)
@@ -1050,10 +1048,7 @@ def ivfpq_topk(
         for ci, c in enumerate(centroids)
     )
     probed = [ci for _, ci in dists[:n_probe]]
-    if unroll:
-        cell = _pq_argmin(vec_col, 0, dim, centroids, None)["c"]
-    else:
-        cell = F.expr(f"{_pq_argmin_sql(vec_col, 0, dim, centroids)}.c")
+    cell = _pq_codes(vec_col, dim, [centroids], unroll)[0]
     cand = vectors.filter(cell.isin(probed))
     return pq_topk(
         cand,

@@ -13,8 +13,8 @@ conversion are all Spark built-ins; WorkUnits are Spark's own input
 splits. What the engine adds is (a) nanosecond-timestamp tolerance for
 parquet written by pandas/arrow, (b) date-partition-layout pruning
 helpers that turn a watermark interval into partition-path filters,
-(c) parquet schemas converted from the footer on the driver instead of
-by a schema-inference Spark job.
+(c) a single file's parquet schema converted from its footer on the
+driver instead of by a schema-inference Spark job.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ from pyspark.sql.types import StructType
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 _NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
 _VARIANT_CONF = "spark.sql.parquet.ignoreVariantAnnotation"
-# footer key-value entry where Spark's writer keeps the exact Spark schema
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 # Fan-out is pointless for dimension-sized tables: the repartition
 # shuffle stage would cost more than single-task processing saves.
@@ -47,10 +45,8 @@ _FAN_OUT_MIN_ROW_BYTES = 128
 
 def _parquet_footer(path: str):
     """(nanos-timestamp columns, total rows, total row groups, avg row
-    bytes, schema file) from parquet footers only — no data read,
-    driver-side, O(files). The schema file is the one data file whose
-    footer holds the whole input's Spark schema (:func:`_schema_file`),
-    or None."""
+    bytes) from parquet footers only — no data read, driver-side,
+    O(files)."""
     try:
         import pyarrow.dataset as ds
         import pyarrow as pa
@@ -64,69 +60,17 @@ def _parquet_footer(path: str):
         rows = 0
         row_groups = 0
         total_bytes = 0
-        footers = {}
         for frag in dataset.get_fragments():
             md = frag.metadata
-            footers[os.path.abspath(frag.path)] = md
             rows += md.num_rows
             row_groups += md.num_row_groups
             total_bytes += sum(
                 md.row_group(i).total_byte_size for i in range(md.num_row_groups)
             )
         avg_row_bytes = (total_bytes / rows) if rows else 0.0
-        return ns_cols, rows, row_groups, avg_row_bytes, _schema_file(path, footers)
+        return ns_cols, rows, row_groups, avg_row_bytes
     except Exception:  # pragma: no cover - pyarrow always present in-container
-        return [], None, None, None, None
-
-
-def _spark_lists(name: str) -> bool:
-    """Whether Spark's file listing keeps a directory entry (hidden
-    names dropped, parquet summary files kept), as Spark's
-    ``HadoopFSUtils.shouldFilterOutPathName``."""
-    hidden = (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-    return not hidden or name.startswith(("_common_metadata", "_metadata"))
-
-
-def _schema_file(path: str, footers: dict) -> str | None:
-    """The data file whose footer is ``path``'s whole Spark schema, or
-    None where only Spark's schema inference can say.
-
-    A single file is its own schema file. A directory qualifies when
-    Spark's listing of it is exactly the data files whose ``footers``
-    (absolute path -> pyarrow FileMetaData) were read, which rules out
-    subdirectories (partition columns) and the summary files Spark
-    lists but pyarrow skips. And every footer must carry the same
-    parquet schema and the same Spark row metadata, so inference, which
-    reads one file's footer, can only read this schema. Anything else
-    (a URI, a list, partition dirs, mixed schemas) returns None."""
-    if not isinstance(path, str):
-        return None
-    if os.path.isfile(path):
-        return path
-    if not os.path.isdir(path):
-        return None
-    listed = sorted(
-        os.path.join(os.path.abspath(path), n)
-        for n in os.listdir(path)
-        if _spark_lists(n)
-    )
-    if not listed or listed != sorted(footers):
-        return None
-
-    def spark_schema(md):
-        return (md.metadata or {}).get(_SPARK_ROW_METADATA)
-
-    first = footers[listed[0]]
-    if any(
-        not md.schema.equals(first.schema) or spark_schema(md) != spark_schema(first)
-        for md in footers.values()
-    ):
-        return None
-    return listed[0]
+        return [], None, None, None
 
 
 def _footer_schema(spark: SparkSession, file: str) -> StructType | None:
@@ -199,16 +143,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     are fanned out (see :func:`fan_out`); dimension-sized tables are
     left alone so broadcast-join sides stay shuffle-free.
 
-    The schema comes from a parquet footer read on the driver
-    (:func:`_footer_schema`), not from Spark's inference, which
-    launches a Spark job per call only to read that same footer. This
-    holds for a single file, or a flat directory whose data files all
-    carry one identical schema (:func:`_schema_file`). Any other input
-    (partition dirs, summary files, mixed schemas, lists) falls back
-    to ``spark.read.parquet``'s own inference. Both give the same
-    schema and rows; nothing is cached, every call reads its footer.
+    A single local file's schema comes from its footer, read on the
+    driver (:func:`_footer_schema`), not from Spark's inference, which
+    launches a Spark job per call only to read that same footer. Any
+    other input (a directory, a URI, a list) falls back to
+    ``spark.read.parquet``'s own inference. Both give the same schema
+    and rows; nothing is cached, every call reads its footer.
     """
-    ns_cols, rows, row_groups, avg_row_bytes, schema_file = _parquet_footer(path)
+    ns_cols, rows, row_groups, avg_row_bytes = _parquet_footer(path)
     # TIMESTAMP without isAdjustedToUTC must surface as TIMESTAMP (ltz),
     # not TIMESTAMP_NTZ: the engine's lake semantics (and the DuckDB
     # oracle) are timezone-free instants under a UTC session, where the
@@ -223,7 +165,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             prev = spark.conf.get(_NANOS_CONF, "false")
             spark.conf.set(_NANOS_CONF, "true")
         try:
-            schema = _footer_schema(spark, schema_file) if schema_file else None
+            single = isinstance(path, str) and os.path.isfile(path)
+            schema = _footer_schema(spark, path) if single else None
             reader = spark.read if schema is None else spark.read.schema(schema)
             df = reader.parquet(path)
         finally:

@@ -98,7 +98,6 @@ def _inferred(monkeypatch, spark, path):
 
 
 def _assert_footer_parity(monkeypatch, spark, path, plain=True):
-    assert files._parquet_footer(path)[4] is not None
     with _job_group(spark, "footer-schema") as jobs:
         df = files.read_parquet(spark, path)
         assert jobs() == []  # no schema-inference job
@@ -163,9 +162,8 @@ def test_footer_schema_nested_and_decimal(spark, tmp_path, monkeypatch):
     _assert_footer_parity(monkeypatch, spark, path)
 
 
-def test_footer_schema_spark_written_directory(spark, tmp_path, monkeypatch):
-    path = str(tmp_path / "spark_dir")
-    spark.range(0, 40, 1, 4).selectExpr(
+def _spark_written(spark, path, partitions):
+    spark.range(0, 40, 1, partitions).selectExpr(
         "id",
         "CAST(id AS DECIMAL(10, 3)) AS amount",
         "named_struct('a', id, 'b', CAST(id AS STRING)) AS s",
@@ -173,14 +171,22 @@ def test_footer_schema_spark_written_directory(spark, tmp_path, monkeypatch):
         "array(id, id + 1) AS xs",
         "CAST(id AS TIMESTAMP) AS ts",
     ).write.parquet(path)
-    data = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    assert len(data) > 1
-    meta = pq.read_metadata(os.path.join(path, data[0])).metadata
-    assert files._SPARK_ROW_METADATA in meta  # the schema Spark wrote
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def test_footer_schema_spark_written_file(spark, tmp_path, monkeypatch):
+    d = str(tmp_path / "spark_one")
+    (data,) = _spark_written(spark, d, 1)
+    path = os.path.join(d, data)
+    meta = pq.read_metadata(path).metadata
+    # the exact Spark schema Spark's writer keeps in the footer
+    assert b"org.apache.spark.sql.parquet.row.metadata" in meta
     _assert_footer_parity(monkeypatch, spark, path)
 
 
-def test_partitioned_and_mixed_directories_keep_inference(spark, tmp_path, monkeypatch):
+def test_directories_keep_inference(spark, tmp_path, monkeypatch):
+    flat = str(tmp_path / "spark_dir")
+    assert len(_spark_written(spark, flat, 4)) > 1
     hive = str(tmp_path / "hive")
     spark.range(10).selectExpr("id", "id % 2 AS part").write.partitionBy(
         "part"
@@ -192,23 +198,13 @@ def test_partitioned_and_mixed_directories_keep_inference(spark, tmp_path, monke
         pa.table({"id": pa.array([2], pa.int64()), "extra": ["x"]}),
         str(mixed / "b.parquet"),
     )
-    for path in (hive, str(mixed)):
-        assert files._parquet_footer(path)[4] is None
+    for path in (flat, hive, str(mixed)):
         with _job_group(spark, "inference") as jobs:
             df = files.read_parquet(spark, path)
             assert jobs() != []  # Spark's own schema inference ran
         ref = _inferred(monkeypatch, spark, path)
         assert df.schema == ref.schema
         assert df.orderBy("id").collect() == ref.orderBy("id").collect()
-
-
-def test_summary_file_keeps_inference(tmp_path):
-    d = tmp_path / "with_summary"
-    d.mkdir()
-    t = pa.table({"id": pa.array([1], pa.int64())})
-    pq.write_table(t, str(d / "part-0.parquet"))
-    pq.write_metadata(t.schema, str(d / "_common_metadata"))
-    assert files._parquet_footer(str(d))[4] is None
 
 
 # ---- plan-build budget ------------------------------------------------------
