@@ -855,7 +855,7 @@ def _pq_argmin_sql(
     Two formulations with IDENTICAL results (same IEEE accumulation
     order, same rounding, same literal types):
     - default (``unroll=False``): this text, every subspace in one
-      ``F.expr`` (:func:`_pq_codes`), so q99's full build costs ~170
+      ``F.expr`` (:func:`_pq_codes`), so q99's full build costs 191
       py4j commands (measured), where the same tree built from ``F.*``
       calls sent 5,800 (3-13 per call or Column operator, and
       ``F.lit(list)`` is one ``lit`` per element). Tiny expression
