@@ -14,13 +14,19 @@ ops (the data writes already happened into staging — Spark's committer
 made those atomic per task); every step is IDEMPOTENT so replay after
 a crash at any point converges. The store is a JSON document per
 sequence, deleted only after the last step succeeds.
+
+Lake log and metadata versions (Delta, Iceberg) publish through
+:func:`put_if_absent`, the one create-if-absent primitive shared by
+every lake writer.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass, field
 
 
@@ -147,3 +153,42 @@ def replay_unfinished(store: CommitSequenceStore) -> list[str]:
         _run(name, steps, done, store)
         replayed.append(name)
     return replayed
+
+
+def put_if_absent(path: str, data: str) -> bool:
+    """Create ``path`` holding ``data`` only if no file has that name
+    yet; False means another writer holds it. This is the publish step
+    of every lake commit: Delta ``NNN.json`` and Iceberg
+    ``vN.metadata.json`` versions must be created put-if-absent
+    (delta-io PROTOCOL.md; the Iceberg file-system catalog), and two
+    writers that read the same head race for the same name.
+
+    ``data`` is written in full to ``<path>.tmp-<pid>-<unique>``,
+    fsynced, then hard-linked to ``path``. On POSIX ``link`` fails with
+    EEXIST if the name is taken, and otherwise the target appears
+    atomically complete. ``O_EXCL`` would refuse a taken name too, but
+    it creates the file empty and fills it afterwards, so a concurrent
+    reader could replay a partial version. EEXIST therefore only ever
+    means a lost race: the caller re-reads the head and retries at the
+    next version or aborts with a conflict error. Any other error
+    propagates.
+
+    ``data`` arrives serialized, so an encoding error is raised before
+    any file exists, and the temp file is removed on every outcome.
+    Log cleanup skips names containing ``.tmp-``. ``os.link`` is called
+    through the module attribute so tests and tracers can wrap it.
+    """
+    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:12]}"
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(data)
+            fh.flush()
+            os.fsync(fh.fileno())
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            return False
+        return True
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)

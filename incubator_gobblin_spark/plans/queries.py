@@ -53,211 +53,8 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# The driver's correctness artifact records exactly the first 50
-# registry entries each round, so iteration order decides which queries
-# touch the hard gate. Round-14 rotation (VERDICT r13 ask 2, exact):
-# 1. the five r10-stale deliberate deferrals from r13
-#    (q13/q15/q16/q18/q48 — last driver row r10, age 4 at the r14 run,
-#    rotating back exactly as the r13 rationale promised),
-# 2. seven driver-mandated EARLY refreshes (_FORCED_REFRESH below):
-#    the six r13-rewritten queries VERDICT r13 ask 2 names whose
-#    driver rows predate their rewrite (q119/q120 one-pass
-#    funnel/cohort, q151/q152 one-pass changelog, q153/q154 replicate
-#    staging) plus q52, whose in-bucket re-rank was rewritten as an
-#    Arrow stage THIS round — the r13 coverage-gap lesson applied
-#    before the gap opens,
-# 3. 38 of the 50 r11-stale queries (last driver row r11 — age 3 at
-#    the r14 run).
-# 62 candidates for 50 slots: twelve r11-stale deferrals are chosen
-# DELIBERATELY, each one's machinery re-proven by another query
-# INSIDE this window (the r12-blessed pattern), recorded in
-# _DEFERRALS below so the staleness test
-# (tests/test_window_rotation.py) can hold the rotation to its own
-# rule. The bulge past the steady-state cap of 5 is exactly the
-# seven forced early refreshes (5 + 7 = 12) and amortizes back:
-# r15 faces 12 age-4 + 44 age-3 (50 minus the six r13-rewrites
-# refreshed here) = 56 candidates -> 6 deferrals, r16 returns to 5.
-# All twelve stay oracle-proven locally on every pytest run
-# (tests/test_oracle_parity.py) and rotate back r15 at the front of
-# the window.
-_WINDOW_HEAD = [
-    # --- the five r10-stale deferrals, back in-window per the r13
-    # rationale (last driver row r10) ---
-    "q13_running_total",
-    "q15_rollup",
-    "q16_cube",
-    "q18_union",
-    "q48_oldest_k",
-    # --- driver-mandated early refreshes (VERDICT r13 ask 2 + the
-    # r14 q52 rewrite; rationales in _FORCED_REFRESH) ---
-    "q119_funnel_steps",
-    "q120_cohort_retention",
-    "q151_iceberg_changelog_agg",
-    "q152_iceberg_changelog_updates_agg",
-    "q153_replicate_iceberg_to_delta_agg",
-    "q154_replicate_delta_to_iceberg_agg",
-    "q52_embedding_neardup_lsh",
-    # --- r11-stale block (38 of 50; the twelve deferrals in
-    # _DEFERRALS below) ---
-    "q57_orc_scan_agg",
-    "q58_envelope_decode_agg",
-    "q62_winnow_fingerprints",
-    "q63_minhash_covers_exact_dups",
-    "q64_simhash_covers_exact_dups",
-    "q65_chunk_documents",
-    "q66_pii_redaction",
-    "q67_ivf_topk",
-    "q68_srplsh_covers_identical",
-    "q69_lsh_topk_self_retrieval",
-    "q70_decontamination",
-    "q72_hot_ngrams",
-    "q74_stratified_sample",
-    "q75_bm25_search",
-    "q77_stats_moments",
-    "q78_multimodal_binary_stats",
-    "q79_skew_hot_keys",
-    "q80_dedup_clusters",
-    "q81_fuzzy_dedup_keep",
-    "q82_cap_per_source",
-    "q84_pack_sequences",
-    "q88_manifest_snapshot_agg",
-    "q89_dedup_lines",
-    "q90_trigram_logprob",
-    "q92_quality_classifier",
-    "q94_mixture_materialize",
-    "q96_dsir_weights",
-    "q97_perplexity_buckets",
-    "q98_lake_changes",
-    "q99_pq_topk",
-    "q106_curation_pipeline",
-    "q128_iceberg_posdelete_agg",
-    "q129_rest_http_ingest_agg",
-    "q130_iceberg_incremental_scan",
-    "q131_delta_dv_agg",
-    "q132_cluster_balanced_sample",
-    "q144_iceberg_upsert_agg",
-    "q149_kafka_cdc_upsert_agg",
-]
-
-# Driver-mandated EARLY refreshes (age <= 2 at the upcoming run):
-# window slots spent on queries that would not otherwise be due,
-# because their implementation changed after their last driver row.
-# Each entry justifies exactly one deferral past the steady-state cap
-# of 5 (see tests/test_window_rotation.py) — the slot arithmetic is
-# zero-sum, so an early refresh always displaces one age-3 query.
-_FORCED_REFRESH: dict[str, str] = {
-    "q119_funnel_steps": (
-        "VERDICT r13 ask 2: rewritten r13 (one-scan array-HOF funnel); "
-        "last driver row predates the rewrite"
-    ),
-    "q120_cohort_retention": (
-        "VERDICT r13 ask 2: rewritten r13 (map-side dedup + window min, "
-        "self-join removed); last driver row predates the rewrite"
-    ),
-    "q151_iceberg_changelog_agg": (
-        "VERDICT r13 ask 2: rewritten r13 (one-pass shared-parent "
-        "changelog recovery); last driver row predates the rewrite"
-    ),
-    "q152_iceberg_changelog_updates_agg": (
-        "VERDICT r13 ask 2: rewritten r13 (window-flag update pairing "
-        "over the one-pass parent); last driver row predates the rewrite"
-    ),
-    "q153_replicate_iceberg_to_delta_agg": (
-        "VERDICT r13 ask 2: staging writes rebalanced r13 (Finding 2); "
-        "last driver row predates the change"
-    ),
-    "q154_replicate_delta_to_iceberg_agg": (
-        "VERDICT r13 ask 2: staging writes rebalanced r13 (Finding 2); "
-        "last driver row predates the change"
-    ),
-    "q52_embedding_neardup_lsh": (
-        "in-bucket pair re-rank rewritten THIS round as a mapInArrow "
-        "stage (bit-exact parity proven locally at 3 SFs); the r13 "
-        "coverage-gap lesson says rewrites get a driver row the same "
-        "round"
-    ),
-}
-
-# Deliberate out-of-window deferrals for THIS round: name -> the
-# in-window queries that re-prove the same machinery. The rotation
-# invariant test (tests/test_window_rotation.py) permits a query's
-# driver staleness to reach 4 rounds ONLY when it was deferred here
-# with a rationale; anything past that fails the suite. All entries
-# must rotate back in-window next round (the r12 precedent:
-# q39/q40/q41/q46/q86 deferred at r12, in-window r13; the r13
-# deferrals q13/q15/q16/q18/q48 in-window above).
-_DEFERRALS: dict[str, str] = {
-    "q100_ivfpq_topk": (
-        "q67_ivf_topk (in-window) drives the coarse-cell "
-        "literal-centroid assign/top-k kernel and q99_pq_topk "
-        "(in-window) the PQ codebook ADC re-rank; q100 composes "
-        "exactly those two kernels"
-    ),
-    "q34_ann_lsh_topk": (
-        "q69_lsh_topk_self_retrieval (in-window) drives the same "
-        "similarity.lsh_topk banding + candidate join + re-rank kernel "
-        "under an oracle-checked coverage invariant; q52 (in-window) "
-        "drives the shared SRP band-key projection rewritten r13/r14"
-    ),
-    "q60_time_partition_tree_rollup": (
-        "q15_rollup and q16_cube (in-window, returning) drive the same "
-        "Expand+grouping-id rollup aggregation; the year/month/day "
-        "column derivation is plain codegen'd date math"
-    ),
-    "q85_scd2_intervals": (
-        "q13_running_total (in-window, returning) drives the same "
-        "single-shuffle WindowExec machinery; SCD2 validity intervals "
-        "are a lead()-over-key window"
-    ),
-    "q91_kafka_roundtrip_agg": (
-        "q149_kafka_cdc_upsert_agg (in-window) drives the same "
-        "mock-Kafka produce/offset-plan/drain wire path end to end, "
-        "plus the CDC upsert on top of it"
-    ),
-    "q124_iceberg_roundtrip_agg": (
-        "q144_iceberg_upsert_agg (in-window) publishes and reads back "
-        "the same manifest-committed Iceberg layout (upsert = roundtrip "
-        "+ merge); q151/q152 (in-window) drive the snapshot/manifest "
-        "read machinery"
-    ),
-    "q76_group_quantiles": (
-        "q48_oldest_k (in-window, returning) drives the same in-group "
-        "rank-and-pick WindowExec kernel; value-at-index quantiles are "
-        "rank picks at computed indices"
-    ),
-    "q95_multimodal_decode_roundtrip": (
-        "q78_multimodal_binary_stats (in-window) drives the same "
-        "Arrow-batched media-column mapInPandas stage shape with the "
-        "same md5/byte-count verification; q95 adds only the BMP "
-        "synthesis, which is pure column math"
-    ),
-    "q93_semantic_dedup": (
-        "q67_ivf_topk (in-window) drives the same literal-centroid "
-        "nearest-cell projection; the keep-one-representative step is "
-        "the q48_oldest_k (in-window) rank-and-filter kernel"
-    ),
-    "q71_repetition_stats": (
-        "q72_hot_ngrams and q90_trigram_logprob (in-window) drive the "
-        "same text.ngrams/bind_once token machinery rewritten r13; "
-        "repetition stats are per-doc aggregates over those arrays"
-    ),
-    "q83_split_assignment": (
-        "q74_stratified_sample and q82_cap_per_source (in-window) "
-        "drive the same md5-hex deterministic threshold/ordering "
-        "kernels (corpus.* family); split membership is the same "
-        "pure-function-of-key range test"
-    ),
-    "q73_tfidf_top_terms": (
-        "q75_bm25_search (in-window) drives the same tokenize -> idf "
-        "-> score -> window-top-k pipeline (BM25 is the saturated "
-        "tf-idf variant); q72_hot_ngrams (in-window) the underlying "
-        "token explode + aggregate"
-    ),
-}
-
-
 def _ordered_names() -> list[str]:
-    return _WINDOW_HEAD + [n for n in sorted(_REGISTRY) if n not in _WINDOW_HEAD]
+    return sorted(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

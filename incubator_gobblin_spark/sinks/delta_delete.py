@@ -405,11 +405,11 @@ def delete_delta_rows(
     whole-partition rewrite where this commits bitmaps). Exactly one
     of ``condition`` / ``ids`` must be given.
 
-    Concurrency: the commit is the same put-if-absent ``os.link``
-    publish as ``export_delta_log``. Losing the race re-replays — if
-    the live state changed at all, the delete raises
-    :class:`DeltaConcurrentModificationError` instead of committing
-    positions computed against a stale snapshot.
+    Concurrency: the commit publishes put-if-absent
+    (:func:`~incubator_gobblin_spark.commit.put_if_absent`). Losing the
+    race re-replays — if the live state changed at all, the delete
+    raises :class:`DeltaConcurrentModificationError` instead of
+    committing positions computed against a stale snapshot.
     """
     if (condition is None) == (ids is None):
         raise ValueError(
@@ -601,6 +601,30 @@ def delete_delta_rows(
         actions.append({"add": add})
         dv_files += 1
 
+    def _reclaim_staged() -> None:
+        """A no-op or aborted DELETE's staged artifacts are orphans:
+        the cdc sidecars AND the freshly written deletion-vector
+        bitmaps (or every lost race on a contended table permanently
+        accumulates unreferenced bitmap files for vacuum to sweep)."""
+        from incubator_gobblin_spark.formats.deletion_vectors import (
+            dv_file_path,
+        )
+
+        for c in cdc_actions:
+            try:
+                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
+            except OSError:
+                pass
+        for r in desc_rows:
+            if r._dv is None:
+                continue
+            fp = dv_file_path(os.path.abspath(path), json.loads(r._dv))
+            if fp:
+                try:
+                    os.remove(fp)
+                except OSError:
+                    pass
+
     if rows_deleted == 0 and files_removed == 0:
         # every matched position was ALREADY dead (a replayed window's
         # keyed delete, the jobs.replicate crash-recovery path): the
@@ -608,24 +632,7 @@ def delete_delta_rows(
         # a pure no-op version — skip it, like delta-spark's
         # zero-affected-rows DELETE. The freshly staged vectors are
         # orphans; reclaim them now.
-        from incubator_gobblin_spark.formats.deletion_vectors import (
-            dv_file_path,
-        )
-
-        for r in desc_rows:
-            if r._dv is None:
-                continue
-            fp = dv_file_path(os.path.abspath(path), json.loads(r._dv))
-            if fp:
-                try:
-                    os.remove(fp)
-                except OSError:
-                    pass
-        for c in cdc_actions:
-            try:
-                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
-            except OSError:
-                pass
+        _reclaim_staged()
         return {
             "version": current_v,
             "rows_deleted": 0,
@@ -633,69 +640,29 @@ def delete_delta_rows(
             "files_removed": 0,
         }
 
-    def _reclaim_staged() -> None:
-        """An aborted DELETE's staged artifacts are orphans: the cdc
-        sidecars AND the freshly written deletion-vector bitmaps (the
-        no-op path above reclaims both; the abort paths must too, or
-        every lost race on a contended table permanently accumulates
-        unreferenced bitmap files for vacuum to sweep)."""
-        from incubator_gobblin_spark.formats.deletion_vectors import (
-            dv_file_path,
-        )
+    def _race_ok(state) -> bool:
+        # a racer got in: compare ALL of (live files, metadata,
+        # protocol) — not just the file state. A metadata-only racer
+        # can change obligations this DELETE already validated against
+        # (enable appendOnly/CDF, add a writer feature we don't
+        # implement), and committing our protocol action computed from
+        # the OLD protocol would silently drop the racer's upgraded
+        # feature list.
+        return state == (live, meta, proto)
 
-        for c in cdc_actions:
-            try:
-                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
-            except OSError:
-                pass
-        for r in desc_rows:
-            if r._dv is None:
-                continue
-            fp = dv_file_path(os.path.abspath(path), json.loads(r._dv))
-            if fp:
-                try:
-                    os.remove(fp)
-                except OSError:
-                    pass
+    from incubator_gobblin_spark.sinks.delta_maintenance import _publish_commit
 
-    # put-if-absent publish; a racer invalidates the scanned snapshot
-    for attempt in range(8):
-        versions = _log_versions(log_dir)
-        if versions[-1] != current_v:
-            # a racer got in: re-replay and compare ALL of (live files,
-            # metadata, protocol) — not just the file state. A
-            # metadata-only racer can change obligations this DELETE
-            # already validated against (enable appendOnly/CDF, add a
-            # writer feature we don't implement), and committing our
-            # protocol action computed from the OLD protocol would
-            # silently drop the racer's upgraded feature list.
-            now_live, now_meta, now_proto = _replay_state(log_dir, None)
-            if now_live != live or now_meta != meta or now_proto != proto:
-                _reclaim_staged()
-                raise DeltaConcurrentModificationError(
-                    f"delete_delta_rows: {path} advanced from version "
-                    f"{current_v} to {versions[-1]} with state, "
-                    "metadata, or protocol changes while this DELETE "
-                    "was computing — re-run it"
-                )
-        version = versions[-1] + 1
-        fname = os.path.join(log_dir, f"{version:020d}.json")
-        tmp_f = f"{fname}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp_f, "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
-        try:
-            os.link(tmp_f, fname)
-        except FileExistsError:
-            os.remove(tmp_f)
-            continue
-        os.remove(tmp_f)
-        return {
-            "version": version,
-            "rows_deleted": rows_deleted,
-            "dv_files": dv_files,
-            "files_removed": files_removed,
-        }
-    _reclaim_staged()
-    raise DeltaConcurrentModificationError(
-        f"delete_delta_rows: lost the commit race 8 times under {log_dir}"
+    version = _publish_commit(
+        log_dir,
+        actions,
+        current_v,
+        on_race_state=_race_ok,
+        cleanup=_reclaim_staged,
+        op="delete_delta_rows",
     )
+    return {
+        "version": version,
+        "rows_deleted": rows_deleted,
+        "dv_files": dv_files,
+        "files_removed": files_removed,
+    }

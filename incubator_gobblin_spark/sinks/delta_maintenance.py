@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gobblin_spark.commit import put_if_absent
 from incubator_gobblin_spark.sinks.delta_delete import (
     DeltaConcurrentModificationError,
 )
@@ -212,11 +213,14 @@ def _publish_commit(
     cleanup=None,
     op: str = "commit",
 ) -> int:
-    """Put-if-absent commit publish shared by the maintenance writers.
+    """Publish ``actions`` as the next Delta log version through
+    :func:`~incubator_gobblin_spark.commit.put_if_absent`; the one Delta
+    commit publisher behind the DML and maintenance writers.
     ``on_race_state`` is called after a version advance with the
     re-replayed (live, meta, proto); returning False aborts (after
     ``cleanup``) with :class:`DeltaConcurrentModificationError`."""
-    for attempt in range(8):
+    data = "\n".join(json.dumps(a) for a in actions) + "\n"
+    for _ in range(8):
         versions = _log_versions(log_dir)
         current = versions[-1] if versions else -1
         if current != expect_version and on_race_state is not None:
@@ -225,22 +229,14 @@ def _publish_commit(
                 if cleanup:
                     cleanup()
                 raise DeltaConcurrentModificationError(
-                    f"{op}: table advanced from version {expect_version} "
-                    f"to {current} with state changes while this "
-                    "operation was computing — re-run it"
+                    f"{op}: {os.path.dirname(log_dir)} advanced from "
+                    f"version {expect_version} to {current} with state, "
+                    "metadata, or protocol changes while this operation "
+                    "was computing — re-run it"
                 )
         version = current + 1
-        fname = os.path.join(log_dir, f"{version:020d}.json")
-        tmp = f"{fname}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
-        try:
-            os.link(tmp, fname)
-        except FileExistsError:
-            os.remove(tmp)
-            continue
-        os.remove(tmp)
-        return version
+        if put_if_absent(os.path.join(log_dir, f"{version:020d}.json"), data):
+            return version
     if cleanup:
         cleanup()
     raise DeltaConcurrentModificationError(

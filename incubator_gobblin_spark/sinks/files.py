@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from incubator_gobblin_spark.commit import put_if_absent
 from incubator_gobblin_spark.formats.avro_ocf import resolve_format
 
 
@@ -1146,19 +1147,15 @@ class FileSink:
                 add["stats"] = stats
             adds[quote(rel)] = add
 
-        # Exporter serialization (delta-io PROTOCOL.md: commit files
-        # MUST be created put-if-absent). The commit CAS explicitly
-        # allows concurrent committers, and publish triggers the export
+        # Exporter serialization: the commit CAS explicitly allows
+        # concurrent committers, and publish triggers the export
         # outside any lock — so two exporters can both replay to the
-        # same `version`. Each attempt replays the log, diffs, writes a
-        # tmp file, and PUBLISHES it with os.link(tmp, NNN.json): on
-        # POSIX, link fails with EEXIST if the name is taken and the
-        # target otherwise appears atomically complete (no partial-read
-        # window, unlike writing through an O_EXCL fd). A loser
-        # re-replays — now seeing the winner's commit — and recomputes
-        # its diff at the next version, so no commit is ever silently
-        # shadowed by a stale-replay diff.
-        for attempt in range(64):
+        # same `version`, and NNN.json is published put-if-absent
+        # (commit.put_if_absent). A loser re-replays — now seeing the
+        # winner's commit — and recomputes its diff at the next
+        # version, so no commit is ever silently shadowed by a
+        # stale-replay diff.
+        for _ in range(64):
             prev_versions = _log_versions(log_dir)
             live: dict[str, dict] = {}
             prev_tombs: dict[str, dict] = {}
@@ -1231,16 +1228,11 @@ class FileSink:
             for p in added:
                 actions.append({"add": adds[p]})
 
-            fname = os.path.join(log_dir, f"{version:020d}.json")
-            tmp_f = f"{fname}.tmp-{os.getpid()}-{attempt}"
-            with open(tmp_f, "w") as fh:
-                fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
-            try:
-                os.link(tmp_f, fname)  # put-if-absent publish
-            except FileExistsError:
-                os.remove(tmp_f)
+            if not put_if_absent(
+                os.path.join(log_dir, f"{version:020d}.json"),
+                "\n".join(json.dumps(a) for a in actions) + "\n",
+            ):
                 continue  # lost the race: re-replay, diff at next version
-            os.remove(tmp_f)
 
             # Opt-in checkpointing: every `checkpoint_interval` versions,
             # compact the full live state into NNN.checkpoint.parquet +

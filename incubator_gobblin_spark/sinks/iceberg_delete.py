@@ -47,10 +47,12 @@ from pyspark.sql import functions as F
 
 from incubator_gobblin_spark.sinks.iceberg_export import (
     _MANIFEST_LIST_AVRO,
+    IcebergConcurrentModificationError,
     _decode_manifest_list,
     _manifest_entry_avro,
     _metadata_versions,
     _partition_struct_avro,
+    _publish_metadata,
     _unpartitioned_spec,
 )
 from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
@@ -58,12 +60,6 @@ from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
 #: spec §Position Delete Files — reserved field ids of the two columns
 _FILE_PATH_FIELD_ID = 2147483546
 _POS_FIELD_ID = 2147483545
-
-
-class IcebergConcurrentModificationError(RuntimeError):
-    """The table's current snapshot changed between the scan this
-    DELETE planned against and its commit attempt — the computed
-    positions may be stale, so nothing was committed; re-run."""
 
 
 def _load_metadata_version(meta_dir: str, version: int) -> dict:
@@ -117,8 +113,8 @@ def delete_iceberg_rows(
     ``jobs.purge.purge_lake``). Exactly one of ``condition`` / ``ids``
     must be given.
 
-    Concurrency: the metadata publish is the same put-if-absent
-    ``os.link`` CAS as ``export_iceberg``. Losing the race re-checks —
+    Concurrency: the metadata publish is put-if-absent
+    (``iceberg_export._publish_metadata``). Losing the race re-checks —
     if the current snapshot moved, the delete raises
     :class:`IcebergConcurrentModificationError` instead of committing
     coordinates computed against a stale snapshot; a metadata-only
@@ -266,7 +262,7 @@ def delete_iceberg_rows(
     # ---- commit loop: author manifest + manifest list + metadata
     # against the CURRENT base, publish put-if-absent, re-base on a
     # metadata-only race, refuse on a snapshot change ----
-    for attempt in range(8):
+    for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
             now = _load_metadata_version(meta_dir, versions[-1])
@@ -410,24 +406,10 @@ def delete_iceberg_rows(
         ) + [{"timestamp-ms": ts, "snapshot-id": sid}]
 
         version = current_v + 1
-        meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-        tmp = f"{meta_path}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp, "w") as fh:
-            json.dump(metadata, fh, indent=1)
-        try:
-            os.link(tmp, meta_path)
-        except FileExistsError:
-            os.remove(tmp)
+        if not _publish_metadata(meta_dir, metadata, version):
             os.remove(mpath)
             os.remove(snap_path)
             continue
-        os.remove(tmp)
-        hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-        with open(hint_tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(
-            hint_tmp, os.path.join(meta_dir, "version-hint.text")
-        )
         return {
             "version": version,
             "snapshot_id": sid,

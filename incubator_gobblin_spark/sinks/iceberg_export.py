@@ -26,9 +26,10 @@ Trino) pointed at the lake root sees exactly the committed files.
 Export semantics mirror ``export_delta_log``: each call appends ONE
 snapshot reflecting the current committed manifest; a no-change export
 writes nothing (detected via a state fingerprint in the snapshot
-summary); metadata versions are published put-if-absent (``os.link``)
-so concurrent exporters — legal, because the lake's commit CAS allows
-concurrent committers — serialize by losing the race and re-reading.
+summary); metadata versions are published put-if-absent
+(:func:`_publish_metadata`) so concurrent exporters — legal, because
+the lake's commit CAS allows concurrent committers — serialize by
+losing the race and re-reading.
 The FIRST snapshot is self-contained (one manifest, all live files
 ADDED, operation "overwrite"); subsequent exports append INCREMENTALLY
 (the Delta exporter's diff economics): previous manifests carry by
@@ -54,7 +55,77 @@ import os
 import time
 import uuid
 
+from incubator_gobblin_spark.commit import put_if_absent
+
 _INITIAL_PARTITION_FIELD_ID = 1000  # iceberg spec: partition field ids start here
+
+
+class IcebergConcurrentModificationError(RuntimeError):
+    """Another writer published the metadata version this operation
+    was about to publish, and the operation cannot re-base onto it
+    (its coordinates or staged manifests were computed against the
+    old snapshot) — nothing was committed; re-run."""
+
+
+def _publish_metadata(meta_dir: str, metadata: dict, version: int) -> bool:
+    """Publish ``vN.metadata.json`` put-if-absent
+    (:func:`~incubator_gobblin_spark.commit.put_if_absent`) and point
+    ``version-hint.text`` at it; False on a lost race. The one Iceberg
+    metadata publisher: every writer commits through it."""
+    if not put_if_absent(
+        os.path.join(meta_dir, f"v{version}.metadata.json"),
+        json.dumps(metadata, indent=1),
+    ):
+        return False
+    # version-hint is a HINT (HadoopCatalog semantics): last writer
+    # wins, and a stale hint only costs readers a re-list
+    hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
+    with open(hint_tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    return True
+
+
+def _publish_or_conflict(
+    op: str, meta_dir: str, metadata: dict, base_version: int
+) -> int:
+    """Publish ``metadata`` as ``base_version + 1`` with no retry, for
+    writers that computed it from that version alone: any racer
+    invalidates it, so a lost race raises
+    :class:`IcebergConcurrentModificationError`. Returns the version."""
+    version = base_version + 1
+    if not _publish_metadata(meta_dir, metadata, version):
+        raise IcebergConcurrentModificationError(
+            f"{op}: {os.path.dirname(meta_dir)} advanced past "
+            f"v{base_version} — re-run against the new state"
+        )
+    return version
+
+
+def _drop_unpublished(
+    meta_dir: str, version: int, snap_path: str, staged: list[str]
+) -> None:
+    """After losing the race for ``version``, unlink the files this
+    attempt staged, or they orphan forever. EXCEPT when the winner's
+    metadata references the same manifest list: deterministic names
+    then make ours the winner's files, and deleting them would break
+    the winner's snapshot."""
+    try:
+        with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
+            winner = json.load(fh)
+        referenced = {
+            os.path.basename(s["manifest-list"])
+            for s in winner.get("snapshots", [])
+        }
+    except (OSError, ValueError, KeyError):
+        return  # unreadable winner: keep, never break it
+    if os.path.basename(snap_path) in referenced:
+        return
+    for p in staged:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
 
 
 def _iceberg_type(t, next_id) -> object:
@@ -683,10 +754,10 @@ def export_iceberg(
         ],
     }
 
-    # Put-if-absent loop, the export_delta_log discipline: each attempt
+    # Optimistic loop, the export_delta_log discipline: each attempt
     # reads the latest metadata version, skips if the state fingerprint
-    # already matches, and publishes vN+1 via os.link (atomic appear,
-    # EEXIST on a lost race -> re-read and retry at the next version).
+    # already matches, and publishes vN+1 (_publish_metadata); a lost
+    # race re-reads and retries at the next version.
     for attempt in range(64):
         versions = _metadata_versions(meta_dir)
         prev = None
@@ -1083,51 +1154,142 @@ def export_iceberg(
             + [{"timestamp-ms": ts, "snapshot-id": sid}],
             "metadata-log": [],
         }
-        meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-        tmp = f"{meta_path}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp, "w") as fh:
-            json.dump(metadata, fh, indent=1)
-        try:
-            os.link(tmp, meta_path)  # put-if-absent publish
-        except FileExistsError:
-            os.remove(tmp)
-            # Lost the race: unlink this attempt's Avro files or they
-            # orphan in metadata/ forever (including when the retry then
-            # hits the fingerprint no-change skip). EXCEPT when the
-            # winner published the same (sid, fingerprint) state — the
-            # deterministic commit uuid then makes our names the
-            # winner's names, and deleting them would break the
-            # winner's snapshot; keep exactly those.
-            try:
-                with open(meta_path) as fh:
-                    winner = json.load(fh)
-                referenced = {
-                    os.path.basename(s["manifest-list"])
-                    for s in winner.get("snapshots", [])
-                }
-            except (OSError, ValueError, KeyError):
-                referenced = {snap_name}  # unreadable: keep, never break
-            if snap_name not in referenced:
-                for orphan in written_files:
-                    try:
-                        os.remove(orphan)
-                    except OSError:
-                        pass
+        if not _publish_metadata(meta_dir, metadata, version):
+            # Lost the race: drop this attempt's Avro files, or they
+            # orphan in metadata/ (also when the retry then hits the
+            # fingerprint no-change skip)
+            _drop_unpublished(meta_dir, version, snap_path, written_files)
             continue  # re-read, retry at next version
-        os.remove(tmp)
-
-        # version-hint is a HINT (HadoopCatalog semantics): last writer
-        # wins, and a stale hint only costs readers a re-list
-        hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-        with open(hint_tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
         return meta_dir
     raise RuntimeError(
         f"export_iceberg: lost the metadata-version race 64 times under "
         f"{meta_dir} — a runaway concurrent exporter is appending "
         f"versions faster than this one can re-read"
     )
+
+
+def _delete_base(meta_dir: str) -> tuple[int, dict, dict, int]:
+    """What a no-retry delete writer builds on: the latest metadata
+    version, its metadata, its current snapshot, and the new snapshot
+    id (also the new sequence number)."""
+    versions = _metadata_versions(meta_dir)
+    if not versions:
+        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
+    with open(os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")) as fh:
+        prev = json.load(fh)
+    snapshots = prev["snapshots"]
+    cur = next(
+        s for s in snapshots if s["snapshot-id"] == prev["current-snapshot-id"]
+    )
+    sid = 1 + max(
+        max((s["snapshot-id"] for s in snapshots), default=0),
+        int(prev.get("last-sequence-number", 0)),
+    )
+    return versions[-1], prev, cur, sid
+
+
+def _commit_delete_file(
+    op: str,
+    meta_dir: str,
+    base_version: int,
+    prev: dict,
+    cur: dict,
+    dpath: str,
+    entry_schema: dict,
+    entry: dict,
+    spec_id: int,
+    spec_fields: list,
+    all_specs: list,
+) -> None:
+    """Commit the delete file ``dpath`` as ``base_version + 1``: a
+    delete manifest holding ``entry`` under partition spec ``spec_id``
+    (``spec_fields``), a manifest list carrying the current snapshot's
+    manifests by reference plus it, and an operation=delete snapshot.
+    The data-file state fingerprint is UNCHANGED, so a later
+    export_iceberg no-ops instead of wiping the tombstones. No retry:
+    a lost race drops the staged files and raises
+    :class:`IcebergConcurrentModificationError`."""
+    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
+
+    location = os.path.dirname(meta_dir)
+    sid, seq = entry["snapshot_id"], entry["sequence_number"]
+    ts = int(time.time() * 1000)
+    schema = next(
+        s
+        for s in prev["schemas"]
+        if s["schema-id"] == prev["current-schema-id"]
+    )
+    manifest_meta = {
+        "schema": json.dumps(schema).encode(),
+        "partition-spec": json.dumps(spec_fields).encode(),
+        "partition-spec-id": str(spec_id).encode(),
+        "format-version": b"2",
+        "content": b"deletes",
+    }
+    mdata = encode_ocf(
+        entry_schema, [entry], codec="null", extra_meta=manifest_meta
+    )
+    mpath = os.path.join(meta_dir, f"del-{sid}-m0.avro")
+    with open(mpath, "wb") as fh:
+        fh.write(mdata)
+    list_rows = [dict(r) for r in _decode_manifest_list(cur, location)] + [
+        {
+            "manifest_path": "file://" + mpath,
+            "manifest_length": len(mdata),
+            "partition_spec_id": spec_id,
+            "content": 1,  # DELETES
+            "sequence_number": seq,
+            "min_sequence_number": seq,
+            "added_snapshot_id": sid,
+            "added_files_count": 1,
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": entry["data_file"]["record_count"],
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+        }
+    ]
+    snap_path = os.path.join(
+        meta_dir, f"snap-{sid}-1-{uuid.uuid5(uuid.NAMESPACE_URL, dpath)}.avro"
+    )
+    with open(snap_path, "wb") as fh:
+        fh.write(
+            encode_ocf(
+                _MANIFEST_LIST_AVRO,
+                list_rows,
+                codec="null",
+                extra_meta={"format-version": b"2"},
+            )
+        )
+    snapshot = {
+        "snapshot-id": sid,
+        "sequence-number": seq,
+        "timestamp-ms": ts,
+        "summary": {
+            "operation": "delete",
+            "engine.state-fingerprint": cur["summary"].get(
+                "engine.state-fingerprint", ""
+            ),
+        },
+        "manifest-list": "file://" + snap_path,
+        "schema-id": prev["current-schema-id"],
+        "parent-snapshot-id": cur["snapshot-id"],
+    }
+    metadata = dict(prev)
+    metadata["partition-specs"] = all_specs  # incl. the unpartitioned
+    metadata["last-sequence-number"] = seq
+    metadata["last-updated-ms"] = ts
+    metadata["current-snapshot-id"] = sid
+    metadata["snapshots"] = list(prev["snapshots"]) + [snapshot]
+    metadata["snapshot-log"] = list(prev.get("snapshot-log", [])) + [
+        {"timestamp-ms": ts, "snapshot-id": sid}
+    ]
+    try:
+        _publish_or_conflict(op, meta_dir, metadata, base_version)
+    except IcebergConcurrentModificationError:
+        staged = [mpath, snap_path, dpath]
+        _drop_unpublished(meta_dir, base_version + 1, snap_path, staged)
+        raise
 
 
 def append_position_deletes(
@@ -1149,33 +1311,10 @@ def append_position_deletes(
     hand). ``deletes`` holds (data-file path, 0-based row position);
     plain local paths are normalized to the manifest's file:// form.
     Returns the metadata dir."""
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
-
     location = os.path.abspath(table_path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    with open(
-        os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-    ) as fh:
-        prev = json.load(fh)
-    snapshots = list(prev["snapshots"])
-    cur = next(
-        s
-        for s in snapshots
-        if s["snapshot-id"] == prev["current-snapshot-id"]
-    )
-    schema = next(
-        s
-        for s in prev["schemas"]
-        if s["schema-id"] == prev["current-schema-id"]
-    )
-    spec = next(
-        s
-        for s in prev["partition-specs"]
-        if s["spec-id"] == prev["default-spec-id"]
-    )
+    base_version, prev, cur, sid = _delete_base(meta_dir)
+    seq = sid
     # position deletes here are GLOBAL (no partition scope parameter):
     # per the spec they must ride an UNPARTITIONED spec — under the
     # table's partitioned spec an all-null tuple means "the null
@@ -1183,15 +1322,6 @@ def append_position_deletes(
     # would skip the deletes for every real partition. This also
     # sidesteps transform-partitioned struct derivation entirely.
     unpart_id, all_specs = _unpartitioned_spec(prev)
-    sid = (
-        max(
-            max((s["snapshot-id"] for s in snapshots), default=0),
-            int(prev.get("last-sequence-number", 0)),
-        )
-        + 1
-    )
-    seq = sid
-    ts = int(time.time() * 1000)
 
     # --- the delete file itself (parquet of file_path, pos) ---
     import pyarrow as pa
@@ -1227,15 +1357,7 @@ def append_position_deletes(
     )
 
     # --- content=1 delete manifest under the UNPARTITIONED spec ---
-    part_struct = _partition_struct_avro([], {})
-    entry_schema = _manifest_entry_avro(part_struct)
-    manifest_meta = {
-        "schema": json.dumps(schema).encode(),
-        "partition-spec": json.dumps([]).encode(),
-        "partition-spec-id": str(unpart_id).encode(),
-        "format-version": b"2",
-        "content": b"deletes",
-    }
+    entry_schema = _manifest_entry_avro(_partition_struct_avro([], {}))
     entry = {
         "status": 1,  # ADDED
         "snapshot_id": sid,
@@ -1254,81 +1376,10 @@ def append_position_deletes(
             "upper_bounds": None,
         },
     }
-    mdata = encode_ocf(
-        entry_schema, [entry], codec="null", extra_meta=manifest_meta
+    _commit_delete_file(
+        "append_position_deletes", meta_dir, base_version, prev, cur,
+        dpath, entry_schema, entry, unpart_id, [], all_specs,
     )
-    mpath = os.path.join(meta_dir, f"del-{sid}-m0.avro")
-    with open(mpath, "wb") as fh:
-        fh.write(mdata)
-
-    # --- manifest list: previous manifests by reference + the delete ---
-    list_rows = [dict(r) for r in _decode_manifest_list(cur, location)] + [
-        {
-            "manifest_path": "file://" + mpath,
-            "manifest_length": len(mdata),
-            "partition_spec_id": unpart_id,
-            "content": 1,  # DELETES
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": sid,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": len(rows),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    snap_path = os.path.join(
-        meta_dir, f"snap-{sid}-1-{uuid.uuid5(uuid.NAMESPACE_URL, dpath)}.avro"
-    )
-    with open(snap_path, "wb") as fh:
-        fh.write(
-            encode_ocf(
-                _MANIFEST_LIST_AVRO,
-                list_rows,
-                codec="null",
-                extra_meta={"format-version": b"2"},
-            )
-        )
-
-    # --- new metadata version (operation=delete; the data-file state
-    # fingerprint is UNCHANGED, so a later export_iceberg no-ops
-    # instead of wiping the tombstones) ---
-    snapshot = {
-        "snapshot-id": sid,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "summary": {
-            "operation": "delete",
-            "engine.state-fingerprint": cur["summary"].get(
-                "engine.state-fingerprint", ""
-            ),
-        },
-        "manifest-list": "file://" + snap_path,
-        "schema-id": schema.get("schema-id", 0),
-        "parent-snapshot-id": cur["snapshot-id"],
-    }
-    metadata = dict(prev)
-    metadata["partition-specs"] = all_specs  # incl. the unpartitioned
-    metadata["last-sequence-number"] = seq
-    metadata["last-updated-ms"] = ts
-    metadata["current-snapshot-id"] = sid
-    metadata["snapshots"] = snapshots + [snapshot]
-    metadata["snapshot-log"] = list(prev.get("snapshot-log", [])) + [
-        {"timestamp-ms": ts, "snapshot-id": sid}
-    ]
-    version = versions[-1] + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = f"{meta_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1)
-    os.link(tmp, meta_path)  # put-if-absent publish
-    os.remove(tmp)
-    hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
     return meta_dir
 
 
@@ -1365,19 +1416,8 @@ def append_equality_deletes(
     writer would — rows in other partitions must survive."""
     location = os.path.abspath(table_path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    with open(
-        os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-    ) as fh:
-        prev = json.load(fh)
-    snapshots = list(prev["snapshots"])
-    cur = next(
-        s
-        for s in snapshots
-        if s["snapshot-id"] == prev["current-snapshot-id"]
-    )
+    base_version, prev, cur, sid = _delete_base(meta_dir)
+    seq = sid
     schema = next(
         s
         for s in prev["schemas"]
@@ -1431,15 +1471,6 @@ def append_equality_deletes(
             for f in spec["fields"]
             if f.get("field-id") is not None
         }
-    sid = (
-        max(
-            max((s["snapshot-id"] for s in snapshots), default=0),
-            int(prev.get("last-sequence-number", 0)),
-        )
-        + 1
-    )
-    seq = sid
-    ts = int(time.time() * 1000)
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1462,8 +1493,6 @@ def append_equality_deletes(
         vals = [r.get(c) for r in rows]
         arrays[c] = pa.array(vals, pat) if pat else pa.array(vals)
     pq.write_table(pa.table(arrays), dpath)
-
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
 
     part_struct = _partition_struct_avro(part_cols, part_types, part_fids)
     entry_schema = _manifest_entry_avro(part_struct)
@@ -1488,84 +1517,11 @@ def append_equality_deletes(
             "equality_ids": equality_ids,
         },
     }
-    mdata = encode_ocf(
-        entry_schema,
-        [entry],
-        codec="null",
-        extra_meta={
-            "schema": json.dumps(schema).encode(),
-            "partition-spec": json.dumps(manifest_spec_fields).encode(),
-            "partition-spec-id": str(manifest_spec_id).encode(),
-            "format-version": b"2",
-            "content": b"deletes",
-        },
+    _commit_delete_file(
+        "append_equality_deletes", meta_dir, base_version, prev, cur,
+        dpath, entry_schema, entry, manifest_spec_id, manifest_spec_fields,
+        all_specs,
     )
-    mpath = os.path.join(meta_dir, f"del-{sid}-m0.avro")
-    with open(mpath, "wb") as fh:
-        fh.write(mdata)
-    list_rows = [dict(r) for r in _decode_manifest_list(cur, location)] + [
-        {
-            "manifest_path": "file://" + mpath,
-            "manifest_length": len(mdata),
-            "partition_spec_id": manifest_spec_id,
-            "content": 1,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": sid,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": len(rows),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    snap_path = os.path.join(
-        meta_dir, f"snap-{sid}-1-{uuid.uuid5(uuid.NAMESPACE_URL, dpath)}.avro"
-    )
-    with open(snap_path, "wb") as fh:
-        fh.write(
-            encode_ocf(
-                _MANIFEST_LIST_AVRO,
-                list_rows,
-                codec="null",
-                extra_meta={"format-version": b"2"},
-            )
-        )
-    snapshot = {
-        "snapshot-id": sid,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "summary": {
-            "operation": "delete",
-            "engine.state-fingerprint": cur["summary"].get(
-                "engine.state-fingerprint", ""
-            ),
-        },
-        "manifest-list": "file://" + snap_path,
-        "schema-id": schema.get("schema-id", 0),
-        "parent-snapshot-id": cur["snapshot-id"],
-    }
-    metadata = dict(prev)
-    metadata["partition-specs"] = all_specs  # incl. unpartitioned when global
-    metadata["last-sequence-number"] = seq
-    metadata["last-updated-ms"] = ts
-    metadata["current-snapshot-id"] = sid
-    metadata["snapshots"] = snapshots + [snapshot]
-    metadata["snapshot-log"] = list(prev.get("snapshot-log", [])) + [
-        {"timestamp-ms": ts, "snapshot-id": sid}
-    ]
-    version = versions[-1] + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = f"{meta_path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1)
-    os.link(tmp, meta_path)
-    os.remove(tmp)
-    hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
     return meta_dir
 
 
@@ -1649,9 +1605,9 @@ def expire_iceberg_snapshots(
     Iceberg snapshot's files may still be live lake state or covered by
     lake time travel). This prunes the METADATA chain only.
 
-    Published with the exporter's put-if-absent discipline (os.link on
-    vN+1); a lost race re-reads and retries, so expiration composes
-    with concurrent exports."""
+    Published with the exporter's put-if-absent discipline
+    (:func:`_publish_metadata` on vN+1); a lost race re-reads and
+    retries, so expiration composes with concurrent exports."""
     path = sink_or_path if isinstance(sink_or_path, str) else sink_or_path.path
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
@@ -1675,7 +1631,7 @@ def expire_iceberg_snapshots(
                     out.add(mp)
         return out
 
-    for attempt in range(64):
+    for _ in range(64):
         versions = _metadata_versions(meta_dir)
         if not versions:
             raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
@@ -1734,22 +1690,8 @@ def expire_iceberg_snapshots(
         ]
         metadata["last-updated-ms"] = int(time.time() * 1000)
 
-        version = versions[-1] + 1
-        meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-        tmp = f"{meta_path}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp, "w") as fh:
-            json.dump(metadata, fh, indent=1)
-        try:
-            os.link(tmp, meta_path)
-        except FileExistsError:
-            os.remove(tmp)
+        if not _publish_metadata(meta_dir, metadata, versions[-1] + 1):
             continue  # lost to a concurrent export: re-read, retry
-        os.remove(tmp)
-
-        hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-        with open(hint_tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
 
         # physical cleanup AFTER the publish: files referenced only by
         # expired snapshots (set difference, so a manifest carried into

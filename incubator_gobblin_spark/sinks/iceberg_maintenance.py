@@ -68,6 +68,8 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _metadata_versions,
     _name_mapping,
     _partition_struct_avro,
+    _publish_metadata,
+    _publish_or_conflict,
     _transform_result_type,
     _unpartitioned_spec,
 )
@@ -82,27 +84,6 @@ def _refuse_manifest_lake(path: str, op: str) -> None:
             "compose wrongly) — compact through the lake "
             "(FileSink.compact_runs) and re-export instead"
         )
-
-
-def _publish_metadata(
-    meta_dir: str, metadata: dict, version: int, attempt: int
-) -> bool:
-    """Put-if-absent vN publish + version hint; False on a lost race."""
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = f"{meta_path}.tmp-{os.getpid()}-{attempt}"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=1)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        os.remove(tmp)
-        return False
-    os.remove(tmp)
-    hint_tmp = os.path.join(meta_dir, f".hint.tmp-{os.getpid()}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
-    return True
 
 
 def _move_parts(staging: str, dest_dir: str, tag: str) -> list[str]:
@@ -428,7 +409,7 @@ def write_iceberg_table(
         "snapshot-log": [{"timestamp-ms": ts, "snapshot-id": sid}],
         "metadata-log": [],
     }
-    if not _publish_metadata(meta_dir, metadata, 1, 0):
+    if not _publish_metadata(meta_dir, metadata, 1):
         raise FileExistsError(
             f"write_iceberg_table: v1 metadata appeared concurrently "
             f"under {meta_dir}"
@@ -744,7 +725,7 @@ def rewrite_iceberg_data_files(
         return sp, pcols, ptypes, fids
 
     # ---- commit loop ----
-    for attempt in range(8):
+    for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
             now = _load_metadata_version(meta_dir, versions[-1])
@@ -974,7 +955,7 @@ def rewrite_iceberg_data_files(
             prev.get("snapshot-log", [])
         ) + [{"timestamp-ms": ts, "snapshot-id": sid}]
 
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
+        if _publish_metadata(meta_dir, metadata, current_v + 1):
             return {
                 "version": current_v + 1,
                 "snapshot_id": sid,
@@ -1187,7 +1168,7 @@ def upsert_iceberg_rows(
         return int(v) if t in ("int", "long") else v
 
     # ---- commit loop ----
-    for attempt in range(8):
+    for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
             now = _load_metadata_version(meta_dir, versions[-1])
@@ -1415,7 +1396,7 @@ def upsert_iceberg_rows(
                 **{str(k): str(v) for k, v in props.items()},
             }
 
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
+        if _publish_metadata(meta_dir, metadata, current_v + 1):
             return {
                 "version": current_v + 1,
                 "snapshot_id": sid,
@@ -1597,20 +1578,10 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> dict:
     metadata["snapshot-log"] = list(prev.get("snapshot-log", [])) + [
         {"timestamp-ms": ts, "snapshot-id": snapshot_id}
     ]
-    for attempt in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            raise IcebergConcurrentModificationError(
-                f"rollback_iceberg_table: {location} advanced past "
-                f"v{current_v} while rolling back — re-run against the "
-                "new state"
-            )
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
-            return {"version": current_v + 1, "snapshot_id": snapshot_id}
-    raise IcebergConcurrentModificationError(
-        f"rollback_iceberg_table: lost the commit race 8 times under "
-        f"{meta_dir}"
+    version = _publish_or_conflict(
+        "rollback_iceberg_table", meta_dir, metadata, current_v
     )
+    return {"version": version, "snapshot_id": snapshot_id}
 
 
 def set_iceberg_ref(
@@ -1656,22 +1627,10 @@ def set_iceberg_ref(
     refs[name] = {"snapshot-id": int(sid), "type": ref_type}
     metadata["refs"] = refs
     metadata["last-updated-ms"] = int(_time.time() * 1000)
-    for attempt in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            raise IcebergConcurrentModificationError(
-                f"set_iceberg_ref: {location} advanced past "
-                f"v{current_v} — re-run against the new state"
-            )
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
-            return {
-                "version": current_v + 1,
-                "name": name,
-                "snapshot_id": int(sid),
-            }
-    raise IcebergConcurrentModificationError(
-        f"set_iceberg_ref: lost the commit race 8 times under {meta_dir}"
+    version = _publish_or_conflict(
+        "set_iceberg_ref", meta_dir, metadata, current_v
     )
+    return {"version": version, "name": name, "snapshot_id": int(sid)}
 
 
 def drop_iceberg_ref(path: str, name: str) -> dict:
@@ -1696,18 +1655,10 @@ def drop_iceberg_ref(path: str, name: str) -> dict:
     metadata = dict(prev)
     metadata["refs"] = refs
     metadata["last-updated-ms"] = int(_time.time() * 1000)
-    for attempt in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            raise IcebergConcurrentModificationError(
-                f"drop_iceberg_ref: {location} advanced past "
-                f"v{current_v} — re-run against the new state"
-            )
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
-            return {"version": current_v + 1, "name": name}
-    raise IcebergConcurrentModificationError(
-        f"drop_iceberg_ref: lost the commit race 8 times under {meta_dir}"
+    version = _publish_or_conflict(
+        "drop_iceberg_ref", meta_dir, metadata, current_v
     )
+    return {"version": version, "name": name}
 
 
 def set_iceberg_table_properties(
@@ -1739,16 +1690,7 @@ def set_iceberg_table_properties(
         **{str(k): str(v) for k, v in resolved.items()},
     }
     metadata["last-updated-ms"] = int(_time.time() * 1000)
-    for attempt in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            raise IcebergConcurrentModificationError(
-                f"set_iceberg_table_properties: {location} advanced "
-                f"past v{current_v} — re-run against the new state"
-            )
-        if _publish_metadata(meta_dir, metadata, current_v + 1, attempt):
-            return {"version": current_v + 1}
-    raise IcebergConcurrentModificationError(
-        "set_iceberg_table_properties: lost the commit race 8 times "
-        f"under {meta_dir}"
+    version = _publish_or_conflict(
+        "set_iceberg_table_properties", meta_dir, metadata, current_v
     )
+    return {"version": version}

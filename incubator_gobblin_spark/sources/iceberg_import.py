@@ -273,8 +273,8 @@ def _local_path(p: str) -> str:
 def current_metadata(path: str) -> dict:
     """Load the table's latest ``vN.metadata.json``. The hint in
     ``version-hint.text`` (HadoopCatalog layout) is only a STARTING
-    point: the exporter writes it last-writer-wins AFTER the os.link
-    CAS, so a slow exporter of an older version can overwrite a newer
+    point: the exporter writes it last-writer-wins AFTER the
+    put-if-absent publish, so a slow exporter of an older version can overwrite a newer
     hint. Like ``HadoopTableOperations.findVersion``
     (iceberg-core ``hadoop/HadoopTableOperations.java``), take the
     highest version actually present — max(hint probe, dir listing) —

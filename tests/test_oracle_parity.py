@@ -31,14 +31,3 @@ def test_no_oracle_queries_run(spark, sf_dir, name):
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
 
-
-def test_driver_window_head_is_exactly_the_gate():
-    """The driver records the first 50 registry entries; a head with
-    duplicates, unregistered names, or the wrong length silently
-    shrinks the correctness gate."""
-    from incubator_gobblin_spark.plans import queries as Q
-
-    head = Q._WINDOW_HEAD
-    assert len(head) == 50
-    assert len(set(head)) == 50
-    assert all(n in Q._REGISTRY for n in head)
