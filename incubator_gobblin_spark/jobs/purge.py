@@ -28,6 +28,7 @@ from incubator_gobblin_spark.formats.avro_ocf import resolve_format
 from incubator_gobblin_spark.operators.joins import purge_anti_join
 from incubator_gobblin_spark.sinks.files import FileSink, TableType, new_run_id
 from incubator_gobblin_spark.sources.files import read_layout_preserving
+from incubator_gobblin_spark.sources.iceberg_import import _metadata_versions
 
 
 @dataclass
@@ -145,10 +146,7 @@ def purge_lake(
             files_removed=r["files_removed"],
         )
     meta_dir = os.path.join(table_path, "metadata")
-    if os.path.isdir(meta_dir) and any(
-        f.startswith("v") and f.endswith(".metadata.json")
-        for f in os.listdir(meta_dir)
-    ):
+    if os.path.isdir(meta_dir) and _metadata_versions(meta_dir):
         from incubator_gobblin_spark.sinks.iceberg_delete import (
             delete_iceberg_rows,
         )

@@ -55,30 +55,18 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _publish_metadata,
     _unpartitioned_spec,
 )
-from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
+from incubator_gobblin_spark.sources.iceberg_import import (
+    current_schema,
+    load_metadata,
+    next_snapshot_id,
+    norm_file_ref,
+    read_iceberg,
+    snapshot_files,
+)
 
 #: spec §Position Delete Files — reserved field ids of the two columns
 _FILE_PATH_FIELD_ID = 2147483546
 _POS_FIELD_ID = 2147483545
-
-
-def _load_metadata_version(meta_dir: str, version: int) -> dict:
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-        return json.load(fh)
-
-
-def _check_deletable(metadata: dict) -> None:
-    fv = int(metadata.get("format-version", 1))
-    if fv < 2:
-        raise ValueError(
-            "delete_iceberg_rows: row-level deletes require format-"
-            f"version 2, table is v{fv} — rewrite-based delete only"
-        )
-    if fv > 2:
-        raise ValueError(
-            f"delete_iceberg_rows: format-version {fv} is newer than "
-            "this writer understands — refusing to write"
-        )
 
 
 def delete_iceberg_rows(
@@ -134,8 +122,13 @@ def delete_iceberg_rows(
     if not versions:
         raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
     current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
-    _check_deletable(prev)
+    prev = load_metadata(meta_dir, current_v)
+    fv = int(prev.get("format-version", 1))
+    if fv < 2:  # load_metadata already refused anything newer than v2
+        raise ValueError(
+            "delete_iceberg_rows: row-level deletes require format-"
+            f"version 2, table is v{fv} — rewrite-based delete only"
+        )
     base_snap_id = prev.get("current-snapshot-id")
     if base_snap_id in (None, -1) or not prev.get("snapshots"):
         return {
@@ -148,31 +141,11 @@ def delete_iceberg_rows(
     # ---- scan the current snapshot with coordinates, filter, map the
     # decoded scan path back to the manifest's EXACT file_path string
     # (spec: a position delete's file_path must equal the data entry's;
-    # ours are file:// URIs but foreign manifests may carry plain
-    # paths — emit whatever the manifest says, per file) ----
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        snapshot_files,
-    )
-
+    # ours are file:// URIs but foreign manifests may carry file:/ or
+    # plain paths — emit whatever the manifest says, per file) ----
     live_files, _ = snapshot_files(prev, location, collect_deletes=True)
-    from urllib.parse import unquote as _unq
-
-    def _decoded_abs(p: str) -> str:
-        if p.startswith("file://"):
-            from urllib.parse import urlparse
-
-            p = _unq(urlparse(p).path)
-        return os.path.abspath(
-            p if os.path.isabs(p) else os.path.join(location, p)
-        )
-
     path_map = [
-        (
-            _decoded_abs(f["path"]),
-            f["path"]
-            if f["path"].startswith("file://")
-            else "file://" + _decoded_abs(f["path"]),
-        )
+        (norm_file_ref(f["path"], location), f["file_path"])
         for f in live_files
     ]
 
@@ -265,7 +238,7 @@ def delete_iceberg_rows(
     for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
-            now = _load_metadata_version(meta_dir, versions[-1])
+            now = load_metadata(meta_dir, versions[-1])
             if now.get("current-snapshot-id") != base_snap_id:
                 raise IcebergConcurrentModificationError(
                     f"delete_iceberg_rows: {location} advanced from "
@@ -273,18 +246,13 @@ def delete_iceberg_rows(
                     f"{now.get('current-snapshot-id')} while this "
                     "DELETE was computing — re-run it"
                 )
-            _check_deletable(now)  # racer may have bumped format-version
             prev, current_v = now, versions[-1]
 
         snapshots = list(prev["snapshots"])
         cur = next(
             s for s in snapshots if s["snapshot-id"] == base_snap_id
         )
-        schema = next(
-            s
-            for s in prev["schemas"]
-            if s["schema-id"] == prev["current-schema-id"]
-        )
+        schema = current_schema(prev)
         # This delete is snapshot-global (the matched rows span
         # partitions), so per the spec it must be written under an
         # UNPARTITIONED spec with an empty partition struct: under a
@@ -293,14 +261,7 @@ def delete_iceberg_rows(
         # partition" for conformant readers (Spark/Trino/PyIceberg),
         # silently un-deleting every real partition's rows.
         unpart_id, all_specs = _unpartitioned_spec(prev)
-        sid = (
-            max(
-                max((s["snapshot-id"] for s in snapshots), default=0),
-                int(prev.get("last-sequence-number", 0)),
-            )
-            + 1
-        )
-        seq = sid
+        sid = seq = next_snapshot_id(prev)
         ts = int(_time.time() * 1000)
 
         part_struct = _partition_struct_avro([], {})

@@ -56,6 +56,16 @@ import time
 import uuid
 
 from incubator_gobblin_spark.commit import put_if_absent
+from incubator_gobblin_spark.sources.iceberg_import import (
+    _decode_manifest,
+    _decode_manifest_list,
+    _local_path,
+    _metadata_versions,
+    current_schema,
+    load_metadata,
+    next_snapshot_id,
+    norm_file_ref,
+)
 
 _INITIAL_PARTITION_FIELD_ID = 1000  # iceberg spec: partition field ids start here
 
@@ -111,8 +121,7 @@ def _drop_unpublished(
     then make ours the winner's files, and deleting them would break
     the winner's snapshot."""
     try:
-        with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-            winner = json.load(fh)
+        winner = load_metadata(meta_dir, version)
         referenced = {
             os.path.basename(s["manifest-list"])
             for s in winner.get("snapshots", [])
@@ -541,45 +550,10 @@ _MANIFEST_LIST_AVRO = {
 }
 
 
-def _metadata_versions(meta_dir: str) -> list[int]:
-    out = []
-    for f in os.listdir(meta_dir):
-        if f.startswith("v") and f.endswith(".metadata.json"):
-            stem = f[1 : -len(".metadata.json")]
-            if stem.isdigit():
-                out.append(int(stem))
-    return sorted(out)
-
-
 def _typed_partition_value(v, iceberg_type: str):
     if v is None:
         return None
     return int(v) if iceberg_type in ("long", "int") else str(v)
-
-
-def _decode_manifest_list(snap: dict, location: str) -> list[dict]:
-    """Previous snapshot's manifest-list rows (local paths resolved)."""
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        _decode_avro_rows,
-        _local_path,
-    )
-
-    mlist = _local_path(snap["manifest-list"])
-    if not os.path.isabs(mlist):
-        mlist = os.path.join(location, mlist)
-    return _decode_avro_rows(mlist)
-
-
-def _decode_manifest(row: dict, location: str) -> list[dict]:
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        _decode_avro_rows,
-        _local_path,
-    )
-
-    mpath = _local_path(row["manifest_path"])
-    if not os.path.isabs(mpath):
-        mpath = os.path.join(location, mpath)
-    return _decode_avro_rows(mpath)
 
 
 def export_iceberg(
@@ -760,12 +734,7 @@ def export_iceberg(
     # race re-reads and retries at the next version.
     for attempt in range(64):
         versions = _metadata_versions(meta_dir)
-        prev = None
-        if versions:
-            with open(
-                os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-            ) as fh:
-                prev = json.load(fh)
+        prev = load_metadata(meta_dir, versions[-1]) if versions else None
         snapshots = list(prev["snapshots"]) if prev else []
         if snapshots and snapshots[-1]["summary"].get(
             "engine.state-fingerprint"
@@ -780,17 +749,9 @@ def export_iceberg(
                 return meta_dir
 
         version = (versions[-1] if versions else 0) + 1
-        # deterministic, monotonic snapshot id — monotonic against BOTH
-        # the live snapshot ids and the last sequence number, so ids
-        # and sequence numbers never regress after expire_iceberg_
-        # snapshots prunes the history (len(snapshots)+1 would)
-        sid = (
-            max(
-                max((s["snapshot-id"] for s in snapshots), default=0),
-                int(prev.get("last-sequence-number", 0)) if prev else 0,
-            )
-            + 1
-        )
+        # deterministic, monotonic snapshot id (len(snapshots)+1 would
+        # regress after expire_iceberg_snapshots prunes the history)
+        sid = next_snapshot_id(prev or {})
         seq = sid
         ts = int(time.time() * 1000)
         commit_uuid = str(
@@ -962,10 +923,6 @@ def export_iceberg(
         removed_count = 0
         added = files
         if incremental:
-            from incubator_gobblin_spark.sources.iceberg_import import (
-                _local_path,
-            )
-
             cur_by_path = {f["path"]: f for f in files}
 
             def _unchanged(p: str, e: dict) -> bool:
@@ -1175,17 +1132,13 @@ def _delete_base(meta_dir: str) -> tuple[int, dict, dict, int]:
     versions = _metadata_versions(meta_dir)
     if not versions:
         raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    with open(os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")) as fh:
-        prev = json.load(fh)
-    snapshots = prev["snapshots"]
+    prev = load_metadata(meta_dir, versions[-1])
     cur = next(
-        s for s in snapshots if s["snapshot-id"] == prev["current-snapshot-id"]
+        s
+        for s in prev["snapshots"]
+        if s["snapshot-id"] == prev["current-snapshot-id"]
     )
-    sid = 1 + max(
-        max((s["snapshot-id"] for s in snapshots), default=0),
-        int(prev.get("last-sequence-number", 0)),
-    )
-    return versions[-1], prev, cur, sid
+    return versions[-1], prev, cur, next_snapshot_id(prev)
 
 
 def _commit_delete_file(
@@ -1214,11 +1167,7 @@ def _commit_delete_file(
     location = os.path.dirname(meta_dir)
     sid, seq = entry["snapshot_id"], entry["sequence_number"]
     ts = int(time.time() * 1000)
-    schema = next(
-        s
-        for s in prev["schemas"]
-        if s["schema-id"] == prev["current-schema-id"]
-    )
+    schema = current_schema(prev)
     manifest_meta = {
         "schema": json.dumps(schema).encode(),
         "partition-spec": json.dumps(spec_fields).encode(),
@@ -1418,11 +1367,7 @@ def append_equality_deletes(
     meta_dir = os.path.join(location, "metadata")
     base_version, prev, cur, sid = _delete_base(meta_dir)
     seq = sid
-    schema = next(
-        s
-        for s in prev["schemas"]
-        if s["schema-id"] == prev["current-schema-id"]
-    )
+    schema = current_schema(prev)
     spec = next(
         s
         for s in prev["partition-specs"]
@@ -1532,11 +1477,7 @@ def append_equality_deletes_stub(table_path: str) -> str:
     writer is :func:`append_equality_deletes`."""
     meta_dir = append_position_deletes(table_path, [])
     # rewrite the just-written manifest's entry to content=2
-    versions = _metadata_versions(meta_dir)
-    with open(
-        os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-    ) as fh:
-        meta = json.load(fh)
+    meta = load_metadata(meta_dir, _metadata_versions(meta_dir)[-1])
     location = os.path.dirname(meta_dir)
     cur = next(
         s
@@ -1548,18 +1489,10 @@ def append_equality_deletes_stub(table_path: str) -> str:
     entries = _decode_manifest(target, location)
     from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
 
-    mlocal = target["manifest_path"]
-    if mlocal.startswith("file://"):
-        from incubator_gobblin_spark.sources.iceberg_import import _local_path
-
-        mlocal = _local_path(mlocal)
+    mlocal = norm_file_ref(target["manifest_path"], location)
     for e in entries:
         e["data_file"]["content"] = 2  # EQUALITY_DELETES
-    schema = next(
-        s
-        for s in meta["schemas"]
-        if s["schema-id"] == meta["current-schema-id"]
-    )
+    schema = current_schema(meta)
     spec = next(
         s
         for s in meta["partition-specs"]
@@ -1614,31 +1547,23 @@ def expire_iceberg_snapshots(
     if keep_last < 1:
         raise ValueError("expire_iceberg_snapshots: keep_last must be >= 1")
 
-    from incubator_gobblin_spark.sources.iceberg_import import _local_path
-
     def _referenced(snaps: list[dict]) -> set[str]:
         out: set[str] = set()
         for s in snaps:
-            ml = _local_path(s["manifest-list"])
-            if not os.path.isabs(ml):
-                ml = os.path.join(location, ml)
+            ml = norm_file_ref(s["manifest-list"], location)
             out.add(ml)
             if os.path.exists(ml):
-                for row in _decode_manifest_list(s, location):
-                    mp = _local_path(row["manifest_path"])
-                    if not os.path.isabs(mp):
-                        mp = os.path.join(location, mp)
-                    out.add(mp)
+                out.update(
+                    norm_file_ref(row["manifest_path"], location)
+                    for row in _decode_manifest_list(s, location)
+                )
         return out
 
     for _ in range(64):
         versions = _metadata_versions(meta_dir)
         if not versions:
             raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-        with open(
-            os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-        ) as fh:
-            prev = json.load(fh)
+        prev = load_metadata(meta_dir, versions[-1])
         snapshots = list(prev.get("snapshots", []))
         if len(snapshots) <= keep_last:
             return meta_dir  # nothing to expire

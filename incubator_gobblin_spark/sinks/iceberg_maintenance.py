@@ -54,13 +54,10 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from incubator_gobblin_spark.sinks.iceberg_delete import (
-    IcebergConcurrentModificationError,
-    _load_metadata_version,
-)
 from incubator_gobblin_spark.sinks.iceberg_export import (
     _MANIFEST_LIST_AVRO,
     _INITIAL_PARTITION_FIELD_ID,
+    IcebergConcurrentModificationError,
     _decode_manifest,
     _decode_manifest_list,
     _iceberg_schema,
@@ -73,6 +70,12 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _transform_result_type,
     _unpartitioned_spec,
 )
+from incubator_gobblin_spark.sources.iceberg_import import (
+    current_schema,
+    load_metadata,
+    next_snapshot_id,
+    norm_file_ref,
+)
 
 
 def _refuse_manifest_lake(path: str, op: str) -> None:
@@ -84,6 +87,15 @@ def _refuse_manifest_lake(path: str, op: str) -> None:
             "compose wrongly) — compact through the lake "
             "(FileSink.compact_runs) and re-export instead"
         )
+
+
+def _latest(meta_dir: str) -> tuple[int, dict]:
+    """The newest metadata version under ``meta_dir`` and its
+    metadata — the base every writer here builds on."""
+    versions = _metadata_versions(meta_dir)
+    if not versions:
+        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
+    return versions[-1], load_metadata(meta_dir, versions[-1])
 
 
 def _move_parts(staging: str, dest_dir: str, tag: str) -> list[str]:
@@ -461,11 +473,7 @@ def rewrite_iceberg_data_files(
     _refuse_manifest_lake(path, "rewrite_iceberg_data_files")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     fv = int(prev.get("format-version", 1))
     if fv != 2:
         raise ValueError(
@@ -490,15 +498,10 @@ def rewrite_iceberg_data_files(
     if not live_files:
         return noop
 
-    def _abs(p: str) -> str:
-        return os.path.abspath(
-            p if os.path.isabs(p) else os.path.join(location, p)
-        )
-
     # ---- affected set ----
     affected: set[str] = set()
     pos_del_paths = [
-        _abs(d["path"]) for d in dels if d["content"] == 1
+        norm_file_ref(d["path"], location) for d in dels if d["content"] == 1
     ]
     if pos_del_paths:
         # the delete parquets' file_path column names the targets;
@@ -509,15 +512,13 @@ def rewrite_iceberg_data_files(
             .distinct()
             .collect()
         )
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            _local_path,
-        )
-
-        affected.update(_abs(_local_path(r.file_path)) for r in hit)
+        affected.update(norm_file_ref(r.file_path, location) for r in hit)
     eq_max_seq = max(
         (d["seq"] for d in dels if d["content"] == 2), default=None
     )
-    by_abs: dict[str, dict] = {_abs(f["path"]): f for f in live_files}
+    by_abs: dict[str, dict] = {
+        norm_file_ref(f["path"], location): f for f in live_files
+    }
     if eq_max_seq is not None:
         affected.update(
             p for p, f in by_abs.items() if f["seq"] < eq_max_seq
@@ -581,11 +582,7 @@ def rewrite_iceberg_data_files(
         g["bins"] = max(1, math.ceil(g["bytes"] / target_file_bytes))
 
     # ---- one job: scan (deletes applied) -> affected rows -> write ----
-    schema_json = next(
-        s
-        for s in prev["schemas"]
-        if s["schema-id"] == prev["current-schema-id"]
-    )
+    schema_json = current_schema(prev)
     # refuse unsupported partition value types UP FRONT (the upsert
     # writer's guard): failing later inside the commit loop would
     # orphan the already-moved rewrite files under data/
@@ -728,7 +725,7 @@ def rewrite_iceberg_data_files(
     for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
-            now = _load_metadata_version(meta_dir, versions[-1])
+            now = load_metadata(meta_dir, versions[-1])
             if now.get("current-snapshot-id") != base_snap_id:
                 _cleanup()
                 raise IcebergConcurrentModificationError(
@@ -742,14 +739,7 @@ def rewrite_iceberg_data_files(
         cur = next(
             s for s in snapshots if s["snapshot-id"] == base_snap_id
         )
-        sid = (
-            max(
-                max((s["snapshot-id"] for s in snapshots), default=0),
-                int(prev.get("last-sequence-number", 0)),
-            )
-            + 1
-        )
-        seq = sid
+        sid = seq = next_snapshot_id(prev)
         ts = int(_time.time() * 1000)
         commit_uuid = str(
             _uuid.uuid5(_uuid.NAMESPACE_URL, f"{location}#rewrite#{sid}")
@@ -784,10 +774,6 @@ def rewrite_iceberg_data_files(
         list_rows: list[dict] = []
         dropped_deletes = 0
         files_rewritten = 0
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            _local_path,
-        )
-
         for row in _decode_manifest_list(cur, location):
             if row.get("content", 0) != 0:
                 dropped_deletes += 1  # absorbed: drop from the chain
@@ -798,7 +784,7 @@ def rewrite_iceberg_data_files(
             for e in live:
                 (
                     hit
-                    if _abs(_local_path(e["data_file"]["file_path"]))
+                    if norm_file_ref(e["data_file"]["file_path"], location)
                     in affected
                     else survivors
                 ).append(e)
@@ -1017,11 +1003,7 @@ def upsert_iceberg_rows(
         raise ValueError("upsert_iceberg_rows: on=<key cols> required")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     if int(prev.get("format-version", 1)) != 2:
         raise ValueError(
             "upsert_iceberg_rows: equality deletes require format-"
@@ -1033,11 +1015,7 @@ def upsert_iceberg_rows(
             "upsert_iceberg_rows: table has no current snapshot — "
             "create it with write_iceberg_table first"
         )
-    schema_json = next(
-        s
-        for s in prev["schemas"]
-        if s["schema-id"] == prev["current-schema-id"]
-    )
+    schema_json = current_schema(prev)
     spec = next(
         s
         for s in prev["partition-specs"]
@@ -1171,7 +1149,7 @@ def upsert_iceberg_rows(
     for _ in range(8):
         versions = _metadata_versions(meta_dir)
         if versions[-1] != current_v:
-            now = _load_metadata_version(meta_dir, versions[-1])
+            now = load_metadata(meta_dir, versions[-1])
             if now.get("current-snapshot-id") != base_snap_id:
                 _cleanup()
                 raise IcebergConcurrentModificationError(
@@ -1185,14 +1163,7 @@ def upsert_iceberg_rows(
         cur = next(
             s for s in snapshots if s["snapshot-id"] == base_snap_id
         )
-        sid = (
-            max(
-                max((s["snapshot-id"] for s in snapshots), default=0),
-                int(prev.get("last-sequence-number", 0)),
-            )
-            + 1
-        )
-        seq = sid
+        sid = seq = next_snapshot_id(prev)
         ts = int(_time.time() * 1000)
         commit_uuid = str(
             _uuid.uuid5(_uuid.NAMESPACE_URL, f"{location}#upsert#{sid}")
@@ -1441,10 +1412,7 @@ def remove_iceberg_orphan_files(
 
     Returns ``{"files_deleted", "bytes_deleted", "candidates"}``.
     """
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        _local_path,
-        snapshot_files,
-    )
+    from incubator_gobblin_spark.sources.iceberg_import import snapshot_files
 
     _refuse_manifest_lake(path, "remove_iceberg_orphan_files")
     if retention_hours < 168.0 and not allow_short_retention:
@@ -1455,16 +1423,7 @@ def remove_iceberg_orphan_files(
         )
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    prev = _load_metadata_version(meta_dir, versions[-1])
-
-    def _abs(p: str) -> str:
-        p = _local_path(p)
-        return os.path.abspath(
-            p if os.path.isabs(p) else os.path.join(location, p)
-        )
+    _, prev = _latest(meta_dir)
 
     referenced: set[str] = set()
     for snap in prev.get("snapshots", []):
@@ -1472,8 +1431,9 @@ def remove_iceberg_orphan_files(
             prev, location, snapshot_id=snap["snapshot-id"],
             collect_deletes=True,
         )
-        referenced.update(_abs(f["path"]) for f in files)
-        referenced.update(_abs(d["path"]) for d in dels)
+        referenced.update(
+            norm_file_ref(f["path"], location) for f in files + dels
+        )
         # DELETED entries keep their data_file rows in rewritten
         # manifests; snapshot_files drops them, but they are still
         # referenced by OLDER snapshots enumerated above — expired
@@ -1556,11 +1516,7 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> dict:
     _refuse_manifest_lake(path, "rollback_iceberg_table")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     if not any(
         s["snapshot-id"] == snapshot_id for s in prev.get("snapshots", [])
     ):
@@ -1605,11 +1561,7 @@ def set_iceberg_ref(
     _refuse_manifest_lake(path, "set_iceberg_ref")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     sid = (
         prev.get("current-snapshot-id")
         if snapshot_id is None
@@ -1640,11 +1592,7 @@ def drop_iceberg_ref(path: str, name: str) -> dict:
     _refuse_manifest_lake(path, "drop_iceberg_ref")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     refs = dict(prev.get("refs") or {})
     if name not in refs:
         raise ValueError(
@@ -1676,11 +1624,7 @@ def set_iceberg_table_properties(
     _refuse_manifest_lake(path, "set_iceberg_table_properties")
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
-    versions = _metadata_versions(meta_dir)
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    current_v = versions[-1]
-    prev = _load_metadata_version(meta_dir, current_v)
+    current_v, prev = _latest(meta_dir)
     metadata = dict(prev)
     resolved = (
         props(dict(prev.get("properties") or {})) if callable(props) else props

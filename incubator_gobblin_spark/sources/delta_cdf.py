@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 )
 
 from incubator_gobblin_spark.sources.delta_import import (
+    _commit_actions,
     _log_versions,
     _replay_state,
     add_file_path,
@@ -69,11 +70,6 @@ from incubator_gobblin_spark.sources.delta_import import (
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
 COMMIT_TIMESTAMP_COL = "_commit_timestamp"
-
-
-def _commit_actions(log_dir: str, v: int) -> list[dict]:
-    with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-        return [json.loads(line) for line in fh if line.strip()]
 
 
 def _cdf_on(meta: dict | None) -> bool:

@@ -123,6 +123,12 @@ def _log_versions(log_dir: str) -> list[int]:
     return sorted(out)
 
 
+def _commit_actions(log_dir: str, v: int) -> list[dict]:
+    """The actions of commit file ``v`` (one JSON object per line)."""
+    with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
 def _checkpoint_files(log_dir: str, cp_v: int, parts: int | None) -> list[str]:
     """Checkpoint file(s) for version ``cp_v`` — the classic single-file
     form, the multi-part form ({v}.checkpoint.{i}.{n}.parquet, ``parts``
@@ -295,21 +301,17 @@ def _replay_state(
     for v in versions:
         if v < start or v > target:
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                act = json.loads(line)
-                if "add" in act:
-                    live[act["add"]["path"]] = act["add"]
-                    removes.pop(act["add"]["path"], None)
-                elif "remove" in act:
-                    live.pop(act["remove"]["path"], None)
-                    removes[act["remove"]["path"]] = act["remove"]
-                elif "metaData" in act:
-                    meta = act["metaData"]
-                elif "protocol" in act:
-                    proto = act["protocol"]
+        for act in _commit_actions(log_dir, v):
+            if "add" in act:
+                live[act["add"]["path"]] = act["add"]
+                removes.pop(act["add"]["path"], None)
+            elif "remove" in act:
+                live.pop(act["remove"]["path"], None)
+                removes[act["remove"]["path"]] = act["remove"]
+            elif "metaData" in act:
+                meta = act["metaData"]
+            elif "protocol" in act:
+                proto = act["protocol"]
     if not meta:
         raise ValueError(f"Delta log under {log_dir} carries no metaData action")
     if collect_removes:
@@ -343,13 +345,9 @@ def last_txn_actions(log_dir: str, version: int | None = None) -> dict:
     for v in versions:
         if v < start or v > target:
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                act = json.loads(line)
-                if "txn" in act:
-                    txns[act["txn"]["appId"]] = act["txn"]
+        for act in _commit_actions(log_dir, v):
+            if "txn" in act:
+                txns[act["txn"]["appId"]] = act["txn"]
     return txns
 
 

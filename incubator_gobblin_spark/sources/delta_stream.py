@@ -50,18 +50,10 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-
-def _versions(log_dir: str) -> list[int]:
-    if not os.path.isdir(log_dir):
-        return []
-    from incubator_gobblin_spark.sources.delta_import import _log_versions
-
-    return _log_versions(log_dir)
-
-
-def _actions(log_dir: str, version: int) -> list[dict]:
-    with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
-        return [json.loads(l) for l in fh if l.strip()]
+from incubator_gobblin_spark.sources.delta_import import (
+    _commit_actions,
+    _log_versions,
+)
 
 
 def table_schema(path: str, *, allow_dv: bool = False):
@@ -239,19 +231,20 @@ class DeltaStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self.start_opt == "latest":
-            vs = _versions(self.log_dir)
-            return {"version": vs[-1] if vs else -1}
+            return self.latestOffset()
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.log_dir)
+        if not os.path.isdir(self.log_dir):
+            return {"version": -1}
+        vs = _log_versions(self.log_dir)
         return {"version": vs[-1] if vs else -1}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["version"]), int(end["version"])
         if self.read_change_feed:
             return self._cdf_partitions(lo, hi)
-        vs = _versions(self.log_dir)
+        vs = _log_versions(self.log_dir) if os.path.isdir(self.log_dir) else []
         if lo == -1 and hi >= 0 and vs and vs[0] > 0:
             # Fresh earliest-stream on a log-expired table: versions
             # [0, vs[0]) were deleted by expire_delta_log, so version
@@ -301,7 +294,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         for v in vs:
             if v <= lo or v > hi:
                 continue
-            acts = _actions(self.log_dir, v)
+            acts = _commit_actions(self.log_dir, v)
             removes = [a for a in acts if "remove" in a]
             adds = [a for a in acts if "add" in a]
             if self.skip_change_commits and (

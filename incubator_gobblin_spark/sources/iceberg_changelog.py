@@ -44,8 +44,6 @@ table is read O(1) times per changelog call, not O(snapshots).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -61,14 +59,14 @@ from incubator_gobblin_spark.sources.iceberg_import import (
     _assemble_iceberg,
     _parsed_name_mapping,
     _spark_type,
+    assemble_file_set,
     current_metadata,
+    current_schema,
+    norm_file_ref,
     read_iceberg,
     snapshot_files,
 )
 
-
-def _abs(table_path: str, p: str) -> str:
-    return p if os.path.isabs(p) else os.path.join(table_path, p)
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_ORDINAL_COL = "_change_ordinal"
@@ -137,11 +135,7 @@ def read_iceberg_changelog(
         if to_snapshot_id is None
         else int(to_snapshot_id)
     )
-    schema_json = next(
-        s
-        for s in metadata["schemas"]
-        if s["schema-id"] == metadata["current-schema-id"]
-    )
+    schema_json = current_schema(metadata)
     schema = StructType(
         [
             StructField(
@@ -242,10 +236,6 @@ def read_iceberg_changelog(
 
     from incubator_gobblin_spark.sources.delta_import import (
         materialize_small,
-    )
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        assemble_file_set,
-        norm_file_ref,
     )
 
     # --- one driver-side walk over the chain -------------------------
@@ -390,7 +380,9 @@ def read_iceberg_changelog(
         out = None
         for seq, sub in sorted(by_seq.items()):
             one = (
-                spark.read.parquet(*[_abs(path, d["path"]) for d in sub])
+                spark.read.parquet(
+                    *[norm_file_ref(d["path"], path) for d in sub]
+                )
                 .select(
                     decoded_file_path(F.col("file_path")).alias(
                         f"_dp_g{gi}"
@@ -452,7 +444,7 @@ def read_iceberg_changelog(
         keys = None
         for (seq, _svk), pairs in sorted(sub.items()):
             one = spark.read.parquet(
-                *[_abs(path, d["path"]) for d, _ in pairs]
+                *[norm_file_ref(d["path"], path) for d, _ in pairs]
             ).select(
                 *[F.col(c).alias(f"_k{gi}_{c}") for c in cols]
             ).withColumn(f"_dseq_g{gi}", F.lit(seq).cast("long"))
@@ -550,7 +542,9 @@ def read_iceberg_changelog(
                 None if pv.get(c) is None else str(pv.get(c))
                 for c in part_cols
             )
-            groups_files.setdefault(key, []).append(_abs(path, f["path"]))
+            groups_files.setdefault(key, []).append(
+                norm_file_ref(f["path"], path)
+            )
         new_pos_groups = [
             g
             for g in _groups()

@@ -270,24 +270,57 @@ def _local_path(p: str) -> str:
     return p
 
 
+def _metadata_versions(meta_dir: str) -> list[int]:
+    """The published ``vN.metadata.json`` versions under ``meta_dir``,
+    ascending."""
+    out = []
+    for f in os.listdir(meta_dir):
+        if f.startswith("v") and f.endswith(".metadata.json"):
+            stem = f[1 : -len(".metadata.json")]
+            if stem.isdigit():
+                out.append(int(stem))
+    return sorted(out)
+
+
+def load_metadata(meta_dir: str, version: int) -> dict:
+    """Load ``vN.metadata.json`` — the one place an Iceberg reader or
+    writer opens table metadata. The caller picks ``version``: readers
+    through :func:`current_metadata`, writers from
+    :func:`_metadata_versions` (called through their own module
+    binding, their commit-race seam). The load:
+
+    - parses the JSON;
+    - gates the format version (the Delta reader-protocol discipline,
+      ``delta_import._check_reader_protocol``): this engine implements
+      the v1/v2 spec, and a v3 table (deletion vectors as Puffin blobs,
+      row lineage) parsed as v2 would at best crash mid-scan and at
+      worst silently resurrect deleted rows — or, for a writer,
+      publish v2 metadata over it;
+    - normalizes format-v1 singular fields (:func:`_normalize_v1`)."""
+    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
+        meta = json.load(fh)
+    fv = int(meta.get("format-version", 1))
+    if fv > 2:
+        raise ValueError(
+            f"Iceberg table at {os.path.dirname(meta_dir)} is "
+            f"format-version {fv}; this engine implements format v1/v2 "
+            "only — v3 content (deletion vectors, row lineage) cannot be "
+            "honored and would risk silently wrong rows"
+        )
+    return _normalize_v1(meta)
+
+
 def current_metadata(path: str) -> dict:
-    """Load the table's latest ``vN.metadata.json``. The hint in
-    ``version-hint.text`` (HadoopCatalog layout) is only a STARTING
-    point: the exporter writes it last-writer-wins AFTER the
-    put-if-absent publish, so a slow exporter of an older version can overwrite a newer
-    hint. Like ``HadoopTableOperations.findVersion``
+    """The table's latest metadata, loaded by :func:`load_metadata`.
+    The hint in ``version-hint.text`` (HadoopCatalog layout) is only a
+    STARTING point: the exporter writes it last-writer-wins AFTER the
+    put-if-absent publish, so a slow exporter of an older version can
+    overwrite a newer hint. Like ``HadoopTableOperations.findVersion``
     (iceberg-core ``hadoop/HadoopTableOperations.java``), take the
     highest version actually present — max(hint probe, dir listing) —
     never the hinted version directly."""
     meta_dir = os.path.join(path, "metadata")
-    versions = [
-        int(f[1 : -len(".metadata.json")])
-        for f in os.listdir(meta_dir)
-        if f.startswith("v")
-        and f.endswith(".metadata.json")
-        and f[1 : -len(".metadata.json")].isdigit()
-    ]
-    best = max(versions, default=0)
+    best = max(_metadata_versions(meta_dir), default=0)
     hint = os.path.join(meta_dir, "version-hint.text")
     if os.path.exists(hint):
         try:
@@ -307,24 +340,27 @@ def current_metadata(path: str) -> dict:
         os.path.join(meta_dir, f"v{best}.metadata.json")
     ):
         raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    with open(os.path.join(meta_dir, f"v{best}.metadata.json")) as fh:
-        meta = json.load(fh)
-    # Format-version gate (the Delta reader-protocol discipline,
-    # delta_import._check_reader_protocol): this engine implements the
-    # v1/v2 spec. A v3 table (deletion vectors as Puffin blobs, row
-    # lineage) parsed as v2 would at best crash mid-scan on unknown
-    # delete-file content and at worst silently resurrect deleted rows
-    # — refuse at EVERY metadata load (read, changelog, stream,
-    # replicate, and the writers all come through here).
-    fv = int(meta.get("format-version", 1))
-    if fv > 2:
-        raise ValueError(
-            f"Iceberg table at {path} is format-version {fv}; this "
-            "reader implements format v1/v2 only — v3 content "
-            "(deletion vectors, row lineage) cannot be honored and "
-            "would risk silently wrong rows"
-        )
-    return _normalize_v1(meta)
+    return load_metadata(meta_dir, best)
+
+
+def current_schema(metadata: dict) -> dict:
+    """The metadata's current schema (``current-schema-id``)."""
+    return next(
+        s
+        for s in metadata["schemas"]
+        if s["schema-id"] == metadata["current-schema-id"]
+    )
+
+
+def next_snapshot_id(metadata: dict) -> int:
+    """Id of the next snapshot committed on ``metadata`` — also its
+    sequence number. Monotonic against BOTH the live snapshot ids and
+    the last sequence number, so neither regresses after
+    ``expire_iceberg_snapshots`` prunes the history."""
+    return 1 + max(
+        max((s["snapshot-id"] for s in metadata.get("snapshots", [])), default=0),
+        int(metadata.get("last-sequence-number", 0)),
+    )
 
 
 def _normalize_v1(meta: dict) -> dict:
@@ -382,6 +418,16 @@ def _decode_avro_rows(path: str) -> list[dict]:
     return copy.deepcopy(rows)
 
 
+def _decode_manifest_list(snap: dict, location: str) -> list[dict]:
+    """A snapshot's manifest-list rows."""
+    return _decode_avro_rows(norm_file_ref(snap["manifest-list"], location))
+
+
+def _decode_manifest(row: dict, location: str) -> list[dict]:
+    """The entries of the manifest a manifest-list ``row`` names."""
+    return _decode_avro_rows(norm_file_ref(row["manifest_path"], location))
+
+
 def snapshot_files(
     metadata: dict,
     table_path: str,
@@ -391,7 +437,8 @@ def snapshot_files(
 ) -> list[dict] | tuple[list[dict], list[str]]:
     """Live data files of a snapshot (default: current): replay the
     manifest list, then every manifest, keeping entries whose status is
-    not DELETED (2). Returns dicts of (path, partition values dict).
+    not DELETED (2). Returns dicts of (path, the manifest's raw
+    ``file_path`` string, partition values dict).
 
     v2 row-level deletes (spec §Delete Formats): delete manifests
     (manifest-list ``content`` = 1) are decoded too. With
@@ -418,18 +465,12 @@ def snapshot_files(
             f"Iceberg snapshot {sid} not present "
             f"(have {[s['snapshot-id'] for s in metadata.get('snapshots', [])]})"
         )
-    mlist = _local_path(snap["manifest-list"])
-    if not os.path.isabs(mlist):
-        mlist = os.path.join(table_path, mlist)
     out: list[dict] = []
     deletes: list[dict] = []
-    for mf in _decode_avro_rows(mlist):
+    for mf in _decode_manifest_list(snap, table_path):
         is_delete_manifest = mf.get("content", 0) != 0
         mf_seq = int(mf.get("sequence_number") or 0)
-        mpath = _local_path(mf["manifest_path"])
-        if not os.path.isabs(mpath):
-            mpath = os.path.join(table_path, mpath)
-        for entry in _decode_avro_rows(mpath):
+        for entry in _decode_manifest(mf, table_path):
             if entry["status"] == 2:  # DELETED
                 continue
             df_ = entry["data_file"]
@@ -476,6 +517,10 @@ def snapshot_files(
             out.append(
                 {
                     "path": _local_path(df_["file_path"]),
+                    # the manifest's exact string: a position delete's
+                    # file_path must equal it (spec §Position Delete
+                    # Files), and readers may match by string
+                    "file_path": df_["file_path"],
                     "partition": df_.get("partition") or {},
                     "spec_id": int(mf.get("partition_spec_id") or 0),
                     "seq": seq,
@@ -1025,11 +1070,7 @@ def read_iceberg(
     schema_json = next(
         (s for s in metadata["schemas"] if s["schema-id"] == schema_id),
         None,
-    ) or next(
-        s
-        for s in metadata["schemas"]
-        if s["schema-id"] == metadata["current-schema-id"]
-    )
+    ) or current_schema(metadata)
     schema = StructType(
         [
             StructField(
@@ -1119,9 +1160,6 @@ def read_iceberg(
 
     df = _assemble_all(True)
 
-    def _abs(p: str) -> str:
-        return p if os.path.isabs(p) else os.path.join(path, p)
-
     # Every comparison keys on the DECODED absolute path: the scan's
     # _metadata.file_path is a percent-encoded URI while the replayed
     # manifest paths (and the file_path column inside position-delete
@@ -1177,7 +1215,9 @@ def read_iceberg(
         dels = None
         for seq, ds in sorted(by_seq.items()):
             one = (
-                spark.read.parquet(*[_abs(d["path"]) for d in ds])
+                spark.read.parquet(
+                    *[norm_file_ref(d["path"], path) for d in ds]
+                )
                 .select(
                     decoded_file_path(F.col("file_path")).alias("_del_path"),
                     F.col("pos").cast("long").alias("_del_pos"),
@@ -1274,7 +1314,7 @@ def read_iceberg(
             parts_df = None
             for (seq, _svk), ds in sorted(sub.items()):
                 one = spark.read.parquet(
-                    *[_abs(d["path"]) for d, _ in ds]
+                    *[norm_file_ref(d["path"], path) for d, _ in ds]
                 ).select(
                     *[F.col(c).alias(f"_eq_{c}") for c in cols]
                 ).withColumn("_del_seq", F.lit(seq))
@@ -1415,11 +1455,7 @@ def read_iceberg_incremental(
     )
     if until not in by_id:
         raise FileNotFoundError(f"snapshot {until} not present")
-    schema_json = next(
-        s
-        for s in metadata["schemas"]
-        if s["schema-id"] == metadata["current-schema-id"]
-    )
+    schema_json = current_schema(metadata)
     schema = StructType(
         [
             StructField(
@@ -1476,18 +1512,12 @@ def read_iceberg_incremental(
                 "re-read the full snapshot instead (the "
                 "IncrementalAppendScan restriction)"
             )
-        mlist = _local_path(snap["manifest-list"])
-        if not os.path.isabs(mlist):
-            mlist = os.path.join(path, mlist)
-        for mf in _decode_avro_rows(mlist):
+        for mf in _decode_manifest_list(snap, path):
             if mf.get("content", 0) != 0:
                 continue  # delete manifests guarded by the op check
             if int(mf.get("added_snapshot_id") or -1) != sid:
                 continue  # carried by reference: not this snapshot's adds
-            mpath = _local_path(mf["manifest_path"])
-            if not os.path.isabs(mpath):
-                mpath = os.path.join(path, mpath)
-            for entry in _decode_avro_rows(mpath):
+            for entry in _decode_manifest(mf, path):
                 if entry["status"] != 1:  # ADDED only
                     continue
                 if (
@@ -1503,11 +1533,8 @@ def read_iceberg_incremental(
                     None if pv.get(p) is None else str(pv[p])
                     for p, _ in idf
                 )
-                fp = _local_path(df_["file_path"])
-                if not os.path.isabs(fp):
-                    fp = os.path.join(path, fp)
                 per_spec.setdefault(f_sid, {}).setdefault(key, []).append(
-                    fp
+                    norm_file_ref(df_["file_path"], path)
                 )
     if not per_spec:
         return spark.createDataFrame([], schema)

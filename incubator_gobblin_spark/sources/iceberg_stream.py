@@ -56,12 +56,21 @@ touched split — O(touched files), never O(table).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
+)
+
+from incubator_gobblin_spark.sources.iceberg_import import (
+    _decode_manifest,
+    _decode_manifest_list,
+    _parsed_name_mapping,
+    _spark_type,
+    current_metadata,
+    current_schema,
+    norm_file_ref,
+    snapshot_files,
 )
 
 
@@ -109,33 +118,20 @@ class _ChangeSplit(InputPartition):
         self.spec_id = spec_id
 
 
-def _metadata(path: str) -> dict:
-    from incubator_gobblin_spark.sources.iceberg_import import current_metadata
-
-    return current_metadata(path)
-
-
 def _field_id_map(path: str) -> dict[str, int]:
     """Top-level logical column name -> Iceberg field id (the spec's
     resolution key: data files written before a rename carry the OLD
     parquet name, so the stream reader matches by embedded field id
     when the file has ids, by name otherwise)."""
-    md = _metadata(path)
-    schema_json = next(
-        s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]
-    )
+    schema_json = current_schema(current_metadata(path))
     return {f["name"]: int(f["id"]) for f in schema_json["fields"]}
 
 
 def _table_schema(path: str):
     from pyspark.sql.types import StructField, StructType
 
-    from incubator_gobblin_spark.sources.iceberg_import import _spark_type
-
-    md = _metadata(path)
-    schema_json = next(
-        s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]
-    )
+    md = current_metadata(path)
+    schema_json = current_schema(md)
     schema = StructType(
         [
             StructField(
@@ -201,12 +197,8 @@ class IcebergStreamReader(DataSourceStreamReader):
         # back to the column physically stored in its parquet (the
         # batch readers' per-file-spec _ident rule, iceberg_import.py).
         try:
-            md = _metadata(self.root)
-            sj = next(
-                s
-                for s in md["schemas"]
-                if s["schema-id"] == md["current-schema-id"]
-            )
+            md = current_metadata(self.root)
+            sj = current_schema(md)
             fname = {f["id"]: f["name"] for f in sj["fields"]}
             self.ident_by_spec = {
                 sp["spec-id"]: [
@@ -234,17 +226,9 @@ class IcebergStreamReader(DataSourceStreamReader):
         # in _columns' name fallback.
         self.nm_names: dict[str, list[str]] = {}
         try:
-            from incubator_gobblin_spark.sources.iceberg_import import (
-                _parsed_name_mapping,
-            )
-
-            md = _metadata(self.root)
+            md = current_metadata(self.root)
             nm = _parsed_name_mapping(md) or []
-            sj = next(
-                s
-                for s in md["schemas"]
-                if s["schema-id"] == md["current-schema-id"]
-            )
+            sj = current_schema(md)
             cur_of_id = {int(f["id"]): f["name"] for f in sj["fields"]}
             for e in nm:
                 if not isinstance(e, dict):
@@ -257,7 +241,7 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     def _snaps(self) -> list[dict]:
         try:
-            snaps = list(_metadata(self.root).get("snapshots", []))
+            snaps = list(current_metadata(self.root).get("snapshots", []))
         except FileNotFoundError:
             return []
         return sorted(snaps, key=self._seq_of)
@@ -278,11 +262,6 @@ class IcebergStreamReader(DataSourceStreamReader):
         return {"seq": self._seq_of(snaps[-1]) if snaps else 0}
 
     def partitions(self, start: dict, end: dict):
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            _decode_avro_rows,
-            _local_path,
-        )
-
         lo, hi = int(start["seq"]), int(end["seq"])
         if self.read_change_feed:
             return self._changelog_partitions(lo, hi)
@@ -314,10 +293,7 @@ class IcebergStreamReader(DataSourceStreamReader):
             for the fresh stream's initial batch — its entire live
             state (carried manifests included)."""
             sid = snap["snapshot-id"]
-            mlist = _local_path(snap["manifest-list"])
-            if not os.path.isabs(mlist):
-                mlist = os.path.join(self.root, mlist)
-            for mf in _decode_avro_rows(mlist):
+            for mf in _decode_manifest_list(snap, self.root):
                 if mf.get("content", 0) != 0:
                     if self.skip_change_commits and not full_state:
                         # the delete manifest belongs to a skipped
@@ -336,10 +312,7 @@ class IcebergStreamReader(DataSourceStreamReader):
                     and int(mf.get("added_snapshot_id") or -1) != sid
                 ):
                     continue  # carried by reference: already streamed
-                mpath = _local_path(mf["manifest_path"])
-                if not os.path.isabs(mpath):
-                    mpath = os.path.join(self.root, mpath)
-                for entry in _decode_avro_rows(mpath):
+                for entry in _decode_manifest(mf, self.root):
                     if full_state:
                         if entry["status"] == 2:  # DELETED
                             continue
@@ -352,12 +325,9 @@ class IcebergStreamReader(DataSourceStreamReader):
                         ):
                             continue
                     df_ = entry["data_file"]
-                    fp = _local_path(df_["file_path"])
-                    if not os.path.isabs(fp):
-                        fp = os.path.join(self.root, fp)
                     parts.append(
                         _AddedFile(
-                            fp,
+                            norm_file_ref(df_["file_path"], self.root),
                             dict(df_.get("partition") or {}),
                             int(mf.get("partition_spec_id") or 0),
                         )
@@ -403,13 +373,9 @@ class IcebergStreamReader(DataSourceStreamReader):
         data file touched by removals / new delete files becomes one
         recovery split (the batch read_iceberg_changelog semantics,
         shipped as per-file pyarrow work instead of union plans)."""
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            snapshot_files,
-        )
-
         if hi <= lo:
             return [_ChangeSplit("", {}, 0, 0, "insert")]
-        metadata = _metadata(self.root)
+        metadata = current_metadata(self.root)
         snaps = self._snaps()
         in_range = [s for s in snaps if lo < self._seq_of(s) <= hi]
         if not in_range:
@@ -421,11 +387,7 @@ class IcebergStreamReader(DataSourceStreamReader):
                 "checkpointed offset predates the surviving history — "
                 "restart from a fresh checkpoint"
             )
-        schema_json = next(
-            s
-            for s in metadata["schemas"]
-            if s["schema-id"] == metadata["current-schema-id"]
-        )
+        schema_json = current_schema(metadata)
         # a schema change inside the batch whose (id, name) field set
         # differs from the current schema would misresolve the parent
         # recovery — refuse with split guidance (the batch reader's
@@ -452,14 +414,6 @@ class IcebergStreamReader(DataSourceStreamReader):
             s["spec-id"]: s for s in metadata.get("partition-specs", [])
         }
         retained = {s["snapshot-id"] for s in metadata.get("snapshots", [])}
-
-        def _abs(p: str) -> str:
-            from incubator_gobblin_spark.sources.iceberg_import import (
-                _local_path,
-            )
-
-            p = _local_path(p)
-            return p if os.path.isabs(p) else os.path.join(self.root, p)
 
         def _eq_scopes(d: dict) -> list[tuple[str, str]]:
             """(source_col, scope_value_str) per non-null scope entry
@@ -520,7 +474,7 @@ class IcebergStreamReader(DataSourceStreamReader):
 
         def _eq_entry(d: dict) -> tuple:
             return (
-                _abs(d["path"]),
+                norm_file_ref(d["path"], self.root),
                 [field_name[i] for i in d["equality_ids"]],
                 _eq_scopes(d),
             )
@@ -565,7 +519,9 @@ class IcebergStreamReader(DataSourceStreamReader):
                 # inserts — the expiry-truncated-head rule shared with
                 # the batch changelog and deltastream
                 st_pos = [
-                    _abs(d["path"]) for d in dels_s if d["content"] == 1
+                    norm_file_ref(d["path"], self.root)
+                    for d in dels_s
+                    if d["content"] == 1
                 ]
                 eq_s = [
                     (_eq_entry(d), d["seq"])
@@ -575,7 +531,7 @@ class IcebergStreamReader(DataSourceStreamReader):
                 for f in files_s:
                     parts.append(
                         _ChangeSplit(
-                            _abs(f["path"]),
+                            norm_file_ref(f["path"], self.root),
                             dict(f.get("partition") or {}),
                             ordinal,
                             sid,
@@ -598,7 +554,11 @@ class IcebergStreamReader(DataSourceStreamReader):
             paths_s = {f["path"] for f in files_s}
             del_paths_p = {d["path"] for d in dels_p}
             new_dels = [d for d in dels_s if d["path"] not in del_paths_p]
-            new_pos = [_abs(d["path"]) for d in new_dels if d["content"] == 1]
+            new_pos = [
+                norm_file_ref(d["path"], self.root)
+                for d in new_dels
+                if d["content"] == 1
+            ]
             # inserts: data files this snapshot added. Position deletes
             # MAY target files added in the SAME snapshot (spec: pos
             # deletes apply at seq <=, unlike equality's strictly-
@@ -608,7 +568,7 @@ class IcebergStreamReader(DataSourceStreamReader):
                 if f["path"] not in paths_p:
                     parts.append(
                         _ChangeSplit(
-                            _abs(f["path"]),
+                            norm_file_ref(f["path"], self.root),
                             dict(f.get("partition") or {}),
                             ordinal,
                             sid,
@@ -621,7 +581,11 @@ class IcebergStreamReader(DataSourceStreamReader):
             if not removed_paths and not new_dels:
                 continue
             new_eq = [_eq_entry(d) for d in new_dels if d["content"] == 2]
-            st_pos = [_abs(d["path"]) for d in dels_p if d["content"] == 1]
+            st_pos = [
+                norm_file_ref(d["path"], self.root)
+                for d in dels_p
+                if d["content"] == 1
+            ]
             eq_p = [
                 (_eq_entry(d), d["seq"])
                 for d in dels_p
@@ -636,7 +600,7 @@ class IcebergStreamReader(DataSourceStreamReader):
                     continue
                 parts.append(
                     _ChangeSplit(
-                        _abs(f["path"]),
+                        norm_file_ref(f["path"], self.root),
                         dict(f.get("partition") or {}),
                         ordinal,
                         sid,
@@ -765,10 +729,6 @@ class IcebergStreamReader(DataSourceStreamReader):
         if not part.path:
             return
         import pyarrow.parquet as pq
-
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            norm_file_ref,
-        )
 
         table = pq.read_table(part.path)
         n = table.num_rows

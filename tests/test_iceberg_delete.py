@@ -158,6 +158,59 @@ def test_iceberg_delete_files_carry_spec_shape(spark, sf_dir, tmp_path):
         assert set(p for p, _ in rows) <= data_paths
 
 
+def test_iceberg_delete_keeps_manifest_file_path_form(
+    spark, sf_dir, tmp_path
+):
+    """A manifest whose data-file paths use Hadoop's single-slash
+    ``file:/abs`` form: the position deletes must carry those strings
+    verbatim, not a re-derived ``file:///abs`` — a reader matching by
+    string (iceberg-java) would otherwise resurrect the rows."""
+    import pyarrow.parquet as pq
+
+    from incubator_gobblin_spark.formats.avro_ocf import (
+        decode_ocf,
+        encode_ocf,
+    )
+    from incubator_gobblin_spark.sources.iceberg_import import (
+        snapshot_files,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(*COLS)
+    root = str(tmp_path / "hadoop_uri")
+    _export(spark, docs, root)
+    meta = current_metadata(root)
+    snap = meta["snapshots"][-1]
+    with open(snap["manifest-list"].replace("file://", ""), "rb") as fh:
+        _, list_rows = decode_ocf(fh.read())
+    manifest_paths = set()
+    for r in list_rows:
+        mpath = r["manifest_path"].replace("file://", "")
+        with open(mpath, "rb") as fh:
+            schema, entries = decode_ocf(fh.read())
+        for e in entries:
+            fp = e["data_file"]["file_path"]
+            assert fp.startswith("file:///")
+            e["data_file"]["file_path"] = "file:" + fp[len("file://"):]
+            manifest_paths.add(e["data_file"]["file_path"])
+        with open(mpath, "wb") as fh:
+            fh.write(encode_ocf(schema, entries, codec="null"))
+
+    r = delete_iceberg_rows(spark, root, "doc_id % 5 = 2")
+    assert r["rows_deleted"] == docs.filter("doc_id % 5 = 2").count()
+    _, dels = snapshot_files(
+        current_metadata(root), root, collect_deletes=True
+    )
+    written = {
+        p
+        for d in dels
+        for p in pq.read_table(d["path"]).column("file_path").to_pylist()
+    }
+    assert written and written <= manifest_paths
+    assert _rows(read_iceberg(spark, root)) == _rows(
+        docs.filter("doc_id % 5 != 2")
+    )
+
+
 def test_iceberg_delete_foreign_duckdb_reconstruction(
     spark, sf_dir, tmp_path
 ):

@@ -338,6 +338,35 @@ def test_iceberg_format_version_3_refused_at_every_load(
         spark.readStream.format("icebergstream").option(
             "path", root
         ).load()
+    # every writer loads through the same gate: refused before it
+    # publishes anything
+    from incubator_gobblin_spark.sinks.iceberg_delete import (
+        delete_iceberg_rows,
+    )
+    from incubator_gobblin_spark.sinks.iceberg_export import (
+        expire_iceberg_snapshots,
+    )
+    from incubator_gobblin_spark.sinks.iceberg_maintenance import (
+        drop_iceberg_ref,
+        remove_iceberg_orphan_files,
+        rollback_iceberg_table,
+        set_iceberg_ref,
+        set_iceberg_table_properties,
+    )
+
+    listing = sorted(os.listdir(meta_dir))
+    for write in (
+        lambda: rollback_iceberg_table(root, raw["current-snapshot-id"]),
+        lambda: set_iceberg_ref(root, "audit"),
+        lambda: drop_iceberg_ref(root, "audit"),
+        lambda: set_iceberg_table_properties(root, {"k": "v"}),
+        lambda: expire_iceberg_snapshots(root),
+        lambda: remove_iceberg_orphan_files(root, dry_run=True),
+        lambda: delete_iceberg_rows(spark, root, "doc_id = 1"),
+    ):
+        with pytest.raises(ValueError, match="format-version 3"):
+            write()
+    assert sorted(os.listdir(meta_dir)) == listing
 
 
 def _foreign_rename_lang_to_language(root):

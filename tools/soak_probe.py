@@ -7,14 +7,14 @@ Usage: python tools/soak_probe.py [qname ...]
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from incubator_gobblin_spark.plans import queries as Q
+from incubator_gobblin_spark.plans import queries as Q  # noqa: E402
+from incubator_gobblin_spark.session import get_spark  # noqa: E402
 
 DEFAULT = [
     "q128_iceberg_posdelete_agg",
@@ -24,11 +24,9 @@ DEFAULT = [
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("soak-probe")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(
+        app_name="soak-probe", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = Q.queries()
