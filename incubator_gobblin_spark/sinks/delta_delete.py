@@ -33,7 +33,6 @@ from __future__ import annotations
 import json
 import os
 import time as _time
-from urllib.parse import unquote
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -42,11 +41,14 @@ from pyspark.sql.types import StructType
 from incubator_gobblin_spark.sources.delta_import import (
     _cm_phys,
     _fieldid_type,
+    _groups_of,
     _logical_expr,
     _log_versions,
     _mapped_below,
     _physicalize_type,
     _replay_state,
+    add_file_path,
+    anti_join_dvs,
     assemble_snapshot,
     check_reader_protocol,
     decoded_file_path,
@@ -228,19 +230,7 @@ def _stage_cdf_deletes(
         stage_cdc_files,
     )
 
-    changes = filtered
-    dv_pairs = [
-        (
-            os.path.abspath(os.path.join(path, unquote(rel))),
-            json.dumps(a["deletionVector"]),
-        )
-        for rel, a in live.items()
-        if a.get("deletionVector")
-    ]
-    if dv_pairs:
-        changes = _anti_join_existing_dvs(
-            spark, changes, os.path.abspath(path), dv_pairs
-        )
+    changes = anti_join_dvs(spark, filtered, path, live.values())
     logical_cols = [f["name"] for f in schema_json["fields"]]
     changes = changes.select(*logical_cols).withColumn(
         "_change_type", F.lit("delete")
@@ -263,7 +253,7 @@ def build_dv_descriptors(spark, matched, path: str, live: dict) -> list:
     receives one descriptor row per touched file, never positions."""
     table_root = os.path.abspath(path)
     file_info = {
-        os.path.abspath(os.path.join(path, unquote(rel))): (
+        os.path.abspath(add_file_path(path, rel)): (
             json.dumps(a["deletionVector"]) if a.get("deletionVector") else None,
             _stats_num_records(a),
         )
@@ -309,67 +299,6 @@ def build_dv_descriptors(spark, matched, path: str, live: dict) -> list:
         matched.groupBy("_path")
         .applyInPandas(_build, "_path string, _dv string, _card long")
         .collect()
-    )
-
-
-def _anti_join_existing_dvs(
-    spark: SparkSession,
-    df: DataFrame,
-    table_root: str,
-    dv_pairs: list[tuple[str, str]],
-) -> DataFrame:
-    """Drop from ``df`` (already carrying ``_file_path``/``_row_index``
-    scan coordinates) the positions dead under the standing deletion
-    vectors ``dv_pairs`` [(abs file path, descriptor json)]. Bitmaps
-    decode executor-side, one task per vector (the read_delta shape)."""
-    from incubator_gobblin_spark.sources.delta_import import (
-        decoded_file_path,
-    )
-    from incubator_gobblin_spark.sources.mock_kafka import _ship_package
-
-    _ship_package(spark)
-    desc_df = spark.createDataFrame(
-        dv_pairs, "_del_path string, _dv string"
-    ).repartition(min(len(dv_pairs), 64))
-
-    def expand(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from incubator_gobblin_spark.formats.deletion_vectors import (
-            read_dv_positions,
-        )
-
-        for pdf in batches:
-            for p, dv in zip(pdf["_del_path"], pdf["_dv"]):
-                poss = read_dv_positions(table_root, _json.loads(dv))
-                if poss:
-                    yield pd.DataFrame(
-                        {
-                            "_del_path": p,
-                            "_del_pos": pd.Series(poss, dtype="int64"),
-                        }
-                    )
-
-    from incubator_gobblin_spark.sources.delta_import import (
-        materialize_small,
-    )
-
-    # decode once: a semi/anti pushdown below the scan's partition
-    # union would otherwise re-run the Python DV decode per union arm
-    tombs = F.broadcast(
-        materialize_small(
-            desc_df.mapInPandas(expand, "_del_path string, _del_pos long")
-        )
-    )
-    return df.withColumn(
-        "_norm_path_cdc", decoded_file_path(F.col("_file_path"))
-    ).join(
-        tombs,
-        (F.col("_norm_path_cdc") == F.col("_del_path"))
-        & (F.col("_row_index") == F.col("_del_pos")),
-        "left_anti",
     )
 
 
@@ -482,19 +411,11 @@ def delete_delta_rows(
         def _logicalize(df):
             return df
 
-    table_root = os.path.abspath(path)
-    groups: dict[tuple, list[str]] = {}
-    by_abs: dict[str, str] = {}  # decoded abspath -> rel key in `live`
-    for rel, a in live.items():
-        pv = a.get("partitionValues") or {}
-        key = tuple(pv.get(k) for k in pv_keys)
-        fp = os.path.join(path, unquote(rel))
-        groups.setdefault(key, []).append(fp)
-        by_abs[os.path.abspath(fp)] = rel
-
+    # decoded abspath -> rel key in `live`
+    by_abs = {os.path.abspath(add_file_path(path, rel)): rel for rel in live}
     df = assemble_snapshot(
-        spark, groups, schema, part_cols, union_threshold,
-        with_positions=True,
+        spark, _groups_of(path, live.values(), pv_keys), schema, part_cols,
+        union_threshold, with_positions=True,
     )
     logical = _logicalize(df)
     if ids is not None:
@@ -612,7 +533,7 @@ def delete_delta_rows(
 
         for c in cdc_actions:
             try:
-                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
+                os.remove(add_file_path(path, c["cdc"]["path"]))
             except OSError:
                 pass
         for r in desc_rows:

@@ -63,10 +63,14 @@ from incubator_gobblin_spark.sinks.delta_delete import (
 )
 from incubator_gobblin_spark.sources.delta_import import (
     _cm_phys,
+    _commit_actions,
     _fieldid_type,
+    _groups_of,
     _log_versions,
     _physicalize_type,
     _replay_state,
+    add_file_path,
+    anti_join_dvs,
     check_reader_protocol,
 )
 
@@ -532,7 +536,7 @@ def write_delta_table(
     def _cleanup():
         for a in adds:
             try:
-                os.remove(os.path.join(path, unquote(a["path"])))
+                os.remove(add_file_path(path, a["path"]))
             except OSError:
                 pass
 
@@ -714,11 +718,6 @@ def compact_delta_files(
             "groups_rewritten": 0,
         }
 
-    table_root = os.path.abspath(path)
-    from incubator_gobblin_spark.sources.mock_kafka import _ship_package
-
-    _ship_package(spark)
-
     new_adds: list[dict] = []
     removes: list[dict] = []
     rows_rewritten = 0
@@ -740,18 +739,18 @@ def compact_delta_files(
 
     try:
         for key, sel in plan:
-            files = [os.path.join(path, unquote(rel)) for rel, _ in sel]
-            df = spark.read.schema(data_schema).parquet(*files)
-            dv_pairs = [
-                (
-                    os.path.abspath(os.path.join(path, unquote(rel))),
-                    json.dumps(a["deletionVector"]),
-                )
-                for rel, a in sel
-                if a.get("deletionVector")
-            ]
-            if dv_pairs:
-                df = _anti_join_dvs(spark, df, table_root, dv_pairs)
+            files = [add_file_path(path, rel) for rel, _ in sel]
+            scan = spark.read.schema(data_schema).parquet(*files)
+            df = anti_join_dvs(
+                spark,
+                scan.select(
+                    "*",
+                    F.col("_metadata.file_path").alias("_file_path"),
+                    F.col("_metadata.row_index").alias("_row_index"),
+                ),
+                path,
+                [a for _, a in sel],
+            )
             live_bytes = sum(int(a.get("size") or 0) for _, a in sel)
             n_out = max(1, math.ceil(live_bytes / target_file_bytes))
             staging = os.path.join(
@@ -764,9 +763,7 @@ def compact_delta_files(
                     .write.mode("overwrite")
                     .parquet(staging)
                 )
-                dest_dir = os.path.dirname(
-                    os.path.join(path, unquote(sel[0][0]))
-                )
+                dest_dir = os.path.dirname(add_file_path(path, sel[0][0]))
                 moved = _move_parts(staging, dest_dir, "c")
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
@@ -909,7 +906,6 @@ def merge_delta_rows(
     )
     from incubator_gobblin_spark.sources.delta_import import (
         assemble_snapshot,
-        check_reader_protocol,
         decoded_file_path,
     )
 
@@ -943,16 +939,9 @@ def merge_delta_rows(
     # harmlessly: the bitmap union is idempotent) ----
     desc_rows: list = []
     if live:
-        groups: dict[tuple, list[str]] = {}
-        for rel, a in live.items():
-            pv = a.get("partitionValues") or {}
-            key = tuple(pv.get(k) for k in part_cols)
-            groups.setdefault(key, []).append(
-                os.path.join(path, unquote(rel))
-            )
         scan = assemble_snapshot(
-            spark, groups, schema, part_cols, union_threshold,
-            with_positions=True,
+            spark, _groups_of(path, live.values(), part_cols), schema,
+            part_cols, union_threshold, with_positions=True,
         )
         keys = source.select(*on_cols).distinct()
         matched_rows = scan.join(
@@ -969,10 +958,7 @@ def merge_delta_rows(
         )
         desc_rows = build_dv_descriptors(spark, matched, path, live)
 
-    by_abs = {
-        os.path.abspath(os.path.join(path, unquote(rel))): rel
-        for rel in live
-    }
+    by_abs = {os.path.abspath(add_file_path(path, rel)): rel for rel in live}
     ts = int(_time.time() * 1000)
     adds_new, rows_inserted = _stage_adds(source, path, part_cols, ts)
 
@@ -984,26 +970,11 @@ def merge_delta_rows(
         # matched old rows (minus positions already dead under a
         # standing DV) as update_preimage, their replacements as
         # update_postimage, unmatched source rows as insert.
-        from incubator_gobblin_spark.sinks.delta_delete import (
-            _anti_join_existing_dvs,
-        )
-
         logical_cols = [f.name for f in schema.fields]
         if live:
-            pre = matched_rows
-            dv_pairs = [
-                (
-                    os.path.abspath(os.path.join(path, unquote(rel))),
-                    json.dumps(a["deletionVector"]),
-                )
-                for rel, a in live.items()
-                if a.get("deletionVector")
-            ]
-            if dv_pairs:
-                pre = _anti_join_existing_dvs(
-                    spark, pre, os.path.abspath(path), dv_pairs
-                )
-            pre = pre.select(*logical_cols)
+            pre = anti_join_dvs(
+                spark, matched_rows, path, live.values()
+            ).select(*logical_cols)
             matched_keys = pre.select(*on_cols).distinct()
             changes = (
                 pre.withColumn("_change_type", F.lit("update_preimage"))
@@ -1107,12 +1078,12 @@ def merge_delta_rows(
     def _cleanup():
         for a in adds_new:
             try:
-                os.remove(os.path.join(path, unquote(a["path"])))
+                os.remove(add_file_path(path, a["path"]))
             except OSError:
                 pass
         for c in cdc_actions:
             try:
-                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
+                os.remove(add_file_path(path, c["cdc"]["path"]))
             except OSError:
                 pass
 
@@ -1165,70 +1136,6 @@ def _check_compactable(proto: dict, meta: dict) -> None:
             )
 
 
-def _anti_join_dvs(
-    spark: SparkSession,
-    df: DataFrame,
-    table_root: str,
-    dv_pairs: list[tuple[str, str]],
-) -> DataFrame:
-    """Anti-join ``df`` (a raw parquet scan) against the deletion
-    vectors of its files — the read_delta DV path, scoped to a file
-    subset. Bitmaps decode EXECUTOR-side; the tombstone set is
-    broadcast (compaction groups are file-bounded, and the same
-    cardinality guard as read_delta applies upstream via selection)."""
-    from incubator_gobblin_spark.sources.delta_import import (
-        decoded_file_path,
-    )
-
-    desc_df = spark.createDataFrame(
-        dv_pairs, "_del_path string, _dv string"
-    ).repartition(min(len(dv_pairs), 64))
-
-    def expand(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from incubator_gobblin_spark.formats.deletion_vectors import (
-            read_dv_positions,
-        )
-
-        for pdf in batches:
-            for p, dv in zip(pdf["_del_path"], pdf["_dv"]):
-                poss = read_dv_positions(table_root, _json.loads(dv))
-                if poss:
-                    yield pd.DataFrame(
-                        {
-                            "_del_path": p,
-                            "_del_pos": pd.Series(poss, dtype="int64"),
-                        }
-                    )
-
-    from incubator_gobblin_spark.sources.delta_import import (
-        materialize_small,
-    )
-
-    # decode once — see materialize_small (anti pushdown below a scan
-    # union would re-run the Python decode per arm)
-    tombs = F.broadcast(
-        materialize_small(
-            desc_df.mapInPandas(expand, "_del_path string, _del_pos long")
-        )
-    )
-    out = (
-        df.withColumn("_file_path", F.col("_metadata.file_path"))
-        .withColumn("_row_index", F.col("_metadata.row_index"))
-        .withColumn("_norm_path", decoded_file_path(F.col("_file_path")))
-        .join(
-            tombs,
-            (F.col("_norm_path") == F.col("_del_path"))
-            & (F.col("_row_index") == F.col("_del_pos")),
-            "left_anti",
-        )
-    )
-    return out.select(*df.columns)
-
-
 def vacuum_delta(
     path: str,
     *,
@@ -1272,6 +1179,7 @@ def vacuum_delta(
     live, meta, proto, removes = _replay_state(
         log_dir, None, collect_removes=True
     )
+    check_reader_protocol(proto, meta, live, allow_column_mapping=True)
 
     from incubator_gobblin_spark.formats.deletion_vectors import (
         dv_file_path,
@@ -1279,7 +1187,7 @@ def vacuum_delta(
 
     referenced: set[str] = set()
     for rel, a in live.items():
-        referenced.add(os.path.abspath(os.path.join(path, unquote(rel))))
+        referenced.add(os.path.abspath(add_file_path(path, rel)))
         if a.get("deletionVector"):
             dvp = dv_file_path(os.path.abspath(path), a["deletionVector"])
             if dvp:
@@ -1297,7 +1205,7 @@ def vacuum_delta(
         ts = r.get("deletionTimestamp")
         if ts is None or float(ts) < cutoff_ms:
             continue
-        referenced.add(os.path.abspath(os.path.join(path, unquote(rel))))
+        referenced.add(os.path.abspath(add_file_path(path, rel)))
         if r.get("deletionVector"):
             dvp = dv_file_path(os.path.abspath(path), r["deletionVector"])
             if dvp:
@@ -1333,23 +1241,12 @@ def vacuum_delta(
     # so this is the only pass that sees them.
     cd_root = os.path.join(root, "_change_data")
     if os.path.isdir(cd_root):
-        referenced_cdc: set[str] = set()
-        for fn in os.listdir(log_dir):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(log_dir, fn)) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    act = json.loads(line)
-                    if "cdc" in act:
-                        referenced_cdc.add(
-                            os.path.abspath(
-                                os.path.join(
-                                    root, unquote(act["cdc"]["path"])
-                                )
-                            )
-                        )
+        referenced_cdc = {
+            os.path.abspath(add_file_path(root, act["cdc"]["path"]))
+            for v in _log_versions(log_dir)
+            for act in _commit_actions(log_dir, v)
+            if "cdc" in act
+        }
         for dirpath, _dirs, files in os.walk(cd_root):
             for fn in files:
                 if fn.startswith("."):
@@ -1421,6 +1318,7 @@ def checkpoint_delta_table(path: str, *, part_size: int | None = None) -> dict:
     live, meta, proto, tombs = _replay_state(
         log_dir, version, collect_removes=True
     )
+    check_reader_protocol(proto, meta, live, allow_column_mapping=True)
     standing = sorted(
         (r for p, r in tombs.items() if p not in live),
         key=lambda r: r["path"],
@@ -1573,7 +1471,7 @@ def restore_delta_table(
             # the historical file may have been vacuumed after its
             # tombstone aged out — restoring a dangling add would
             # fabricate an unreadable table
-            fp = os.path.join(path, unquote(rel))
+            fp = add_file_path(path, rel)
             if not os.path.exists(fp):
                 raise FileNotFoundError(
                     f"restore_delta_table: {rel} of version {version} "
@@ -1618,7 +1516,7 @@ def restore_delta_table(
     except Exception:
         for c in cdc_actions:  # staged change files are orphans
             try:
-                os.remove(os.path.join(path, unquote(c["cdc"]["path"])))
+                os.remove(add_file_path(path, c["cdc"]["path"]))
             except OSError:
                 pass
         raise

@@ -1097,6 +1097,7 @@ class FileSink:
         from incubator_gobblin_spark.sources.delta_import import (
             _log_versions,
             _replay_state,
+            add_file_path,
         )
 
         log_dir = os.path.join(self.path, "_delta_log")
@@ -1193,7 +1194,7 @@ class FileSink:
                 sample = next(iter(adds.values()), None)
                 schema = (
                     _delta_schema_string(
-                        os.path.join(self.path, unquote(sample["path"])),
+                        add_file_path(self.path, sample["path"]),
                         partition_cols=list(self.partition_by),
                         partition_values=[
                             a["partitionValues"] for a in adds.values()

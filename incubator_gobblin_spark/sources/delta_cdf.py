@@ -47,7 +47,6 @@ from __future__ import annotations
 
 import json
 import os
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,9 +59,10 @@ from pyspark.sql.types import (
 
 from incubator_gobblin_spark.sources.delta_import import (
     _commit_actions,
+    _groups_of,
     _log_versions,
     _replay_state,
-    add_file_path,
+    anti_join_dvs,
     assemble_snapshot,
     check_reader_protocol,
 )
@@ -75,15 +75,6 @@ COMMIT_TIMESTAMP_COL = "_commit_timestamp"
 def _cdf_on(meta: dict | None) -> bool:
     conf = (meta or {}).get("configuration") or {}
     return str(conf.get("delta.enableChangeDataFeed", "")).lower() == "true"
-
-
-def _groups_of(path: str, files: list[dict], pv_keys: list[str]):
-    groups: dict[tuple, list[str]] = {}
-    for a in files:
-        pv = a.get("partitionValues") or {}
-        key = tuple(pv.get(k) for k in pv_keys)
-        groups.setdefault(key, []).append(add_file_path(path, a["path"]))
-    return groups
 
 
 #: Default per-call version-interval bound — the CDF plan unions one
@@ -386,7 +377,6 @@ def read_delta_changes(
         )
 
     frames: list[DataFrame] = []
-    table_root = os.path.abspath(path)
     for v, ts, kind, payload in plan:
         if kind == "cdc":
             # cdc files carry _change_type IN the file
@@ -420,10 +410,6 @@ def read_delta_changes(
                 ).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
                 frames.append(_stamp(df, v, ts))
             if dvd:
-                from incubator_gobblin_spark.sinks.delta_delete import (
-                    _anti_join_existing_dvs,
-                )
-
                 df = assemble_snapshot(
                     spark,
                     _groups_of(path, [r for r, _ in dvd], pv_keys),
@@ -432,19 +418,12 @@ def read_delta_changes(
                     union_threshold,
                     with_positions=True,
                 )
-                df = _anti_join_existing_dvs(
+                # the removed file's rows as of v-1: its standing DV
+                df = anti_join_dvs(
                     spark,
                     df,
-                    table_root,
-                    [
-                        (
-                            os.path.abspath(
-                                add_file_path(path, r["path"])
-                            ),
-                            json.dumps(dv),
-                        )
-                        for r, dv in dvd
-                    ],
+                    path,
+                    [{**r, "deletionVector": dv} for r, dv in dvd],
                 ).withColumn(CHANGE_TYPE_COL, F.lit("delete"))
                 frames.append(_stamp(df, v, ts))
 

@@ -38,7 +38,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 
 #: Broadcasting row-level tombstones is only safe while the tombstone
@@ -47,7 +47,10 @@ from pyspark.sql.types import StructField, StructType
 #: no extra job), the anti-join falls back to a shuffle join keyed on
 #: the same (path, pos) columns: identical result, bounded executor
 #: memory. A pathological table (billions of deleted rows, never
-#: vacuumed) must not OOM the broadcast.
+#: vacuumed) must not OOM the broadcast. Binds every Delta DV anti-join
+#: (:func:`anti_join_dvs` — the snapshot read, DELETE/MERGE CDF
+#: staging, OPTIMIZE, the CDF read) and the Iceberg position-delete
+#: joins.
 TOMBSTONE_BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -98,11 +101,14 @@ def decoded_file_path(col):
 
 
 def add_file_path(table_path: str, raw: str) -> str:
-    """Local filesystem path of an add/remove/cdc action's ``path``.
+    """Local filesystem path of an add/remove/cdc action's ``path`` —
+    the one action-path rule: every Delta reader and writer resolves
+    action paths here (wrap in ``os.path.abspath`` for set/dict keys).
     PROTOCOL.md: the common form is a RELATIVE percent-encoded path
     under the table root, but ABSOLUTE paths and absolute ``file:``
     URIs are legal too — joining those under the root would fabricate
-    a bogus path and fail the read."""
+    a bogus path (a live file listed as a vacuum candidate, a DELETE
+    scanning a path that does not exist)."""
     s = str(raw)
     if s.startswith("file://"):
         from urllib.parse import urlparse
@@ -786,44 +792,63 @@ def read_delta(
     if not live:
         return spark.createDataFrame([], logical_schema)
 
-    # group files by identical partition values
+    has_dv = any(a.get("deletionVector") for a in live.values())
+    df = assemble_snapshot(
+        spark, _groups_of(path, live.values(), pv_keys), schema, part_cols,
+        union_threshold, with_positions=has_dv,
+    )
+    if has_dv:
+        df = anti_join_dvs(spark, df, path, live.values()).select(
+            *[f.name for f in schema.fields]
+        )
+    return _finish(df)
+
+
+def _groups_of(path: str, adds, pv_keys: list[str]) -> dict[tuple, list[str]]:
+    """Group action dicts' local file paths by their partition values
+    (one tuple entry per ``pv_keys`` name, None for null) — the
+    ``groups`` shape :func:`assemble_snapshot` takes."""
     groups: dict[tuple, list[str]] = {}
-    dv_adds: list[tuple[str, str]] = []
-    dv_cardinality = 0
-    for a in live.values():
+    for a in adds:
         pv = a.get("partitionValues") or {}
         key = tuple(pv.get(k) for k in pv_keys)
-        fp = add_file_path(path, a["path"])
-        groups.setdefault(key, []).append(fp)
-        if a.get("deletionVector"):
-            dv_adds.append((os.path.abspath(fp), json.dumps(a["deletionVector"])))
-            dv_cardinality += int(a["deletionVector"].get("cardinality") or 0)
-    if not dv_adds:
-        return _finish(
-            assemble_snapshot(
-                spark, groups, schema, part_cols, union_threshold
-            )
-        )
+        groups.setdefault(key, []).append(add_file_path(path, a["path"]))
+    return groups
 
-    # deletion vectors present (PROTOCOL.md §Deletion Vectors): decode
-    # each add's roaring bitmap EXECUTOR-side (one task per DV — the
-    # driver never materializes O(deleted-rows) state) into (file,
-    # row_index) tombstones, then anti-join the scan's _metadata
-    # coordinates — the same shape as the Iceberg position-delete path.
+
+def anti_join_dvs(spark: SparkSession, df: DataFrame, path: str, adds) -> DataFrame:
+    """Drop the rows dead under deletion vectors (PROTOCOL.md §Deletion
+    Vectors) — the one Delta DV anti-join.
+
+    ``df`` carries the scan coordinates ``_file_path`` (Spark's
+    ``_metadata.file_path`` URI) and ``_row_index``; ``adds`` is any
+    iterable of action dicts of the table at ``path``, and only those
+    carrying a ``deletionVector`` count. Returns exactly ``df``'s
+    columns — ``df`` itself when no action carries a vector.
+
+    Each bitmap decodes EXECUTOR-side, one task per vector up to 64
+    (the driver never holds O(deleted rows)), ONCE: the tombstones are
+    materialized (:func:`materialize_small`) so a semi/anti pushdown
+    below a partition union does not re-run the decode per arm. They
+    are broadcast while the summed descriptor ``cardinality`` is at
+    most ``TOMBSTONE_BROADCAST_MAX_ROWS``, shuffle-joined past it."""
+    dvs = [a for a in adds if a.get("deletionVector")]
+    if not dvs:
+        return df
     from incubator_gobblin_spark.sources.mock_kafka import _ship_package
 
     _ship_package(spark)
-    df = assemble_snapshot(
-        spark, groups, schema, part_cols, union_threshold,
-        with_positions=True,
-    )
     table_root = os.path.abspath(path)
-    # one decode task per DV up to a cap — a table with 100k DV'd files
-    # must not schedule 100k one-row tasks; past the cap each task
-    # decodes a batch of vectors sequentially
     desc_df = spark.createDataFrame(
-        dv_adds, "_del_path string, _dv string"
-    ).repartition(min(len(dv_adds), 64))
+        [
+            (
+                os.path.abspath(add_file_path(path, a["path"])),
+                json.dumps(a["deletionVector"]),
+            )
+            for a in dvs
+        ],
+        "_del_path string, _dv string",
+    ).repartition(min(len(dvs), 64))
 
     def expand(batches):
         import json as _json
@@ -845,20 +870,20 @@ def read_delta(
     tombs = materialize_small(
         desc_df.mapInPandas(expand, "_del_path string, _del_pos long")
     )
+    cardinality = sum(int(a["deletionVector"].get("cardinality") or 0) for a in dvs)
+    if cardinality <= TOMBSTONE_BROADCAST_MAX_ROWS:
+        tombs = F.broadcast(tombs)
     # the scan's _metadata.file_path is a percent-encoded URI while
     # _del_path is a decoded abspath — decode before comparing, or a
     # path with a space/'+'/'%' silently resurrects its deleted rows
-    if dv_cardinality <= TOMBSTONE_BROADCAST_MAX_ROWS:
-        tombs = F.broadcast(tombs)
-    out = df.withColumn(
-        "_norm_path", decoded_file_path(F.col("_file_path"))
+    return df.withColumn(
+        "_dv_norm_path", decoded_file_path(F.col("_file_path"))
     ).join(
         tombs,
-        (F.col("_norm_path") == F.col("_del_path"))
+        (F.col("_dv_norm_path") == F.col("_del_path"))
         & (F.col("_row_index") == F.col("_del_pos")),
         "left_anti",
-    )
-    return _finish(out.select(*[f.name for f in schema.fields]))
+    ).select(*df.columns)
 
 
 def assemble_snapshot(

@@ -53,6 +53,7 @@ from pyspark.sql.datasource import (
 from incubator_gobblin_spark.sources.delta_import import (
     _commit_actions,
     _log_versions,
+    add_file_path,
 )
 
 
@@ -255,8 +256,6 @@ class DeltaStreamReader(DataSourceStreamReader):
             # later batches tail the surviving log from there. The
             # truncation guard below stays for previously-CHECKPOINTED
             # offsets, where skipping versions would lose rows.
-            from urllib.parse import unquote
-
             from incubator_gobblin_spark.sources.delta_import import (
                 _replay_state,
             )
@@ -272,7 +271,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     )
             return [
                 _AddedFile(
-                    os.path.join(self.root, unquote(p)),
+                    add_file_path(self.root, p),
                     a.get("partitionValues") or {},
                 )
                 for p, a in sorted(live.items())
@@ -315,8 +314,6 @@ class DeltaStreamReader(DataSourceStreamReader):
                         "rewrites as inserts (duplicates downstream)."
                     )
             for a in adds:
-                from urllib.parse import unquote
-
                 if a["add"].get("deletionVector"):
                     raise ValueError(
                         f"deltastream: add {a['add'].get('path')!r} "
@@ -326,7 +323,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     )
                 parts.append(
                     _AddedFile(
-                        os.path.join(self.root, unquote(a["add"]["path"])),
+                        add_file_path(self.root, a["add"]["path"]),
                         a["add"].get("partitionValues") or {},
                     )
                 )
@@ -339,8 +336,6 @@ class DeltaStreamReader(DataSourceStreamReader):
         recorded, expired commits, non-derivable rewrites)."""
         if hi <= lo:
             return [_ChangeFile("", {}, "insert", -1, 0)]
-        from urllib.parse import unquote
-
         from incubator_gobblin_spark.sources.delta_cdf import plan_changes
 
         # no version bound here: the stream emits one InputPartition
@@ -356,7 +351,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                 for c in payload:
                     parts.append(
                         _ChangeFile(
-                            os.path.join(self.root, unquote(c["path"])),
+                            add_file_path(self.root, c["path"]),
                             c.get("partitionValues") or {},
                             None,
                             v,
@@ -367,7 +362,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                 for a in payload:
                     parts.append(
                         _ChangeFile(
-                            os.path.join(self.root, unquote(a["path"])),
+                            add_file_path(self.root, a["path"]),
                             a.get("partitionValues") or {},
                             "insert",
                             v,
@@ -378,7 +373,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                 for r, dv in payload:
                     parts.append(
                         _ChangeFile(
-                            os.path.join(self.root, unquote(r["path"])),
+                            add_file_path(self.root, r["path"]),
                             r.get("partitionValues") or {},
                             "delete",
                             v,

@@ -27,6 +27,7 @@ from incubator_gobblin_spark.sinks.delta_maintenance import (  # noqa: E402
     vacuum_delta,
     write_delta_table,
 )
+from incubator_gobblin_spark.sources import delta_import  # noqa: E402
 from incubator_gobblin_spark.sources.delta_import import (  # noqa: E402
     _log_versions,
     _replay_state,
@@ -136,7 +137,17 @@ def test_write_delta_table_null_partition_values(spark, tmp_path):
 # ---------------------------------------------------------- compaction
 
 
-def test_compact_absorbs_deletion_vectors(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "cap",
+    [delta_import.TOMBSTONE_BROADCAST_MAX_ROWS, 0],
+    ids=["broadcast", "shuffle"],
+)
+def test_compact_absorbs_deletion_vectors(
+    spark, sf_dir, tmp_path, monkeypatch, cap
+):
+    # cap=0: every DV anti-join (compaction's included) takes the
+    # shuffle-join fallback; rows and commit shape must not change
+    monkeypatch.setattr(delta_import, "TOMBSTONE_BROADCAST_MAX_ROWS", cap)
     root = str(tmp_path / "c1")
     cust = load_table(spark, sf_dir, "customer").repartition(4)
     write_delta_table(spark, cust, root, coalesce_output=False)

@@ -3575,14 +3575,35 @@ def test_read_delta_refuses_future_reader_version(spark, sf_dir, tmp_path):
     version number (the PROTOCOL.md forward-compat rule)."""
     import pytest as _pytest
 
+    from incubator_gobblin_spark.sinks.delta_maintenance import (
+        checkpoint_delta_table,
+        vacuum_delta,
+        write_delta_table,
+    )
     from incubator_gobblin_spark.sources.delta_import import read_delta
 
-    root, _ = _delta_table(spark, sf_dir, tmp_path, "dfuture")
-    _append_delta_commit(
-        root, [{"protocol": {"minReaderVersion": 4, "minWriterVersion": 9}}]
-    )
+    future = {"protocol": {"minReaderVersion": 4, "minWriterVersion": 9}}
+    root, df = _delta_table(spark, sf_dir, tmp_path, "dfuture")
+    _append_delta_commit(root, [future])
     with _pytest.raises(ValueError, match="minReaderVersion=4"):
         read_delta(spark, root)
+    # the maintenance ops replay the same log: they must refuse before
+    # deleting files or writing a checkpoint every later reader trusts
+    # (a standalone table — vacuum refuses manifest lakes outright)
+    root = str(tmp_path / "dfuture_standalone")
+    write_delta_table(spark, df, root)
+    _append_delta_commit(root, [future])
+    log_dir = os.path.join(root, "_delta_log")
+    before = sorted(os.listdir(log_dir))
+    for op in (
+        lambda: vacuum_delta(
+            root, retention_hours=0, allow_short_retention=True
+        ),
+        lambda: checkpoint_delta_table(root),
+    ):
+        with _pytest.raises(ValueError, match="minReaderVersion=4"):
+            op()
+        assert sorted(os.listdir(log_dir)) == before
 
 
 def _write_v2_checkpoint(log_dir, version, actions, sidecar=True):

@@ -242,42 +242,58 @@ def test_iceberg_single_slash_file_uri_locations(spark, sf_dir, tmp_path):
 
 def test_delta_absolute_add_path(spark, tmp_path):
     """PROTOCOL.md allows ABSOLUTE add paths (and file: URIs); joining
-    them under the table root fabricated a bogus path."""
+    them under the table root fabricated a bogus path. Two layouts: the
+    data file outside the root, and inside it — where the writers
+    (vacuum, DV delete) must resolve the same live file."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows
+    from incubator_gobblin_spark.sinks.delta_maintenance import vacuum_delta
     from incubator_gobblin_spark.sources.delta_import import read_delta
 
+    def _table(root, data_dir):
+        os.makedirs(os.path.join(root, "_delta_log"))
+        os.makedirs(data_dir, exist_ok=True)
+        fp = os.path.join(data_dir, "part-0.parquet")
+        pq.write_table(
+            pa.Table.from_pandas(pd.DataFrame({"k": [1, 2]}),
+                                 preserve_index=False),
+            fp,
+        )
+        schema = {"type": "struct", "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+        ]}
+        log0 = os.path.join(root, "_delta_log", f"{0:020d}.json")
+        with open(log0, "w") as fh:
+            fh.write("\n".join(json.dumps(a) for a in [
+                {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                {"metaData": {
+                    "id": "t-a", "format": {"provider": "parquet",
+                                            "options": {}},
+                    "schemaString": json.dumps(schema),
+                    "partitionColumns": [],
+                    "configuration": {}, "createdTime": 1,
+                }},
+                {"add": {"path": "file://" + fp, "partitionValues": {},
+                         "size": os.path.getsize(fp), "modificationTime": 1,
+                         "dataChange": True}},
+            ]) + "\n")
+
     root = str(tmp_path / "abspath")
-    ext = str(tmp_path / "elsewhere")
-    os.makedirs(os.path.join(root, "_delta_log"))
-    os.makedirs(ext)
-    fp = os.path.join(ext, "part-0.parquet")
-    pq.write_table(
-        pa.Table.from_pandas(pd.DataFrame({"k": [1, 2]}),
-                             preserve_index=False),
-        fp,
-    )
-    schema = {"type": "struct", "fields": [
-        {"name": "k", "type": "long", "nullable": True, "metadata": {}},
-    ]}
-    with open(os.path.join(root, "_delta_log", f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(json.dumps(a) for a in [
-            {"commitInfo": {"timestamp": 1, "operation": "WRITE"}},
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {"metaData": {
-                "id": "t-a", "format": {"provider": "parquet",
-                                        "options": {}},
-                "schemaString": json.dumps(schema), "partitionColumns": [],
-                "configuration": {}, "createdTime": 1,
-            }},
-            {"add": {"path": "file://" + fp, "partitionValues": {},
-                     "size": os.path.getsize(fp), "modificationTime": 1,
-                     "dataChange": True}},
-        ]) + "\n")
+    _table(root, str(tmp_path / "elsewhere"))
     got = read_delta(spark, root)
     assert sorted(r.k for r in got.collect()) == [1, 2]
+
+    inside = str(tmp_path / "inside")
+    _table(inside, inside)
+    assert vacuum_delta(
+        inside, retention_hours=0, allow_short_retention=True, dry_run=True
+    )["candidates"] == []
+    delete_delta_rows(spark, inside, "k = 1")
+    assert sorted(r.k for r in read_delta(spark, inside).collect()) == [2]
 
 
 def test_iceberg_format_version_3_refused_at_every_load(

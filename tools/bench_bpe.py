@@ -36,24 +36,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from incubator_gobblin_spark.functions import corpus as C
+from incubator_gobblin_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SAMPLE_DOCS = 500
 MERGES = 64
 SEQUENTIAL_MERGES = 8
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bench-bpe")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="bench-bpe",
+        master=f"local[{CPUS}]",
+        shuffle_partitions=int(CPUS),
+        extra_conf={"spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
