@@ -37,23 +37,23 @@ entries) and the commit JSONs: never O(deleted rows).
 
 from __future__ import annotations
 
-import json
 import os
-import time as _time
 import uuid
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_gobblin_spark.sinks.iceberg_export import (
-    _MANIFEST_LIST_AVRO,
     IcebergConcurrentModificationError,
+    _added,
+    _commit_snapshot,
+    _data_file,
     _decode_manifest_list,
-    _manifest_entry_avro,
     _metadata_versions,
-    _partition_struct_avro,
-    _publish_metadata,
+    _rebase_or_conflict,
+    _remove,
     _unpartitioned_spec,
+    _write_manifest,
 )
 from incubator_gobblin_spark.sources.iceberg_import import (
     current_schema,
@@ -106,10 +106,9 @@ def delete_iceberg_rows(
     if the current snapshot moved, the delete raises
     :class:`IcebergConcurrentModificationError` instead of committing
     coordinates computed against a stale snapshot; a metadata-only
-    bump (same current snapshot) re-bases and retries.
+    bump (same current snapshot) re-bases and retries. A delete that
+    gives up removes the delete files it staged.
     """
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
-
     if (condition is None) == (ids is None):
         raise ValueError(
             "delete_iceberg_rows: pass exactly one of condition / ids"
@@ -209,7 +208,7 @@ def delete_iceberg_rows(
 
     import pyarrow.parquet as pq
 
-    delete_parts: list[tuple[str, int, int]] = []  # (path, rows, bytes)
+    data_files: list[dict] = []  # one POSITION_DELETES file per part
     for fn in sorted(os.listdir(del_dir)):
         if not fn.endswith(".parquet"):
             continue
@@ -218,13 +217,11 @@ def delete_iceberg_rows(
         if n == 0:
             os.remove(fp)
             continue
-        delete_parts.append((fp, n, os.path.getsize(fp)))
-    rows_deleted = sum(n for _, n, _ in delete_parts)
-    if not delete_parts:
+        data_files.append(_data_file(fp, n, os.path.getsize(fp), content=1))
+    rows_deleted = sum(d["record_count"] for d in data_files)
+    if not data_files:
         # zero matches: nothing to commit; drop the empty write dir
-        import shutil
-
-        shutil.rmtree(del_dir, ignore_errors=True)
+        _remove([del_dir])
         return {
             "version": current_v,
             "snapshot_id": base_snap_id,
@@ -232,151 +229,58 @@ def delete_iceberg_rows(
             "delete_files": 0,
         }
 
-    # ---- commit loop: author manifest + manifest list + metadata
-    # against the CURRENT base, publish put-if-absent, re-base on a
-    # metadata-only race, refuse on a snapshot change ----
+    # ---- commit loop: author the delete manifest against the CURRENT
+    # base, re-base on a metadata-only race, refuse on a snapshot
+    # change. The delete is snapshot-global (the matched rows span
+    # partitions), so per the spec it must be written under an
+    # UNPARTITIONED spec with an empty partition struct: under a
+    # partitioned spec the partition tuple is a scope VALUE, and an
+    # all-null tuple would scope the tombstones to "the null
+    # partition" for conformant readers (Spark/Trino/PyIceberg),
+    # silently un-deleting every real partition's rows. ----
+    cur = next(s for s in prev["snapshots"] if s["snapshot-id"] == base_snap_id)
     for _ in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            now = load_metadata(meta_dir, versions[-1])
-            if now.get("current-snapshot-id") != base_snap_id:
-                raise IcebergConcurrentModificationError(
-                    f"delete_iceberg_rows: {location} advanced from "
-                    f"snapshot {base_snap_id} to "
-                    f"{now.get('current-snapshot-id')} while this "
-                    "DELETE was computing — re-run it"
-                )
-            prev, current_v = now, versions[-1]
-
-        snapshots = list(prev["snapshots"])
-        cur = next(
-            s for s in snapshots if s["snapshot-id"] == base_snap_id
+        current_v = _metadata_versions(meta_dir)[-1]
+        prev = _rebase_or_conflict(
+            "delete_iceberg_rows", meta_dir, current_v, prev, [del_dir]
         )
-        schema = current_schema(prev)
-        # This delete is snapshot-global (the matched rows span
-        # partitions), so per the spec it must be written under an
-        # UNPARTITIONED spec with an empty partition struct: under a
-        # partitioned spec the partition tuple is a scope VALUE, and
-        # an all-null tuple would scope the tombstones to "the null
-        # partition" for conformant readers (Spark/Trino/PyIceberg),
-        # silently un-deleting every real partition's rows.
-        unpart_id, all_specs = _unpartitioned_spec(prev)
         sid = seq = next_snapshot_id(prev)
-        ts = int(_time.time() * 1000)
-
-        part_struct = _partition_struct_avro([], {})
-        entry_schema = _manifest_entry_avro(part_struct)
-        entries = [
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": sid,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": 1,  # POSITION_DELETES
-                    "file_path": "file://" + fp,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": n,
-                    "file_size_in_bytes": size,
-                    "value_counts": None,
-                    "null_value_counts": None,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-            for fp, n, size in delete_parts
-        ]
-        mdata = encode_ocf(
-            entry_schema,
-            entries,
-            codec="null",
-            extra_meta={
-                "schema": json.dumps(schema).encode(),
-                "partition-spec": b"[]",
-                "partition-spec-id": str(unpart_id).encode(),
-                "format-version": b"2",
-                "content": b"deletes",
-            },
-        )
-        mpath = os.path.join(meta_dir, f"del-{sid}-m0.avro")
-        with open(mpath, "wb") as fh:
-            fh.write(mdata)
-
-        list_rows = [
-            dict(r) for r in _decode_manifest_list(cur, location)
-        ] + [
-            {
-                "manifest_path": "file://" + mpath,
-                "manifest_length": len(mdata),
-                "partition_spec_id": unpart_id,
-                "content": 1,  # DELETES
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(delete_parts),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": rows_deleted,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        ]
-        snap_path = os.path.join(
+        unpart = _unpartitioned_spec(prev)
+        mpath, row = _write_manifest(
             meta_dir,
-            f"snap-{sid}-1-"
-            f"{uuid.uuid5(uuid.NAMESPACE_URL, delete_parts[0][0])}.avro",
+            _added(sid, seq, data_files),
+            unpart,
+            current_schema(prev),
+            sid,
+            seq,
         )
-        with open(snap_path, "wb") as fh:
-            fh.write(
-                encode_ocf(
-                    _MANIFEST_LIST_AVRO,
-                    list_rows,
-                    codec="null",
-                    extra_meta={"format-version": b"2"},
-                )
-            )
-
         # operation=delete; data-file state fingerprint UNCHANGED so a
         # later export_iceberg no-ops instead of wiping the tombstones
-        snapshot = {
-            "snapshot-id": sid,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "summary": {
+        if _commit_snapshot(
+            meta_dir,
+            current_v + 1,
+            prev,
+            rows=_decode_manifest_list(cur, location) + [row],
+            written=[mpath],
+            sid=sid,
+            seq=seq,
+            parent=base_snap_id,
+            summary={
                 "operation": "delete",
                 "deleted-records": str(rows_deleted),
                 "engine.state-fingerprint": cur["summary"].get(
                     "engine.state-fingerprint", ""
                 ),
             },
-            "manifest-list": "file://" + snap_path,
-            "schema-id": schema.get("schema-id", 0),
-            "parent-snapshot-id": base_snap_id,
-        }
-        metadata = dict(prev)
-        # the delete manifest references the unpartitioned spec — the
-        # committed metadata must declare it
-        metadata["partition-specs"] = all_specs
-        metadata["last-sequence-number"] = seq
-        metadata["last-updated-ms"] = ts
-        metadata["current-snapshot-id"] = sid
-        metadata["snapshots"] = snapshots + [snapshot]
-        metadata["snapshot-log"] = list(
-            prev.get("snapshot-log", [])
-        ) + [{"timestamp-ms": ts, "snapshot-id": sid}]
-
-        version = current_v + 1
-        if not _publish_metadata(meta_dir, metadata, version):
-            os.remove(mpath)
-            os.remove(snap_path)
-            continue
-        return {
-            "version": version,
-            "snapshot_id": sid,
-            "rows_deleted": rows_deleted,
-            "delete_files": len(delete_parts),
-        }
+            partition_specs=[unpart],
+        ):
+            return {
+                "version": current_v + 1,
+                "snapshot_id": sid,
+                "rows_deleted": rows_deleted,
+                "delete_files": len(data_files),
+            }
+    _remove([del_dir])
     raise IcebergConcurrentModificationError(
         f"delete_iceberg_rows: lost the commit race 8 times under "
         f"{meta_dir}"

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -96,6 +97,16 @@ def _publish_metadata(meta_dir: str, metadata: dict, version: int) -> bool:
     return True
 
 
+def _lost_race(
+    op: str, meta_dir: str, base_version: int
+) -> IcebergConcurrentModificationError:
+    """The error of a no-retry writer that lost ``base_version + 1``."""
+    return IcebergConcurrentModificationError(
+        f"{op}: {os.path.dirname(meta_dir)} advanced past "
+        f"v{base_version} — re-run against the new state"
+    )
+
+
 def _publish_or_conflict(
     op: str, meta_dir: str, metadata: dict, base_version: int
 ) -> int:
@@ -105,32 +116,17 @@ def _publish_or_conflict(
     :class:`IcebergConcurrentModificationError`. Returns the version."""
     version = base_version + 1
     if not _publish_metadata(meta_dir, metadata, version):
-        raise IcebergConcurrentModificationError(
-            f"{op}: {os.path.dirname(meta_dir)} advanced past "
-            f"v{base_version} — re-run against the new state"
-        )
+        raise _lost_race(op, meta_dir, base_version)
     return version
 
 
-def _drop_unpublished(
-    meta_dir: str, version: int, snap_path: str, staged: list[str]
-) -> None:
-    """After losing the race for ``version``, unlink the files this
-    attempt staged, or they orphan forever. EXCEPT when the winner's
-    metadata references the same manifest list: deterministic names
-    then make ours the winner's files, and deleting them would break
-    the winner's snapshot."""
-    try:
-        winner = load_metadata(meta_dir, version)
-        referenced = {
-            os.path.basename(s["manifest-list"])
-            for s in winner.get("snapshots", [])
-        }
-    except (OSError, ValueError, KeyError):
-        return  # unreadable winner: keep, never break it
-    if os.path.basename(snap_path) in referenced:
-        return
-    for p in staged:
+def _remove(paths) -> None:
+    """Unlink files (or staging directories) no published metadata
+    references. Missing ones are fine."""
+    for p in paths:
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+            continue
         try:
             os.remove(p)
         except OSError:
@@ -306,41 +302,37 @@ def _name_mapping(schema: dict) -> list:
     return [field_entry(f) for f in schema["fields"]]
 
 
-def _partition_struct_avro(
-    partition_cols: list[str],
-    part_types: dict[str, str],
-    field_ids: dict[str, int] | None = None,
-) -> dict:
-    """Avro schema of the manifest's data_file.partition struct (r102):
-    one nullable field per identity partition column. ``field_ids``
-    carries the spec's ACTUAL partition field ids (an evolved or
-    foreign spec's ids need not be consecutive from 1000 — positional
-    assignment would make id-resolving readers miss the values);
-    omitted, ids assign positionally from the initial partition range
-    (correct for specs this engine authors)."""
-    avro_of = {"long": "long", "string": "string", "int": "int",
-               "double": "double", "float": "float", "boolean": "boolean"}
+def _transform_result_type(transform: str, source_type: str | None) -> str:
+    """The Iceberg type a partition transform produces (spec
+    §Partition Transforms): bucket and the time transforms yield int,
+    identity/truncate keep the source type."""
+    if transform.startswith("bucket[") or transform in (
+        "year", "years", "month", "months", "day", "days", "hour", "hours"
+    ):
+        return "int"
+    return source_type or "string"
+
+
+def _partition_types(spec: dict, schema: dict) -> dict[str, str]:
+    """Partition field name -> the Iceberg type its transform yields,
+    in ``spec`` order — the one derivation of a manifest's
+    data_file.partition struct from a spec and its table schema. A
+    field's name defaults to its source column's (v1 specs may omit
+    it)."""
+    fname = {f["id"]: f["name"] for f in schema["fields"]}
+    ftype = {f["name"]: f["type"] for f in schema["fields"]}
     return {
-        "type": "record",
-        "name": "r102",
-        "fields": [
-            {
-                "name": c,
-                "type": ["null", avro_of[part_types[c]]],
-                "default": None,
-                "field-id": (field_ids or {}).get(
-                    c, _INITIAL_PARTITION_FIELD_ID + i
-                ),
-            }
-            for i, c in enumerate(partition_cols)
-        ],
+        pf.get("name") or fname[pf["source-id"]]: _transform_result_type(
+            pf["transform"], ftype.get(fname.get(pf["source-id"]))
+        )
+        for pf in spec["fields"]
     }
 
 
-def _unpartitioned_spec(metadata: dict) -> tuple[int, list[dict]]:
-    """Return ``(spec_id, partition-specs)`` where ``spec_id`` names an
-    UNPARTITIONED spec (``{"fields": []}``), appending a fresh one when
-    the table has none.
+def _unpartitioned_spec(metadata: dict) -> dict:
+    """The table's UNPARTITIONED spec (``{"fields": []}``), or a fresh
+    one under the next spec id when it has none (pass it to
+    :func:`_commit_snapshot` so the metadata declares it).
 
     Per the Iceberg spec (Scan Planning), a delete file applies
     globally ONLY when written under an unpartitioned spec; under a
@@ -348,15 +340,14 @@ def _unpartitioned_spec(metadata: dict) -> tuple[int, list[dict]]:
     all-null tuple means "the null partition" to conformant readers
     (Spark/Trino/PyIceberg) — which would silently skip the deletes
     for every real partition. Global delete manifests must therefore
-    reference the spec id this returns, with an empty partition struct.
+    be written under the spec this returns.
     """
-    specs = [dict(s) for s in metadata.get("partition-specs", [])]
+    specs = metadata.get("partition-specs", [])
     for s in specs:
         if not s.get("fields"):
-            return int(s["spec-id"]), specs
+            return s
     new_id = max((int(s["spec-id"]) for s in specs), default=-1) + 1
-    specs.append({"spec-id": new_id, "fields": []})
-    return new_id, specs
+    return {"spec-id": new_id, "fields": []}
 
 
 def _manifest_entry_avro(partition_struct: dict) -> dict:
@@ -550,10 +541,308 @@ _MANIFEST_LIST_AVRO = {
 }
 
 
-def _typed_partition_value(v, iceberg_type: str):
-    if v is None:
-        return None
-    return int(v) if iceberg_type in ("long", "int") else str(v)
+def _typed_partition(values: dict, part_types: dict[str, str]) -> dict:
+    """A data file's partition tuple from its hive-dir string values,
+    typed per partition field (``part_types``); absent values are
+    null."""
+    out = {}
+    for c, t in part_types.items():
+        v = values.get(c)
+        if v is not None:
+            v = int(v) if t in ("long", "int") else str(v)
+        out[c] = v
+    return out
+
+
+#: Iceberg type -> Avro type of the partition values a manifest carries
+_AVRO_OF = {
+    t: t for t in ("long", "string", "int", "double", "float", "boolean")
+}
+
+
+def _data_file(path: str, rows: int, size: int, **fields) -> dict:
+    """A manifest ``data_file`` for the local parquet at ``path``: DATA
+    with an empty partition tuple unless ``fields`` says otherwise.
+    Optional fields left out encode as null."""
+    return {
+        "content": 0,
+        # file:// URI per the Iceberg spec (foreign engines resolve
+        # URIs, not bare POSIX paths)
+        "file_path": "file://" + path,
+        "file_format": "PARQUET",
+        "partition": {},
+        "record_count": rows,
+        "file_size_in_bytes": size,
+        **fields,
+    }
+
+
+def _added(sid: int, seq: int, data_files: list[dict]) -> list[dict]:
+    """Manifest entries ADDING ``data_files`` in snapshot ``sid`` at
+    sequence number ``seq``."""
+    return [
+        {
+            "status": 1,
+            "snapshot_id": sid,
+            "sequence_number": seq,
+            "file_sequence_number": seq,
+            "data_file": d,
+        }
+        for d in data_files
+    ]
+
+
+def _rewrite_entries(row: dict, keep: list, drop: list, sid: int) -> list:
+    """The entries of manifest-list ``row``'s manifest as snapshot
+    ``sid`` rewrites it: ``keep`` stay EXISTING with their lineage,
+    ``drop`` become DELETED by ``sid``. A null entry sequence number
+    resolves to the manifest's (spec §Sequence Numbers) so the rewrite
+    does not re-inherit the new manifest's."""
+    mf_seq = int(row.get("sequence_number") or 0)
+
+    def entry(e: dict, status: int, snapshot_id) -> dict:
+        seq = e.get("sequence_number")
+        seq = mf_seq if seq is None else int(seq)
+        return {
+            "status": status,
+            "snapshot_id": snapshot_id,
+            "sequence_number": seq,
+            "file_sequence_number": e.get("file_sequence_number", seq),
+            "data_file": e["data_file"],
+        }
+
+    return [entry(e, 0, e.get("snapshot_id")) for e in keep] + [
+        entry(e, 2, sid) for e in drop
+    ]
+
+
+def _write_manifest(
+    meta_dir: str, entries: list[dict], spec: dict, schema: dict,
+    sid: int, seq: int,
+) -> tuple[str, dict]:
+    """Write ``entries`` as one manifest of snapshot ``sid`` (sequence
+    number ``seq``) under partition ``spec``; return its path and its
+    manifest-list row. Every Iceberg manifest is written here:
+
+    - the name is a fresh uuid4, never derived from the snapshot id, so
+      a concurrent writer on the same base can neither overwrite this
+      file nor remove it when it loses;
+    - the partition struct derives from ``spec`` + ``schema``
+      (:func:`_partition_types`) and carries the spec's own field ids
+      (an evolved or foreign spec's need not run from 1000);
+    - the row's ``content`` and every count derive from the entries:
+      files and ``record_count`` sums per status (ADDED 1, EXISTING 0,
+      DELETED 2), ``min_sequence_number`` the least over live entries
+      (``seq`` when none is live).
+    """
+    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
+
+    struct = {
+        "type": "record",
+        "name": "r102",
+        "fields": [
+            {
+                "name": name,
+                "type": ["null", _AVRO_OF[t]],
+                "default": None,
+                "field-id": pf.get("field-id", _INITIAL_PARTITION_FIELD_ID + i),
+            }
+            for i, ((name, t), pf) in enumerate(
+                zip(_partition_types(spec, schema).items(), spec["fields"])
+            )
+        ],
+    }
+    content = 1 if any(e["data_file"]["content"] for e in entries) else 0
+    data = encode_ocf(
+        _manifest_entry_avro(struct),
+        entries,
+        codec="null",
+        extra_meta={
+            "schema": json.dumps(schema).encode(),
+            "partition-spec": json.dumps(spec["fields"]).encode(),
+            "partition-spec-id": str(spec["spec-id"]).encode(),
+            "format-version": b"2",
+            "content": b"deletes" if content else b"data",
+        },
+    )
+    path = os.path.join(meta_dir, f"{uuid.uuid4()}-m0.avro")
+    with open(path, "wb") as fh:
+        fh.write(data)
+    row = {
+        "manifest_path": "file://" + path,
+        "manifest_length": len(data),
+        "partition_spec_id": spec["spec-id"],
+        "content": content,  # 1 = DELETES
+        "sequence_number": seq,
+        "min_sequence_number": min(
+            (
+                seq if e["sequence_number"] is None else e["sequence_number"]
+                for e in entries
+                if e["status"] != 2
+            ),
+            default=seq,
+        ),
+        "added_snapshot_id": sid,
+    }
+    for status, kind in ((1, "added"), (0, "existing"), (2, "deleted")):
+        record_counts = [
+            e["data_file"]["record_count"] for e in entries if e["status"] == status
+        ]
+        row[f"{kind}_files_count"] = len(record_counts)
+        row[f"{kind}_rows_count"] = sum(record_counts)
+    return path, row
+
+
+def _commit_snapshot(
+    meta_dir: str,
+    version: int,
+    base: dict,
+    *,
+    rows: list[dict],
+    written: list[str],
+    sid: int,
+    seq: int,
+    parent: int | None,
+    summary: dict,
+    **table,
+) -> bool:
+    """Commit snapshot ``sid`` (sequence number ``seq``, child of
+    ``parent``) whose manifest list holds ``rows``, as metadata
+    ``version`` built on ``base``. The one Iceberg snapshot producer:
+
+    - the manifest list gets a fresh uuid4 name (see
+      :func:`_write_manifest`);
+    - the metadata is ``base`` (``{}`` for a new table) carried whole,
+      plus ``table``'s overrides (keyword names with ``_`` for the
+      spec's ``-``), plus the snapshot, its log entry and the new
+      current snapshot/sequence number. ``partition_specs`` MERGE into
+      the base's by spec id, so a carried manifest's spec stays
+      declared;
+    - it publishes through :func:`_publish_metadata`. On a lost race it
+      removes exactly ``written`` and the list it wrote and returns
+      False; nothing it removes can be another writer's.
+    """
+    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
+
+    ts = int(time.time() * 1000)
+    list_path = os.path.join(meta_dir, f"snap-{sid}-1-{uuid.uuid4()}.avro")
+    with open(list_path, "wb") as fh:
+        fh.write(
+            encode_ocf(
+                _MANIFEST_LIST_AVRO,
+                rows,
+                codec="null",
+                extra_meta={"format-version": b"2"},
+            )
+        )
+    metadata = dict(base)
+    metadata.update((k.replace("_", "-"), v) for k, v in table.items())
+    specs = {s["spec-id"]: s for s in base.get("partition-specs", [])}
+    specs.update((s["spec-id"], s) for s in table.get("partition_specs", []))
+    snapshot = {
+        "snapshot-id": sid,
+        "sequence-number": seq,
+        "timestamp-ms": ts,
+        "summary": summary,
+        "manifest-list": "file://" + list_path,
+        "schema-id": metadata.get("current-schema-id", 0),
+    }
+    if parent is not None:
+        snapshot["parent-snapshot-id"] = parent
+    metadata.update(
+        {
+            "partition-specs": list(specs.values()),
+            "last-sequence-number": seq,
+            "last-updated-ms": ts,
+            "current-snapshot-id": sid,
+            "snapshots": list(base.get("snapshots", [])) + [snapshot],
+            "snapshot-log": list(base.get("snapshot-log", []))
+            + [{"timestamp-ms": ts, "snapshot-id": sid}],
+        }
+    )
+    if _publish_metadata(meta_dir, metadata, version):
+        return True
+    _remove(written + [list_path])
+    return False
+
+
+def _rebase_or_conflict(
+    op: str, meta_dir: str, version: int, base: dict, staged: list[str]
+) -> dict:
+    """The re-base rule of the retrying writers (delete, rewrite,
+    upsert), whose staged files were computed against ``base``'s
+    current snapshot. ``version`` is the head the caller just listed
+    (through its own module's ``_metadata_versions``). Returns the head
+    metadata to build the next attempt on while its current snapshot
+    is still ``base``'s (a metadata-only bump); otherwise removes
+    ``staged`` and raises :class:`IcebergConcurrentModificationError`."""
+    head = load_metadata(meta_dir, version)
+    was, now = base.get("current-snapshot-id"), head.get("current-snapshot-id")
+    if now != was:
+        _remove(staged)
+        raise IcebergConcurrentModificationError(
+            f"{op}: {os.path.dirname(meta_dir)} advanced from snapshot "
+            f"{was} to {now} while it was staging — re-run it"
+        )
+    return head
+
+
+def _authored_spec(op: str, schema: dict, part_cols: list, transforms: dict) -> dict:
+    """Spec 0 of a table this engine authors: an identity field per
+    ``part_cols`` entry, except the ``transforms`` entries
+    (``{"name", "transform", "source"}`` by name), whose derived column
+    is metadata only while their source column stays in ``schema``."""
+    by_name = {f["name"]: f for f in schema["fields"]}
+    fields = []
+    for i, c in enumerate(part_cols):
+        t = transforms.get(c, {"transform": "identity", "source": c})
+        src = by_name.get(t["source"])
+        if src is None or not isinstance(src["type"], str):
+            raise ValueError(
+                f"{op}: partition source {t['source']!r} of field {c!r} "
+                "is not a top-level column of the written data files"
+            )
+        fields.append(
+            {
+                "name": c,
+                "transform": t["transform"],
+                "source-id": src["id"],
+                "field-id": _INITIAL_PARTITION_FIELD_ID + i,
+            }
+        )
+    return {"spec-id": 0, "fields": fields}
+
+
+def _table_fields(
+    location: str, schema: dict, last_column_id: int, spec: dict
+) -> dict:
+    """The table-level metadata of a table this engine authors from its
+    data files (``export_iceberg``, ``write_iceberg_table``), as
+    :func:`_commit_snapshot` keywords."""
+    return {
+        "format_version": 2,
+        "table_uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, location)),
+        "location": location,
+        "last_column_id": last_column_id,
+        "current_schema_id": 0,
+        "schemas": [schema],
+        "default_spec_id": 0,
+        "partition_specs": [spec],
+        "last_partition_id": _INITIAL_PARTITION_FIELD_ID
+        - 1
+        + len(spec["fields"]),
+        "default_sort_order_id": 0,
+        "sort_orders": [{"order-id": 0, "fields": []}],
+        "properties": {
+            "write.format.default": "parquet",
+            # our data files carry no embedded field ids; this is the
+            # spec's mechanism for id resolution by name (see
+            # _name_mapping — without it foreign readers position-
+            # assign ids and misalign on partitioned tables)
+            "schema.name-mapping.default": json.dumps(_name_mapping(schema)),
+        },
+        "metadata_log": [],
+    }
 
 
 def export_iceberg(
@@ -605,8 +894,6 @@ def export_iceberg(
     against the authored spec.
     """
     from urllib.parse import unquote
-
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
 
     if sink.fmt != "parquet":
         raise ValueError("export_iceberg requires a parquet lake")
@@ -674,7 +961,7 @@ def export_iceberg(
     ).hexdigest()
 
     if files:
-        schema, last_column_id, part_types = _iceberg_schema(
+        schema, last_column_id, _ = _iceberg_schema(
             files[0]["path"], identity_cols, [f["partition"] for f in files]
         )
     else:
@@ -691,51 +978,69 @@ def export_iceberg(
             ],
         }
         last_column_id = len(identity_cols)
-        part_types = {c: "string" for c in identity_cols}
-    field_id = {f["name"]: f["id"] for f in schema["fields"]}
-    field_type = {f["name"]: f["type"] for f in schema["fields"]}
-    # transform-derived partition fields: source column stays in the
-    # schema, the spec field carries the transform + its result type
-    for name, t in transforms_by_name.items():
-        src = t["source"]
-        if src not in field_id:
-            raise ValueError(
-                f"export_iceberg: transform_spec source {src!r} for "
-                f"partition field {name!r} is not a column of the "
-                "committed data files"
-            )
-        src_t = field_type[src]
-        if not isinstance(src_t, str):
-            raise ValueError(
-                f"export_iceberg: transform source {src!r} is a "
-                "nested column — unsupported"
-            )
-        part_types[name] = _transform_result_type(t["transform"], src_t)
-    spec = {
-        "spec-id": 0,
-        "fields": [
-            {
-                "name": c,
-                "transform": transforms_by_name.get(c, {}).get(
-                    "transform", "identity"
-                ),
-                "source-id": field_id[
-                    transforms_by_name.get(c, {}).get("source", c)
-                ],
-                "field-id": _INITIAL_PARTITION_FIELD_ID + i,
-            }
-            for i, c in enumerate(part_cols)
-        ],
-    }
+    spec = _authored_spec("export_iceberg", schema, part_cols, transforms_by_name)
+    part_types = _partition_types(spec, schema)
+    table = _table_fields(location, schema, last_column_id, spec)
+    col_info = {f["name"]: (f["id"], f["type"]) for f in schema["fields"]}
+
+    def _bounds(f: dict) -> tuple[list | None, list | None]:
+        """lower/upper bounds as field-id keyed k/v lists from the
+        manifest's per-file column stats — the metadata a foreign
+        Iceberg reader file-skips on. Best-effort per column."""
+        lo_out, hi_out = [], []
+        for c, pair in sorted((f.get("stats") or {}).items()):
+            info = col_info.get(c)
+            if info is None or not isinstance(info[1], str):
+                continue  # nested/unknown column: skip
+            fid, typ = info
+            lo = _encode_bound(pair[0], typ)
+            hi = _encode_bound(pair[1], typ)
+            if lo is None or hi is None:
+                continue
+            lo_out.append({"key": fid, "value": lo})
+            hi_out.append({"key": fid, "value": hi})
+        return (lo_out or None, hi_out or None)
+
+    def _value_counts(f: dict) -> list | None:
+        # top-level scalar fields carry exactly one value (possibly
+        # null) per row, so value_counts = record_count for each —
+        # with null_value_counts this lets readers prove all-null
+        out = [
+            {"key": fid, "value": int(f["rows"])}
+            for name, (fid, typ) in sorted(col_info.items())
+            if isinstance(typ, str)
+        ]
+        return out or None
+
+    def _null_counts(f: dict) -> list | None:
+        out = [
+            {"key": col_info[c][0], "value": int(n)}
+            for c, n in sorted((f.get("nulls") or {}).items())
+            if c in col_info
+        ]
+        return out or None
+
+    def _export_file(f: dict) -> dict:
+        lo, hi = _bounds(f)
+        return _data_file(
+            f["path"],
+            f["rows"],
+            f["size"],
+            partition=_typed_partition(f["partition"], part_types),
+            value_counts=_value_counts(f),
+            null_value_counts=_null_counts(f),
+            lower_bounds=lo,
+            upper_bounds=hi,
+        )
 
     # Optimistic loop, the export_delta_log discipline: each attempt
     # reads the latest metadata version, skips if the state fingerprint
-    # already matches, and publishes vN+1 (_publish_metadata); a lost
+    # already matches, and publishes vN+1 (_commit_snapshot); a lost
     # race re-reads and retries at the next version.
-    for attempt in range(64):
+    for _attempt in range(64):
         versions = _metadata_versions(meta_dir)
-        prev = load_metadata(meta_dir, versions[-1]) if versions else None
-        snapshots = list(prev["snapshots"]) if prev else []
+        prev = load_metadata(meta_dir, versions[-1]) if versions else {}
+        snapshots = prev.get("snapshots", [])
         if snapshots and snapshots[-1]["summary"].get(
             "engine.state-fingerprint"
         ) == fingerprint:
@@ -751,25 +1056,11 @@ def export_iceberg(
         version = (versions[-1] if versions else 0) + 1
         # deterministic, monotonic snapshot id (len(snapshots)+1 would
         # regress after expire_iceberg_snapshots prunes the history)
-        sid = next_snapshot_id(prev or {})
-        seq = sid
-        ts = int(time.time() * 1000)
-        commit_uuid = str(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{location}#{sid}#{fingerprint}")
-        )
+        sid = seq = next_snapshot_id(prev)
 
         # --- manifests (full: one manifest, all live files ADDED;
         # incremental: carry prev manifests, add/rewrite the diff) ---
-        part_struct = _partition_struct_avro(part_cols, part_types)
-        entry_schema = _manifest_entry_avro(part_struct)
-        manifest_meta = {
-            "schema": json.dumps(schema).encode(),
-            "partition-spec": json.dumps(spec["fields"]).encode(),
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"data",
-        }
-        incremental = mode != "full" and prev is not None and bool(snapshots)
+        incremental = mode != "full" and bool(snapshots)
         if incremental:
             # partition-type gate: inference drift (long <-> string)
             # across carried manifests would make typed restore
@@ -825,7 +1116,7 @@ def export_iceberg(
         # DROP them and resurrect the deleted rows for foreign readers
         # of the new snapshot. Loud-fail instead, matching the
         # equality-delete refusal discipline elsewhere.
-        if not incremental and prev is not None and snapshots:
+        if not incremental and snapshots:
             n_foreign = sum(
                 1
                 for row in _decode_manifest_list(snapshots[-1], location)
@@ -841,85 +1132,14 @@ def export_iceberg(
                     "deletes in the foreign engine first."
                 )
 
-        m_idx = 0
-        written_files: list[str] = []  # this attempt's Avro publishes
-
-        def _write_manifest(rows: list[dict]) -> tuple[str, int]:
-            nonlocal m_idx
-            path = os.path.join(meta_dir, f"{commit_uuid}-m{m_idx}.avro")
-            m_idx += 1
-            data = encode_ocf(
-                entry_schema, rows, codec="null", extra_meta=manifest_meta
-            )
-            tmpp = f"{path}.tmp-{os.getpid()}-{attempt}"
-            with open(tmpp, "wb") as fh:
-                fh.write(data)
-            os.replace(tmpp, path)
-            written_files.append(path)
-            return path, len(data)
-
-        col_info = {f["name"]: (f["id"], f["type"]) for f in schema["fields"]}
-
-        def _bounds(f: dict) -> tuple[list | None, list | None]:
-            """lower/upper bounds as field-id keyed k/v lists from the
-            manifest's per-file column stats — the metadata a foreign
-            Iceberg reader file-skips on. Best-effort per column."""
-            lo_out, hi_out = [], []
-            for c, pair in sorted((f.get("stats") or {}).items()):
-                info = col_info.get(c)
-                if info is None or not isinstance(info[1], str):
-                    continue  # nested/unknown column: skip
-                fid, typ = info
-                lo = _encode_bound(pair[0], typ)
-                hi = _encode_bound(pair[1], typ)
-                if lo is None or hi is None:
-                    continue
-                lo_out.append({"key": fid, "value": lo})
-                hi_out.append({"key": fid, "value": hi})
-            return (lo_out or None, hi_out or None)
-
-        def _value_counts(f: dict) -> list | None:
-            # top-level scalar fields carry exactly one value (possibly
-            # null) per row, so value_counts = record_count for each —
-            # with null_value_counts this lets readers prove all-null
-            out = [
-                {"key": fid, "value": int(f["rows"])}
-                for name, (fid, typ) in sorted(col_info.items())
-                if isinstance(typ, str)
-            ]
-            return out or None
-
-        def _null_counts(f: dict) -> list | None:
-            out = [
-                {"key": col_info[c][0], "value": int(n)}
-                for c, n in sorted((f.get("nulls") or {}).items())
-                if c in col_info
-            ]
-            return out or None
-
-        def _data_file(f: dict) -> dict:
-            lo, hi = _bounds(f)
-            return {
-                "content": 0,  # DATA
-                # file:// URI per the Iceberg spec (foreign engines
-                # resolve URIs, not bare POSIX paths)
-                "file_path": "file://" + f["path"],
-                "file_format": "PARQUET",
-                "partition": {
-                    c: _typed_partition_value(
-                        f["partition"].get(c), part_types[c]
-                    )
-                    for c in part_cols
-                },
-                "record_count": f["rows"],
-                "file_size_in_bytes": f["size"],
-                "value_counts": _value_counts(f),
-                "null_value_counts": _null_counts(f),
-                "lower_bounds": lo,
-                "upper_bounds": hi,
-            }
-
+        written: list[str] = []  # this attempt's manifests
         list_rows: list[dict] = []
+
+        def _manifest(entries: list[dict]) -> None:
+            path, row = _write_manifest(meta_dir, entries, spec, schema, sid, seq)
+            written.append(path)
+            list_rows.append(row)
+
         removed_count = 0
         added = files
         if incremental:
@@ -944,7 +1164,7 @@ def export_iceberg(
                     # silently resurrect the deleted rows for foreign
                     # readers; tombstones for files this commit
                     # removes become no-ops
-                    list_rows.append(dict(row))
+                    list_rows.append(row)
                     continue
                 live = [
                     e
@@ -960,104 +1180,18 @@ def export_iceberg(
                 seen_prev.update(p for p, e in by_path if _unchanged(p, e))
                 gone = [e for p, e in by_path if not _unchanged(p, e)]
                 if not gone:
-                    list_rows.append(dict(row))  # carry by reference
+                    list_rows.append(row)  # carry by reference
                     continue
                 # rewrite: survivors EXISTING (original lineage kept),
                 # removed DELETED by THIS snapshot
                 removed_count += len(gone)
                 survivors = [e for p, e in by_path if _unchanged(p, e)]
-                rewritten = [
-                    {
-                        "status": 0,  # EXISTING
-                        "snapshot_id": e.get("snapshot_id"),
-                        "sequence_number": e.get("sequence_number"),
-                        "file_sequence_number": e.get("file_sequence_number"),
-                        "data_file": e["data_file"],
-                    }
-                    for e in survivors
-                ] + [
-                    {
-                        "status": 2,  # DELETED
-                        "snapshot_id": sid,
-                        "sequence_number": e.get("sequence_number"),
-                        "file_sequence_number": e.get("file_sequence_number"),
-                        "data_file": e["data_file"],
-                    }
-                    for e in gone
-                ]
-                mp, mlen = _write_manifest(rewritten)
-                list_rows.append(
-                    {
-                        "manifest_path": "file://" + mp,
-                        "manifest_length": mlen,
-                        "partition_spec_id": 0,
-                        "content": 0,
-                        "sequence_number": seq,
-                        "min_sequence_number": row.get(
-                            "min_sequence_number", 0
-                        ),
-                        "added_snapshot_id": sid,
-                        "added_files_count": 0,
-                        "existing_files_count": len(survivors),
-                        "deleted_files_count": len(gone),
-                        "added_rows_count": 0,
-                        "existing_rows_count": sum(
-                            e["data_file"]["record_count"] for e in survivors
-                        ),
-                        "deleted_rows_count": sum(
-                            e["data_file"]["record_count"] for e in gone
-                        ),
-                    }
-                )
+                _manifest(_rewrite_entries(row, survivors, gone, sid))
             added = [f for f in files if f["path"] not in seen_prev]
 
         if added or not list_rows:
-            mp, mlen = _write_manifest(
-                [
-                    {
-                        "status": 1,  # ADDED
-                        "snapshot_id": sid,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": _data_file(f),
-                    }
-                    for f in added
-                ]
-            )
-            list_rows.append(
-                {
-                    "manifest_path": "file://" + mp,
-                    "manifest_length": mlen,
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(added),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(f["rows"] for f in added),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
+            _manifest(_added(sid, seq, [_export_file(f) for f in added]))
 
-        # --- manifest list ---
-        snap_name = f"snap-{sid}-1-{commit_uuid}.avro"
-        snap_path = os.path.join(meta_dir, snap_name)
-        list_bytes = encode_ocf(
-            _MANIFEST_LIST_AVRO,
-            list_rows,
-            codec="null",
-            extra_meta={"format-version": b"2"},
-        )
-        tmp = f"{snap_path}.tmp-{os.getpid()}-{attempt}"
-        with open(tmp, "wb") as fh:
-            fh.write(list_bytes)
-        os.replace(tmp, snap_path)
-        written_files.append(snap_path)
-
-        # --- table metadata ---
         if not incremental:
             op = "overwrite"  # self-contained re-add of the world
         elif removed_count == 0:
@@ -1066,58 +1200,21 @@ def export_iceberg(
             op = "delete"
         else:
             op = "overwrite"
-        snapshot = {
-            "snapshot-id": sid,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "summary": {
-                "operation": op,
-                "engine.state-fingerprint": fingerprint,
-            },
-            "manifest-list": "file://" + snap_path,
-            "schema-id": 0,
-        }
-        if snapshots:
-            snapshot["parent-snapshot-id"] = snapshots[-1]["snapshot-id"]
-        metadata = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, location)),
-            "location": location,
-            "last-sequence-number": seq,
-            "last-updated-ms": ts,
-            "last-column-id": last_column_id,
-            "current-schema-id": 0,
-            "schemas": [schema],
-            "default-spec-id": 0,
-            "partition-specs": [spec],
-            "last-partition-id": _INITIAL_PARTITION_FIELD_ID
-            - 1
-            + len(part_cols),
-            "default-sort-order-id": 0,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "properties": {
-                "write.format.default": "parquet",
-                # our data files carry no embedded field ids; this is
-                # the spec's mechanism for id resolution by name (see
-                # _name_mapping — without it foreign readers position-
-                # assign ids and misalign on partitioned tables)
-                "schema.name-mapping.default": json.dumps(
-                    _name_mapping(schema)
-                ),
-            },
-            "current-snapshot-id": sid,
-            "snapshots": snapshots + [snapshot],
-            "snapshot-log": (prev or {}).get("snapshot-log", [])
-            + [{"timestamp-ms": ts, "snapshot-id": sid}],
-            "metadata-log": [],
-        }
-        if not _publish_metadata(meta_dir, metadata, version):
-            # Lost the race: drop this attempt's Avro files, or they
-            # orphan in metadata/ (also when the retry then hits the
-            # fingerprint no-change skip)
-            _drop_unpublished(meta_dir, version, snap_path, written_files)
-            continue  # re-read, retry at next version
-        return meta_dir
+        if _commit_snapshot(
+            meta_dir,
+            version,
+            prev,
+            rows=list_rows,
+            written=written,
+            sid=sid,
+            seq=seq,
+            parent=snapshots[-1]["snapshot-id"] if snapshots else None,
+            summary={"operation": op, "engine.state-fingerprint": fingerprint},
+            **table,
+        ):
+            return meta_dir
+        # lost the race: this attempt's Avro files are gone; re-read
+        # and retry at the next version
     raise RuntimeError(
         f"export_iceberg: lost the metadata-version race 64 times under "
         f"{meta_dir} — a runaway concurrent exporter is appending "
@@ -1125,20 +1222,13 @@ def export_iceberg(
     )
 
 
-def _delete_base(meta_dir: str) -> tuple[int, dict, dict, int]:
-    """What a no-retry delete writer builds on: the latest metadata
-    version, its metadata, its current snapshot, and the new snapshot
-    id (also the new sequence number)."""
+def _delete_base(meta_dir: str) -> tuple[int, dict]:
+    """The latest metadata version and its metadata — what a no-retry
+    delete appender builds on."""
     versions = _metadata_versions(meta_dir)
     if not versions:
         raise FileNotFoundError(f"no Iceberg metadata under {meta_dir}")
-    prev = load_metadata(meta_dir, versions[-1])
-    cur = next(
-        s
-        for s in prev["snapshots"]
-        if s["snapshot-id"] == prev["current-snapshot-id"]
-    )
-    return versions[-1], prev, cur, next_snapshot_id(prev)
+    return versions[-1], load_metadata(meta_dir, versions[-1])
 
 
 def _commit_delete_file(
@@ -1146,99 +1236,65 @@ def _commit_delete_file(
     meta_dir: str,
     base_version: int,
     prev: dict,
-    cur: dict,
-    dpath: str,
-    entry_schema: dict,
-    entry: dict,
-    spec_id: int,
-    spec_fields: list,
-    all_specs: list,
+    rows,
+    spec: dict,
+    **fields,
 ) -> None:
-    """Commit the delete file ``dpath`` as ``base_version + 1``: a
-    delete manifest holding ``entry`` under partition spec ``spec_id``
-    (``spec_fields``), a manifest list carrying the current snapshot's
+    """Stage the pyarrow table ``rows`` as one delete parquet under
+    ``_deletes/`` and commit it as ``base_version + 1``: a delete
+    manifest under partition ``spec`` holding its ``data_file``
+    (``fields`` give ``content`` and any partition tuple or
+    ``equality_ids``), a manifest list carrying the current snapshot's
     manifests by reference plus it, and an operation=delete snapshot.
     The data-file state fingerprint is UNCHANGED, so a later
     export_iceberg no-ops instead of wiping the tombstones. No retry:
-    a lost race drops the staged files and raises
+    a lost race removes the staged files and raises
     :class:`IcebergConcurrentModificationError`."""
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
+    import pyarrow.parquet as pq
 
     location = os.path.dirname(meta_dir)
-    sid, seq = entry["snapshot_id"], entry["sequence_number"]
-    ts = int(time.time() * 1000)
-    schema = current_schema(prev)
-    manifest_meta = {
-        "schema": json.dumps(schema).encode(),
-        "partition-spec": json.dumps(spec_fields).encode(),
-        "partition-spec-id": str(spec_id).encode(),
-        "format-version": b"2",
-        "content": b"deletes",
-    }
-    mdata = encode_ocf(
-        entry_schema, [entry], codec="null", extra_meta=manifest_meta
+    kind = "pos" if fields["content"] == 1 else "eq"
+    os.makedirs(os.path.join(location, "_deletes"), exist_ok=True)
+    dpath = os.path.join(
+        location, "_deletes", f"{kind}-delete-{uuid.uuid4().hex}.parquet"
     )
-    mpath = os.path.join(meta_dir, f"del-{sid}-m0.avro")
-    with open(mpath, "wb") as fh:
-        fh.write(mdata)
-    list_rows = [dict(r) for r in _decode_manifest_list(cur, location)] + [
-        {
-            "manifest_path": "file://" + mpath,
-            "manifest_length": len(mdata),
-            "partition_spec_id": spec_id,
-            "content": 1,  # DELETES
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": sid,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": entry["data_file"]["record_count"],
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    snap_path = os.path.join(
-        meta_dir, f"snap-{sid}-1-{uuid.uuid5(uuid.NAMESPACE_URL, dpath)}.avro"
+    pq.write_table(rows, dpath)
+    sid = seq = next_snapshot_id(prev)
+    cur = next(
+        s
+        for s in prev["snapshots"]
+        if s["snapshot-id"] == prev["current-snapshot-id"]
     )
-    with open(snap_path, "wb") as fh:
-        fh.write(
-            encode_ocf(
-                _MANIFEST_LIST_AVRO,
-                list_rows,
-                codec="null",
-                extra_meta={"format-version": b"2"},
-            )
-        )
-    snapshot = {
-        "snapshot-id": sid,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "summary": {
+    mpath, row = _write_manifest(
+        meta_dir,
+        _added(
+            sid,
+            seq,
+            [_data_file(dpath, rows.num_rows, os.path.getsize(dpath), **fields)],
+        ),
+        spec,
+        current_schema(prev),
+        sid,
+        seq,
+    )
+    if not _commit_snapshot(
+        meta_dir,
+        base_version + 1,
+        prev,
+        rows=_decode_manifest_list(cur, location) + [row],
+        written=[mpath, dpath],
+        sid=sid,
+        seq=seq,
+        parent=cur["snapshot-id"],
+        summary={
             "operation": "delete",
             "engine.state-fingerprint": cur["summary"].get(
                 "engine.state-fingerprint", ""
             ),
         },
-        "manifest-list": "file://" + snap_path,
-        "schema-id": prev["current-schema-id"],
-        "parent-snapshot-id": cur["snapshot-id"],
-    }
-    metadata = dict(prev)
-    metadata["partition-specs"] = all_specs  # incl. the unpartitioned
-    metadata["last-sequence-number"] = seq
-    metadata["last-updated-ms"] = ts
-    metadata["current-snapshot-id"] = sid
-    metadata["snapshots"] = list(prev["snapshots"]) + [snapshot]
-    metadata["snapshot-log"] = list(prev.get("snapshot-log", [])) + [
-        {"timestamp-ms": ts, "snapshot-id": sid}
-    ]
-    try:
-        _publish_or_conflict(op, meta_dir, metadata, base_version)
-    except IcebergConcurrentModificationError:
-        staged = [mpath, snap_path, dpath]
-        _drop_unpublished(meta_dir, base_version + 1, snap_path, staged)
-        raise
+        partition_specs=[spec],
+    ):
+        raise _lost_race(op, meta_dir, base_version)
 
 
 def append_position_deletes(
@@ -1260,25 +1316,12 @@ def append_position_deletes(
     hand). ``deletes`` holds (data-file path, 0-based row position);
     plain local paths are normalized to the manifest's file:// form.
     Returns the metadata dir."""
+    import pyarrow as pa
+
     location = os.path.abspath(table_path)
     meta_dir = os.path.join(location, "metadata")
-    base_version, prev, cur, sid = _delete_base(meta_dir)
-    seq = sid
-    # position deletes here are GLOBAL (no partition scope parameter):
-    # per the spec they must ride an UNPARTITIONED spec — under the
-    # table's partitioned spec an all-null tuple means "the null
-    # partition" to conformant readers (Spark/Trino/PyIceberg), which
-    # would skip the deletes for every real partition. This also
-    # sidesteps transform-partitioned struct derivation entirely.
-    unpart_id, all_specs = _unpartitioned_spec(prev)
+    base_version, prev = _delete_base(meta_dir)
 
-    # --- the delete file itself (parquet of file_path, pos) ---
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    del_dir = os.path.join(location, "_deletes")
-    os.makedirs(del_dir, exist_ok=True)
-    dpath = os.path.join(del_dir, f"pos-delete-{sid}.parquet")
     def _to_file_uri(p) -> str:
         # accept plain paths, file:/x, file://x, file:///x (Spark's
         # _metadata.file_path uses the single-slash form) — emit the
@@ -1295,52 +1338,27 @@ def append_position_deletes(
         return "file://" + os.path.abspath(s)
 
     rows = sorted((_to_file_uri(p), int(pos)) for p, pos in deletes)
-    pq.write_table(
+    # position deletes here are GLOBAL (no partition scope parameter):
+    # per the spec they must ride an UNPARTITIONED spec — under the
+    # table's partitioned spec an all-null tuple means "the null
+    # partition" to conformant readers (Spark/Trino/PyIceberg), which
+    # would skip the deletes for every real partition. This also
+    # sidesteps transform-partitioned struct derivation entirely.
+    _commit_delete_file(
+        "append_position_deletes",
+        meta_dir,
+        base_version,
+        prev,
         pa.table(
             {
                 "file_path": pa.array([r[0] for r in rows], pa.string()),
                 "pos": pa.array([r[1] for r in rows], pa.int64()),
             }
         ),
-        dpath,
-    )
-
-    # --- content=1 delete manifest under the UNPARTITIONED spec ---
-    entry_schema = _manifest_entry_avro(_partition_struct_avro([], {}))
-    entry = {
-        "status": 1,  # ADDED
-        "snapshot_id": sid,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": 1,  # POSITION_DELETES
-            "file_path": "file://" + dpath,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": len(rows),
-            "file_size_in_bytes": os.path.getsize(dpath),
-            "value_counts": None,
-            "null_value_counts": None,
-            "lower_bounds": None,
-            "upper_bounds": None,
-        },
-    }
-    _commit_delete_file(
-        "append_position_deletes", meta_dir, base_version, prev, cur,
-        dpath, entry_schema, entry, unpart_id, [], all_specs,
+        _unpartitioned_spec(prev),
+        content=1,  # POSITION_DELETES
     )
     return meta_dir
-
-
-def _transform_result_type(transform: str, source_type: str | None) -> str:
-    """The Iceberg type a partition transform produces (spec
-    §Partition Transforms): bucket and the time transforms yield int,
-    identity/truncate keep the source type."""
-    if transform.startswith("bucket[") or transform in (
-        "year", "years", "month", "months", "day", "days", "hour", "hours"
-    ):
-        return "int"
-    return source_type or "string"
 
 
 def append_equality_deletes(
@@ -1363,66 +1381,31 @@ def append_equality_deletes(
     bucket number) writes the delete file's manifest partition struct,
     scoping it to ONE partition the way a partitioned-spec foreign
     writer would — rows in other partitions must survive."""
+    import pyarrow as pa
+
     location = os.path.abspath(table_path)
     meta_dir = os.path.join(location, "metadata")
-    base_version, prev, cur, sid = _delete_base(meta_dir)
-    seq = sid
+    base_version, prev = _delete_base(meta_dir)
     schema = current_schema(prev)
-    spec = next(
-        s
-        for s in prev["partition-specs"]
-        if s["spec-id"] == prev["default-spec-id"]
-    )
     by_name = {f["name"]: f for f in schema["fields"]}
     missing = [c for c in equality_cols if c not in by_name]
     if missing:
         raise ValueError(f"equality columns not in schema: {missing}")
-    equality_ids = [by_name[c]["id"] for c in equality_cols]
-    fname = {f["id"]: f["name"] for f in schema["fields"]}
-    ftype = {f["name"]: f["type"] for f in schema["fields"]}
     # SCOPED deletes ride the table's partitioned spec: the manifest's
-    # partition struct is keyed by partition FIELD name (== source
-    # name for identity transforms), typed by the TRANSFORM's result
-    # (spec §Partition Transforms), and carries the spec's ACTUAL
-    # field ids (an evolved spec's ids need not start at 1000 — an
-    # id-resolving reader would otherwise miss the scope values). A
-    # GLOBAL delete (partition_scope=None) must instead ride an
-    # UNPARTITIONED spec: an all-null tuple under the partitioned spec
-    # means "the null partition" to conformant readers, which would
-    # skip the delete for every real partition.
+    # partition struct is keyed by partition FIELD name and typed by
+    # the TRANSFORM's result (spec §Partition Transforms). A GLOBAL
+    # delete (partition_scope=None) must instead ride an UNPARTITIONED
+    # spec: an all-null tuple under the partitioned spec means "the
+    # null partition" to conformant readers, which would skip the
+    # delete for every real partition.
     if partition_scope is None:
-        manifest_spec_id, all_specs = _unpartitioned_spec(prev)
-        manifest_spec_fields: list = []
-        part_cols = []
-        part_types = {}
-        part_fids: dict = {}
+        spec = _unpartitioned_spec(prev)
     else:
-        manifest_spec_id = spec["spec-id"]
-        manifest_spec_fields = spec["fields"]
-        all_specs = prev.get("partition-specs", [])
-        part_cols = [
-            f.get("name") or fname[f["source-id"]] for f in spec["fields"]
-        ]
-        part_types = {
-            (f.get("name") or fname[f["source-id"]]): (
-                _transform_result_type(
-                    f["transform"], ftype.get(fname.get(f["source-id"]))
-                )
-            )
-            for f in spec["fields"]
-        }
-        part_fids = {
-            (f.get("name") or fname[f["source-id"]]): f["field-id"]
-            for f in spec["fields"]
-            if f.get("field-id") is not None
-        }
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    del_dir = os.path.join(location, "_deletes")
-    os.makedirs(del_dir, exist_ok=True)
-    dpath = os.path.join(del_dir, f"eq-delete-{sid}.parquet")
+        spec = next(
+            s
+            for s in prev["partition-specs"]
+            if s["spec-id"] == prev["default-spec-id"]
+        )
     _PA_OF = {
         "long": pa.int64(),
         "int": pa.int32(),
@@ -1437,89 +1420,41 @@ def append_equality_deletes(
         pat = _PA_OF.get(t) if isinstance(t, str) else None
         vals = [r.get(c) for r in rows]
         arrays[c] = pa.array(vals, pat) if pat else pa.array(vals)
-    pq.write_table(pa.table(arrays), dpath)
-
-    part_struct = _partition_struct_avro(part_cols, part_types, part_fids)
-    entry_schema = _manifest_entry_avro(part_struct)
-    entry = {
-        "status": 1,
-        "snapshot_id": sid,
-        "sequence_number": seq,
-        "file_sequence_number": seq,
-        "data_file": {
-            "content": 2,  # EQUALITY_DELETES
-            "file_path": "file://" + dpath,
-            "file_format": "PARQUET",
-            "partition": {
-                c: (partition_scope or {}).get(c) for c in part_cols
-            },
-            "record_count": len(rows),
-            "file_size_in_bytes": os.path.getsize(dpath),
-            "value_counts": None,
-            "null_value_counts": None,
-            "lower_bounds": None,
-            "upper_bounds": None,
-            "equality_ids": equality_ids,
-        },
-    }
     _commit_delete_file(
-        "append_equality_deletes", meta_dir, base_version, prev, cur,
-        dpath, entry_schema, entry, manifest_spec_id, manifest_spec_fields,
-        all_specs,
+        "append_equality_deletes",
+        meta_dir,
+        base_version,
+        prev,
+        pa.table(arrays),
+        spec,
+        content=2,  # EQUALITY_DELETES
+        partition={
+            c: (partition_scope or {}).get(c)
+            for c in _partition_types(spec, schema)
+        },
+        equality_ids=[by_name[c]["id"] for c in equality_cols],
     )
     return meta_dir
 
 
 def append_equality_deletes_stub(table_path: str) -> str:
-    """Author a MALFORMED equality-delete manifest: content=2 with NO
+    """Author a MALFORMED equality delete: a content=2 entry with NO
     equality_ids — used only to prove read_iceberg fails loudly on a
     delete it cannot apply rather than resurrecting rows. The real
     writer is :func:`append_equality_deletes`."""
-    meta_dir = append_position_deletes(table_path, [])
-    # rewrite the just-written manifest's entry to content=2
-    meta = load_metadata(meta_dir, _metadata_versions(meta_dir)[-1])
-    location = os.path.dirname(meta_dir)
-    cur = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    rows = _decode_manifest_list(cur, location)
-    target = next(r for r in rows if r.get("content", 0) == 1)
-    entries = _decode_manifest(target, location)
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
+    import pyarrow as pa
 
-    mlocal = norm_file_ref(target["manifest_path"], location)
-    for e in entries:
-        e["data_file"]["content"] = 2  # EQUALITY_DELETES
-    schema = current_schema(meta)
-    spec = next(
-        s
-        for s in meta["partition-specs"]
-        if s["spec-id"] == meta["default-spec-id"]
+    meta_dir = os.path.join(os.path.abspath(table_path), "metadata")
+    base_version, prev = _delete_base(meta_dir)
+    _commit_delete_file(
+        "append_equality_deletes_stub",
+        meta_dir,
+        base_version,
+        prev,
+        pa.table({"pos": pa.array([], pa.int64())}),
+        _unpartitioned_spec(prev),
+        content=2,
     )
-    fname = {f["id"]: f["name"] for f in schema["fields"]}
-    ftype = {f["name"]: f["type"] for f in schema["fields"]}
-    part_cols = [fname[f["source-id"]] for f in spec["fields"]]
-    part_types = {c: ftype[c] for c in part_cols}
-    entry_schema = _manifest_entry_avro(
-        _partition_struct_avro(part_cols, part_types)
-    )
-    with open(mlocal, "wb") as fh:
-        fh.write(
-            encode_ocf(
-                entry_schema,
-                entries,
-                codec="null",
-                extra_meta={
-                    "schema": json.dumps(schema).encode(),
-                    "partition-spec": json.dumps(spec["fields"]).encode(),
-                    "partition-spec-id": b"0",
-                    "format-version": b"2",
-                    "content": b"deletes",
-                },
-            )
-        )
     return meta_dir
 
 

@@ -55,20 +55,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_gobblin_spark.sinks.iceberg_export import (
-    _MANIFEST_LIST_AVRO,
-    _INITIAL_PARTITION_FIELD_ID,
+    _AVRO_OF,
     IcebergConcurrentModificationError,
+    _added,
+    _authored_spec,
+    _commit_snapshot,
+    _data_file,
     _decode_manifest,
     _decode_manifest_list,
     _iceberg_schema,
-    _manifest_entry_avro,
     _metadata_versions,
-    _name_mapping,
-    _partition_struct_avro,
-    _publish_metadata,
+    _partition_types,
     _publish_or_conflict,
-    _transform_result_type,
+    _rebase_or_conflict,
+    _remove,
+    _rewrite_entries,
+    _table_fields,
+    _typed_partition,
     _unpartitioned_spec,
+    _write_manifest,
 )
 from incubator_gobblin_spark.sources.iceberg_import import (
     current_schema,
@@ -214,8 +219,6 @@ def write_iceberg_table(
 
     Returns the ``metadata/`` dir.
     """
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
-
     location = os.path.abspath(path)
     meta_dir = os.path.join(location, "metadata")
     if os.path.isdir(meta_dir) and _metadata_versions(meta_dir):
@@ -245,7 +248,7 @@ def write_iceberg_table(
     if not files:
         raise ValueError("write_iceberg_table: df wrote no rows")
 
-    schema, last_column_id, part_types = _iceberg_schema(
+    schema, last_column_id, _ = _iceberg_schema(
         files[0]["path"], identity_cols, [f["partition"] for f in files]
     )
     # _iceberg_schema can only INFER identity partition types from the
@@ -263,165 +266,57 @@ def write_iceberg_table(
         "string": "string",
     }
     df_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    for c in identity_cols:
-        it = spark_to_iceberg.get(df_types[c])
-        if it is None:
-            raise ValueError(
-                "write_iceberg_table: unsupported identity partition "
-                f"column type {df_types[c]!r} for {c!r} — supported: "
-                f"{sorted(spark_to_iceberg)}"
-            )
-        part_types[c] = it
-        for f in schema["fields"]:
-            if f["name"] == c:
-                f["type"] = it
-    field_id = {f["name"]: f["id"] for f in schema["fields"]}
-    field_type = {f["name"]: f["type"] for f in schema["fields"]}
-    for name, t in transforms_by_name.items():
-        src = t["source"]
-        if src not in field_id:
-            raise ValueError(
-                f"write_iceberg_table: transform source {src!r} is not "
-                "a column of the written data files"
-            )
-        part_types[name] = _transform_result_type(
-            t["transform"], field_type[src]
-        )
-    spec = {
-        "spec-id": 0,
-        "fields": [
-            {
-                "name": c,
-                "transform": transforms_by_name.get(c, {}).get(
-                    "transform", "identity"
-                ),
-                "source-id": field_id[
-                    transforms_by_name.get(c, {}).get("source", c)
-                ],
-                "field-id": _INITIAL_PARTITION_FIELD_ID + i,
-            }
-            for i, c in enumerate(part_cols)
-        ],
-    }
-    sid, seq = 1, 1
-    ts = int(_time.time() * 1000)
-    part_struct = _partition_struct_avro(part_cols, part_types)
-    entry_schema = _manifest_entry_avro(part_struct)
-
-    def _typed(v, t):
-        if v is None:
-            return None
-        return int(v) if t in ("int", "long") else v
-
-    entries = [
-        {
-            "status": 1,  # ADDED
-            "snapshot_id": sid,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0,
-                "file_path": "file://" + f["path"],
-                "file_format": "PARQUET",
-                "partition": {
-                    c: _typed(f["partition"].get(c), part_types[c])
-                    for c in part_cols
-                },
-                "record_count": f["rows"],
-                "file_size_in_bytes": f["size"],
-                "value_counts": None,
-                "null_value_counts": None,
-                "lower_bounds": None,
-                "upper_bounds": None,
-            },
-        }
-        for f in files
-    ]
-    os.makedirs(meta_dir, exist_ok=True)
-    commit_uuid = str(_uuid.uuid4())
-    mdata = encode_ocf(
-        entry_schema,
-        entries,
-        codec="null",
-        extra_meta={
-            "schema": json.dumps(schema).encode(),
-            "partition-spec": json.dumps(spec["fields"]).encode(),
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"data",
-        },
+    for f in schema["fields"]:
+        if f["name"] in identity_cols:
+            f["type"] = spark_to_iceberg.get(df_types[f["name"]])
+            if f["type"] is None:
+                raise ValueError(
+                    "write_iceberg_table: unsupported identity partition "
+                    f"column type {df_types[f['name']]!r} for "
+                    f"{f['name']!r} — supported: {sorted(spark_to_iceberg)}"
+                )
+    spec = _authored_spec(
+        "write_iceberg_table", schema, part_cols, transforms_by_name
     )
-    mpath = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-    with open(mpath, "wb") as fh:
-        fh.write(mdata)
-    list_rows = [
-        {
-            "manifest_path": "file://" + mpath,
-            "manifest_length": len(mdata),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": sid,
-            "added_files_count": len(files),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(f["rows"] for f in files),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    snap_path = os.path.join(meta_dir, f"snap-{sid}-1-{commit_uuid}.avro")
-    with open(snap_path, "wb") as fh:
-        fh.write(
-            encode_ocf(
-                _MANIFEST_LIST_AVRO,
-                list_rows,
-                codec="null",
-                extra_meta={"format-version": b"2"},
-            )
-        )
-    metadata = {
-        "format-version": 2,
-        "table-uuid": str(_uuid.uuid5(_uuid.NAMESPACE_URL, location)),
-        "location": location,
-        "last-sequence-number": seq,
-        "last-updated-ms": ts,
-        "last-column-id": last_column_id,
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": 0,
-        "partition-specs": [spec],
-        "last-partition-id": _INITIAL_PARTITION_FIELD_ID
-        - 1
-        + len(part_cols),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "write.format.default": "parquet",
-            "schema.name-mapping.default": json.dumps(
-                _name_mapping(schema)
-            ),
+    part_types = _partition_types(spec, schema)
+    sid = seq = 1
+    os.makedirs(meta_dir, exist_ok=True)
+    mpath, row = _write_manifest(
+        meta_dir,
+        _added(
+            sid,
+            seq,
+            [
+                _data_file(
+                    f["path"],
+                    f["rows"],
+                    f["size"],
+                    partition=_typed_partition(f["partition"], part_types),
+                )
+                for f in files
+            ],
+        ),
+        spec,
+        schema,
+        sid,
+        seq,
+    )
+    if not _commit_snapshot(
+        meta_dir,
+        1,
+        {},
+        rows=[row],
+        written=[mpath],
+        sid=sid,
+        seq=seq,
+        parent=None,
+        summary={
+            "operation": "append",
+            "added-data-files": str(len(files)),
+            "added-records": str(sum(f["rows"] for f in files)),
         },
-        "current-snapshot-id": sid,
-        "snapshots": [
-            {
-                "snapshot-id": sid,
-                "sequence-number": seq,
-                "timestamp-ms": ts,
-                "summary": {
-                    "operation": "append",
-                    "added-data-files": str(len(files)),
-                    "added-records": str(sum(f["rows"] for f in files)),
-                },
-                "manifest-list": "file://" + snap_path,
-                "schema-id": 0,
-            }
-        ],
-        "snapshot-log": [{"timestamp-ms": ts, "snapshot-id": sid}],
-        "metadata-log": [],
-    }
-    if not _publish_metadata(meta_dir, metadata, 1):
+        **_table_fields(location, schema, last_column_id, spec),
+    ):
         raise FileExistsError(
             f"write_iceberg_table: v1 metadata appeared concurrently "
             f"under {meta_dir}"
@@ -463,7 +358,6 @@ def rewrite_iceberg_data_files(
     Raises :class:`IcebergConcurrentModificationError` if the
     current snapshot moves between scan and commit.
     """
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
     from incubator_gobblin_spark.sources.iceberg_import import (
         _schema_with_field_ids,
         read_iceberg,
@@ -586,25 +480,12 @@ def rewrite_iceberg_data_files(
     # refuse unsupported partition value types UP FRONT (the upsert
     # writer's guard): failing later inside the commit loop would
     # orphan the already-moved rewrite files under data/
-    _fname = {f["id"]: f["name"] for f in schema_json["fields"]}
-    _ftype = {f["name"]: f["type"] for f in schema_json["fields"]}
     for sp in prev.get("partition-specs", []):
-        for pf in sp["fields"]:
-            try:
-                t = _transform_result_type(
-                    pf["transform"],
-                    _ftype.get(_fname.get(pf["source-id"])),
-                )
-            except ValueError as e:
-                raise ValueError(
-                    f"rewrite_iceberg_data_files: {e}"
-                ) from e
-            if t not in (
-                "long", "string", "int", "double", "float", "boolean"
-            ):
+        for name, t in _partition_types(sp, schema_json).items():
+            if t not in _AVRO_OF:
                 raise ValueError(
                     "rewrite_iceberg_data_files: partition field "
-                    f"{pf.get('name')!r} of spec {sp['spec-id']} has "
+                    f"{name!r} of spec {sp['spec-id']} has "
                     f"unsupported value type {t!r} — the manifest "
                     "partition encoding carries "
                     "long/int/string/double/float/boolean only"
@@ -671,107 +552,32 @@ def rewrite_iceberg_data_files(
                     }
                 )
     except BaseException:
-        for fp in new_paths:
-            try:
-                os.remove(fp)
-            except OSError:
-                pass
+        _remove(new_paths)
         raise
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
-    def _cleanup():
-        for fp in new_paths:
-            try:
-                os.remove(fp)
-            except OSError:
-                pass
-
-    fname_by_id = {f["id"]: f["name"] for f in schema_json["fields"]}
-    ftype_by_name = {f["name"]: f["type"] for f in schema_json["fields"]}
-    specs_by_id = {
-        sp["spec-id"]: sp for sp in prev.get("partition-specs", [])
-    }
-
-    def _spec_struct(spec_id: int):
-        sp = specs_by_id[spec_id]
-        pcols = [
-            pf.get("name") or fname_by_id[pf["source-id"]]
-            for pf in sp["fields"]
-        ]
-        ptypes = {
-            (pf.get("name") or fname_by_id[pf["source-id"]]): (
-                _transform_result_type(
-                    pf["transform"],
-                    ftype_by_name.get(fname_by_id.get(pf["source-id"])),
-                )
-            )
-            for pf in sp["fields"]
-        }
-        # the spec's ACTUAL partition field ids — an evolved/foreign
-        # spec's ids need not be consecutive from 1000, and an
-        # id-resolving reader of the rewritten manifests would miss
-        # the partition values under positionally assigned ids
-        fids = {
-            (pf.get("name") or fname_by_id[pf["source-id"]]): pf[
-                "field-id"
-            ]
-            for pf in sp["fields"]
-            if pf.get("field-id") is not None
-        }
-        return sp, pcols, ptypes, fids
-
     # ---- commit loop ----
     for _ in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            now = load_metadata(meta_dir, versions[-1])
-            if now.get("current-snapshot-id") != base_snap_id:
-                _cleanup()
-                raise IcebergConcurrentModificationError(
-                    f"rewrite_iceberg_data_files: {location} advanced "
-                    f"from snapshot {base_snap_id} while this rewrite "
-                    "was computing — re-run it"
-                )
-            prev, current_v = now, versions[-1]
-
-        snapshots = list(prev["snapshots"])
+        current_v = _metadata_versions(meta_dir)[-1]
+        prev = _rebase_or_conflict(
+            "rewrite_iceberg_data_files", meta_dir, current_v, prev, new_paths
+        )
         cur = next(
-            s for s in snapshots if s["snapshot-id"] == base_snap_id
+            s for s in prev["snapshots"] if s["snapshot-id"] == base_snap_id
         )
+        specs = {sp["spec-id"]: sp for sp in prev["partition-specs"]}
         sid = seq = next_snapshot_id(prev)
-        ts = int(_time.time() * 1000)
-        commit_uuid = str(
-            _uuid.uuid5(_uuid.NAMESPACE_URL, f"{location}#rewrite#{sid}")
-        )
-        m_idx = 0
         written: list[str] = []
-
-        def _write_manifest(rows, spec_id: int) -> tuple[str, int]:
-            nonlocal m_idx
-            sp, pcols, ptypes, fids = _spec_struct(spec_id)
-            data = encode_ocf(
-                _manifest_entry_avro(
-                    _partition_struct_avro(pcols, ptypes, fids)
-                ),
-                rows,
-                codec="null",
-                extra_meta={
-                    "schema": json.dumps(schema_json).encode(),
-                    "partition-spec": json.dumps(sp["fields"]).encode(),
-                    "partition-spec-id": str(spec_id).encode(),
-                    "format-version": b"2",
-                    "content": b"data",
-                },
-            )
-            mp = os.path.join(meta_dir, f"{commit_uuid}-m{m_idx}.avro")
-            m_idx += 1
-            with open(mp, "wb") as fh:
-                fh.write(data)
-            written.append(mp)
-            return mp, len(data)
-
         list_rows: list[dict] = []
+
+        def _manifest(entries: list[dict], spec_id: int) -> None:
+            mp, row = _write_manifest(
+                meta_dir, entries, specs[spec_id], schema_json, sid, seq
+            )
+            written.append(mp)
+            list_rows.append(row)
+
         dropped_deletes = 0
         files_rewritten = 0
         for row in _decode_manifest_list(cur, location):
@@ -790,62 +596,12 @@ def rewrite_iceberg_data_files(
                 ).append(e)
             if not hit:
                 if live:
-                    list_rows.append(dict(row))  # carry by reference
+                    list_rows.append(row)  # carry by reference
                 continue
             files_rewritten += len(hit)
-            mf_seq = int(row.get("sequence_number") or 0)
-
-            def _seq(e):
-                s = e.get("sequence_number")
-                return mf_seq if s is None else int(s)
-
-            rewritten = [
-                {
-                    "status": 0,  # EXISTING, original lineage kept
-                    "snapshot_id": e.get("snapshot_id"),
-                    "sequence_number": _seq(e),
-                    "file_sequence_number": e.get(
-                        "file_sequence_number", _seq(e)
-                    ),
-                    "data_file": e["data_file"],
-                }
-                for e in survivors
-            ] + [
-                {
-                    "status": 2,  # DELETED by this snapshot
-                    "snapshot_id": sid,
-                    "sequence_number": _seq(e),
-                    "file_sequence_number": e.get(
-                        "file_sequence_number", _seq(e)
-                    ),
-                    "data_file": e["data_file"],
-                }
-                for e in hit
-            ]
-            spec_id = int(row.get("partition_spec_id") or 0)
-            mp, mlen = _write_manifest(rewritten, spec_id)
-            list_rows.append(
-                {
-                    "manifest_path": "file://" + mp,
-                    "manifest_length": mlen,
-                    "partition_spec_id": spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": row.get(
-                        "min_sequence_number", 0
-                    ),
-                    "added_snapshot_id": sid,
-                    "added_files_count": 0,
-                    "existing_files_count": len(survivors),
-                    "deleted_files_count": len(hit),
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"] for e in survivors
-                    ),
-                    "deleted_rows_count": sum(
-                        e["data_file"]["record_count"] for e in hit
-                    ),
-                }
+            _manifest(
+                _rewrite_entries(row, survivors, hit, sid),
+                int(row.get("partition_spec_id") or 0),
             )
 
         # new ADDED manifests, one per spec id among rewritten groups
@@ -854,69 +610,31 @@ def rewrite_iceberg_data_files(
             g = group_info[nf["gid"]]
             new_by_spec.setdefault(g["spec_id"], []).append(nf)
         for spec_id, nfs in sorted(new_by_spec.items()):
-            sp, pcols, ptypes, _fids = _spec_struct(spec_id)
-            entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": sid,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": "file://" + nf["path"],
-                        "file_format": "PARQUET",
-                        "partition": {
-                            c: group_info[nf["gid"]]["partition"].get(c)
-                            for c in pcols
-                        },
-                        "record_count": nf["rows"],
-                        "file_size_in_bytes": nf["size"],
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
+            pcols = _partition_types(specs[spec_id], schema_json)
+            added = [
+                _data_file(
+                    nf["path"],
+                    nf["rows"],
+                    nf["size"],
+                    partition={
+                        c: group_info[nf["gid"]]["partition"].get(c)
+                        for c in pcols
                     },
-                }
+                )
                 for nf in nfs
             ]
-            mp, mlen = _write_manifest(entries, spec_id)
-            list_rows.append(
-                {
-                    "manifest_path": "file://" + mp,
-                    "manifest_length": mlen,
-                    "partition_spec_id": spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(nfs),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(nf["rows"] for nf in nfs),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
+            _manifest(_added(sid, seq, added), spec_id)
 
-        snap_path = os.path.join(
-            meta_dir, f"snap-{sid}-1-{commit_uuid}.avro"
-        )
-        with open(snap_path, "wb") as fh:
-            fh.write(
-                encode_ocf(
-                    _MANIFEST_LIST_AVRO,
-                    list_rows,
-                    codec="null",
-                    extra_meta={"format-version": b"2"},
-                )
-            )
-        written.append(snap_path)
-
-        snapshot = {
-            "snapshot-id": sid,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "summary": {
+        if _commit_snapshot(
+            meta_dir,
+            current_v + 1,
+            prev,
+            rows=list_rows,
+            written=written,
+            sid=sid,
+            seq=seq,
+            parent=base_snap_id,
+            summary={
                 "operation": "replace",
                 "rewritten-data-files": str(files_rewritten),
                 "added-data-files": str(len(new_files)),
@@ -928,20 +646,7 @@ def rewrite_iceberg_data_files(
                     "engine.state-fingerprint", ""
                 ),
             },
-            "manifest-list": "file://" + snap_path,
-            "schema-id": schema_json.get("schema-id", 0),
-            "parent-snapshot-id": base_snap_id,
-        }
-        metadata = dict(prev)
-        metadata["last-sequence-number"] = seq
-        metadata["last-updated-ms"] = ts
-        metadata["current-snapshot-id"] = sid
-        metadata["snapshots"] = snapshots + [snapshot]
-        metadata["snapshot-log"] = list(
-            prev.get("snapshot-log", [])
-        ) + [{"timestamp-ms": ts, "snapshot-id": sid}]
-
-        if _publish_metadata(meta_dir, metadata, current_v + 1):
+        ):
             return {
                 "version": current_v + 1,
                 "snapshot_id": sid,
@@ -950,12 +655,7 @@ def rewrite_iceberg_data_files(
                 "delete_manifests_dropped": dropped_deletes,
                 "rows_written": sum(nf["rows"] for nf in new_files),
             }
-        for orphan in written:
-            try:
-                os.remove(orphan)
-            except OSError:
-                pass
-    _cleanup()
+    _remove(new_paths)
     raise IcebergConcurrentModificationError(
         f"rewrite_iceberg_data_files: lost the commit race 8 times "
         f"under {meta_dir}"
@@ -995,8 +695,6 @@ def upsert_iceberg_rows(
     :class:`IcebergConcurrentModificationError` if the current
     snapshot moves between staging and commit.
     """
-    from incubator_gobblin_spark.formats.avro_ocf import encode_ocf
-
     _refuse_manifest_lake(path, "upsert_iceberg_rows")
     on_cols = [on] if isinstance(on, str) else list(on)
     if not on_cols:
@@ -1022,8 +720,6 @@ def upsert_iceberg_rows(
         if s["spec-id"] == prev["default-spec-id"]
     )
     by_name = {f["name"]: f for f in schema_json["fields"]}
-    fname = {f["id"]: f["name"] for f in schema_json["fields"]}
-    ftype = {f["name"]: f["type"] for f in schema_json["fields"]}
     bad = [pf for pf in spec["fields"] if pf["transform"] != "identity"]
     if bad:
         raise ValueError(
@@ -1031,11 +727,9 @@ def upsert_iceberg_rows(
             f"({[pf['transform'] for pf in bad]}) — only identity "
             "partitioning is supported; use delete+append explicitly"
         )
-    part_cols = [
-        pf.get("name") or fname[pf["source-id"]] for pf in spec["fields"]
-    ]
-    part_types = {c: ftype[c] for c in part_cols}
-    unsup = [c for c in part_cols if part_types[c] not in ("int", "long", "string")]
+    part_types = _partition_types(spec, schema_json)
+    part_cols = list(part_types)
+    unsup = [c for c, t in part_types.items() if t not in ("int", "long", "string")]
     if unsup:
         raise ValueError(
             f"upsert_iceberg_rows: partition column types {unsup} not "
@@ -1087,7 +781,7 @@ def upsert_iceberg_rows(
     del_staging = os.path.join(
         location, f".upsert-del-{_uuid.uuid4().hex[:12]}"
     )
-    delete_parts: list[dict] = []
+    deletes: list[dict] = []  # EQUALITY_DELETES data files
     try:
         keys = df.select(*on_cols)
         if extra_delete_keys is not None:
@@ -1117,20 +811,19 @@ def upsert_iceberg_rows(
                 os.remove(fp)
                 continue
             new_paths.append(fp)
-            delete_parts.append(
-                {"path": fp, "rows": int(n), "size": os.path.getsize(fp)}
+            deletes.append(
+                _data_file(
+                    fp,
+                    n,
+                    os.path.getsize(fp),
+                    content=2,
+                    equality_ids=equality_ids,
+                )
             )
     finally:
         shutil.rmtree(del_staging, ignore_errors=True)
 
-    def _cleanup():
-        for fp in new_paths:
-            try:
-                os.remove(fp)
-            except OSError:
-                pass
-
-    if not data_files and not delete_parts:
+    if not data_files and not deletes:
         return {
             "version": current_v,
             "snapshot_id": base_snap_id,
@@ -1139,48 +832,29 @@ def upsert_iceberg_rows(
             "data_files": 0,
             "delete_files": 0,
         }
-
-    def _typed(v, t):
-        if v is None:
-            return None
-        return int(v) if t in ("int", "long") else v
+    added = [
+        _data_file(
+            f["path"],
+            f["rows"],
+            f["size"],
+            partition=_typed_partition(f["partition"], part_types),
+        )
+        for f in data_files
+    ]
+    rows_inserted = sum(f["rows"] for f in data_files)
 
     # ---- commit loop ----
     for _ in range(8):
-        versions = _metadata_versions(meta_dir)
-        if versions[-1] != current_v:
-            now = load_metadata(meta_dir, versions[-1])
-            if now.get("current-snapshot-id") != base_snap_id:
-                _cleanup()
-                raise IcebergConcurrentModificationError(
-                    f"upsert_iceberg_rows: {location} advanced from "
-                    f"snapshot {base_snap_id} while this upsert was "
-                    "staging — re-run it (upsert ordering matters)"
-                )
-            prev, current_v = now, versions[-1]
-
-        snapshots = list(prev["snapshots"])
+        current_v = _metadata_versions(meta_dir)[-1]
+        prev = _rebase_or_conflict(
+            "upsert_iceberg_rows", meta_dir, current_v, prev, new_paths
+        )
         cur = next(
-            s for s in snapshots if s["snapshot-id"] == base_snap_id
+            s for s in prev["snapshots"] if s["snapshot-id"] == base_snap_id
         )
         sid = seq = next_snapshot_id(prev)
-        ts = int(_time.time() * 1000)
-        commit_uuid = str(
-            _uuid.uuid5(_uuid.NAMESPACE_URL, f"{location}#upsert#{sid}")
-        )
-        part_struct = _partition_struct_avro(part_cols, part_types)
-        entry_schema = _manifest_entry_avro(part_struct)
-        manifest_meta = {
-            "schema": json.dumps(schema_json).encode(),
-            "partition-spec": json.dumps(spec["fields"]).encode(),
-            "partition-spec-id": str(spec["spec-id"]).encode(),
-            "format-version": b"2",
-        }
         written: list[str] = []
-        list_rows = [
-            dict(r) for r in _decode_manifest_list(cur, location)
-        ]
-
+        list_rows = _decode_manifest_list(cur, location)
         # (a) the equality-delete manifest — GLOBAL scope. Per the
         # spec only a delete file written under an UNPARTITIONED spec
         # applies globally; under the table's partitioned spec an
@@ -1190,163 +864,22 @@ def upsert_iceberg_rows(
         # under the table's unpartitioned spec (added to
         # partition-specs if absent), with an EMPTY partition struct;
         # it applies to data sequenced strictly before `seq`.
-        unpart_id, all_specs = _unpartitioned_spec(prev)
-        if delete_parts:
-            entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": sid,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": "file://" + p["path"],
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": p["rows"],
-                        "file_size_in_bytes": p["size"],
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": equality_ids,
-                    },
-                }
-                for p in delete_parts
-            ]
-            mdata = encode_ocf(
-                _manifest_entry_avro(_partition_struct_avro([], {})),
-                entries,
-                codec="null",
-                extra_meta={
-                    **manifest_meta,
-                    "partition-spec": b"[]",
-                    "partition-spec-id": str(unpart_id).encode(),
-                    "content": b"deletes",
-                },
-            )
-            mp = os.path.join(meta_dir, f"{commit_uuid}-m0.avro")
-            with open(mp, "wb") as fh:
-                fh.write(mdata)
-            written.append(mp)
-            list_rows.append(
-                {
-                    "manifest_path": "file://" + mp,
-                    "manifest_length": len(mdata),
-                    "partition_spec_id": unpart_id,
-                    "content": 1,  # DELETES
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(delete_parts),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        p["rows"] for p in delete_parts
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
-
         # (b) the data manifest — the new rows, same sequence number,
         # so the equality deletes (strictly-before rule) spare them
-        if data_files:
-            entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": sid,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": "file://" + f["path"],
-                        "file_format": "PARQUET",
-                        "partition": {
-                            c: _typed(
-                                f["partition"].get(c), part_types[c]
-                            )
-                            for c in part_cols
-                        },
-                        "record_count": f["rows"],
-                        "file_size_in_bytes": f["size"],
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                    },
-                }
-                for f in data_files
-            ]
-            mdata = encode_ocf(
-                entry_schema,
-                entries,
-                codec="null",
-                extra_meta={**manifest_meta, "content": b"data"},
-            )
-            mp = os.path.join(meta_dir, f"{commit_uuid}-m1.avro")
-            with open(mp, "wb") as fh:
-                fh.write(mdata)
-            written.append(mp)
-            list_rows.append(
-                {
-                    "manifest_path": "file://" + mp,
-                    "manifest_length": len(mdata),
-                    "partition_spec_id": spec["spec-id"],
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(data_files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(f["rows"] for f in data_files),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            )
-
-        snap_path = os.path.join(
-            meta_dir, f"snap-{sid}-1-{commit_uuid}.avro"
-        )
-        with open(snap_path, "wb") as fh:
-            fh.write(
-                encode_ocf(
-                    _MANIFEST_LIST_AVRO,
-                    list_rows,
-                    codec="null",
-                    extra_meta={"format-version": b"2"},
+        unpart = _unpartitioned_spec(prev)
+        for files, manifest_spec in ((deletes, unpart), (added, spec)):
+            if files:
+                mp, row = _write_manifest(
+                    meta_dir,
+                    _added(sid, seq, files),
+                    manifest_spec,
+                    schema_json,
+                    sid,
+                    seq,
                 )
-            )
-        written.append(snap_path)
-        snapshot = {
-            "snapshot-id": sid,
-            "sequence-number": seq,
-            "timestamp-ms": ts,
-            "summary": {
-                "operation": "overwrite",
-                "added-data-files": str(len(data_files)),
-                "added-delete-files": str(len(delete_parts)),
-                "added-records": str(
-                    sum(f["rows"] for f in data_files)
-                ),
-            },
-            "manifest-list": "file://" + snap_path,
-            "schema-id": schema_json.get("schema-id", 0),
-            "parent-snapshot-id": base_snap_id,
-        }
-        metadata = dict(prev)
-        if delete_parts:
-            # the delete manifest references the unpartitioned spec —
-            # the committed metadata must declare it
-            metadata["partition-specs"] = all_specs
-        metadata["last-sequence-number"] = seq
-        metadata["last-updated-ms"] = ts
-        metadata["current-snapshot-id"] = sid
-        metadata["snapshots"] = snapshots + [snapshot]
-        metadata["snapshot-log"] = list(
-            prev.get("snapshot-log", [])
-        ) + [{"timestamp-ms": ts, "snapshot-id": sid}]
+                written.append(mp)
+                list_rows.append(row)
+        table = {}
         if table_properties:
             # ATOMIC with the data commit — the exactly-once hook for
             # ingestion watermarks (jobs.kafka_ingest stores consumed
@@ -1362,26 +895,39 @@ def upsert_iceberg_rows(
                 if callable(table_properties)
                 else table_properties
             )
-            metadata["properties"] = {
+            table["properties"] = {
                 **(prev.get("properties") or {}),
                 **{str(k): str(v) for k, v in props.items()},
             }
-
-        if _publish_metadata(meta_dir, metadata, current_v + 1):
+        if _commit_snapshot(
+            meta_dir,
+            current_v + 1,
+            prev,
+            rows=list_rows,
+            written=written,
+            sid=sid,
+            seq=seq,
+            parent=base_snap_id,
+            summary={
+                "operation": "overwrite",
+                "added-data-files": str(len(data_files)),
+                "added-delete-files": str(len(deletes)),
+                "added-records": str(rows_inserted),
+            },
+            # the delete manifest references the unpartitioned spec —
+            # the committed metadata must declare it
+            partition_specs=[unpart] if deletes else [],
+            **table,
+        ):
             return {
                 "version": current_v + 1,
                 "snapshot_id": sid,
-                "rows_inserted": sum(f["rows"] for f in data_files),
-                "keys_deleted": sum(p["rows"] for p in delete_parts),
+                "rows_inserted": rows_inserted,
+                "keys_deleted": sum(d["record_count"] for d in deletes),
                 "data_files": len(data_files),
-                "delete_files": len(delete_parts),
+                "delete_files": len(deletes),
             }
-        for orphan in written:
-            try:
-                os.remove(orphan)
-            except OSError:
-                pass
-    _cleanup()
+    _remove(new_paths)
     raise IcebergConcurrentModificationError(
         f"upsert_iceberg_rows: lost the commit race 8 times under "
         f"{meta_dir}"

@@ -1,7 +1,9 @@
 """Lake commit publish (``commit.put_if_absent``): a failed publish
 propagates and leaves no ``*.tmp-*`` file, no new version and the old
 ``version-hint.text``; an Iceberg writer with no retry loop turns a
-lost race into a loud conflict error and drops the files it staged."""
+lost race into a loud conflict error and drops the files it staged,
+and a writer that loses to a racer committing the same snapshot id
+leaves the winner's files intact."""
 
 import errno
 import json
@@ -16,16 +18,26 @@ from incubator_gobblin_spark.commit import put_if_absent  # noqa: E402
 from incubator_gobblin_spark.session import load_table  # noqa: E402
 from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows  # noqa: E402
 from incubator_gobblin_spark.sinks.files import FileSink, TableType  # noqa: E402
+from incubator_gobblin_spark.sinks import iceberg_export as IE  # noqa: E402
 from incubator_gobblin_spark.sinks.iceberg_delete import (  # noqa: E402
     IcebergConcurrentModificationError,
+    delete_iceberg_rows,
 )
 from incubator_gobblin_spark.sinks.iceberg_export import (  # noqa: E402
     append_equality_deletes,
     append_position_deletes,
     expire_iceberg_snapshots,
 )
+from incubator_gobblin_spark.sinks.iceberg_maintenance import (  # noqa: E402
+    upsert_iceberg_rows,
+    write_iceberg_table,
+)
 from incubator_gobblin_spark.sources.iceberg_import import (  # noqa: E402
+    _decode_manifest,
+    _decode_manifest_list,
     current_metadata,
+    norm_file_ref,
+    read_iceberg,
     snapshot_files,
 )
 
@@ -165,3 +177,121 @@ def test_no_retry_delete_writers_lose_race_loudly(
     # only the racer's version is new: no temp file, no staged Avro
     assert _listing(meta_dir) == sorted(before + [fired["dst"]])
     assert not os.path.isdir(deletes_dir) or not os.listdir(deletes_dir)
+
+
+def _upsert(k):
+    def run(spark, root):
+        new = spark.createDataFrame([(k, f"new{k}")], "k long, v string")
+        upsert_iceberg_rows(spark, root, new, on="k")
+
+    return run
+
+
+def _delete_where(cond):
+    return lambda spark, root: delete_iceberg_rows(spark, root, cond)
+
+
+def _delete_pos(pos):
+    def run(spark, root):
+        data_file = snapshot_files(current_metadata(root), root)[0]["path"]
+        append_position_deletes(root, [(data_file, pos)])
+
+    return run
+
+
+@pytest.mark.parametrize(
+    "loser, winner, expect, when",
+    [
+        (
+            _upsert(2),
+            _upsert(1),
+            lambda ks: {(k, "new1" if k == 1 else "base") for k in ks},
+            "publish",
+        ),
+        (
+            _delete_where("k = 3"),
+            _delete_pos(0),
+            lambda ks: {(k, "base") for k in ks[1:]},
+            "publish",
+        ),
+        (
+            _delete_pos(7),
+            _delete_pos(0),
+            lambda ks: {(k, "base") for k in ks[1:]},
+            "base",
+        ),
+    ],
+    ids=["upsert-upsert", "delete-position", "position-position"],
+)
+def test_racer_with_same_snapshot_id_keeps_winner_intact(
+    spark, tmp_path, monkeypatch, loser, winner, expect, when
+):
+    """A real writer wins the next version on the same base, so it
+    commits the snapshot id the loser computed too. It runs between
+    the loser's staging and its publish, or, for the position
+    appender, between its base read and its staging. The loser
+    raises, every file the head metadata references exists, the
+    table reads the winner's rows, and no file the loser staged
+    remains."""
+    root = str(tmp_path / "race")
+    base = spark.createDataFrame(
+        [(k, "base") for k in range(10)], "k long, v string"
+    )
+    write_iceberg_table(spark, base.coalesce(1), root, coalesce_output=False)
+    data_file = snapshot_files(current_metadata(root), root)[0]["path"]
+    import pyarrow.parquet as pq
+
+    ks = pq.read_table(data_file).column("k").to_pylist()  # row positions
+    fired = []
+
+    def run_winner():
+        fired.append(True)
+        monkeypatch.undo()
+        winner(spark, root)
+
+    if when == "publish":
+        real_link = os.link
+
+        def racing_link(src, dst):
+            if not fired and dst.endswith(".metadata.json"):
+                run_winner()
+            return real_link(src, dst)
+
+        monkeypatch.setattr(os, "link", racing_link)
+    else:
+        real_versions = IE._metadata_versions
+
+        def racing_versions(meta_dir):
+            out = real_versions(meta_dir)
+            if not fired:
+                run_winner()
+            return out
+
+        monkeypatch.setattr(IE, "_metadata_versions", racing_versions)
+
+    with pytest.raises(IcebergConcurrentModificationError):
+        loser(spark, root)
+    monkeypatch.undo()
+    assert fired
+
+    head = current_metadata(root)
+    referenced = set()
+    for snap in head["snapshots"]:
+        paths = [norm_file_ref(snap["manifest-list"], root)]
+        assert os.path.exists(paths[0]), paths[0]
+        for row in _decode_manifest_list(snap, root):
+            paths.append(norm_file_ref(row["manifest_path"], root))
+            assert os.path.exists(paths[-1]), paths[-1]
+            for e in _decode_manifest(row, root):
+                paths.append(norm_file_ref(e["data_file"]["file_path"], root))
+                assert os.path.exists(paths[-1]), paths[-1]
+        referenced.update(paths)
+    got = {tuple(r) for r in read_iceberg(spark, root).collect()}
+    assert got == expect(ks)
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, files in os.walk(root)
+        for f in files
+        if not f.endswith(".metadata.json") and f != "version-hint.text"
+    }
+    assert on_disk <= referenced, on_disk - referenced

@@ -513,9 +513,9 @@ def test_iceberg_same_state_race_keeps_winner_files(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """When the race winner published the SAME (sid, fingerprint) state,
-    the deterministic commit uuid makes the loser's attempt files the
-    winner's files — the loser must keep them (deleting would break the
-    winner's snapshot) and skip as no-change on retry."""
+    the loser's attempt files still carry fresh names, never the
+    winner's: the loser removes only its own files (the winner's
+    snapshot stays intact) and skips as no-change on retry."""
     from incubator_gobblin_spark.sinks import iceberg_export as IE
 
     df = load_table(spark, sf_dir, "region")
@@ -1008,33 +1008,46 @@ def test_iceberg_export_after_foreign_delete_carries_tombstones(
 ):
     """An incremental export AFTER a foreign delete snapshot must carry
     the delete manifest by reference (dropping it would resurrect the
-    deleted rows for foreign readers)."""
+    deleted rows for foreign readers). On a partitioned lake the delete
+    manifest rides a second, unpartitioned spec, which the export's
+    metadata must keep declaring."""
     from incubator_gobblin_spark.sinks.iceberg_export import (
         append_position_deletes,
     )
 
-    df = load_table(spark, sf_dir, "region")
-    root = str(tmp_path / "posdelinc")
-    sink = _sink(root, table_type=TableType.APPEND_ONLY)
-    sink.write_staging(df.filter(F.col("r_regionkey") < 3), "r0")
-    sink.publish("r0")
-    sink.export_iceberg()
-    files, _ = snapshot_files(
-        current_metadata(root), root, collect_deletes=True
+    df = load_table(spark, sf_dir, "region").withColumn(
+        "p", F.col("r_regionkey") % 2
     )
-    coords = _coords(
-        spark, [f["path"] for f in files], F.col("r_regionkey") == 0
-    )
-    append_position_deletes(root, coords)
-    # new data lands; incremental export
-    sink.write_staging(df.filter(F.col("r_regionkey") >= 3), "r1")
-    sink.publish("r1")
-    sink.export_iceberg()
-    got = read_iceberg(spark, root)
-    want = df.filter(F.col("r_regionkey") != 0)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
+    for partition_by in ([], ["p"]):
+        root = str(tmp_path / f"posdelinc{len(partition_by)}")
+        sink = _sink(
+            root, table_type=TableType.APPEND_ONLY, partition_by=partition_by
+        )
+        sink.write_staging(df.filter(F.col("r_regionkey") < 3), "r0")
+        sink.publish("r0")
+        sink.export_iceberg()
+        files, _ = snapshot_files(
+            current_metadata(root), root, collect_deletes=True
+        )
+        coords = _coords(
+            spark, [f["path"] for f in files], F.col("r_regionkey") == 0
+        )
+        append_position_deletes(root, coords)
+        # new data lands; incremental export
+        sink.write_staging(df.filter(F.col("r_regionkey") >= 3), "r1")
+        sink.publish("r1")
+        sink.export_iceberg()
+        got = read_iceberg(spark, root)
+        want = df.filter(F.col("r_regionkey") != 0)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+        meta = current_metadata(root)
+        declared = {s["spec-id"] for s in meta["partition-specs"]}
+        used = {
+            r["partition_spec_id"] for r in _snap_manifest_rows(meta, root)
+        }
+        assert used <= declared, (used, declared)
 
 
 def test_iceberg_equality_deletes_applied(spark, sf_dir, tmp_path):

@@ -373,6 +373,10 @@ def test_iceberg_delete_conflict_raises_not_corrupts(
         s["summary"].get("operation") != "delete"
         for s in head["snapshots"]
     )
+    # the raise removed the delete files the DELETE staged
+    assert not [
+        f for _, _, fs in os.walk(os.path.join(root, "_deletes")) for f in fs
+    ]
 
     # benign race: a metadata-only bump (same current snapshot) must
     # NOT abort — the delete re-bases and commits on the next version
