@@ -17,7 +17,9 @@ sequence, deleted only after the last step succeeds.
 
 Lake log and metadata versions (Delta, Iceberg) publish through
 :func:`put_if_absent`, the one create-if-absent primitive shared by
-every lake writer.
+every lake writer. The files those versions reference are written
+through :func:`stage_parquet`, the one staged-file writer (Gobblin's
+writer-fills-staging, publisher-moves-into-place split).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 
 @dataclass
@@ -192,3 +195,104 @@ def put_if_absent(path: str, data: str) -> bool:
     finally:
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
+
+
+def _remove(paths) -> None:
+    """Unlink files (or staging directories) no published metadata
+    references. Missing ones are fine."""
+    for p in paths:
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+            continue
+        with contextlib.suppress(OSError):
+            os.remove(p)
+
+
+def _move_parts(staging: str, dest_dir: str, tag: str):
+    """Move the ``*.parquet`` parts directly under ``staging`` into
+    ``dest_dir`` as ``{tag}-<uuid12>-<i:05d>.parquet`` (collision-free
+    next to other writers' files), yielding ``(part name, new path)``
+    as each one lands, so a caller's cleanup sees every moved file even
+    when a later move fails. ``dest_dir`` is created with the first
+    part; Spark's ``_SUCCESS`` and ``.crc`` files stay behind."""
+    parts = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    for i, fn in enumerate(parts):
+        os.makedirs(dest_dir, exist_ok=True)
+        dst = os.path.join(
+            dest_dir, f"{tag}-{uuid.uuid4().hex[:12]}-{i:05d}.parquet"
+        )
+        shutil.move(os.path.join(staging, fn), dst)
+        yield fn, dst
+
+
+def _hive_partition(rel_dir: str) -> dict:
+    """``{column: value}`` of a Spark ``partitionBy`` dir path
+    ``k=v/...`` relative to the write root (``.`` is ``{}``). The one
+    decoder of Spark's dir values: ``__HIVE_DEFAULT_PARTITION__`` is a
+    null, anything else is percent-escaped."""
+    if rel_dir == ".":
+        return {}
+    out = {}
+    for seg in rel_dir.split(os.sep):
+        k, _, v = seg.partition("=")
+        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return out
+
+
+def stage_parquet(
+    df, root: str, dest: str, tag: str, part_cols=(), keep_empty=False
+) -> list[tuple]:
+    """Write ``df`` as parquet into the table at ``root`` and return
+    ``(path, partition, footer metadata, size)`` per file: the file
+    half of every lake commit, before :func:`put_if_absent` publishes
+    the version that references the files.
+
+    ``df`` is written as shaped (callers own repartition, ``coalesce``
+    and sort) to ``<root>/.staging-<uuid>``, hive-partitioned by
+    ``part_cols``. Each ``*.parquet`` part's footer is read once; parts
+    with zero rows are dropped unless ``keep_empty`` (an empty write
+    then still yields the one schema-carrying file Spark wrote). The
+    rest move to ``dest/<hive dir>`` under the ``tag`` prefix (see
+    :func:`_move_parts`), ``partition`` being the decoded hive dir
+    (:func:`_hive_partition`). ``dest`` must lie under ``root``.
+
+    If anything raises, every moved file is removed, and so is every
+    dest dir that removal leaves empty. The staging dir is always
+    removed, ``_SUCCESS`` and ``.crc`` files with it. Reclaiming the
+    returned files after a lost commit is the caller's job."""
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(root, f".staging-{uuid.uuid4().hex[:12]}")
+    out: list[tuple] = []
+    try:
+        w = df.write.mode("overwrite")
+        if part_cols:
+            w = w.partitionBy(*part_cols)
+        w.parquet(staging)
+        for dirpath, dirs, files in os.walk(staging):
+            dirs.sort()
+            kept = {}
+            for fn in sorted(f for f in files if f.endswith(".parquet")):
+                fp = os.path.join(dirpath, fn)
+                md = pq.read_metadata(fp)
+                if md.num_rows or keep_empty:
+                    kept[fn] = (md, os.path.getsize(fp))
+                else:
+                    os.remove(fp)
+            rel = os.path.relpath(dirpath, staging)
+            partition = _hive_partition(rel)
+            dest_dir = os.path.normpath(os.path.join(dest, rel))
+            for fn, fp in _move_parts(dirpath, dest_dir, tag):
+                out.append((fp, partition, *kept[fn]))
+    except BaseException:
+        _remove([t[0] for t in out])
+        stop = os.path.abspath(root)
+        for d in sorted({os.path.dirname(t[0]) for t in out}, reverse=True):
+            with contextlib.suppress(OSError):  # a non-empty dir stops it
+                while os.path.abspath(d) != stop:
+                    os.rmdir(d)
+                    d = os.path.dirname(d)
+        raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return out

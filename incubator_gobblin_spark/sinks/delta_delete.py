@@ -24,8 +24,10 @@ pushdown applies), only the MATCHED (file, row_index) coordinates
 shuffle (one exchange keyed on file path), each touched file's bitmap
 is built and written by an executor task (``applyInPandas`` — the
 driver never holds O(deleted rows)), and the driver collects one
-descriptor row per touched file before appending a single put-if-absent
-commit JSON, exactly like ``export_delta_log``.
+descriptor row per touched file before publishing a single put-if-absent
+commit JSON through ``delta_maintenance._publish_commit``, the one Delta
+commit publisher; its change data files are staged through
+``commit.stage_parquet``, the one staged-file writer.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gobblin_spark.commit import _remove
 from incubator_gobblin_spark.sources.delta_import import (
     _cm_phys,
     _fieldid_type,
@@ -225,7 +228,7 @@ def _stage_cdf_deletes(
     _change_data files. The change set is the matched rows MINUS
     positions already dead under a standing DV (they were reported
     deleted by the commit that killed them; emitting them again would
-    double-count). Returns the staged ``{"cdc": ...}`` actions."""
+    double-count). Returns the staged ``cdc`` action bodies."""
     from incubator_gobblin_spark.sinks.delta_maintenance import (
         stage_cdc_files,
     )
@@ -235,10 +238,21 @@ def _stage_cdf_deletes(
     changes = changes.select(*logical_cols).withColumn(
         "_change_type", F.lit("delete")
     )
-    return [
-        {"cdc": c}
-        for c in stage_cdc_files(changes, path, logical_part_cols, ts)
-    ]
+    return stage_cdc_files(changes, path, logical_part_cols, ts)
+
+
+def _written_dvs(path: str, desc_rows) -> list[str]:
+    """The deletion-vector files :func:`build_dv_descriptors` wrote for
+    ``desc_rows``: staged files an aborted or no-op commit reclaims (or
+    every lost race on a contended table leaves bitmaps for vacuum)."""
+    from incubator_gobblin_spark.formats.deletion_vectors import dv_file_path
+
+    out = []
+    for r in desc_rows:
+        fp = r._dv and dv_file_path(os.path.abspath(path), json.loads(r._dv))
+        if fp:
+            out.append(fp)
+    return out
 
 
 def build_dv_descriptors(spark, matched, path: str, live: dict) -> list:
@@ -300,6 +314,42 @@ def build_dv_descriptors(spark, matched, path: str, live: dict) -> list:
         .applyInPandas(_build, "_path string, _dv string, _card long")
         .collect()
     )
+
+
+def _dv_commit_actions(
+    path: str, live: dict, proto: dict, desc_rows, ts: int
+) -> tuple[list[dict], int, int, int]:
+    """The actions committing :func:`build_dv_descriptors`' rows, shared
+    by DELETE and MERGE: the protocol upgrade deletion vectors need,
+    then per touched file a ``remove`` of its live add and, unless every
+    row is now dead, a re-add carrying the new vector with loosened
+    stats. Returns ``(actions, rows newly deleted, files re-added with
+    a vector, files removed outright)``."""
+    from incubator_gobblin_spark.sinks.delta_maintenance import _remove_action
+
+    if not desc_rows:
+        return [], 0, 0, 0
+    upgrade = _upgraded_protocol(proto)
+    actions = [] if upgrade is None else [{"protocol": upgrade}]
+    rel_of = {os.path.abspath(add_file_path(path, rel)): rel for rel in live}
+    rows = dv_files = files_removed = 0
+    for r in sorted(desc_rows, key=lambda x: x._path):
+        old = live[rel_of[r._path]]
+        old_card = int(
+            (old.get("deletionVector") or {}).get("cardinality") or 0
+        )
+        rows += int(r._card) - old_card
+        actions.append(_remove_action(old, ts, True))
+        if r._dv is None:
+            files_removed += 1
+            continue
+        add = {**old, "deletionVector": json.loads(r._dv), "dataChange": True}
+        loosened = _loosened_stats(old)
+        if loosened is not None:
+            add["stats"] = loosened
+        actions.append({"add": add})
+        dv_files += 1
+    return actions, rows, dv_files, files_removed
 
 
 def delete_delta_rows(
@@ -411,8 +461,6 @@ def delete_delta_rows(
         def _logicalize(df):
             return df
 
-    # decoded abspath -> rel key in `live`
-    by_abs = {os.path.abspath(add_file_path(path, rel)): rel for rel in live}
     df = assemble_snapshot(
         spark, _groups_of(path, live.values(), pv_keys), schema, part_cols,
         union_threshold, with_positions=True,
@@ -426,14 +474,12 @@ def delete_delta_rows(
             condition if isinstance(condition, Column) else F.expr(condition)
         )
         filtered = logical.filter(cond)
-    cdf_on = (
-        str(
-            ((meta or {}).get("configuration") or {}).get(
-                "delta.enableChangeDataFeed", ""
-            )
-        ).lower()
-        == "true"
+    from incubator_gobblin_spark.sinks.delta_maintenance import (
+        _publish_commit,
+        cdf_enabled,
     )
+
+    cdf_on = cdf_enabled(meta)
     if cdf_on:
         # the matched set is consumed TWICE on CDF tables (bitmap
         # build + cdc staging) — cache it once instead of re-running
@@ -458,7 +504,7 @@ def delete_delta_rows(
             }
 
         ts = int(_time.time() * 1000)
-        cdc_actions = _stage_cdf_deletes(
+        cdc = _stage_cdf_deletes(
             spark, path, filtered, live, meta, schema_json,
             logical_part_cols, ts,
         ) if cdf_on else []
@@ -486,99 +532,40 @@ def delete_delta_rows(
                 }
             }
         )
-    actions.extend(cdc_actions)
-    upgrade = _upgraded_protocol(proto)
-    if upgrade is not None:
-        actions.append({"protocol": upgrade})
-    rows_deleted = 0
-    dv_files = 0
-    files_removed = 0
-    for r in sorted(desc_rows, key=lambda x: x._path):
-        rel = by_abs[r._path]
-        old = live[rel]
-        old_card = int(
-            (old.get("deletionVector") or {}).get("cardinality") or 0
-        )
-        rows_deleted += int(r._card) - old_card
-        remove = {
-            "path": rel,
-            "deletionTimestamp": ts,
-            "dataChange": True,
-            "extendedFileMetadata": True,
-            "partitionValues": old.get("partitionValues") or {},
-            "size": old.get("size"),
-        }
-        if old.get("deletionVector"):
-            # vacuum needs the superseded vector's location to clean it
-            remove["deletionVector"] = old["deletionVector"]
-        actions.append({"remove": remove})
-        if r._dv is None:
-            files_removed += 1
-            continue
-        add = {**old, "deletionVector": json.loads(r._dv), "dataChange": True}
-        loosened = _loosened_stats(old)
-        if loosened is not None:
-            add["stats"] = loosened
-        actions.append({"add": add})
-        dv_files += 1
+    actions.extend({"cdc": c} for c in cdc)
+    dv_actions, rows_deleted, dv_files, files_removed = _dv_commit_actions(
+        path, live, proto, desc_rows, ts
+    )
+    actions.extend(dv_actions)
 
-    def _reclaim_staged() -> None:
-        """A no-op or aborted DELETE's staged artifacts are orphans:
-        the cdc sidecars AND the freshly written deletion-vector
-        bitmaps (or every lost race on a contended table permanently
-        accumulates unreferenced bitmap files for vacuum to sweep)."""
-        from incubator_gobblin_spark.formats.deletion_vectors import (
-            dv_file_path,
-        )
-
-        for c in cdc_actions:
-            try:
-                os.remove(add_file_path(path, c["cdc"]["path"]))
-            except OSError:
-                pass
-        for r in desc_rows:
-            if r._dv is None:
-                continue
-            fp = dv_file_path(os.path.abspath(path), json.loads(r._dv))
-            if fp:
-                try:
-                    os.remove(fp)
-                except OSError:
-                    pass
-
+    staged = [add_file_path(path, c["path"]) for c in cdc]
+    staged += _written_dvs(path, desc_rows)
     if rows_deleted == 0 and files_removed == 0:
         # every matched position was ALREADY dead (a replayed window's
         # keyed delete, the jobs.replicate crash-recovery path): the
         # new bitmaps equal the standing ones, so committing would add
         # a pure no-op version — skip it, like delta-spark's
-        # zero-affected-rows DELETE. The freshly staged vectors are
-        # orphans; reclaim them now.
-        _reclaim_staged()
+        # zero-affected-rows DELETE. The staged files are orphans;
+        # reclaim them now.
+        _remove(staged)
         return {
             "version": current_v,
             "rows_deleted": 0,
             "dv_files": 0,
             "files_removed": 0,
         }
-
-    def _race_ok(state) -> bool:
-        # a racer got in: compare ALL of (live files, metadata,
-        # protocol) — not just the file state. A metadata-only racer
-        # can change obligations this DELETE already validated against
-        # (enable appendOnly/CDF, add a writer feature we don't
-        # implement), and committing our protocol action computed from
-        # the OLD protocol would silently drop the racer's upgraded
-        # feature list.
-        return state == (live, meta, proto)
-
-    from incubator_gobblin_spark.sinks.delta_maintenance import _publish_commit
-
+    # a racer got in: ALL of (live files, metadata, protocol) must be
+    # unchanged, not just the file state. A metadata-only racer can
+    # change obligations this DELETE already validated against (enable
+    # appendOnly/CDF, add a writer feature we don't implement), and
+    # committing our protocol action computed from the OLD protocol
+    # would silently drop the racer's upgraded feature list.
     version = _publish_commit(
         log_dir,
         actions,
         current_v,
-        on_race_state=_race_ok,
-        cleanup=_reclaim_staged,
+        (live, meta, proto),
+        staged=staged,
         op="delete_delta_rows",
     )
     return {

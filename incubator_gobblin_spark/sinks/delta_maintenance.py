@@ -48,16 +48,15 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
 import time as _time
 import uuid as _uuid
-from urllib.parse import quote, unquote
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from incubator_gobblin_spark.commit import put_if_absent
+from incubator_gobblin_spark.commit import _remove, put_if_absent, stage_parquet
 from incubator_gobblin_spark.sinks.delta_delete import (
     DeltaConcurrentModificationError,
 )
@@ -106,24 +105,17 @@ def _refuse_manifest_lake(path: str, op: str) -> None:
         )
 
 
-def _hive_dir_value(seg_value: str):
-    if seg_value == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    return unquote(seg_value)
-
-
-def _footer_stats(fp: str, skip_cols: set[str]) -> tuple[int, str]:
-    """(row count, add.stats JSON) from one parquet footer — numRecords
-    always; min/max/nullCount for top-level leaf columns whose
-    row-group statistics exist. Parquet writers may TRUNCATE binary
-    stats, but truncation keeps them valid (loose) bounds — exactly
-    what Delta stats are — so they are safe to export for skipping."""
+def _footer_stats(md, skip_cols: set[str]) -> str:
+    """add.stats JSON from one parquet footer's metadata (as
+    :func:`~incubator_gobblin_spark.commit.stage_parquet` returns it) —
+    numRecords always; min/max/nullCount for top-level leaf columns
+    whose row-group statistics exist. Parquet writers may TRUNCATE
+    binary stats, but truncation keeps them valid (loose) bounds —
+    exactly what Delta stats are — so they are safe to export for
+    skipping."""
     import datetime as _dt
     import decimal as _decimal
 
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(fp)
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
@@ -189,49 +181,63 @@ def _footer_stats(fp: str, skip_cols: set[str]) -> tuple[int, str]:
     nulls = {k: v for k, v in nulls.items() if k not in null_unknown}
     if nulls:
         out["nullCount"] = nulls
-    return int(md.num_rows), json.dumps(out)
+    return json.dumps(out)
 
 
-def _move_parts(staging: str, dest_dir: str, tag: str) -> list[str]:
-    """Move Spark part files from a staging dir into ``dest_dir`` under
-    collision-free names; returns the new absolute paths."""
-    os.makedirs(dest_dir, exist_ok=True)
-    out = []
-    for i, fn in enumerate(sorted(os.listdir(staging))):
-        if not fn.endswith(".parquet"):
-            continue
-        dst = os.path.join(
-            dest_dir, f"part-{tag}-{_uuid.uuid4().hex[:12]}-{i:05d}.parquet"
-        )
-        shutil.move(os.path.join(staging, fn), dst)
-        out.append(dst)
-    return out
+def _staged_action(path: str, fp: str, partition: dict, size: int, **fields) -> dict:
+    """The body of an ``add`` or ``cdc`` action for file ``fp`` staged
+    under the table at ``path``."""
+    rel = os.path.relpath(fp, path).replace(os.sep, "/")
+    return {"path": quote(rel), "partitionValues": partition, "size": size, **fields}
+
+
+def _remove_action(add: dict, ts: int, data_change: bool) -> dict:
+    """The ``remove`` action retiring the live ``add``; a superseded
+    deletion vector rides along so :func:`vacuum_delta` can clean the
+    bitmap."""
+    rm = {
+        "path": add["path"],
+        "deletionTimestamp": ts,
+        "dataChange": data_change,
+        "extendedFileMetadata": True,
+        "partitionValues": add.get("partitionValues") or {},
+        "size": add.get("size"),
+    }
+    if add.get("deletionVector"):
+        rm["deletionVector"] = add["deletionVector"]
+    return {"remove": rm}
 
 
 def _publish_commit(
     log_dir: str,
     actions: list[dict],
     expect_version: int,
+    pinned: tuple,
     *,
-    on_race_state=None,
-    cleanup=None,
+    staged: list[str],
+    race_ok=None,
     op: str = "commit",
 ) -> int:
     """Publish ``actions`` as the next Delta log version through
     :func:`~incubator_gobblin_spark.commit.put_if_absent`; the one Delta
     commit publisher behind the DML and maintenance writers.
-    ``on_race_state`` is called after a version advance with the
-    re-replayed (live, meta, proto); returning False aborts (after
-    ``cleanup``) with :class:`DeltaConcurrentModificationError`."""
+
+    ``pinned`` is the ``(live, meta, proto)`` replayed at
+    ``expect_version``, the state the actions were computed from. Once
+    the log has moved past it, the re-replayed state must pass
+    ``race_ok`` (default: equal ``pinned`` — any change to the files,
+    metadata or protocol invalidates the computed actions). A failed
+    check, or losing the put 8 times, removes exactly ``staged`` (the
+    absolute paths of the files this commit would have referenced) and
+    raises :class:`DeltaConcurrentModificationError`."""
     data = "\n".join(json.dumps(a) for a in actions) + "\n"
     for _ in range(8):
         versions = _log_versions(log_dir)
         current = versions[-1] if versions else -1
-        if current != expect_version and on_race_state is not None:
+        if current != expect_version:
             state = _replay_state(log_dir, None)
-            if not on_race_state(state):
-                if cleanup:
-                    cleanup()
+            if not (race_ok(state) if race_ok else state == pinned):
+                _remove(staged)
                 raise DeltaConcurrentModificationError(
                     f"{op}: {os.path.dirname(log_dir)} advanced from "
                     f"version {expect_version} to {current} with state, "
@@ -241,8 +247,7 @@ def _publish_commit(
         version = current + 1
         if put_if_absent(os.path.join(log_dir, f"{version:020d}.json"), data):
             return version
-    if cleanup:
-        cleanup()
+    _remove(staged)
     raise DeltaConcurrentModificationError(
         f"{op}: lost the commit race 8 times under {log_dir}"
     )
@@ -255,75 +260,30 @@ def _stage_adds(
     ts: int,
     coalesce_output: bool = True,
 ) -> tuple[list[dict], int]:
-    """Write ``df`` through a staging dir and move the part files into
-    the table tree (hive dirs for partitioned tables), returning the
-    ``add`` actions with footer-derived stats. Shared by
-    write_delta_table and merge_delta_rows. ``coalesce_output`` right-
+    """The Delta data-file writer of write_delta_table and
+    merge_delta_rows: stage ``df`` into the table tree (hive dirs for
+    partitioned tables) through
+    :func:`~incubator_gobblin_spark.commit.stage_parquet` and return the
+    ``add`` actions with footer-derived stats plus the row total. An
+    empty write keeps its one empty file. ``coalesce_output`` right-
     sizes output files via an AQE rebalance (session.rebalance_for_write)
     — pass False to keep the frame's own partitioning (layout-
     controlled writes, small-file test fixtures)."""
-    os.makedirs(path, exist_ok=True)
-    staging = os.path.join(path, f".staging-{_uuid.uuid4().hex[:12]}")
-    adds: list[dict] = []
-    rows_total = 0
-    skip = set(part_cols)
-    try:
-        from incubator_gobblin_spark.session import rebalance_for_write
+    from incubator_gobblin_spark.session import rebalance_for_write
 
-        if coalesce_output:
-            df = rebalance_for_write(df, part_cols)
-        w = df.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(staging)
-
-        if part_cols:
-            # one staged hive dir per partition tuple; move its files
-            # into the SAME relative dir under the table root
-            for dirpath, _dirs, files in os.walk(staging):
-                parts = [f for f in files if f.endswith(".parquet")]
-                if not parts:
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                pvals: dict = {}
-                for seg in rel_dir.replace(os.sep, "/").split("/"):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = _hive_dir_value(v)
-                moved = _move_parts(
-                    dirpath, os.path.join(path, rel_dir), "w"
-                )
-                for fp in moved:
-                    n, stats = _footer_stats(fp, skip)
-                    rows_total += n
-                    rel = os.path.relpath(fp, path).replace(os.sep, "/")
-                    adds.append(
-                        {
-                            "path": quote(rel),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(fp),
-                            "modificationTime": ts,
-                            "dataChange": True,
-                            "stats": stats,
-                        }
-                    )
-        else:
-            for fp in _move_parts(staging, path, "w"):
-                n, stats = _footer_stats(fp, skip)
-                rows_total += n
-                rel = os.path.relpath(fp, path).replace(os.sep, "/")
-                adds.append(
-                    {
-                        "path": quote(rel),
-                        "partitionValues": {},
-                        "size": os.path.getsize(fp),
-                        "modificationTime": ts,
-                        "dataChange": True,
-                        "stats": stats,
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return adds, rows_total
+    if coalesce_output:
+        df = rebalance_for_write(df, part_cols)
+    files = stage_parquet(df, path, path, "part-w", part_cols, keep_empty=True)
+    adds = [
+        _staged_action(
+            path, fp, pvals, size,
+            modificationTime=ts,
+            dataChange=True,
+            stats=_footer_stats(md, set(part_cols)),
+        )
+        for fp, pvals, md, size in files
+    ]
+    return adds, sum(md.num_rows for _, _, md, _ in files)
 
 
 def cdf_enabled(meta: dict) -> bool:
@@ -343,64 +303,20 @@ def stage_cdc_files(
     ``dataChange=false`` always — CDF rows never count as table data).
     Partitioned tables keep the hive layout inside ``_change_data``,
     with partition columns restored from ``partitionValues`` exactly
-    like data files; ``_change_type`` rides IN the file."""
-    cd_root = os.path.join(path, "_change_data")
-    os.makedirs(cd_root, exist_ok=True)
-    staging = os.path.join(path, f".cdc-staging-{_uuid.uuid4().hex[:12]}")
-    cdc_actions: list[dict] = []
-    try:
-        from incubator_gobblin_spark.session import rebalance_for_write
+    like data files; ``_change_type`` rides IN the file. Empty files
+    are dropped."""
+    from incubator_gobblin_spark.session import rebalance_for_write
 
-        w = rebalance_for_write(changes, part_cols).write.mode(
-            "overwrite"
+    return [
+        _staged_action(path, fp, pvals, size, dataChange=False)
+        for fp, pvals, _, size in stage_parquet(
+            rebalance_for_write(changes, part_cols),
+            path,
+            os.path.join(path, "_change_data"),
+            "part-cdc",
+            part_cols,
         )
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(staging)
-        import pyarrow.parquet as pq
-
-        if part_cols:
-            for dirpath, _dirs, files in os.walk(staging):
-                if not any(f.endswith(".parquet") for f in files):
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                pvals: dict = {}
-                for seg in rel_dir.replace(os.sep, "/").split("/"):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = _hive_dir_value(v)
-                moved = _move_parts(
-                    dirpath, os.path.join(cd_root, rel_dir), "cdc"
-                )
-                for fp in moved:
-                    if pq.read_metadata(fp).num_rows == 0:
-                        os.remove(fp)
-                        continue
-                    rel = os.path.relpath(fp, path).replace(os.sep, "/")
-                    cdc_actions.append(
-                        {
-                            "path": quote(rel),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(fp),
-                            "dataChange": False,
-                        }
-                    )
-        else:
-            for fp in _move_parts(staging, cd_root, "cdc"):
-                if pq.read_metadata(fp).num_rows == 0:
-                    os.remove(fp)
-                    continue
-                rel = os.path.relpath(fp, path).replace(os.sep, "/")
-                cdc_actions.append(
-                    {
-                        "path": quote(rel),
-                        "partitionValues": {},
-                        "size": os.path.getsize(fp),
-                        "dataChange": False,
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return cdc_actions
+    ]
 
 
 def write_delta_table(
@@ -497,12 +413,7 @@ def write_delta_table(
         # CDF is a legacy writer-version-4 feature: declaring the
         # property without the protocol would let old writers mutate
         # the table with no _change_data authorship
-        wv = (
-            4
-            if str(conf.get("delta.enableChangeDataFeed", "")).lower()
-            == "true"
-            else 2
-        )
+        wv = 4 if cdf_enabled({"configuration": conf}) else 2
         actions.append(
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": wv}}
         )
@@ -519,43 +430,23 @@ def write_delta_table(
             }
         )
     if mode == "overwrite" and exists:
-        for rel, a in sorted(prev_live.items()):
-            rm = {
-                "path": rel,
-                "deletionTimestamp": ts,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": a.get("partitionValues") or {},
-                "size": a.get("size"),
-            }
-            if a.get("deletionVector"):
-                rm["deletionVector"] = a["deletionVector"]
-            actions.append({"remove": rm})
+        actions.extend(
+            _remove_action(a, ts, True) for _, a in sorted(prev_live.items())
+        )
     actions.extend({"add": a} for a in adds)
-
-    def _cleanup():
-        for a in adds:
-            try:
-                os.remove(add_file_path(path, a["path"]))
-            except OSError:
-                pass
-
-    def _race_ok(state):
-        now_live, now_meta, now_proto = state
-        if not exists:
-            return False  # someone else created the table first: abort
-        if mode == "append":
-            # concurrent appends compose; metadata/protocol changes
-            # invalidate the gates this write already passed
-            return now_meta == prev_meta and now_proto == prev_proto
-        return False  # overwrite raced by anything: abort
 
     version = _publish_commit(
         log_dir,
         actions,
         expect_version,
-        on_race_state=_race_ok,
-        cleanup=_cleanup,
+        (prev_live, prev_meta, prev_proto),
+        staged=[add_file_path(path, a["path"]) for a in adds],
+        # concurrent appends compose while metadata/protocol (the gates
+        # this write passed) are unchanged; a create or an overwrite
+        # raced by anything aborts
+        race_ok=lambda state: (
+            exists and mode == "append" and state[1:] == (prev_meta, prev_proto)
+        ),
         op="write_delta_table",
     )
     return {"version": version, "files_written": len(adds), "rows": rows_total}
@@ -722,7 +613,7 @@ def compact_delta_files(
     removes: list[dict] = []
     rows_rewritten = 0
     dvs_absorbed = 0
-    new_paths: list[str] = []
+    staged: list[str] = []
     ts = int(_time.time() * 1000)
 
     # id-mode rewrites alias to physical names, keeping the field-id
@@ -753,67 +644,33 @@ def compact_delta_files(
             )
             live_bytes = sum(int(a.get("size") or 0) for _, a in sel)
             n_out = max(1, math.ceil(live_bytes / target_file_bytes))
-            staging = os.path.join(
-                path, f".compact-{_uuid.uuid4().hex[:12]}"
-            )
-            try:
-                (
-                    df.select(*out_cols)
-                    .coalesce(n_out)
-                    .write.mode("overwrite")
-                    .parquet(staging)
-                )
-                dest_dir = os.path.dirname(add_file_path(path, sel[0][0]))
-                moved = _move_parts(staging, dest_dir, "c")
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-            import pyarrow.parquet as pq
-
             pvals = sel[0][1].get("partitionValues") or {}
-            for fp in moved:
-                n = pq.read_metadata(fp).num_rows
-                if n == 0:
-                    os.remove(fp)
-                    continue
-                rows_rewritten += n
-                rel = os.path.relpath(fp, path).replace(os.sep, "/")
-                new_paths.append(fp)
+            for fp, _, md, size in stage_parquet(
+                df.select(*out_cols).coalesce(n_out),
+                path,
+                os.path.dirname(add_file_path(path, sel[0][0])),
+                "part-c",
+            ):
+                staged.append(fp)
+                rows_rewritten += md.num_rows
                 # full footer stats, as delta-spark's OPTIMIZE
                 # recomputes them — numRecords-only adds would
                 # permanently degrade file skipping on every
                 # compacted table
-                _, stats = _footer_stats(fp, set(pvals))
                 new_adds.append(
-                    {
-                        "path": quote(rel),
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(fp),
-                        "modificationTime": ts,
-                        "dataChange": False,
-                        "stats": stats,
-                    }
+                    _staged_action(
+                        path, fp, pvals, size,
+                        modificationTime=ts,
+                        dataChange=False,
+                        stats=_footer_stats(md, set(pvals)),
+                    )
                 )
-            for rel, a in sel:
-                if a.get("deletionVector"):
-                    dvs_absorbed += 1
-                rm = {
-                    "path": rel,
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                    "extendedFileMetadata": True,
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                }
-                if a.get("deletionVector"):
-                    rm["deletionVector"] = a["deletionVector"]
-                removes.append({"remove": rm})
+            dvs_absorbed += sum(1 for _, a in sel if a.get("deletionVector"))
+            removes.extend(_remove_action(a, ts, False) for _, a in sel)
     except BaseException:
-        for fp in new_paths:
-            try:
-                os.remove(fp)
-            except OSError:
-                pass
+        # one job per group: a later group's failure must not orphan
+        # the files earlier groups already staged
+        _remove(staged)
         raise
 
     actions: list[dict] = [
@@ -830,28 +687,12 @@ def compact_delta_files(
     ]
     actions.extend(removes)
     actions.extend({"add": a} for a in new_adds)
-
-    def _cleanup():
-        for fp in new_paths:
-            try:
-                os.remove(fp)
-            except OSError:
-                pass
-
-    def _race_ok(state):
-        now_live, now_meta, now_proto = state
-        # ANY change to the files this compaction read (or table
-        # metadata/protocol) invalidates the rewrite
-        return (
-            now_live == live and now_meta == meta and now_proto == proto
-        )
-
     version = _publish_commit(
         log_dir,
         actions,
         current_v,
-        on_race_state=_race_ok,
-        cleanup=_cleanup,
+        (live, meta, proto),
+        staged=staged,
         op="compact_delta_files",
     )
     return {
@@ -900,9 +741,9 @@ def merge_delta_rows(
     """
     from incubator_gobblin_spark.sinks.delta_delete import (
         _check_delete_writable,
-        _loosened_stats,
-        _upgraded_protocol,
+        _written_dvs,
         build_dv_descriptors,
+        _dv_commit_actions,
     )
     from incubator_gobblin_spark.sources.delta_import import (
         assemble_snapshot,
@@ -958,11 +799,10 @@ def merge_delta_rows(
         )
         desc_rows = build_dv_descriptors(spark, matched, path, live)
 
-    by_abs = {os.path.abspath(add_file_path(path, rel)): rel for rel in live}
     ts = int(_time.time() * 1000)
     adds_new, rows_inserted = _stage_adds(source, path, part_cols, ts)
 
-    cdc_actions: list[dict] = []
+    cdc: list[dict] = []
     if cdf_enabled(meta):
         # PROTOCOL.md §Add CDC File: a MERGE that DV-deletes re-adds
         # the same paths, so its changes are NOT derivable from
@@ -995,10 +835,7 @@ def merge_delta_rows(
             )
         else:
             changes = source.withColumn("_change_type", F.lit("insert"))
-        cdc_actions = [
-            {"cdc": c}
-            for c in stage_cdc_files(changes, path, part_cols, ts)
-        ]
+        cdc = stage_cdc_files(changes, path, part_cols, ts)
         if live:
             matched_rows.unpersist()
 
@@ -1034,72 +871,19 @@ def merge_delta_rows(
                 }
             }
         )
-    actions.extend(cdc_actions)
-    rows_updated = 0
-    dv_files = 0
-    files_removed = 0
-    if desc_rows:
-        upgrade = _upgraded_protocol(proto)
-        if upgrade is not None:
-            actions.append({"protocol": upgrade})
-        for r in sorted(desc_rows, key=lambda x: x._path):
-            rel = by_abs[r._path]
-            old = live[rel]
-            old_card = int(
-                (old.get("deletionVector") or {}).get("cardinality") or 0
-            )
-            rows_updated += int(r._card) - old_card
-            remove = {
-                "path": rel,
-                "deletionTimestamp": ts,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": old.get("partitionValues") or {},
-                "size": old.get("size"),
-            }
-            if old.get("deletionVector"):
-                remove["deletionVector"] = old["deletionVector"]
-            actions.append({"remove": remove})
-            if r._dv is None:
-                files_removed += 1
-                continue
-            add = {
-                **old,
-                "deletionVector": json.loads(r._dv),
-                "dataChange": True,
-            }
-            loosened = _loosened_stats(old)
-            if loosened is not None:
-                add["stats"] = loosened
-            actions.append({"add": add})
-            dv_files += 1
+    actions.extend({"cdc": c} for c in cdc)
+    dv_actions, rows_updated, dv_files, files_removed = _dv_commit_actions(
+        path, live, proto, desc_rows, ts
+    )
+    actions.extend(dv_actions)
     actions.extend({"add": a} for a in adds_new)
-
-    def _cleanup():
-        for a in adds_new:
-            try:
-                os.remove(add_file_path(path, a["path"]))
-            except OSError:
-                pass
-        for c in cdc_actions:
-            try:
-                os.remove(add_file_path(path, c["cdc"]["path"]))
-            except OSError:
-                pass
-
-    def _race_ok(state):
-        now_live, now_meta, now_proto = state
-        # ANY change invalidates the matched coordinates / gates
-        return (
-            now_live == live and now_meta == meta and now_proto == proto
-        )
-
     version = _publish_commit(
         log_dir,
         actions,
         current_v,
-        on_race_state=_race_ok,
-        cleanup=_cleanup,
+        (live, meta, proto),
+        staged=[add_file_path(path, a["path"]) for a in adds_new + cdc]
+        + _written_dvs(path, desc_rows),
         op="merge_delta_rows",
     )
     return {
@@ -1406,48 +1190,7 @@ def restore_delta_table(
     ]
     if meta_old != meta_now and meta_old is not None:
         actions.append({"metaData": meta_old})
-    cdc_actions: list[dict] = []
-    if cdf_enabled(meta_now):
-        # PROTOCOL.md §Add CDC File: restore authors same-path
-        # remove+re-add and DV-carrying adds — a commit shape CDF
-        # readers cannot derive changes from. The row-level change set
-        # is the exact multiset diff between the current and target
-        # states, staged as _change_data (delta-spark's
-        # RestoreTableCommand does the same).
-        from incubator_gobblin_spark.sources.delta_import import read_delta
-
-        mode = ((meta_now or {}).get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        if mode in ("name", "id"):
-            raise ValueError(
-                "restore_delta_table: restoring a CDF-enabled table "
-                "under column mapping is not supported (the change "
-                "files would need physical-name authorship) — disable "
-                "delta.enableChangeDataFeed for the restore or use a "
-                "keyed merge instead"
-            )
-        cur_df = read_delta(spark, path, version=current_v)
-        old_df = read_delta(spark, path, version=version)
-        changes = (
-            cur_df.exceptAll(old_df)
-            .withColumn("_change_type", F.lit("delete"))
-            .unionByName(
-                old_df.exceptAll(cur_df).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-        )
-        cdc_actions = [
-            {"cdc": c}
-            for c in stage_cdc_files(
-                changes,
-                path,
-                list((meta_now or {}).get("partitionColumns") or []),
-                ts,
-            )
-        ]
-        actions.extend(cdc_actions)
+    file_actions: list[dict] = []
     removed = added = 0
     for rel in sorted(set(live_now) | set(live_old)):
         now_a = live_now.get(rel)
@@ -1455,17 +1198,7 @@ def restore_delta_table(
         if now_a == old_a:
             continue
         if now_a is not None:
-            rm = {
-                "path": rel,
-                "deletionTimestamp": ts,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": now_a.get("partitionValues") or {},
-                "size": now_a.get("size"),
-            }
-            if now_a.get("deletionVector"):
-                rm["deletionVector"] = now_a["deletionVector"]
-            actions.append({"remove": rm})
+            file_actions.append(_remove_action(now_a, ts, True))
             removed += 1
         if old_a is not None:
             # the historical file may have been vacuumed after its
@@ -1494,32 +1227,57 @@ def restore_delta_table(
                         f"at version {version} was physically removed "
                         "(vacuum) — that version is no longer restorable"
                     )
-            actions.append({"add": {**old_a, "dataChange": True}})
+            file_actions.append({"add": {**old_a, "dataChange": True}})
             added += 1
+    cdc: list[dict] = []
+    if cdf_enabled(meta_now):
+        # PROTOCOL.md §Add CDC File: restore authors same-path
+        # remove+re-add and DV-carrying adds — a commit shape CDF
+        # readers cannot derive changes from. The row-level change set
+        # is the exact multiset diff between the current and target
+        # states, staged as _change_data (delta-spark's
+        # RestoreTableCommand does the same) once every file the
+        # restore re-adds is known to exist.
+        from incubator_gobblin_spark.sources.delta_import import read_delta
 
-    def _race_ok(state):
-        now_live2, now_meta2, now_proto2 = state
-        return (
-            now_live2 == live_now
-            and now_meta2 == meta_now
-            and now_proto2 == proto_now
+        mode = ((meta_now or {}).get("configuration") or {}).get(
+            "delta.columnMapping.mode", "none"
         )
-
-    try:
-        new_v = _publish_commit(
-            log_dir,
-            actions,
-            current_v,
-            on_race_state=_race_ok,
-            op="restore_delta_table",
+        if mode in ("name", "id"):
+            raise ValueError(
+                "restore_delta_table: restoring a CDF-enabled table "
+                "under column mapping is not supported (the change "
+                "files would need physical-name authorship) — disable "
+                "delta.enableChangeDataFeed for the restore or use a "
+                "keyed merge instead"
+            )
+        cur_df = read_delta(spark, path, version=current_v)
+        old_df = read_delta(spark, path, version=version)
+        changes = (
+            cur_df.exceptAll(old_df)
+            .withColumn("_change_type", F.lit("delete"))
+            .unionByName(
+                old_df.exceptAll(cur_df).withColumn(
+                    "_change_type", F.lit("insert")
+                )
+            )
         )
-    except Exception:
-        for c in cdc_actions:  # staged change files are orphans
-            try:
-                os.remove(add_file_path(path, c["cdc"]["path"]))
-            except OSError:
-                pass
-        raise
+        cdc = stage_cdc_files(
+            changes,
+            path,
+            list((meta_now or {}).get("partitionColumns") or []),
+            ts,
+        )
+    actions.extend({"cdc": c} for c in cdc)
+    actions.extend(file_actions)
+    new_v = _publish_commit(
+        log_dir,
+        actions,
+        current_v,
+        (live_now, meta_now, proto_now),
+        staged=[add_file_path(path, c["path"]) for c in cdc],
+        op="restore_delta_table",
+    )
     return {
         "version": new_v,
         "files_added": added,

@@ -43,6 +43,7 @@ import uuid
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gobblin_spark.commit import _remove, stage_parquet
 from incubator_gobblin_spark.sinks.iceberg_export import (
     IcebergConcurrentModificationError,
     _added,
@@ -51,7 +52,6 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _decode_manifest_list,
     _metadata_versions,
     _rebase_or_conflict,
-    _remove,
     _unpartitioned_spec,
     _write_manifest,
 )
@@ -179,13 +179,11 @@ def delete_iceberg_rows(
 
     # ---- distributed delete-file write: one exchange keyed on file
     # path (a data file's tombstones must be contiguous and sorted —
-    # spec: "sorted by file_path then pos"), reserved field ids on ----
-    del_dir = os.path.join(
-        location, "_deletes", f"del-{uuid.uuid4().hex[:12]}"
-    )
+    # spec: "sorted by file_path then pos"), reserved field ids on;
+    # only the parquet parts reach the committed del-* dir ----
     from incubator_gobblin_spark.session import rebalance_for_write
 
-    (
+    coords = (
         # rebalance (not a fixed-N repartition): a small DELETE's
         # coordinates coalesce to one advisory-size file instead of
         # one shard per shuffle partition, while a huge one still
@@ -202,26 +200,18 @@ def delete_iceberg_rows(
                 "pos", metadata={"parquet.field.id": _POS_FIELD_ID}
             ),
         )
-        .write.mode("overwrite")
-        .parquet(del_dir)
     )
-
-    import pyarrow.parquet as pq
-
-    data_files: list[dict] = []  # one POSITION_DELETES file per part
-    for fn in sorted(os.listdir(del_dir)):
-        if not fn.endswith(".parquet"):
-            continue
-        fp = os.path.join(del_dir, fn)
-        n = pq.read_metadata(fp).num_rows
-        if n == 0:
-            os.remove(fp)
-            continue
-        data_files.append(_data_file(fp, n, os.path.getsize(fp), content=1))
+    del_dir = os.path.join(
+        location, "_deletes", f"del-{uuid.uuid4().hex[:12]}"
+    )
+    data_files = [  # one POSITION_DELETES file per non-empty part
+        _data_file(fp, md.num_rows, size, content=1)
+        for fp, _, md, size in stage_parquet(
+            coords, location, del_dir, "pos-del"
+        )
+    ]
     rows_deleted = sum(d["record_count"] for d in data_files)
-    if not data_files:
-        # zero matches: nothing to commit; drop the empty write dir
-        _remove([del_dir])
+    if not data_files:  # zero matches: nothing to commit
         return {
             "version": current_v,
             "snapshot_id": base_snap_id,

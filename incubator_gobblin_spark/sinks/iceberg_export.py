@@ -52,11 +52,10 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
-from incubator_gobblin_spark.commit import put_if_absent
+from incubator_gobblin_spark.commit import _remove, put_if_absent
 from incubator_gobblin_spark.sources.iceberg_import import (
     _decode_manifest,
     _decode_manifest_list,
@@ -118,19 +117,6 @@ def _publish_or_conflict(
     if not _publish_metadata(meta_dir, metadata, version):
         raise _lost_race(op, meta_dir, base_version)
     return version
-
-
-def _remove(paths) -> None:
-    """Unlink files (or staging directories) no published metadata
-    references. Missing ones are fine."""
-    for p in paths:
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-            continue
-        try:
-            os.remove(p)
-        except OSError:
-            pass
 
 
 def _iceberg_type(t, next_id) -> object:

@@ -49,11 +49,11 @@ import shutil
 import time as _time
 import uuid as _uuid
 from collections.abc import Callable
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gobblin_spark.commit import _move_parts, _remove, stage_parquet
 from incubator_gobblin_spark.sinks.iceberg_export import (
     _AVRO_OF,
     IcebergConcurrentModificationError,
@@ -68,7 +68,6 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _partition_types,
     _publish_or_conflict,
     _rebase_or_conflict,
-    _remove,
     _rewrite_entries,
     _table_fields,
     _typed_partition,
@@ -103,91 +102,37 @@ def _latest(meta_dir: str) -> tuple[int, dict]:
     return versions[-1], load_metadata(meta_dir, versions[-1])
 
 
-def _move_parts(staging: str, dest_dir: str, tag: str) -> list[str]:
-    os.makedirs(dest_dir, exist_ok=True)
-    out = []
-    for i, fn in enumerate(sorted(os.listdir(staging))):
-        if not fn.endswith(".parquet"):
-            continue
-        dst = os.path.join(
-            dest_dir, f"{tag}-{_uuid.uuid4().hex[:12]}-{i:05d}.parquet"
-        )
-        shutil.move(os.path.join(staging, fn), dst)
-        out.append(dst)
-    return out
-
-
 def _stage_iceberg_data(
     df: DataFrame,
     location: str,
     part_cols: list[str],
     coalesce_output: bool = True,
 ) -> list[dict]:
-    """Write ``df`` through a staging dir and move the part files
-    under ``data/`` (hive dirs for partitioned tables — ``partitionBy``
-    drops the partition columns from the data files, the spec's
-    hidden-partition file layout). Returns ``{path, partition
-    (string-valued dict), rows, size}`` per file. Shared by the
-    standalone writer and the upsert. ``coalesce_output`` right-sizes
-    output files via an AQE rebalance (session.rebalance_for_write) —
-    False keeps the frame's own partitioning."""
-    os.makedirs(os.path.join(location, "data"), exist_ok=True)
-    staging = os.path.join(location, f".staging-{_uuid.uuid4().hex[:12]}")
-    files: list[dict] = []
-    try:
-        from incubator_gobblin_spark.session import rebalance_for_write
+    """The Iceberg data-file writer of write_iceberg_table and
+    upsert_iceberg_rows: stage ``df`` under ``data/`` through
+    :func:`~incubator_gobblin_spark.commit.stage_parquet` (hive dirs for
+    partitioned tables — ``partitionBy`` drops the partition columns
+    from the data files, the spec's hidden-partition file layout).
+    Returns ``{path, partition (string-valued dict), rows, size}`` per
+    file; an empty write keeps its one empty file, whose footer still
+    carries the schema. ``coalesce_output`` right-sizes output files
+    via an AQE rebalance (session.rebalance_for_write) — False keeps
+    the frame's own partitioning."""
+    from incubator_gobblin_spark.session import rebalance_for_write
 
-        if coalesce_output:
-            df = rebalance_for_write(df, part_cols)
-        w = df.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(staging)
-        import pyarrow.parquet as pq
-
-        if part_cols:
-            for dirpath, _dirs, fns in os.walk(staging):
-                parts = [f for f in fns if f.endswith(".parquet")]
-                if not parts:
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                pvals: dict = {}
-                for seg in rel_dir.replace(os.sep, "/").split("/"):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                    )
-                moved = _move_parts(
-                    dirpath,
-                    os.path.join(location, "data", rel_dir),
-                    "part-w",
-                )
-                for fp in moved:
-                    md = pq.read_metadata(fp)
-                    files.append(
-                        {
-                            "path": fp,
-                            "partition": pvals,
-                            "rows": int(md.num_rows),
-                            "size": os.path.getsize(fp),
-                        }
-                    )
-        else:
-            for fp in _move_parts(
-                staging, os.path.join(location, "data"), "part-w"
-            ):
-                md = pq.read_metadata(fp)
-                files.append(
-                    {
-                        "path": fp,
-                        "partition": {},
-                        "rows": int(md.num_rows),
-                        "size": os.path.getsize(fp),
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return files
+    if coalesce_output:
+        df = rebalance_for_write(df, part_cols)
+    return [
+        {"path": fp, "partition": pvals, "rows": md.num_rows, "size": size}
+        for fp, pvals, md, size in stage_parquet(
+            df,
+            location,
+            os.path.join(location, "data"),
+            "part-w",
+            part_cols,
+            keep_empty=True,
+        )
+    ]
 
 
 def write_iceberg_table(
@@ -247,66 +192,75 @@ def write_iceberg_table(
     )
     if not files:
         raise ValueError("write_iceberg_table: df wrote no rows")
-
-    schema, last_column_id, _ = _iceberg_schema(
-        files[0]["path"], identity_cols, [f["partition"] for f in files]
-    )
-    # _iceberg_schema can only INFER identity partition types from the
-    # hive-dir path strings (the export path's only evidence) — but
-    # this writer HOLDS df.schema: a string column with numeric-looking
-    # values ("00123") must not silently become long (leading zeros
-    # lost forever, later upserts type-mismatched). Override with the
-    # declared types; refuse types the manifest partition encoding
-    # doesn't carry.
-    spark_to_iceberg = {
-        "bigint": "long",
-        "int": "int",
-        "smallint": "int",
-        "tinyint": "int",
-        "string": "string",
-    }
-    df_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    for f in schema["fields"]:
-        if f["name"] in identity_cols:
-            f["type"] = spark_to_iceberg.get(df_types[f["name"]])
-            if f["type"] is None:
-                raise ValueError(
-                    "write_iceberg_table: unsupported identity partition "
-                    f"column type {df_types[f['name']]!r} for "
-                    f"{f['name']!r} — supported: {sorted(spark_to_iceberg)}"
-                )
-    spec = _authored_spec(
-        "write_iceberg_table", schema, part_cols, transforms_by_name
-    )
-    part_types = _partition_types(spec, schema)
-    sid = seq = 1
-    os.makedirs(meta_dir, exist_ok=True)
-    mpath, row = _write_manifest(
-        meta_dir,
-        _added(
+    data_paths = [f["path"] for f in files]
+    try:
+        schema, last_column_id, _ = _iceberg_schema(
+            files[0]["path"], identity_cols, [f["partition"] for f in files]
+        )
+        # _iceberg_schema can only INFER identity partition types from
+        # the hive-dir path strings (the export path's only evidence) —
+        # but this writer HOLDS df.schema: a string column with
+        # numeric-looking values ("00123") must not silently become long
+        # (leading zeros lost forever, later upserts type-mismatched).
+        # Override with the declared types; refuse types the manifest
+        # partition encoding doesn't carry.
+        spark_to_iceberg = {
+            "bigint": "long",
+            "int": "int",
+            "smallint": "int",
+            "tinyint": "int",
+            "string": "string",
+        }
+        df_types = {
+            f.name: f.dataType.simpleString() for f in df.schema.fields
+        }
+        for f in schema["fields"]:
+            if f["name"] in identity_cols:
+                f["type"] = spark_to_iceberg.get(df_types[f["name"]])
+                if f["type"] is None:
+                    raise ValueError(
+                        "write_iceberg_table: unsupported identity "
+                        f"partition column type {df_types[f['name']]!r} "
+                        f"for {f['name']!r} — supported: "
+                        f"{sorted(spark_to_iceberg)}"
+                    )
+        spec = _authored_spec(
+            "write_iceberg_table", schema, part_cols, transforms_by_name
+        )
+        part_types = _partition_types(spec, schema)
+        sid = seq = 1
+        os.makedirs(meta_dir, exist_ok=True)
+        mpath, row = _write_manifest(
+            meta_dir,
+            _added(
+                sid,
+                seq,
+                [
+                    _data_file(
+                        f["path"],
+                        f["rows"],
+                        f["size"],
+                        partition=_typed_partition(
+                            f["partition"], part_types
+                        ),
+                    )
+                    for f in files
+                ],
+            ),
+            spec,
+            schema,
             sid,
             seq,
-            [
-                _data_file(
-                    f["path"],
-                    f["rows"],
-                    f["size"],
-                    partition=_typed_partition(f["partition"], part_types),
-                )
-                for f in files
-            ],
-        ),
-        spec,
-        schema,
-        sid,
-        seq,
-    )
+        )
+    except BaseException:
+        _remove(data_paths)  # a refused table keeps no staged data file
+        raise
     if not _commit_snapshot(
         meta_dir,
         1,
         {},
         rows=[row],
-        written=[mpath],
+        written=[mpath, *data_paths],
         sid=sid,
         seq=seq,
         parent=None,
@@ -525,6 +479,7 @@ def rewrite_iceberg_data_files(
     new_files: list[dict] = []  # {path, gid, rows, size}
     new_paths: list[str] = []
     try:
+        # the _gid dirs only group the new files; all land in data/
         out.write.partitionBy("_gid").mode("overwrite").parquet(staging)
         import pyarrow.parquet as pq
 
@@ -532,22 +487,21 @@ def rewrite_iceberg_data_files(
             if not fn.startswith("_gid="):
                 continue
             gid = int(fn.split("=", 1)[1])
-            moved = _move_parts(
+            for _, fp in _move_parts(
                 os.path.join(staging, fn),
                 os.path.join(location, "data"),
                 "rewrite",
-            )
-            for fp in moved:
+            ):
+                new_paths.append(fp)
                 n = pq.read_metadata(fp).num_rows
                 if n == 0:
                     os.remove(fp)
                     continue
-                new_paths.append(fp)
                 new_files.append(
                     {
                         "path": fp,
                         "gid": gid,
-                        "rows": int(n),
+                        "rows": n,
                         "size": os.path.getsize(fp),
                     }
                 )
@@ -767,6 +721,20 @@ def upsert_iceberg_rows(
         raise ValueError(f"upsert_iceberg_rows: key columns {missing} not in schema")
     equality_ids = [by_name[c]["id"] for c in on_cols]
 
+    keys = df.select(*on_cols)
+    if extra_delete_keys is not None:
+        # pure DELETIONS riding the same atomic commit — the CDC apply
+        # shape (a replication batch's net outcome per key is upsert OR
+        # delete; both sides become equality-delete keys, only the
+        # upserts also append rows)
+        missing_k = [c for c in on_cols if c not in extra_delete_keys.columns]
+        if missing_k:
+            raise ValueError(
+                "upsert_iceberg_rows: extra_delete_keys lacks key "
+                f"columns {missing_k}"
+            )
+        keys = keys.unionByName(extra_delete_keys.select(*on_cols))
+
     # ---- stage new data files (hive layout: partition cols dropped
     # from the files, exactly the standalone writer's shape) ----
     data_files = _stage_iceberg_data(
@@ -776,52 +744,23 @@ def upsert_iceberg_rows(
 
     # ---- stage equality-delete parquet(s): the DISTINCT source keys,
     # written distributed (a CDC batch's key set can be large) ----
-    del_root = os.path.join(location, "_deletes")
-    os.makedirs(del_root, exist_ok=True)
-    del_staging = os.path.join(
-        location, f".upsert-del-{_uuid.uuid4().hex[:12]}"
-    )
-    deletes: list[dict] = []  # EQUALITY_DELETES data files
+    from incubator_gobblin_spark.session import rebalance_for_write
+
     try:
-        keys = df.select(*on_cols)
-        if extra_delete_keys is not None:
-            # pure DELETIONS riding the same atomic commit — the CDC
-            # apply shape (a replication batch's net outcome per key
-            # is upsert OR delete; both sides become equality-delete
-            # keys, only the upserts also append rows)
-            missing_k = [
-                c for c in on_cols if c not in extra_delete_keys.columns
-            ]
-            if missing_k:
-                raise ValueError(
-                    "upsert_iceberg_rows: extra_delete_keys lacks key "
-                    f"columns {missing_k}"
-                )
-            keys = keys.unionByName(extra_delete_keys.select(*on_cols))
-        from incubator_gobblin_spark.session import rebalance_for_write
-
-        rebalance_for_write(keys.distinct()).write.mode(
-            "overwrite"
-        ).parquet(del_staging)
-        import pyarrow.parquet as pq
-
-        for fp in _move_parts(del_staging, del_root, "eq-upsert"):
-            n = pq.read_metadata(fp).num_rows
-            if n == 0:
-                os.remove(fp)
-                continue
-            new_paths.append(fp)
-            deletes.append(
-                _data_file(
-                    fp,
-                    n,
-                    os.path.getsize(fp),
-                    content=2,
-                    equality_ids=equality_ids,
-                )
-            )
-    finally:
-        shutil.rmtree(del_staging, ignore_errors=True)
+        staged = stage_parquet(
+            rebalance_for_write(keys.distinct()),
+            location,
+            os.path.join(location, "_deletes"),
+            "eq-upsert",
+        )
+    except BaseException:
+        _remove(new_paths)
+        raise
+    new_paths += [fp for fp, *_ in staged]
+    deletes = [  # EQUALITY_DELETES data files
+        _data_file(fp, md.num_rows, size, content=2, equality_ids=equality_ids)
+        for fp, _, md, size in staged
+    ]
 
     if not data_files and not deletes:
         return {

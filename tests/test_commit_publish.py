@@ -3,7 +3,9 @@ propagates and leaves no ``*.tmp-*`` file, no new version and the old
 ``version-hint.text``; an Iceberg writer with no retry loop turns a
 lost race into a loud conflict error and drops the files it staged,
 and a writer that loses to a racer committing the same snapshot id
-leaves the winner's files intact."""
+leaves the winner's files intact. The staged-file writer
+(``commit.stage_parquet``) leaves only the moved parquet parts, with
+their decoded partitions, and nothing at all when it fails."""
 
 import errno
 import json
@@ -14,7 +16,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from incubator_gobblin_spark.commit import put_if_absent  # noqa: E402
+from incubator_gobblin_spark.commit import (  # noqa: E402
+    put_if_absent,
+    stage_parquet,
+)
 from incubator_gobblin_spark.session import load_table  # noqa: E402
 from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows  # noqa: E402
 from incubator_gobblin_spark.sinks.files import FileSink, TableType  # noqa: E402
@@ -64,6 +69,70 @@ def test_put_if_absent_publishes_once(tmp_path):
     with open(path) as fh:
         assert fh.read() == "first\n"
     assert _listing(tmp_path) == ["00000000000000000000.json"]
+
+
+def _files(root):
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+
+@pytest.mark.parametrize("part_cols", [(), ("p",)], ids=["flat", "hive"])
+def test_stage_parquet_moves_parts_with_partitions(spark, tmp_path, part_cols):
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, "x:y")], "k long, p string"
+    ).coalesce(1)
+    dest = os.path.join(root, "data")
+    out = stage_parquet(df, root, dest, "part-t", part_cols)
+    partition_of = {}
+    for fp, partition, md, size in out:
+        assert os.path.basename(fp).startswith("part-t-")
+        assert md.num_rows == pq.read_metadata(fp).num_rows
+        assert size == os.path.getsize(fp)
+        for k in pq.read_table(fp).column("k").to_pylist():
+            partition_of[k] = partition
+    expect = {1: {"p": "a"}, 2: {"p": None}, 3: {"p": "x:y"}}
+    assert partition_of == (expect if part_cols else {k: {} for k in expect})
+    # no staging dir, no _SUCCESS, no .crc: only the returned files
+    assert _files(root) == {fp for fp, *_ in out}
+
+
+@pytest.mark.parametrize("keep_empty", [False, True])
+def test_stage_parquet_zero_row_parts(spark, tmp_path, keep_empty):
+    root = str(tmp_path / "t")
+    dest = os.path.join(root, "data")
+    empty = spark.createDataFrame([], "k long")
+    out = stage_parquet(empty, root, dest, "part-t", keep_empty=keep_empty)
+    assert [md.num_rows for _, _, md, _ in out] == ([0] if keep_empty else [])
+    assert _files(root) == {fp for fp, *_ in out}
+    assert os.path.isdir(dest) == keep_empty  # made only for a file
+
+
+def test_stage_parquet_failure_after_first_move_leaves_nothing(
+    spark, tmp_path, monkeypatch
+):
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    dest = os.path.join(root, "data")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string")
+    real_read = pq.read_metadata
+    moved_before = []
+
+    def read_until_moved(fp, *a, **kw):
+        moved_before.extend(_files(dest))
+        if moved_before:
+            raise OSError("injected footer read failure")
+        return real_read(fp, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_metadata", read_until_moved)
+    with pytest.raises(OSError, match="injected"):
+        stage_parquet(df.coalesce(1), root, dest, "part-t", ("p",))
+    monkeypatch.undo()
+    assert len(moved_before) == 1  # the first partition's part had moved
+    # no moved file, no .staging-* dir, no empty dest dir
+    assert os.listdir(root) == []
 
 
 def _inject(monkeypatch, fault, is_payload):

@@ -27,9 +27,14 @@ from incubator_gobblin_spark.sinks.iceberg_delete import (  # noqa: E402
     IcebergConcurrentModificationError,
     delete_iceberg_rows,
 )
+from incubator_gobblin_spark.sinks.iceberg_maintenance import (  # noqa: E402
+    write_iceberg_table,
+)
 from incubator_gobblin_spark.sources.iceberg_import import (  # noqa: E402
     current_metadata,
+    norm_file_ref,
     read_iceberg,
+    snapshot_files,
 )
 
 COLS = ["doc_id", "lang", "source", "n_chars"]
@@ -285,6 +290,23 @@ def test_iceberg_delete_zero_match_commits_nothing(
         for d in os.listdir(del_root)
         for f in os.listdir(os.path.join(del_root, d))
     )
+
+
+def test_iceberg_delete_commits_only_referenced_files(spark, sf_dir, tmp_path):
+    """Every committed ``_deletes/del-*`` dir of a standalone table
+    holds exactly the parquet files the delete manifest references:
+    no ``_SUCCESS`` marker and no ``.crc`` sidecar."""
+    docs = load_table(spark, sf_dir, "documents").select(*COLS)
+    root = str(tmp_path / "standalone")
+    write_iceberg_table(spark, docs, root)
+    r = delete_iceberg_rows(spark, root, "doc_id % 3 = 0")
+    assert r["delete_files"] >= 1
+    _, dels = snapshot_files(current_metadata(root), root, collect_deletes=True)
+    del_root = os.path.join(root, "_deletes")
+    on_disk = {
+        os.path.join(dp, f) for dp, _, fs in os.walk(del_root) for f in fs
+    }
+    assert on_disk == {norm_file_ref(d["path"], root) for d in dels}
 
 
 def test_iceberg_delete_prune_filters_stay_correct(

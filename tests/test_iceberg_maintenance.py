@@ -82,6 +82,28 @@ def test_write_iceberg_table_identity_partitioned(spark, sf_dir, tmp_path):
     assert "lang" not in pq.read_schema(files[0]["path"]).names
 
 
+def test_write_iceberg_table_refusal_keeps_no_data_file(spark, tmp_path):
+    """A table refused after its data was staged (here: an identity
+    partition type the manifest encoding does not carry) leaves no
+    parquet behind under data/."""
+    import datetime
+
+    root = str(tmp_path / "refused")
+    df = spark.createDataFrame(
+        [(1, datetime.date(2024, 1, 1))], "k long, d date"
+    )
+    with pytest.raises(
+        ValueError, match="unsupported identity partition column type"
+    ):
+        write_iceberg_table(spark, df, root, partition_by=["d"])
+    assert not [
+        f
+        for _, _, fs in os.walk(os.path.join(root, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
 def test_write_iceberg_table_hidden_partitioning(spark, sf_dir, tmp_path):
     from incubator_gobblin_spark.functions.iceberg_transforms import (
         transform_expr,
