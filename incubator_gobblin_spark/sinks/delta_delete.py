@@ -38,22 +38,18 @@ import time as _time
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from incubator_gobblin_spark.commit import _remove
 from incubator_gobblin_spark.sources.delta_import import (
-    _cm_phys,
-    _fieldid_type,
     _groups_of,
-    _logical_expr,
     _log_versions,
-    _mapped_below,
-    _physicalize_type,
     _replay_state,
     add_file_path,
     anti_join_dvs,
     assemble_snapshot,
     check_reader_protocol,
+    column_layout,
+    column_mapping_mode,
     decoded_file_path,
 )
 
@@ -118,7 +114,7 @@ def _check_delete_writable(proto: dict, meta: dict) -> None:
             "deletes are forbidden on this table"
         )
     if _on("delta.enableChangeDataFeed") and (
-        conf.get("delta.columnMapping.mode", "none") != "none"
+        column_mapping_mode(meta) != "none"
     ):
         raise ValueError(
             "delete_delta_rows: changeDataFeed + column mapping — "
@@ -218,8 +214,7 @@ def _stage_cdf_deletes(
     filtered,
     live: dict,
     meta: dict,
-    schema_json: dict,
-    logical_part_cols: list[str],
+    layout,
     ts: int,
 ) -> list[dict]:
     """PROTOCOL.md §Add CDC File: a DV delete's commit mixes a remove
@@ -234,11 +229,12 @@ def _stage_cdf_deletes(
     )
 
     changes = anti_join_dvs(spark, filtered, path, live.values())
-    logical_cols = [f["name"] for f in schema_json["fields"]]
-    changes = changes.select(*logical_cols).withColumn(
+    changes = changes.select(*layout.logical_schema.fieldNames()).withColumn(
         "_change_type", F.lit("delete")
     )
-    return stage_cdc_files(changes, path, logical_part_cols, ts)
+    return stage_cdc_files(
+        changes, path, list(meta.get("partitionColumns") or []), ts
+    )
 
 
 def _written_dvs(path: str, desc_rows) -> list[str]:
@@ -414,58 +410,13 @@ def delete_delta_rows(
             "files_removed": 0,
         }
 
-    schema_json = json.loads(meta["schemaString"])
-    logical_part_cols = list(meta.get("partitionColumns") or [])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    phys_of = {
-        f["name"]: (_cm_phys(f) if mode in ("name", "id") else f["name"])
-        for f in schema_json.get("fields", [])
-    }
-    if mode == "name":
-        schema = StructType.fromJson(_physicalize_type(schema_json))
-        part_cols = [phys_of[c] for c in logical_part_cols]
-        pv_keys = part_cols
-
-        def _logicalize(df):
-            if not _mapped_below(schema_json):
-                return df
-            return df.select(
-                *[
-                    _logical_expr(F.col(_cm_phys(f)), f["type"]).alias(
-                        f["name"]
-                    )
-                    for f in schema_json["fields"]
-                ],
-                "_file_path",
-                "_row_index",
-            )
-
-    elif mode == "id":
-        schema = StructType.fromJson(_fieldid_type(schema_json))
-        from incubator_gobblin_spark.session import ensure_field_id_read
-
-        ensure_field_id_read(spark)
-        part_cols = list(logical_part_cols)
-        pv_keys = [phys_of[c] for c in logical_part_cols]
-
-        def _logicalize(df):
-            return df
-
-    else:
-        schema = StructType.fromJson(schema_json)
-        part_cols = list(logical_part_cols)
-        pv_keys = part_cols
-
-        def _logicalize(df):
-            return df
-
+    layout = column_layout(meta)
     df = assemble_snapshot(
-        spark, _groups_of(path, live.values(), pv_keys), schema, part_cols,
-        union_threshold, with_positions=True,
+        spark, _groups_of(path, live.values(), layout.pv_keys),
+        layout.read_schema(spark), layout.part_cols, union_threshold,
+        with_positions=True,
     )
-    logical = _logicalize(df)
+    logical = layout.to_logical(df, "_file_path", "_row_index")
     if ids is not None:
         on_cols = [on] if isinstance(on, str) else list(on)
         filtered = logical.join(F.broadcast(ids), on=on_cols, how="left_semi")
@@ -493,8 +444,10 @@ def delete_delta_rows(
         )
     )
 
+    staged: list[str] = []
     try:
         desc_rows = build_dv_descriptors(spark, matched, path, live)
+        staged += _written_dvs(path, desc_rows)
         if not desc_rows:
             return {
                 "version": current_v,
@@ -505,41 +458,42 @@ def delete_delta_rows(
 
         ts = int(_time.time() * 1000)
         cdc = _stage_cdf_deletes(
-            spark, path, filtered, live, meta, schema_json,
-            logical_part_cols, ts,
+            spark, path, filtered, live, meta, layout, ts
         ) if cdf_on else []
+        staged += [add_file_path(path, c["path"]) for c in cdc]
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": ts,
+                    "operation": "DELETE",
+                    "engineInfo": "incubator-gobblin-spark dv delete",
+                }
+            }
+        ]
+        if txn is not None:
+            # PROTOCOL.md §Transaction Identifiers — the idempotent-writer
+            # stamp (replication/streaming epochs); rides the same commit
+            actions.append(
+                {
+                    "txn": {
+                        "appId": str(txn[0]),
+                        "version": int(txn[1]),
+                        "lastUpdated": ts,
+                    }
+                }
+            )
+        actions.extend({"cdc": c} for c in cdc)
+        dv_actions, rows_deleted, dv_files, files_removed = (
+            _dv_commit_actions(path, live, proto, desc_rows, ts)
+        )
+        actions.extend(dv_actions)
+    except BaseException:
+        # no commit references the staged files yet
+        _remove(staged)
+        raise
     finally:
         if cdf_on:
             filtered.unpersist()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "engineInfo": "incubator-gobblin-spark dv delete",
-            }
-        }
-    ]
-    if txn is not None:
-        # PROTOCOL.md §Transaction Identifiers — the idempotent-writer
-        # stamp (replication/streaming epochs); rides the same commit
-        actions.append(
-            {
-                "txn": {
-                    "appId": str(txn[0]),
-                    "version": int(txn[1]),
-                    "lastUpdated": ts,
-                }
-            }
-        )
-    actions.extend({"cdc": c} for c in cdc)
-    dv_actions, rows_deleted, dv_files, files_removed = _dv_commit_actions(
-        path, live, proto, desc_rows, ts
-    )
-    actions.extend(dv_actions)
-
-    staged = [add_file_path(path, c["path"]) for c in cdc]
-    staged += _written_dvs(path, desc_rows)
     if rows_deleted == 0 and files_removed == 0:
         # every matched position was ALREADY dead (a replayed window's
         # keyed delete, the jobs.replicate crash-recovery path): the

@@ -61,16 +61,15 @@ from incubator_gobblin_spark.sinks.delta_delete import (
     DeltaConcurrentModificationError,
 )
 from incubator_gobblin_spark.sources.delta_import import (
-    _cm_phys,
     _commit_actions,
-    _fieldid_type,
     _groups_of,
     _log_versions,
-    _physicalize_type,
     _replay_state,
     add_file_path,
     anti_join_dvs,
     check_reader_protocol,
+    column_layout,
+    column_mapping_mode,
 )
 
 #: writer features a value-preserving file rewrite cannot violate.
@@ -475,7 +474,7 @@ def _check_append_writable(proto: dict, meta: dict, mode: str) -> None:
         # is exactly the derivable shape (removes=deletes,
         # adds=inserts; PROTOCOL.md §Add CDC File), and
         # read_delta_changes derives it
-    mode_cm = conf.get("delta.columnMapping.mode", "none")
+    mode_cm = column_mapping_mode(meta)
     if mode_cm != "none":
         raise ValueError(
             "write_delta_table: table uses column mapping "
@@ -555,29 +554,10 @@ def compact_delta_files(
     if small_file_bytes is None:
         small_file_bytes = target_file_bytes // 2
 
-    schema_json = json.loads(meta["schemaString"])
-    logical_part_cols = list(meta.get("partitionColumns") or [])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode == "name":
-        schema = StructType.fromJson(_physicalize_type(schema_json))
-        phys_of = {f["name"]: _cm_phys(f) for f in schema_json["fields"]}
-        pv_keys = [phys_of[c] for c in logical_part_cols]
-    elif mode == "id":
-        schema = StructType.fromJson(_fieldid_type(schema_json))
-        from incubator_gobblin_spark.session import ensure_field_id_read
-
-        ensure_field_id_read(spark)
-        phys_of = {f["name"]: _cm_phys(f) for f in schema_json["fields"]}
-        pv_keys = [phys_of[c] for c in logical_part_cols]
-    else:
-        schema = StructType.fromJson(schema_json)
-        phys_of = {c: c for c in logical_part_cols}
-        pv_keys = list(logical_part_cols)
+    layout = column_layout(meta)
     data_fields = [
-        f for f in schema.fields
-        if f.name not in set(logical_part_cols) | set(pv_keys)
+        f for f in layout.read_schema(spark).fields
+        if f.name not in layout.part_cols
     ]
     data_schema = StructType(data_fields)
 
@@ -585,7 +565,7 @@ def compact_delta_files(
     groups: dict[tuple, list[tuple[str, dict]]] = {}
     for rel, a in live.items():
         pv = a.get("partitionValues") or {}
-        key = tuple(pv.get(k) for k in pv_keys)
+        key = tuple(pv.get(k) for k in layout.pv_keys)
         groups.setdefault(key, []).append((rel, a))
 
     plan: list[tuple[tuple, list[tuple[str, dict]]]] = []
@@ -618,10 +598,10 @@ def compact_delta_files(
 
     # id-mode rewrites alias to physical names, keeping the field-id
     # metadata so Spark writes parquet field ids into the new footers
-    if mode == "id":
+    if layout.mode == "id":
         out_cols = [
             F.col(f.name).alias(
-                phys_of.get(f.name, f.name), metadata=dict(f.metadata)
+                layout.phys_of[f.name], metadata=dict(f.metadata)
             )
             for f in data_fields
         ]
@@ -779,111 +759,119 @@ def merge_delta_rows(
     # ---- matched coordinates (rows already DV-deleted re-match
     # harmlessly: the bitmap union is idempotent) ----
     desc_rows: list = []
-    if live:
-        scan = assemble_snapshot(
-            spark, _groups_of(path, live.values(), part_cols), schema,
-            part_cols, union_threshold, with_positions=True,
-        )
-        keys = source.select(*on_cols).distinct()
-        matched_rows = scan.join(
-            F.broadcast(keys), on=on_cols, how="left_semi"
-        )
-        if cdf_enabled(meta):
-            # the matched set feeds BOTH the bitmap build and the cdc
-            # preimages below — cache it once instead of running the
-            # full table scan + key join twice
-            matched_rows = matched_rows.persist()
-        matched = matched_rows.select(
-            decoded_file_path(F.col("_file_path")).alias("_path"),
-            F.col("_row_index").alias("_pos"),
-        )
-        desc_rows = build_dv_descriptors(spark, matched, path, live)
-
-    ts = int(_time.time() * 1000)
-    adds_new, rows_inserted = _stage_adds(source, path, part_cols, ts)
-
-    cdc: list[dict] = []
-    if cdf_enabled(meta):
-        # PROTOCOL.md §Add CDC File: a MERGE that DV-deletes re-adds
-        # the same paths, so its changes are NOT derivable from
-        # add/remove — author the full change set as _change_data:
-        # matched old rows (minus positions already dead under a
-        # standing DV) as update_preimage, their replacements as
-        # update_postimage, unmatched source rows as insert.
-        logical_cols = [f.name for f in schema.fields]
+    staged: list[str] = []
+    try:
         if live:
-            pre = anti_join_dvs(
-                spark, matched_rows, path, live.values()
-            ).select(*logical_cols)
-            matched_keys = pre.select(*on_cols).distinct()
-            changes = (
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    source.join(
-                        F.broadcast(matched_keys), on=on_cols,
-                        how="left_semi",
-                    ).withColumn(
-                        "_change_type", F.lit("update_postimage")
+            scan = assemble_snapshot(
+                spark, _groups_of(path, live.values(), part_cols), schema,
+                part_cols, union_threshold, with_positions=True,
+            )
+            keys = source.select(*on_cols).distinct()
+            matched_rows = scan.join(
+                F.broadcast(keys), on=on_cols, how="left_semi"
+            )
+            if cdf_enabled(meta):
+                # the matched set feeds BOTH the bitmap build and the cdc
+                # preimages below — cache it once instead of running the
+                # full table scan + key join twice
+                matched_rows = matched_rows.persist()
+            matched = matched_rows.select(
+                decoded_file_path(F.col("_file_path")).alias("_path"),
+                F.col("_row_index").alias("_pos"),
+            )
+            desc_rows = build_dv_descriptors(spark, matched, path, live)
+            staged += _written_dvs(path, desc_rows)
+
+        ts = int(_time.time() * 1000)
+        adds_new, rows_inserted = _stage_adds(source, path, part_cols, ts)
+        staged += [add_file_path(path, a["path"]) for a in adds_new]
+
+        cdc: list[dict] = []
+        if cdf_enabled(meta):
+            # PROTOCOL.md §Add CDC File: a MERGE that DV-deletes re-adds
+            # the same paths, so its changes are NOT derivable from
+            # add/remove — author the full change set as _change_data:
+            # matched old rows (minus positions already dead under a
+            # standing DV) as update_preimage, their replacements as
+            # update_postimage, unmatched source rows as insert.
+            logical_cols = [f.name for f in schema.fields]
+            if live:
+                pre = anti_join_dvs(
+                    spark, matched_rows, path, live.values()
+                ).select(*logical_cols)
+                matched_keys = pre.select(*on_cols).distinct()
+                changes = (
+                    pre.withColumn("_change_type", F.lit("update_preimage"))
+                    .unionByName(
+                        source.join(
+                            F.broadcast(matched_keys), on=on_cols,
+                            how="left_semi",
+                        ).withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    )
+                    .unionByName(
+                        source.join(
+                            F.broadcast(matched_keys), on=on_cols,
+                            how="left_anti",
+                        ).withColumn("_change_type", F.lit("insert"))
                     )
                 )
-                .unionByName(
-                    source.join(
-                        F.broadcast(matched_keys), on=on_cols,
-                        how="left_anti",
-                    ).withColumn("_change_type", F.lit("insert"))
-                )
-            )
-        else:
-            changes = source.withColumn("_change_type", F.lit("insert"))
-        cdc = stage_cdc_files(changes, path, part_cols, ts)
-        if live:
-            matched_rows.unpersist()
+            else:
+                changes = source.withColumn("_change_type", F.lit("insert"))
+            cdc = stage_cdc_files(changes, path, part_cols, ts)
+            staged += [add_file_path(path, c["path"]) for c in cdc]
+            if live:
+                matched_rows.unpersist()
 
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "matchedPredicates": json.dumps(
-                        [{"actionType": "delete"}]
-                    ),
-                    "notMatchedPredicates": json.dumps(
-                        [{"actionType": "insert"}]
-                    ),
-                },
-                "engineInfo": "incubator-gobblin-spark merge",
-            }
-        }
-    ]
-    if txn is not None:
-        # PROTOCOL.md §Transaction Identifiers: the idempotent-writer
-        # stamp — a streaming MERGE marks each commit with (appId,
-        # epoch) so a replayed epoch is detected and skipped
-        # (StreamPipeline.to_delta_merge); rides the same atomic
-        # commit as the data
-        actions.append(
+        actions: list[dict] = [
             {
-                "txn": {
-                    "appId": str(txn[0]),
-                    "version": int(txn[1]),
-                    "lastUpdated": ts,
+                "commitInfo": {
+                    "timestamp": ts,
+                    "operation": "MERGE",
+                    "operationParameters": {
+                        "matchedPredicates": json.dumps(
+                            [{"actionType": "delete"}]
+                        ),
+                        "notMatchedPredicates": json.dumps(
+                            [{"actionType": "insert"}]
+                        ),
+                    },
+                    "engineInfo": "incubator-gobblin-spark merge",
                 }
             }
+        ]
+        if txn is not None:
+            # PROTOCOL.md §Transaction Identifiers: the idempotent-writer
+            # stamp — a streaming MERGE marks each commit with (appId,
+            # epoch) so a replayed epoch is detected and skipped
+            # (StreamPipeline.to_delta_merge); rides the same atomic
+            # commit as the data
+            actions.append(
+                {
+                    "txn": {
+                        "appId": str(txn[0]),
+                        "version": int(txn[1]),
+                        "lastUpdated": ts,
+                    }
+                }
+            )
+        actions.extend({"cdc": c} for c in cdc)
+        dv_actions, rows_updated, dv_files, files_removed = _dv_commit_actions(
+            path, live, proto, desc_rows, ts
         )
-    actions.extend({"cdc": c} for c in cdc)
-    dv_actions, rows_updated, dv_files, files_removed = _dv_commit_actions(
-        path, live, proto, desc_rows, ts
-    )
-    actions.extend(dv_actions)
-    actions.extend({"add": a} for a in adds_new)
+        actions.extend(dv_actions)
+        actions.extend({"add": a} for a in adds_new)
+    except BaseException:
+        # no commit references the staged files yet
+        _remove(staged)
+        raise
     version = _publish_commit(
         log_dir,
         actions,
         current_v,
         (live, meta, proto),
-        staged=[add_file_path(path, a["path"]) for a in adds_new + cdc]
-        + _written_dvs(path, desc_rows),
+        staged=staged,
         op="merge_delta_rows",
     )
     return {
@@ -1240,10 +1228,7 @@ def restore_delta_table(
         # restore re-adds is known to exist.
         from incubator_gobblin_spark.sources.delta_import import read_delta
 
-        mode = ((meta_now or {}).get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        if mode in ("name", "id"):
+        if column_mapping_mode(meta_now) in ("name", "id"):
             raise ValueError(
                 "restore_delta_table: restoring a CDF-enabled table "
                 "under column mapping is not supported (the change "

@@ -45,7 +45,6 @@ reader uses, and deletion-vector bitmaps decode executor-side.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +64,7 @@ from incubator_gobblin_spark.sources.delta_import import (
     anti_join_dvs,
     assemble_snapshot,
     check_reader_protocol,
+    column_layout,
 )
 
 CHANGE_TYPE_COL = "_change_type"
@@ -291,74 +291,13 @@ def read_delta_changes(
     plan, meta = plan_changes(
         path, starting_version, ending_version, max_versions
     )
-    schema_json = json.loads(meta["schemaString"])
-    logical_part_cols = list(meta.get("partitionColumns") or [])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode == "name":
-        # column mapping (PROTOCOL.md §Column Mapping): data files,
-        # cdc files, and partitionValues are all keyed by PHYSICAL
-        # name — read physical, rename back to logical last (the
-        # read_delta shape); _change_type itself is never mapped
-        from incubator_gobblin_spark.sources.delta_import import (
-            _cm_phys,
-            _logical_expr,
-            _physicalize_type,
-        )
-
-        table_schema = StructType.fromJson(_physicalize_type(schema_json))
-        phys_of = {f["name"]: _cm_phys(f) for f in schema_json["fields"]}
-        part_cols = [phys_of[c] for c in logical_part_cols]
-        pv_keys = part_cols
-
-        def _finish(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[
-                    _logical_expr(F.col(_cm_phys(f)), f["type"]).alias(
-                        f["name"]
-                    )
-                    for f in schema_json["fields"]
-                ],
-                CHANGE_TYPE_COL,
-                COMMIT_VERSION_COL,
-                COMMIT_TIMESTAMP_COL,
-            )
-
-    elif mode == "id":
-        # columnMapping mode=id: data AND cdc parquet carry field ids
-        # (physical names on disk); the read schema keeps LOGICAL
-        # names tagged with parquet.field.id so Spark's native
-        # field-id matching resolves the columns inside the scan.
-        # _change_type itself is never mapped and carries no id — a
-        # requested field WITHOUT an id falls back to name matching,
-        # so it resolves alongside the id-tagged table columns.
-        # partitionValues stay keyed by PHYSICAL name (the protocol's
-        # rule in both modes) — grouping keys use pv_keys while the
-        # restored column keeps its logical schema name.
-        from incubator_gobblin_spark.session import ensure_field_id_read
-        from incubator_gobblin_spark.sources.delta_import import (
-            _cm_phys,
-            _fieldid_type,
-        )
-
-        ensure_field_id_read(spark)
-        table_schema = StructType.fromJson(_fieldid_type(schema_json))
-        phys_of = {f["name"]: _cm_phys(f) for f in schema_json["fields"]}
-        part_cols = list(logical_part_cols)
-        pv_keys = [phys_of[c] for c in logical_part_cols]
-
-        def _finish(df: DataFrame) -> DataFrame:
-            return df
-
-    else:
-        table_schema = StructType.fromJson(schema_json)
-        part_cols = logical_part_cols
-        pv_keys = part_cols
-
-        def _finish(df: DataFrame) -> DataFrame:
-            return df
-
+    # data files, cdc files and partitionValues are all keyed by
+    # PHYSICAL name under column mapping; _change_type itself is never
+    # mapped and carries no field id, so in id mode it falls back to
+    # name matching alongside the id-tagged table columns
+    layout = column_layout(meta)
+    table_schema = layout.read_schema(spark)
+    part_cols, pv_keys = layout.part_cols, layout.pv_keys
     out_schema = StructType(
         list(table_schema.fields)
         + [StructField(CHANGE_TYPE_COL, StringType())]
@@ -432,7 +371,7 @@ def read_delta_changes(
         return spark.createDataFrame(
             [],
             StructType(
-                list(StructType.fromJson(schema_json).fields)
+                list(layout.logical_schema.fields)
                 + [
                     StructField(CHANGE_TYPE_COL, StringType()),
                     StructField(COMMIT_VERSION_COL, LongType()),
@@ -443,7 +382,9 @@ def read_delta_changes(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return _finish(out)
+    return layout.to_logical(
+        out, CHANGE_TYPE_COL, COMMIT_VERSION_COL, COMMIT_TIMESTAMP_COL
+    )
 
 
 def read_delta_changes_chunked(

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -596,6 +597,93 @@ def _logical_expr(col, t):
     return col
 
 
+def column_mapping_mode(meta: dict | None) -> str:
+    """The table's ``delta.columnMapping.mode`` (``"none"`` when unset)
+    — the one place the mode is read, by the layout and the refusals."""
+    return ((meta or {}).get("configuration") or {}).get(
+        "delta.columnMapping.mode", "none"
+    )
+
+
+@dataclass(frozen=True)
+class ColumnLayout:
+    """How a Delta scan resolves the table's columns under column
+    mapping (PROTOCOL.md §Column Mapping), decided once per table by
+    :func:`column_layout`. Parquet files, stats and ``partitionValues``
+    are keyed by PHYSICAL name in both mapped modes.
+
+    - ``schema_json`` / ``logical_schema``: the declared schema;
+    - ``part_cols``: the partition column names in the scan output
+      (physical for ``name``, logical otherwise);
+    - ``pv_keys``: the matching ``partitionValues`` keys;
+    - ``phys_of``: top-level logical -> physical name (identity when
+      mapping is off);
+    - ``nested_types``: logical top-level column -> type JSON for
+      columns whose nested members are physically renamed (the
+      values the stream source reshapes per row)."""
+
+    mode: str
+    schema_json: dict
+    logical_schema: StructType
+    part_cols: list[str]
+    pv_keys: list[str]
+    phys_of: dict[str, str]
+    nested_types: dict[str, dict]
+
+    def read_schema(self, spark: SparkSession) -> StructType:
+        """The scan schema: physical names throughout for ``name``;
+        logical names tagged with ``parquet.field.id`` for ``id``,
+        resolved by Spark's native field-id matching, switched on
+        here; the logical schema otherwise."""
+        if self.mode == "name":
+            return StructType.fromJson(_physicalize_type(self.schema_json))
+        if self.mode == "id":
+            from incubator_gobblin_spark.session import ensure_field_id_read
+
+            ensure_field_id_read(spark)
+            return StructType.fromJson(_fieldid_type(self.schema_json))
+        return self.logical_schema
+
+    def to_logical(self, df: DataFrame, *keep: str) -> DataFrame:
+        """Rename a ``name``-mode scan back to logical names (recursing
+        into nested members), passing the ``keep`` columns through;
+        ``df`` itself when nothing is renamed."""
+        if self.mode != "name" or not _mapped_below(self.schema_json):
+            return df
+        return df.select(
+            *[
+                _logical_expr(F.col(_cm_phys(f)), f["type"]).alias(f["name"])
+                for f in self.schema_json["fields"]
+            ],
+            *keep,
+        )
+
+
+def column_layout(meta: dict) -> ColumnLayout:
+    """The :class:`ColumnLayout` of the table whose ``metaData`` action
+    is ``meta`` — the one place a Delta reader decides column mapping."""
+    mode = column_mapping_mode(meta)
+    schema_json = json.loads(meta["schemaString"])
+    fields = schema_json.get("fields", [])
+    logical_part_cols = list(meta.get("partitionColumns") or [])
+    mapped = mode in ("name", "id")
+    phys_of = {f["name"]: _cm_phys(f) if mapped else f["name"] for f in fields}
+    pv_keys = [phys_of[c] for c in logical_part_cols]
+    return ColumnLayout(
+        mode=mode,
+        schema_json=schema_json,
+        logical_schema=StructType.fromJson(schema_json),
+        part_cols=pv_keys if mode == "name" else logical_part_cols,
+        pv_keys=pv_keys,
+        phys_of=phys_of,
+        nested_types={
+            f["name"]: f["type"]
+            for f in fields
+            if mapped and _mapped_below(f.get("type"))
+        },
+    )
+
+
 #: reader features this engine actually honors. Anything else in a
 #: v3 protocol's readerFeatures MUST make the read refuse — that is
 #: the Delta protocol's own contract (PROTOCOL.md Reader Requirements):
@@ -624,16 +712,15 @@ def check_reader_protocol(
 
     - ``minReaderVersion`` > 3 (or 3 with an unsupported feature):
       refuse by name;
-    - column mapping: modes ``name`` and ``id`` are readable by the
-      batch reader (``allow_column_mapping=True`` — read_delta
-      resolves physical names through the schema's
-      ``delta.columnMapping.physicalName`` metadata recursively, and
-      mode=id through Spark's native parquet field-id matching). The
-      STREAM source resolves top-level mappings through the same
-      physicalName metadata and reshapes NESTED values per row batch
-      (delta_stream._logicalize_value — a reader ignoring the mapping
-      entirely would return all-null logical columns, the misread this
-      gate exists to prevent);
+    - column mapping: modes ``name`` and ``id`` are readable with
+      ``allow_column_mapping=True``. Every Delta reader resolves them
+      through :func:`column_layout` (physical names recursively for
+      ``name``, Spark's native parquet field-id matching for ``id``);
+      the STREAM source takes the layout's top-level physical names
+      and reshapes NESTED values per row batch
+      (delta_stream._logicalize_value). A reader ignoring the mapping
+      entirely would return all-null logical columns, the misread
+      this gate exists to prevent;
     - with ``allow_dv=False`` (the stream source, where a DV commit is
       a rewrite, never an append): any live ``add`` carrying a
       ``deletionVector`` — rows marked deleted would be resurrected.
@@ -656,9 +743,7 @@ def check_reader_protocol(
                 f"{sorted(unsupported)} this engine does not implement — "
                 "refusing to silently drop their semantics"
             )
-    mode = ((meta or {}).get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
+    mode = column_mapping_mode(meta)
     if mode not in ("none", "") and not (
         allow_column_mapping and mode in ("name", "id")
     ):
@@ -688,18 +773,16 @@ def read_delta(
     ``version`` — Delta time travel) as a DataFrame.
 
     Column mapping (PROTOCOL.md §Column Mapping) is supported in both
-    modes, nested fields included. Mode ``name``: the scan and
-    partition restore run on the PHYSICAL names from
-    ``delta.columnMapping.physicalName`` (applied recursively through
-    struct/array/map) and the result renames back to logical names.
-    Mode ``id``: the read schema keeps logical names and tags every
-    field with ``parquet.field.id`` from ``delta.columnMapping.id``,
-    letting Spark's native parquet field-id matching
-    (``spark.sql.parquet.fieldId.read.enabled``) resolve the physical
-    columns — no rename pass needed. The STREAM source handles both,
-    reshaping nested values executor-side (see
-    delta_stream._logicalize_value). Deletion vectors are decoded and
-    anti-joined (PROTOCOL.md §Deletion Vectors).
+    modes, nested fields included, resolved by :func:`column_layout`.
+    Mode ``name``: the scan and partition restore run on the PHYSICAL
+    names from ``delta.columnMapping.physicalName`` (applied
+    recursively through struct/array/map) and the result renames back
+    to logical names. Mode ``id``: the read schema keeps logical names
+    and tags every field with ``parquet.field.id`` from
+    ``delta.columnMapping.id``, letting Spark's native parquet field-id
+    matching (``spark.sql.parquet.fieldId.read.enabled``) resolve the
+    physical columns — no rename pass needed. Deletion vectors are
+    decoded and anti-joined (PROTOCOL.md §Deletion Vectors).
 
     Partition columns are restored from each file's ``partitionValues``
     (Delta data files don't store them), cast to the types declared by
@@ -721,61 +804,8 @@ def read_delta(
     log_dir = os.path.join(path, "_delta_log")
     live, meta, proto = _replay_state(log_dir, version)
     check_reader_protocol(proto, meta, live, allow_column_mapping=True)
-    schema_json = json.loads(meta["schemaString"])
-    logical_schema = StructType.fromJson(schema_json)
-    logical_part_cols = list(meta.get("partitionColumns") or [])
-
-    # column mapping (PROTOCOL.md §Column Mapping): stats and
-    # add.partitionValues are keyed by PHYSICAL name in both modes;
-    # phys_of translates the top level for partition lookups and
-    # filter pushdown
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    phys_of = {
-        f["name"]: (_cm_phys(f) if mode in ("name", "id") else f["name"])
-        for f in schema_json.get("fields", [])
-    }
-    if mode == "name":
-        # read in PHYSICAL name space (recursively), rename back last
-        schema = StructType.fromJson(_physicalize_type(schema_json))
-        part_cols = [phys_of[c] for c in logical_part_cols]
-        pv_keys = part_cols
-
-        def _finish(df: DataFrame) -> DataFrame:
-            if not _mapped_below(schema_json):
-                return df
-            return df.select(
-                *[
-                    _logical_expr(F.col(_cm_phys(f)), f["type"]).alias(
-                        f["name"]
-                    )
-                    for f in schema_json["fields"]
-                ]
-            )
-
-    elif mode == "id":
-        # logical names throughout; Spark's parquet field-id matching
-        # (the files carry ids per the protocol's writer requirements)
-        # resolves the physical columns inside the scan
-        schema = StructType.fromJson(_fieldid_type(schema_json))
-        from incubator_gobblin_spark.session import ensure_field_id_read
-
-        ensure_field_id_read(spark)
-        part_cols = list(logical_part_cols)
-        # partitionValues stay keyed by physical name even in id mode
-        pv_keys = [phys_of[c] for c in logical_part_cols]
-
-        def _finish(df: DataFrame) -> DataFrame:
-            return df
-
-    else:
-        schema = logical_schema
-        part_cols = list(logical_part_cols)
-        pv_keys = part_cols
-
-        def _finish(df: DataFrame) -> DataFrame:
-            return df
+    layout = column_layout(meta)
+    schema = layout.read_schema(spark)
 
     if filters:
         # conservative metadata-level skipping (see prune_adds);
@@ -786,22 +816,22 @@ def read_delta(
         # pruning silently degrades to the stats path
         live = prune_adds(
             live,
-            [(phys_of.get(c, c), op, v) for c, op, v in filters],
-            pv_keys,
+            [(layout.phys_of.get(c, c), op, v) for c, op, v in filters],
+            layout.pv_keys,
         )
     if not live:
-        return spark.createDataFrame([], logical_schema)
+        return spark.createDataFrame([], layout.logical_schema)
 
     has_dv = any(a.get("deletionVector") for a in live.values())
     df = assemble_snapshot(
-        spark, _groups_of(path, live.values(), pv_keys), schema, part_cols,
-        union_threshold, with_positions=has_dv,
+        spark, _groups_of(path, live.values(), layout.pv_keys), schema,
+        layout.part_cols, union_threshold, with_positions=has_dv,
     )
     if has_dv:
         df = anti_join_dvs(spark, df, path, live.values()).select(
             *[f.name for f in schema.fields]
         )
-    return _finish(df)
+    return layout.to_logical(df)
 
 
 def _groups_of(path: str, adds, pv_keys: list[str]) -> dict[tuple, list[str]]:

@@ -51,29 +51,21 @@ from pyspark.sql.datasource import (
 )
 
 from incubator_gobblin_spark.sources.delta_import import (
+    _cm_phys,
     _commit_actions,
     _log_versions,
     add_file_path,
 )
 
 
-def table_schema(path: str, *, allow_dv: bool = False):
-    """The table's declared (LOGICAL) schema as a StructType. Shares
-    the batch reader's log replay (delta_import._replay_state —
-    pyarrow-direct, no Spark session), so a table whose metaData lives
-    only in a parquet checkpoint (delta-spark cleans up old JSON
-    versions) still resolves.
-
-    Column mapping: mapped tables stream in both modes, nested fields
-    included — the reader resolves parquet columns through
-    ``delta.columnMapping.physicalName`` (conforming writers store
-    physical names in both modes) and reshapes nested values to their
-    logical member names per row batch (:func:`_logicalize_value`)."""
-    from pyspark.sql.types import StructType
-
+def _open_table(path: str, allow_dv: bool):
+    """Replay the log once and gate it: the table's
+    :class:`~incubator_gobblin_spark.sources.delta_import.ColumnLayout`
+    and its LOGICAL partition column names."""
     from incubator_gobblin_spark.sources.delta_import import (
         _replay_state,
         check_reader_protocol,
+        column_layout,
     )
 
     log_dir = os.path.join(path, "_delta_log")
@@ -86,18 +78,23 @@ def table_schema(path: str, *, allow_dv: bool = False):
     check_reader_protocol(
         proto, meta, live, allow_dv=allow_dv, allow_column_mapping=True
     )
-    schema_json = json.loads(meta["schemaString"])
-    return (
-        StructType.fromJson(schema_json),
-        list(meta.get("partitionColumns") or []),
-    )
+    return column_layout(meta), list(meta.get("partitionColumns") or [])
 
 
-def _phys_name(f: dict) -> str:
-    return (
-        (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
-        or f["name"]
-    )
+def table_schema(path: str, *, allow_dv: bool = False):
+    """The table's declared (LOGICAL) schema as a StructType, with its
+    partition column names. Shares the batch reader's log replay
+    (delta_import._replay_state — pyarrow-direct, no Spark session),
+    so a table whose metaData lives only in a parquet checkpoint
+    (delta-spark cleans up old JSON versions) still resolves.
+
+    Column mapping: mapped tables stream in both modes, nested fields
+    included — the reader takes parquet columns and partitionValues by
+    the layout's physical names (conforming writers store physical
+    names in both modes) and reshapes nested values to their logical
+    member names per row batch (:func:`_logicalize_value`)."""
+    layout, part_cols = _open_table(path, allow_dv)
+    return layout.logical_schema, part_cols
 
 
 def _logicalize_value(v, t):
@@ -112,7 +109,7 @@ def _logicalize_value(v, t):
     k = t.get("type")
     if k == "struct":
         return {
-            f["name"]: _logicalize_value(v.get(_phys_name(f)), f["type"])
+            f["name"]: _logicalize_value(v.get(_cm_phys(f)), f["type"])
             for f in t["fields"]
         }
     if k == "array":
@@ -126,48 +123,6 @@ def _logicalize_value(v, t):
             for mk, mv in items
         }
     return v
-
-
-def _nested_mapped_types(path: str) -> dict[str, dict]:
-    """Logical top-level column name -> its type JSON, for columns whose
-    NESTED members are physically renamed (the set read() must reshape;
-    empty when mapping is off or top-level-only)."""
-    from incubator_gobblin_spark.sources.delta_import import (
-        _mapped_below,
-        _replay_state,
-    )
-
-    _, meta, _ = _replay_state(os.path.join(path, "_delta_log"), None)
-    schema_json = json.loads(meta["schemaString"])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode not in ("name", "id"):
-        return {}
-    return {
-        f["name"]: f["type"]
-        for f in schema_json.get("fields", [])
-        if _mapped_below(f.get("type"))
-    }
-
-
-def column_phys_map(path: str) -> dict[str, str]:
-    """Top-level logical→physical column map for a mapped table
-    (identity when mapping is off) — what the stream reader uses to
-    pull parquet columns and partitionValues by their PHYSICAL keys."""
-    from incubator_gobblin_spark.sources.delta_import import (
-        _cm_phys,
-        _replay_state,
-    )
-
-    _, meta, _ = _replay_state(os.path.join(path, "_delta_log"), None)
-    schema_json = json.loads(meta["schemaString"])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode not in ("name", "id"):
-        return {f["name"]: f["name"] for f in schema_json.get("fields", [])}
-    return {f["name"]: _cm_phys(f) for f in schema_json.get("fields", [])}
 
 
 class _AddedFile(InputPartition):
@@ -410,22 +365,20 @@ class DeltaStreamReader(DataSourceStreamReader):
             f"deltastream: unsupported partition column type {ddl_type}"
         )
 
-    def read(self, part):
-        if isinstance(part, _ChangeFile):
-            yield from self._read_change(part)
-            return
-        if not part.path:
-            return
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(part.path)
+    def _rows(self, table, partition_values: dict, extras: dict | None = None):
+        """Yield ``table``'s rows in the declared field order: partition
+        columns from ``partition_values``, data columns by physical name
+        (nested members reshaped to logical names), ``extras`` (name ->
+        values) as given, and null for a column the file lacks."""
         n = table.num_rows
-        cols = {}
+        cols = dict(extras or {})
         for name, ddl in self.fields:
+            if name in cols:
+                continue
             src = self.phys_of.get(name, name)
             if name in self.part_cols:
                 cols[name] = [
-                    self._cast_part(ddl, part.partition_values.get(src))
+                    self._cast_part(ddl, partition_values.get(src))
                 ] * n
             elif src in table.column_names:
                 vals = table.column(src).to_pylist()
@@ -437,6 +390,16 @@ class DeltaStreamReader(DataSourceStreamReader):
                 cols[name] = [None] * n
         for i in range(n):
             yield tuple(cols[name][i] for name, _ in self.fields)
+
+    def read(self, part):
+        if isinstance(part, _ChangeFile):
+            yield from self._read_change(part)
+            return
+        if not part.path:
+            return
+        import pyarrow.parquet as pq
+
+        yield from self._rows(pq.read_table(part.path), part.partition_values)
 
     def _read_change(self, part: _ChangeFile):
         if not part.path:
@@ -458,33 +421,15 @@ class DeltaStreamReader(DataSourceStreamReader):
                     [i for i in range(table.num_rows) if i not in dead]
                 )
         n = table.num_rows
-        extras = ("_change_type", "_commit_version", "_commit_timestamp")
-        cols = {}
-        for name, ddl in self.fields:
-            if name in extras:
-                continue
-            src = self.phys_of.get(name, name)
-            if name in self.part_cols:
-                cols[name] = [
-                    self._cast_part(ddl, part.partition_values.get(src))
-                ] * n
-            elif src in table.column_names:
-                vals = table.column(src).to_pylist()
-                tj = self.nested_types.get(name)
-                if tj is not None:
-                    vals = [_logicalize_value(x, tj) for x in vals]
-                cols[name] = vals
-            else:
-                cols[name] = [None] * n
-        cols["_change_type"] = (
-            table.column("_change_type").to_pylist()
-            if part.change_type is None  # cdc file: the type rides in it
-            else [part.change_type] * n
-        )
-        cols["_commit_version"] = [part.version] * n
-        cols["_commit_timestamp"] = [part.ts] * n
-        for i in range(n):
-            yield tuple(cols[name][i] for name, _ in self.fields)
+        yield from self._rows(table, part.partition_values, {
+            "_change_type": (
+                table.column("_change_type").to_pylist()
+                if part.change_type is None  # cdc file: the type rides in it
+                else [part.change_type] * n
+            ),
+            "_commit_version": [part.version] * n,
+            "_commit_timestamp": [part.ts] * n,
+        })
 
     def commit(self, end: dict) -> None:
         pass
@@ -530,15 +475,15 @@ class DeltaStreamDataSource(DataSource):
         return schema
 
     def streamReader(self, schema):
-        _, part_cols = table_schema(
-            self.options["path"], allow_dv=self._allow_dv()
+        layout, part_cols = _open_table(
+            self.options["path"], self._allow_dv()
         )
         return DeltaStreamReader(
             self.options,
             schema,
             part_cols,
-            phys_of=column_phys_map(self.options["path"]),
-            nested_types=_nested_mapped_types(self.options["path"]),
+            phys_of=layout.phys_of,
+            nested_types=layout.nested_types,
         )
 
 

@@ -5,7 +5,8 @@ lost race into a loud conflict error and drops the files it staged,
 and a writer that loses to a racer committing the same snapshot id
 leaves the winner's files intact. The staged-file writer
 (``commit.stage_parquet``) leaves only the moved parquet parts, with
-their decoded partitions, and nothing at all when it fails."""
+their decoded partitions, and nothing at all when it fails; a Delta
+MERGE or DELETE that fails before its publish removes what it staged."""
 
 import errno
 import json
@@ -173,6 +174,47 @@ def test_delta_delete_failed_publish_leaves_nothing(
     monkeypatch.undo()
 
     assert _listing(log_dir) == before  # no temp file, no new NNN.json
+
+
+def _tree(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_delta_dml_failure_before_publish_leaves_nothing(
+    spark, tmp_path, monkeypatch, op
+):
+    """A MERGE or DELETE that raises after it staged files (here: while
+    staging its change data files) removes every file it staged — the
+    deletion vector bitmaps and the MERGE's new data files — so the
+    table tree is exactly what it was before the call."""
+    from incubator_gobblin_spark.sinks import delta_maintenance as DM
+
+    root = str(tmp_path / "cdf")
+    df = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
+    DM.write_delta_table(
+        spark, df.coalesce(1), root,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    before = _tree(root)
+
+    def broken_stage(*a, **kw):
+        raise OSError("injected: change data staging failed")
+
+    monkeypatch.setattr(DM, "stage_cdc_files", broken_stage)
+    with pytest.raises(OSError, match="injected"):
+        if op == "merge":
+            src = spark.createDataFrame([(3, 0), (99, 0)], "k long, v long")
+            DM.merge_delta_rows(spark, root, src, on="k")
+        else:
+            delete_delta_rows(spark, root, "k < 5")
+    monkeypatch.undo()
+
+    assert _tree(root) == before
 
 
 @pytest.mark.parametrize("fault", ["link_eio", "unserializable"])

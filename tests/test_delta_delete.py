@@ -233,17 +233,20 @@ def test_dv_delete_encodable_partition_chars(spark, tmp_path):
     assert got.filter(F.col("g") == "a b").count() == 20
 
 
-def test_dv_delete_column_mapped_table(spark, tmp_path):
-    """DELETE by LOGICAL column name on a mode=name column-mapped
-    table: the predicate resolves through physicalName metadata and the
-    re-added file keeps its physical partitionValues keys."""
-    from tests.test_manifest_commit import _append_delta_commit
-
+@pytest.mark.parametrize("mode", ["name", "id"])
+def test_dv_delete_column_mapped_table(spark, tmp_path, mode):
+    """DELETE by LOGICAL column name on a column-mapped table: the
+    predicate resolves through physicalName metadata (mode=name) or
+    parquet field ids (mode=id), and the re-added file keeps its
+    physical partitionValues keys."""
     root = str(tmp_path / "dvcolmap")
     os.makedirs(os.path.join(root, "_delta_log"))
     os.makedirs(os.path.join(root, "data"))
     physical = spark.createDataFrame(
-        [(i, i * 10) for i in range(20)], "`col-a` long, `col-c` long"
+        [(i, i * 10) for i in range(20)], "a long, c long"
+    ).select(
+        F.col("a").alias("col-a", metadata={"parquet.field.id": 1}),
+        F.col("c").alias("col-c", metadata={"parquet.field.id": 2}),
     )
     out_dir = os.path.join(root, "data", "w")
     physical.coalesce(1).write.parquet(out_dir)
@@ -269,7 +272,7 @@ def test_dv_delete_column_mapped_table(spark, tmp_path):
                 "schemaString": json.dumps(
                     {"type": "struct", "fields": fields}),
                 "partitionColumns": [],
-                "configuration": {"delta.columnMapping.mode": "name"},
+                "configuration": {"delta.columnMapping.mode": mode},
                 "createdTime": 0,
             }},
             {"add": {"path": "data/f1.parquet", "partitionValues": {},

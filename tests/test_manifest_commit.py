@@ -3110,6 +3110,59 @@ def test_deltastream_nested_column_mapped_table_streams_logical(
     assert rows[3] is None  # null struct stays null, not struct-of-nulls
 
 
+def test_deltastream_reader_opens_with_one_log_replay(tmp_path, monkeypatch):
+    """Opening a deltastream reader replays the Delta log ONCE, and its
+    physical names, partition columns and nested mapped types all come
+    from that replay's column layout."""
+    import json
+
+    from incubator_gobblin_spark.sources import delta_import
+    from incubator_gobblin_spark.sources.delta_stream import (
+        DeltaStreamDataSource,
+    )
+
+    root = str(tmp_path / "colmap-open")
+    os.makedirs(os.path.join(root, "_delta_log"))
+    inner = {"type": "struct", "fields": [
+        {"name": "x", "type": "long", "nullable": True,
+         "metadata": {"delta.columnMapping.physicalName": "col-x"}}]}
+    fields = [
+        {"name": "s", "type": inner, "nullable": True,
+         "metadata": {"delta.columnMapping.physicalName": "col-s"}},
+        {"name": "p", "type": "string", "nullable": True,
+         "metadata": {"delta.columnMapping.physicalName": "col-p"}},
+    ]
+    with open(os.path.join(root, "_delta_log", f"{0:020d}.json"), "w") as fh:
+        for act in [
+            {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+            {"metaData": {
+                "id": "t", "format": {"provider": "parquet", "options": {}},
+                "schemaString": json.dumps(
+                    {"type": "struct", "fields": fields}),
+                "partitionColumns": ["p"],
+                "configuration": {"delta.columnMapping.mode": "name"},
+                "createdTime": 0,
+            }},
+        ]:
+            fh.write(json.dumps(act) + "\n")
+
+    source = DeltaStreamDataSource({"path": root})
+    schema = source.schema()
+    calls = []
+    real = delta_import._replay_state
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(delta_import, "_replay_state", counting)
+    reader = source.streamReader(schema)
+    assert len(calls) == 1
+    assert reader.phys_of == {"s": "col-s", "p": "col-p"}
+    assert reader.part_cols == ["p"]
+    assert reader.nested_types == {"s": inner}
+
+
 def test_read_delta_column_mapping_name_mode(spark, sf_dir, tmp_path):
     """A foreign column-mapped table (mode=name — the Databricks-era
     default): parquet files and partitionValues carry PHYSICAL
