@@ -172,31 +172,6 @@ def _srp_band_keys(planes: list[list[float]], bands: int):
     return srp_band_keys
 
 
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Signed-random-projection signature as array<int> of 0/1 bits.
-
-    Pure-Column reference formulation (interpreted HOF fold per plane) —
-    kept as the JVM-only fallback; hot paths use :func:`_srp_band_keys`."""
-    return F.array(
-        *[
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        double_array_col(plane),
-                        lambda x, y: x.cast("double") * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= 0,
-                1,
-            ).otherwise(0)
-            for plane in planes
-        ]
-    )
-
-
 def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,

@@ -25,9 +25,6 @@ STOPWORDS = {
     "es": ["el", "la", "los", "y", "es", "una", "en", "que", "por"],
 }
 
-_BPEISH_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
 def bind_once(value: Column, body) -> Column:
     """Evaluate ``value`` exactly once per row and hand it to ``body``
     as a lambda variable.
@@ -55,14 +52,6 @@ def tokens(col: Column | str, delimiter: str = r"\s+") -> Column:
 def token_count(col: Column | str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
-
-
-def bpeish_token_count(col: Column | str) -> Column:
-    """Approximate subword-ish token count: alpha runs + digit runs +
-    individual punctuation, via one regexp pass. A cheap stand-in for a
-    real BPE tokenizer when budgeting token counts at corpus scale."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(f"({_BPEISH_TOKEN_RE})"), F.lit(1)))
 
 
 def stopword_count(col: Column | str, lang: str = "en") -> Column:

@@ -86,8 +86,8 @@ def ingest_batch_fuzzy(
     Admission rounds are SINGLE-WRITER (the streaming sink's foreachBatch
     serialization, or one batch job at a time): two rounds racing would
     each consult an index missing the other's keys and could both admit
-    mutual near-dups — the CAS pointer swap protects the lakes'
-    integrity, not the admission decision."""
+    mutual near-dups — the put-if-absent manifest commit protects the
+    lakes' integrity, not the admission decision."""
     from incubator_gobblin_spark.sinks.files import new_run_id
 
     for sink, name in ((corpus_sink, "corpus"), (index_sink, "index")):

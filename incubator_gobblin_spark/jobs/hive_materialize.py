@@ -7,14 +7,14 @@ Reference surface:
   (gobblin-data-management/.../conversion/hive/query/HiveAvroORCQueryGenerator.java).
 - HiveRegister / HiveRegistrationPublisher register published paths as
   tables/partitions (gobblin-hive-registration/.../hive/HiveRegister.java:61,
-  createTableIfNotExists:181, addPartitionIfNotExists:192;
+  createTableIfNotExists:181;
   gobblin-core/.../publisher/HiveRegistrationPublisher.java).
 
 Spark-first: the conversion is ``CREATE TABLE ... USING <fmt> AS
 SELECT`` against the session catalog — Catalyst plans the flattening
 projection, the write is the ordinary distributed file write; no
 generated HiveQL strings to escape. Registration of already-published
-paths is the catalog API (external table + ADD PARTITION), same split
+paths is the catalog API (external table + MSCK REPAIR), same split
 as the reference: data movement vs metadata-only registration.
 """
 
@@ -171,22 +171,6 @@ def register_external_table(
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {table} USING {fmt} LOCATION '{path}'"
     )
-
-
-def add_partition(
-    spark: SparkSession,
-    table: str,
-    partition_spec: dict[str, str],
-    path: str | None = None,
-) -> None:
-    """ALTER TABLE ... ADD IF NOT EXISTS PARTITION
-    (HiveRegister.addPartitionIfNotExists:192). ``path`` pins an external
-    location; omitted means the table-rooted layout."""
-    spec = ", ".join(f"{k}='{v}'" for k, v in partition_spec.items())
-    sql = f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({spec})"
-    if path:
-        sql += f" LOCATION '{path}'"
-    spark.sql(sql)
 
 
 def repair_partitions(spark: SparkSession, table: str) -> None:

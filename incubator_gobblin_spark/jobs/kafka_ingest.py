@@ -12,8 +12,8 @@ Exactly-once mechanics (no transactions needed):
 - The run id derives DETERMINISTICALLY from the planned ranges. A crash
   after publish but before the watermark commit replays with the same
   committed watermark, plans the identical ranges, derives the same
-  run id — and the manifest commit's same-run republish converges
-  instead of double-appending. Two racing schedulers collapse into the
+  run id — and the manifest commit makes that same-run republish a
+  no-op instead of a double-append. Two racing schedulers collapse into the
   same run the same way.
 - The watermark advances only AFTER a successful publish, and advances
   monotonically per partition (a zombie predecessor can never move an

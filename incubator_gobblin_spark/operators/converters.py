@@ -178,17 +178,6 @@ def split_to_list(field: str, delimiter: str, out: str | None = None) -> Transfo
     return _t
 
 
-def explode_array(field: str, out: str | None = None) -> Transform:
-    """Explode an array column into rows (the Pinot metrics-flattener
-    pattern, gobblin-core
-    .../converter/GobblinMetricsPinotFlattenerConverter.java:44)."""
-
-    def _t(df: DataFrame) -> DataFrame:
-        return df.withColumn(out or field, F.explode(F.col(field)))
-
-    return _t
-
-
 # ---------------------------------------------------------------------------
 # Sampling
 # ---------------------------------------------------------------------------
@@ -336,17 +325,6 @@ def cast_columns(casts: dict[str, str]) -> Transform:
         for col, dtype in casts.items():
             out = out.withColumn(col, F.col(col).cast(dtype))
         return out
-
-    return _t
-
-
-def parse_timestamp(field: str, pattern: str, out: str | None = None) -> Transform:
-    """String -> timestamp with an explicit pattern. Mirrors the
-    DATE/TIME/TIMESTAMP handling of JsonElementConversionFactory
-    (gobblin-core .../converter/avro/JsonElementConversionFactory.java:419-458)."""
-
-    def _t(df: DataFrame) -> DataFrame:
-        return df.withColumn(out or field, F.to_timestamp(F.col(field), pattern))
 
     return _t
 

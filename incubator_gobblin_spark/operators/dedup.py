@@ -88,14 +88,6 @@ def dedup_argmax_window(
     )
 
 
-def dedup_counts(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Per-key duplicate accounting: canonical representative (min of the
-    remaining columns' first) + duplicate count. Used by compaction
-    verification (InputRecordCountHelper-style audits,
-    gobblin-compaction .../verify/InputRecordCountHelper.java)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
-
-
 def scd2_history(
     df: DataFrame,
     keys: Sequence[str],

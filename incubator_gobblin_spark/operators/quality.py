@@ -83,14 +83,6 @@ def check_rows(df: DataFrame, policies: list[RowPolicy]) -> QualityResult:
     return QualityResult(passed=passed, errors=errors)
 
 
-def with_counts(df: DataFrame, name: str = "quality") -> tuple[DataFrame, Observation]:
-    """Attach an Observation counting rows flowing past this point —
-    the engine's substitute for Gobblin's extracted/written record
-    counters, collected for free with the main action."""
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
 @dataclass
 class RowCountPolicy:
     """Task-level count assertion (RowCountPolicy.java:28 /
@@ -115,18 +107,6 @@ class TaskPolicyError(Exception):
 
     def __str__(self) -> str:  # pragma: no cover
         return f"task-level policy failures: {self.failures}"
-
-
-def enforce_task_policies(policies: list[tuple[RowCountPolicy, int]]) -> None:
-    """Evaluate task policies after the write action but BEFORE publish —
-    FAIL policies abort the commit (SafeDatasetCommit semantics,
-    gobblin-runtime .../SafeDatasetCommit.java:64)."""
-    failures = [
-        p.name for p, actual in policies
-        if p.type == PolicyType.FAIL and not p.check(actual)
-    ]
-    if failures:
-        raise TaskPolicyError(failures)
 
 
 def profile_columns(

@@ -60,6 +60,10 @@ from incubator_gobblin_spark.commit import _remove, put_if_absent, stage_parquet
 from incubator_gobblin_spark.sinks.delta_delete import (
     DeltaConcurrentModificationError,
 )
+from incubator_gobblin_spark.sinks.delta_export import (
+    _expire_delta_log_dir,
+    _write_delta_checkpoint,
+)
 from incubator_gobblin_spark.sources.delta_import import (
     _commit_actions,
     _groups_of,
@@ -760,6 +764,7 @@ def merge_delta_rows(
     # harmlessly: the bitmap union is idempotent) ----
     desc_rows: list = []
     staged: list[str] = []
+    cached = None
     try:
         if live:
             scan = assemble_snapshot(
@@ -774,7 +779,7 @@ def merge_delta_rows(
                 # the matched set feeds BOTH the bitmap build and the cdc
                 # preimages below — cache it once instead of running the
                 # full table scan + key join twice
-                matched_rows = matched_rows.persist()
+                matched_rows = cached = matched_rows.persist()
             matched = matched_rows.select(
                 decoded_file_path(F.col("_file_path")).alias("_path"),
                 F.col("_row_index").alias("_pos"),
@@ -821,8 +826,6 @@ def merge_delta_rows(
                 changes = source.withColumn("_change_type", F.lit("insert"))
             cdc = stage_cdc_files(changes, path, part_cols, ts)
             staged += [add_file_path(path, c["path"]) for c in cdc]
-            if live:
-                matched_rows.unpersist()
 
         actions: list[dict] = [
             {
@@ -866,6 +869,9 @@ def merge_delta_rows(
         # no commit references the staged files yet
         _remove(staged)
         raise
+    finally:
+        if cached is not None:
+            cached.unpersist()
     version = _publish_commit(
         log_dir,
         actions,
@@ -1076,7 +1082,6 @@ def checkpoint_delta_table(path: str, *, part_size: int | None = None) -> dict:
     Returns ``{"version", "adds", "removes"}``. Pair with
     :func:`expire_delta_log` to bound the JSON chain.
     """
-    from incubator_gobblin_spark.sinks.files import _write_delta_checkpoint
     from incubator_gobblin_spark.sources.delta_import import (
         last_txn_actions,
     )
@@ -1121,8 +1126,6 @@ def expire_delta_log(path: str) -> int:
     trusting ``_last_checkpoint`` replay checkpoint + tail). Returns
     the number of files removed; no-op until
     :func:`checkpoint_delta_table` has written a checkpoint."""
-    from incubator_gobblin_spark.sinks.files import _expire_delta_log_dir
-
     return _expire_delta_log_dir(os.path.join(path, "_delta_log"))
 
 

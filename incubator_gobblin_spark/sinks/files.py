@@ -17,6 +17,13 @@ Reference semantics being reproduced:
   overwrite / append / dynamic partition overwrite.
 - RowLevelErrFileWriter's error file -> the quality error stream written
   next to the output under ``_errors/``.
+- ``commit_mode="manifest"`` is the object-store-safe publish: data
+  files move once into an immutable run dir, and the commit is one
+  put-if-absent log entry naming the run's manifest
+  (``_manifests/log/<seq>``, :func:`~incubator_gobblin_spark.commit.put_if_absent`,
+  the primitive every lake writer commits through), followed by a
+  ``_CURRENT`` hint rewrite. The layout and head resolution are in
+  :mod:`incubator_gobblin_spark.sources.manifest_import`.
 
 Scale notes: ``max_records_per_file`` bounds output file sizes (the
 write-side small/large-file discipline the reference solves with
@@ -28,6 +35,7 @@ ParallelRunner (gobblin-utility .../util/ParallelRunner.java:82).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -42,6 +50,18 @@ from pyspark.sql.types import NumericType
 
 from incubator_gobblin_spark.commit import put_if_absent
 from incubator_gobblin_spark.formats.avro_ocf import resolve_format
+from incubator_gobblin_spark.sources.manifest_import import (
+    HINT,
+    LOG_DIR,
+    Head,
+    load_entries,
+    load_group,
+    load_run,
+    log_entry,
+    log_seqs,
+    manifest_rel,
+    read_head,
+)
 
 
 class TableType(Enum):
@@ -50,17 +70,12 @@ class TableType(Enum):
     APPEND_ONLY = "append_only"        # append
 
 
-#: sentinel: "CAS against whatever the pointer is right now" (capture at
-#: compose time inside _publish_manifest) vs an explicit expected value
-_PTR_ANY = object()
-
-
 class ManifestConflictError(RuntimeError):
-    """Another committer swapped the manifest pointer between this
-    commit's snapshot read and its pointer swap. The commit was NOT
-    applied and no state was lost — re-read the current snapshot,
-    recompute, and retry (the same contract as a CAS/optimistic-lock
-    failure in the DB state store)."""
+    """Another committer put the commit-log entry this commit raced for:
+    a commit landed between this commit's snapshot read and its log put.
+    The commit was NOT applied and no state was lost — re-read the
+    current snapshot, recompute, and retry (the same contract as a
+    CAS/optimistic-lock failure in the DB state store)."""
 
 
 @dataclass
@@ -74,9 +89,10 @@ class FileSink:
     max_records_per_file: int | None = None
     options: dict[str, str] = field(default_factory=dict)
     # "rename" = atomic dir renames (POSIX/HDFS); "manifest" = data
-    # files stay put, commit is ONE atomic pointer swap — the
-    # object-store-safe mode (S3/GCS renames are copy+delete, not
-    # atomic; a single small-object PUT is).
+    # files stay put, commit is ONE put-if-absent commit-log entry
+    # (then a ``_CURRENT`` hint rewrite) — the object-store-safe mode
+    # (S3/GCS renames are copy+delete, not atomic; a conditional
+    # small-object PUT is).
     commit_mode: str = "rename"
     # Stats clustering: range-partition + sort rows by these columns
     # before writing, so each output file covers a NARROW, mostly
@@ -254,7 +270,6 @@ class FileSink:
         (Spark builds, the driver probes with hashlib), so no
         engine-specific hash needs reimplementing."""
         import base64
-        import json
 
         from incubator_gobblin_spark.formats.avro_ocf import resolve_format as _rf
 
@@ -308,8 +323,9 @@ class FileSink:
         semantics). ``commit_mode="rename"`` renames staging dirs into
         the final layout (atomic per path on POSIX/HDFS);
         ``commit_mode="manifest"`` leaves data files in immutable
-        run dirs and atomically swaps a manifest pointer — see
-        :meth:`_publish_manifest`. Returns published paths."""
+        run dirs and commits one put-if-absent log entry naming the
+        run's manifest — see :meth:`_publish_manifest`. Returns
+        published paths (``[]`` when the run was already committed)."""
         if self.commit_mode == "manifest":
             # manifest mode tolerates a missing staging dir on retry
             # (the data move already happened before the crash)
@@ -362,83 +378,70 @@ class FileSink:
 
     # -- manifest commit (object-store-safe publish) ----------------------
 
-    def manifest_pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
+    def _read_pointer(self) -> Head:
+        """The committed head a commit composes against (see
+        :mod:`~incubator_gobblin_spark.sources.manifest_import`).
+        Committers capture it at snapshot-read time and pass it to
+        :meth:`_publish_manifest` as ``expected_ptr``."""
+        return read_head(self.path)
 
-    def _read_pointer(self) -> str | None:
-        """Current pointer value (the manifest-relative path it names),
-        or None before the first commit. Committers capture this at
-        snapshot-read time and CAS against it at swap time."""
-        ptr = self.manifest_pointer()
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return fh.read().strip()
+    def _commit(self, manifest: dict, head: Head) -> None:
+        """THE commit of every manifest-lake write: ``manifest`` becomes
+        the snapshot after ``head``, or nothing changes.
 
-    def _load_manifest_rel(self, manifest_rel: str | None) -> dict | None:
-        import json
+        The manifest is written to ``_manifests/<run_id>.json`` and
+        fsynced. The commit point is one
+        :func:`~incubator_gobblin_spark.commit.put_if_absent` of
+        ``_manifests/log/<head.seq + 1>`` naming it: every committer
+        that composed against ``head`` races for that one name, and a
+        loser raises :class:`ManifestConflictError` with the winner
+        intact (on an object store, the same contract is a conditional
+        PUT). The ``_CURRENT`` hint is rewritten afterwards; a crash
+        before it leaves readers one log entry to follow.
 
-        if manifest_rel is None:
-            return None
-        with open(os.path.join(self.path, manifest_rel)) as fh:
-            return json.load(fh)
-
-    def _swap_pointer(self, mrel: str, run_id: str, expected_ptr) -> None:
-        """THE commit: one atomic pointer swap, made CONDITIONAL on the
-        parent this commit composed against (compare-and-swap). Without
-        the check, two committers that both read parent P silently
-        last-writer-win — the loser's files vanish from the live
-        snapshot (lost update). On a POSIX fs the check+swap pair is
-        serialized with an flock; on an object store the same contract
-        is a conditional PUT (If-Match). ``expected_ptr`` is the pointer
-        value at snapshot-read time (None = expected no pointer), except
-        the sentinel ``_PTR_ANY`` which skips the check (explicitly
-        unsafe callers only)."""
-        ptr_tmp = self.manifest_pointer() + f".{run_id}.tmp"
-        with open(ptr_tmp, "w") as fh:
-            fh.write(mrel)
-        lock_path = os.path.join(self.path, "_manifests", ".ptrlock")
-        with open(lock_path, "w") as lock_fh:
-            try:
-                import fcntl
-
-                fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: best-effort, no flock
-                pass
-            try:
-                if expected_ptr is not _PTR_ANY:
-                    now = self._read_pointer()
-                    # a retry of THIS run re-swapping to its own manifest
-                    # is idempotent, not a conflict
-                    if now != expected_ptr and now != mrel:
-                        os.remove(ptr_tmp)
-                        raise ManifestConflictError(
-                            f"manifest pointer moved: expected "
-                            f"{expected_ptr!r}, found {now!r} — recompute "
-                            f"against the current snapshot and retry"
-                        )
-                os.replace(ptr_tmp, self.manifest_pointer())
-            finally:
-                try:
-                    import fcntl
-
-                    fcntl.flock(lock_fh, fcntl.LOCK_UN)
-                except ImportError:
-                    pass
+        A manifest file may be overwritten only while no log entry
+        names it (a lost race, or a crash before the put), so callers
+        never commit a run id that is already in the history."""
+        seq = manifest["seq"] = head.seq + 1
+        mrel = manifest_rel(manifest["run_id"])
+        os.makedirs(os.path.join(self.path, LOG_DIR), exist_ok=True)
+        mpath = os.path.join(self.path, mrel)
+        tmp = f"{mpath}.tmp-{os.getpid()}-{uuid.uuid4().hex[:12]}"
+        with open(tmp, "w") as fh:
+            json.dump(manifest, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, mpath)
+        if not put_if_absent(log_entry(self.path, seq), mrel):
+            raise ManifestConflictError(
+                f"commit {seq} of {self.path} was taken by another "
+                f"committer while {manifest['run_id']!r} composed against "
+                f"commit {head.seq} — recompute against the current "
+                "snapshot and retry"
+            )
+        self._write_hint(mrel)
         if self.symlink_manifest:
-            # refresh the external-engine view of the NEW snapshot;
-            # outside the lock (the export only reads the committed
-            # pointer, and a concurrent re-export is idempotent)
+            # refresh the external-engine view of the NEW snapshot; the
+            # export reads only the committed head, and a concurrent
+            # re-export is idempotent
             self.export_symlink_manifest()
         if self.delta_log:
-            # same discipline: reads only the committed pointer, and a
-            # no-change re-export appends nothing
+            # same discipline: a no-change re-export appends nothing
             self.export_delta_log(
                 checkpoint_interval=self.delta_log_checkpoint_interval
             )
         if self.iceberg_metadata:
             # same discipline again (fingerprint-gated no-change skip)
             self.export_iceberg()
+
+    def _write_hint(self, mrel: str) -> None:
+        """Point the ``_CURRENT`` hint at a committed manifest. Last
+        writer wins; a stale hint costs readers a log-entry read."""
+        hint = os.path.join(self.path, HINT)
+        tmp = f"{hint}.tmp-{os.getpid()}-{uuid.uuid4().hex[:12]}"
+        with open(tmp, "w") as fh:
+            fh.write(mrel)
+        os.replace(tmp, hint)
 
     def current_manifest(
         self, run_id: str | None = None, materialize: bool = True
@@ -449,47 +452,27 @@ class FileSink:
         previously committed state stays readable (time travel) until
         its data runs are vacuumed.
 
-        Format v2 manifests are a LIST of per-partition entry groups
-        (see :meth:`_publish_manifest`); ``materialize=True`` (the
-        default, and the public contract) loads every group so the
-        returned dict carries the flat ``entries`` list. Internal
-        group-pruning readers pass ``materialize=False`` to avoid
-        touching groups a partition predicate already excluded."""
-        import json
-
-        if run_id is not None:
-            mpath = os.path.join(self.path, "_manifests", f"{run_id}.json")
-            if not os.path.exists(mpath):
-                raise FileNotFoundError(
-                    f"no committed manifest for run {run_id} under {self.path}"
-                )
-            with open(mpath) as fh:
-                m = json.load(fh)
+        Manifests are a LIST of per-partition entry groups (see
+        :meth:`_publish_manifest`); ``materialize=True`` (the default,
+        and the public contract) loads every group so the returned
+        dict carries the flat ``entries`` list. Internal group-pruning
+        readers pass ``materialize=False`` to avoid touching groups a
+        partition predicate already excluded."""
+        if run_id is None:
+            m = read_head(self.path).manifest
         else:
-            ptr = self.manifest_pointer()
-            if not os.path.exists(ptr):
-                return None
-            with open(ptr) as fh:
-                manifest_rel = fh.read().strip()
-            with open(os.path.join(self.path, manifest_rel)) as fh:
-                m = json.load(fh)
-        if materialize and "entries" not in m:
-            m["entries"] = [
-                e for g in m.get("groups", []) for e in self._load_group(g)
-            ]
+            m = load_run(self.path, run_id)
+        if m is not None and materialize:
+            m["entries"] = load_entries(self.path, m)
         return m
 
     def _load_group(self, group: dict) -> list[dict]:
-        import json
-
-        with open(os.path.join(self.path, group["file"])) as fh:
-            return json.load(fh)["entries"]
+        return load_group(self.path, group)
 
     def manifest_history(self) -> list[str]:
         """Committed run ids, newest first, by walking the parent chain
-        from the current pointer (only COMMITTED snapshots appear —
-        an abandoned manifest file that never won the pointer swap is
-        not in any chain)."""
+        from the head (only COMMITTED snapshots appear — a manifest
+        file that lost its log put is not in any chain)."""
         chain: list[str] = []
         m = self.current_manifest(materialize=False)
         while m is not None:
@@ -507,15 +490,21 @@ class FileSink:
         run_id: str,
         removed_files: set[str] | None = None,
         candidate_groups: set[str] | None = None,
-        expected_ptr=_PTR_ANY,
+        expected_ptr: Head | None = None,
     ) -> list[str]:
         """Manifest commit: data files move ONCE into an immutable
         ``_data/<run_id>/`` dir (never rewritten, so the non-atomicity
         of the move is invisible — nothing reads uncommitted run dirs),
         a manifest lists every live data file of the NEW snapshot, and
-        the commit point is a single atomic pointer swap. A crash
-        anywhere before the swap leaves the previous snapshot fully
-        readable; re-running publish with the same run_id converges.
+        :meth:`_commit` makes it the head with one put-if-absent log
+        entry. It composes against ``expected_ptr``, the head a caller
+        read its snapshot from (default: the head now), and a commit
+        that landed since makes it raise :class:`ManifestConflictError`.
+        A crash anywhere before the put leaves the previous snapshot
+        fully readable; re-running publish with the same run_id
+        converges. A run id already in :meth:`manifest_history` is
+        committed: publishing it again drops its staging and returns
+        ``[]``, before ``_data/<run_id>`` is touched.
 
         Snapshot composition per TableType (same semantics as renames):
         - SNAPSHOT_ONLY: manifest = this run's files only;
@@ -523,45 +512,24 @@ class FileSink:
         - SNAPSHOT_APPEND: parent files whose leaf partition is NOT
           touched by this run + this run's files.
 
-        Format v2 (manifest list): the manifest holds GROUP references —
-        one immutable per-partition entry file under
-        ``_manifests/groups/`` — not inline entries. Untouched
-        partitions re-reference the parent's group files verbatim, so a
-        commit writes O(touched partitions) bytes while the live set may
-        span millions of files (the Iceberg manifest-list shape; a flat
-        inline manifest would be a multi-GB rewrite per commit at
-        100 TB). Group rows carry partition values + unioned column
-        stats, letting readers prune partitions without fetching their
-        group files. v1 manifests remain readable; the first commit over
-        a v1 parent migrates its entries into carried groups.
+        The manifest holds GROUP references — one immutable
+        per-partition entry file under ``_manifests/groups/`` — not
+        inline entries. Untouched partitions re-reference the parent's
+        group files verbatim, so a commit writes O(touched partitions)
+        bytes while the live set may span millions of files (the
+        Iceberg manifest-list shape). Group rows carry partition values
+        + unioned column stats, letting readers prune partitions
+        without fetching their group files.
         """
-        import json
-
-        # Snapshot the pointer ONCE and compose strictly against it; the
-        # swap at the end is conditional on this exact value (CAS). A
-        # concurrent commit that lands in between makes this commit fail
-        # with ManifestConflictError instead of silently erasing it.
-        if expected_ptr is _PTR_ANY:
-            expected_ptr = self._read_pointer()
-        parent = self._load_manifest_rel(expected_ptr)
+        if run_id in self.manifest_history():
+            self.abort(run_id)
+            return []
+        head = expected_ptr if expected_ptr is not None else self._read_pointer()
+        parent = head.manifest
 
         staging = self.staging_dir(run_id)
         data_dir = os.path.join(self.path, "_data", run_id)
         if os.path.isdir(staging):
-            if (
-                removed_files is not None
-                and parent is not None
-                and parent["run_id"] == run_id
-            ):
-                # a merge commit for a rid the live manifest already
-                # references would _rm a run dir whose UNTOUCHED files
-                # the snapshot still points at — data loss. merge_into
-                # detects committed rids upstream and no-ops; reaching
-                # here means that check was bypassed.
-                raise ValueError(
-                    f"merge run {run_id!r} is already committed; a merge "
-                    "retry must be an idempotent no-op, not a republish"
-                )
             os.makedirs(os.path.dirname(data_dir), exist_ok=True)
             _rm(data_dir)  # same-run retry: immutable run dir, rebuild
             os.replace(staging, data_dir)
@@ -601,35 +569,12 @@ class FileSink:
                         entry["bloom"] = {"bits": blooms["bits"], "cols": b}
                 new_entries.append(entry)
 
-        # Same-run republish (a retried batch whose previous attempt
-        # already won the pointer swap) must be IDEMPOTENT: drop the
-        # prior attempt's contribution from the parent before composing,
-        # and splice the parent link past the superseded manifest node —
-        # otherwise a retry double-appends its files and manifest_history
-        # would cycle on itself.
-        run_prefix = os.path.join("_data", run_id) + os.sep
-        parent_run = parent["run_id"] if parent else None
-        if parent_run == run_id:
-            parent_run = parent["parent"]
-
-        # Parent's live state as GROUP references. A v2 parent hands its
-        # group list over directly (groups written by a prior attempt of
-        # THIS run hold only that attempt's files — drop them, the exact
-        # analogue of the v1 entry-prefix filter). A v1 parent (inline
-        # entries) is migrated once: its surviving entries regroup into
-        # carried group files tagged run=None so no later retry can
-        # mistake them for a single run's contribution.
-        if parent is None:
-            parent_groups: list[dict] = []
-        elif "groups" in parent:
-            parent_groups = [g for g in parent["groups"] if g.get("run") != run_id]
-        else:
-            carried = [
-                e for e in parent["entries"] if not e["file"].startswith(run_prefix)
-            ]
-            if removed_files:
-                carried = [e for e in carried if e["file"] not in removed_files]
-            parent_groups = self._write_groups(carried, run_id, run_tag=None)
+        # A run whose manifest was vacuumed out of the history can still
+        # be live in an append snapshot; its retry rebuilt the run dir
+        # above, so drop the groups of the previous attempt.
+        parent_groups = (
+            [g for g in parent["groups"] if g.get("run") != run_id] if parent else []
+        )
 
         # merge/CDC commit: drop the entries this run rewrote (their
         # surviving rows were copied into the new run — copy-on-write).
@@ -640,7 +585,7 @@ class FileSink:
         # holds MANY groups for the same partition value (one per run),
         # and unsalted carried names would collide and silently drop
         # entries.
-        if removed_files and parent is not None and "groups" in parent:
+        if removed_files and parent is not None:
             # O(touched groups), not O(live groups): only groups the
             # merge's stats pruning marked as candidates can hold a
             # removed file — every other group passes through WITHOUT a
@@ -681,26 +626,18 @@ class FileSink:
                 g for g in parent_groups if g["partition"] not in touched
             ] + new_groups
 
-        manifest = {
-            "run_id": run_id,
-            "format_version": 2,
-            "table_type": self.table_type.value,
-            "fmt": self.fmt,
-            "partition_by": self.partition_by,
-            "parent": parent_run,
-            "groups": groups,
-        }
-        mdir = os.path.join(self.path, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        mrel = os.path.join("_manifests", f"{run_id}.json")
-        mtmp = os.path.join(self.path, mrel + ".tmp")
-        with open(mtmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(mtmp, os.path.join(self.path, mrel))
-
-        # THE commit: one atomic, CONDITIONAL pointer swap (object
-        # stores: one conditional PUT) — see _swap_pointer
-        self._swap_pointer(mrel, run_id, expected_ptr)
+        self._commit(
+            {
+                "run_id": run_id,
+                "format_version": 2,
+                "table_type": self.table_type.value,
+                "fmt": self.fmt,
+                "partition_by": self.partition_by,
+                "parent": parent["run_id"] if parent else None,
+                "groups": groups,
+            },
+            head,
+        )
         # THIS run's published files (the full live set is reachable via
         # current_manifest(); re-reading every carried group here would
         # put an O(live files) read back on the commit path)
@@ -722,7 +659,6 @@ class FileSink:
         Deterministic names (<run>-<sha1(partition)>) make same-run
         retries overwrite rather than accumulate."""
         import hashlib
-        import json
 
         by_part: dict[str, list[dict]] = {}
         for e in entries:
@@ -778,18 +714,15 @@ class FileSink:
         if manifest is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
         part_by = manifest.get("partition_by") or []
-        if "groups" in manifest:
-            groups = manifest["groups"]
-            if filters:
-                # group rows carry partition value + unioned stats in the
-                # SAME shape as file entries, so the predicate prunes
-                # whole partitions before a single group file is fetched
-                # — at object-store scale the commit log read is
-                # O(groups matching), not O(live files)
-                groups = [g for g in groups if _entry_matches(g, filters, part_by)]
-            entries = [e for g in groups for e in self._load_group(g)]
-        else:
-            entries = manifest["entries"]
+        groups = manifest["groups"]
+        if filters:
+            # group rows carry partition value + unioned stats in the
+            # SAME shape as file entries, so the predicate prunes
+            # whole partitions before a single group file is fetched
+            # — at object-store scale the commit log read is
+            # O(groups matching), not O(live files)
+            groups = [g for g in groups if _entry_matches(g, filters, part_by)]
+        entries = [e for g in groups for e in self._load_group(g)]
         if filters:
             entries = [e for e in entries if _entry_matches(e, filters, part_by)]
         if not entries:
@@ -798,19 +731,17 @@ class FileSink:
             # scale would make a fully-pruned point query COST more than
             # an unpruned one, and on a genuinely empty snapshot would
             # recurse forever)
-            all_entries = (
-                [e for g in manifest.get("groups", []) for e in self._load_group(g)]
-                if "groups" in manifest
-                else manifest["entries"]
+            sample = next(
+                (e for g in manifest["groups"] for e in self._load_group(g)), None
             )
-            if not all_entries:
+            if sample is None:
                 # a merge can legitimately delete every row: the committed
                 # snapshot holds zero files and therefore no schema
                 raise FileNotFoundError(
                     f"snapshot under {self.path} is empty (zero data files) — "
                     "no schema available to build a typed empty frame"
                 )
-            empty = self._read_entries(spark, all_entries[:1]).limit(0)
+            empty = self._read_entries(spark, [sample]).limit(0)
             return _apply_filters(empty, filters)
         return _apply_filters(self._read_entries(spark, entries), filters)
 
@@ -857,10 +788,6 @@ class FileSink:
         if manifest is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
         part_by = manifest.get("partition_by") or []
-        if "groups" not in manifest:
-            entries = manifest["entries"]
-            kept = [e for e in entries if _entry_matches(e, filters, part_by)]
-            return len(kept), len(entries)
         total = sum(g["n"] for g in manifest["groups"])
         kept_n = 0
         for g in manifest["groups"]:
@@ -880,27 +807,25 @@ class FileSink:
         retention policy; here the retained versions ARE the manifest
         history). The new manifest re-references the target snapshot's
         group files verbatim — no data copied or rewritten (runs are
-        immutable) — and commits through the same CAS pointer swap as
-        any write, so concurrent committers conflict instead of being
-        silently erased. History stays LINEAR: the rollback's parent is
-        the commit being rolled back, so the bad commits remain
-        time-travelable until vacuum reclaims them, and the restore
-        window is exactly vacuum retention (a vacuumed target raises
-        with the missing files named)."""
-        import json
-
-        expected_ptr = self._read_pointer()
-        if expected_ptr is None:
+        immutable) — and commits through the same put-if-absent log
+        entry as any write (:meth:`_commit`), so concurrent committers
+        conflict instead of being silently erased. History stays
+        LINEAR: the rollback's parent is the commit being rolled back,
+        so the bad commits remain time-travelable until vacuum reclaims
+        them, and the restore window is exactly vacuum retention (a
+        vacuumed target raises with the missing files named). A
+        ``run_id`` already in the history is a committed rollback:
+        repeating it is a no-op."""
+        head = self._read_pointer()
+        if head.manifest is None:
             raise FileNotFoundError(f"nothing committed under {self.path}")
-        target = self.current_manifest(target_run_id, materialize=False)
-        cur = self._load_manifest_rel(expected_ptr)
         rid = run_id or f"rollback-{new_run_id()}"
-        entries = target.get("entries") or [
-            e for g in target.get("groups", []) for e in self._load_group(g)
-        ]
+        if rid in self.manifest_history():
+            return rid
+        target = self.current_manifest(target_run_id)
         missing = [
             e["file"]
-            for e in entries
+            for e in target["entries"]
             if not os.path.exists(os.path.join(self.path, e["file"]))
         ]
         if missing:
@@ -909,27 +834,18 @@ class FileSink:
                 f"file(s) already vacuumed (e.g. {missing[0]}) — restores "
                 "reach back at most vacuum retention"
             )
-        if "groups" in target:
-            groups = target["groups"]
-        else:  # v1 target: migrate its entries into carried groups
-            groups = self._write_groups(entries, rid, run_tag=None)
-        manifest = {
-            "run_id": rid,
-            "format_version": 2,
-            "table_type": target.get("table_type", self.table_type.value),
-            "fmt": target.get("fmt", self.fmt),
-            "partition_by": target.get("partition_by", self.partition_by),
-            "parent": cur["run_id"] if cur else None,
-            "groups": groups,
-        }
-        mdir = os.path.join(self.path, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        mrel = os.path.join("_manifests", f"{rid}.json")
-        mtmp = os.path.join(self.path, mrel + ".tmp")
-        with open(mtmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(mtmp, os.path.join(self.path, mrel))
-        self._swap_pointer(mrel, rid, expected_ptr)
+        self._commit(
+            {
+                "run_id": rid,
+                "format_version": 2,
+                "table_type": target.get("table_type", self.table_type.value),
+                "fmt": target.get("fmt", self.fmt),
+                "partition_by": target.get("partition_by", self.partition_by),
+                "parent": head.manifest["run_id"],
+                "groups": target["groups"],
+            },
+            head,
+        )
         return rid
 
     def export_symlink_manifest(
@@ -953,15 +869,10 @@ class FileSink:
         partition registration maps 1:1). The export is a SNAPSHOT of
         ``as_of_run`` (default current); re-export after each commit.
         Returns the manifest root directory."""
-        manifest = self.current_manifest(as_of_run, materialize=False)
+        manifest = self.current_manifest(as_of_run)
         if manifest is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
-        if "groups" in manifest:
-            entries = [
-                e for g in manifest["groups"] for e in self._load_group(g)
-            ]
-        else:
-            entries = manifest["entries"]
+        entries = manifest["entries"]
         root = out_dir or os.path.join(self.path, "_symlink_format_manifest")
         by_part: dict[str, list[str]] = {}
         for e in entries:
@@ -970,13 +881,13 @@ class FileSink:
             )
         # Refresh IN PLACE with per-file atomic replaces, then prune
         # stale entries — never a whole-directory rmtree+rename swap: a
-        # directory swap races concurrent exporters (the commit CAS
-        # explicitly allows concurrent committers) into ENOTEMPTY
+        # directory swap races concurrent exporters (every committer
+        # re-exports after its own commit) into ENOTEMPTY
         # failures AFTER the data commit succeeded, and leaves external
         # readers a window with NO manifest at all. With per-file
         # replaces the root always exists and every manifest file a
-        # reader opens is complete. Exporters SERIALIZE on a lock (the
-        # ptrlock discipline): without it, exporter A's prune could
+        # reader opens is complete. Exporters SERIALIZE on a lock:
+        # without it, exporter A's prune could
         # delete a partition manifest a concurrent exporter B just
         # wrote for a NEWER snapshot. Stale ``.manifest.tmp-*`` files
         # from crashed exporters are swept here too — under the lock no
@@ -1057,241 +968,14 @@ class FileSink:
         checkpoint_part_size: int | None = None,
     ) -> str:
         """Export the committed snapshot as a Delta Lake transaction
-        log (``_delta_log/``), the other publicly documented interop
-        surface next to :meth:`export_symlink_manifest`: the Delta log
-        is plain JSON-lines (delta-io PROTOCOL.md), so any Delta reader
-        (Spark+delta jars, delta-rs, DuckDB's delta extension) pointed
-        at the lake root sees EXACTLY the committed files — with
-        partition values, sizes, and schema — no knowledge of this
-        engine's manifest JSON required.
+        log (``_delta_log/``), one Delta version per call that changes
+        the snapshot; ``checkpoint_interval`` also writes a parquet
+        checkpoint every N versions. See
+        :mod:`incubator_gobblin_spark.sinks.delta_export`."""
+        from incubator_gobblin_spark.sinks.delta_export import export_delta_log
 
-        Each call appends ONE Delta version: version 0 carries
-        protocol + metaData + an ``add`` per live file; later exports
-        diff against the replayed log and emit only ``remove``/``add``
-        actions (a no-change export writes nothing). Re-exporting after
-        every commit keeps the Delta view current; the export is a
-        READ-ONLY projection of the manifest — this engine never reads
-        the Delta log back.
-
-        Offline caveat (stated for honesty): no Delta reader exists in
-        this environment, so conformance is pinned structurally
-        (replay-equals-snapshot, spec-required fields, partition
-        encoding) rather than by a foreign engine end-to-end."""
-        import json
-        import time as _time
-        import uuid as _uuid
-        from urllib.parse import quote, unquote
-
-        if self.fmt != "parquet":
-            raise ValueError("export_delta_log requires a parquet lake")
-        manifest = self.current_manifest(as_of_run, materialize=False)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed manifest under {self.path}")
-        if "groups" in manifest:
-            entries = [
-                e for g in manifest["groups"] for e in self._load_group(g)
-            ]
-        else:
-            entries = manifest["entries"]
-
-        from incubator_gobblin_spark.sources.delta_import import (
-            _log_versions,
-            _replay_state,
-            add_file_path,
-        )
-
-        log_dir = os.path.join(self.path, "_delta_log")
-        os.makedirs(log_dir, exist_ok=True)
-
-        adds: dict[str, dict] = {}
-        # timestamp-typed columns from one committed footer: the
-        # normalization set for _delta_file_stats (typed, not guessed)
-        ts_cols: set[str] = set()
-        if entries:
-            try:
-                import pyarrow.parquet as _pq
-
-                sch = _pq.read_schema(
-                    os.path.join(self.path, entries[0]["file"])
-                )
-                import pyarrow as _pa
-
-                ts_cols = {
-                    n
-                    for n in sch.names
-                    if _pa.types.is_timestamp(sch.field(n).type)
-                }
-            except Exception:
-                ts_cols = set()
-        for e in sorted(entries, key=lambda x: x["file"]):
-            rel = e["file"].replace(os.sep, "/")
-            fp = os.path.join(self.path, e["file"])
-            pvals: dict[str, str] = {}
-            if e.get("partition"):
-                for seg in e["partition"].replace(os.sep, "/").split("/"):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = unquote(v)
-            add = {
-                "path": quote(rel),
-                "partitionValues": pvals,
-                "size": os.path.getsize(fp),
-                "modificationTime": int(os.path.getmtime(fp) * 1000),
-                "dataChange": True,
-            }
-            # Per-file statistics (PROTOCOL.md "Per-file Statistics"):
-            # numRecords + min/maxValues from the stats the manifest
-            # captured at publish — this is what lets a foreign Delta
-            # reader FILE-SKIP on the exported table. Best-effort: an
-            # entry without stats just exports without the field.
-            stats = _delta_file_stats(e, ts_cols)
-            if stats is not None:
-                add["stats"] = stats
-            adds[quote(rel)] = add
-
-        # Exporter serialization: the commit CAS explicitly allows
-        # concurrent committers, and publish triggers the export
-        # outside any lock — so two exporters can both replay to the
-        # same `version`, and NNN.json is published put-if-absent
-        # (commit.put_if_absent). A loser re-replays — now seeing the
-        # winner's commit — and recomputes its diff at the next
-        # version, so no commit is ever silently shadowed by a
-        # stale-replay diff.
-        for _ in range(64):
-            prev_versions = _log_versions(log_dir)
-            live: dict[str, dict] = {}
-            prev_tombs: dict[str, dict] = {}
-            prev_meta: dict | None = None
-            prev_proto: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-            if prev_versions:
-                # the shared replay starts from the newest checkpoint
-                # when one exists, so per-commit export cost is O(tail)
-                # on checkpointed lakes, not O(history)
-                live, prev_meta, p, prev_tombs = _replay_state(
-                    log_dir, None, collect_removes=True
-                )
-                if p:
-                    prev_proto = p
-            # next version = newest + 1, NOT len(): after expire_delta_
-            # log prunes pre-checkpoint commits the list is no longer
-            # dense from 0, and len() would collide with a live version
-            # and spin the put-if-absent loop to exhaustion
-            version = (prev_versions[-1] + 1) if prev_versions else 0
-
-            removed = sorted(p for p in live if p not in adds)
-            added = sorted(p for p in adds if p not in live)
-            if version > 0 and not removed and not added:
-                return log_dir  # snapshot unchanged: no empty commit
-
-            ts = int(_time.time() * 1000)
-            actions: list[dict] = [
-                {"commitInfo": {"timestamp": ts, "operation": "WRITE",
-                                "engineInfo": "incubator-gobblin-spark manifest export"}}
-            ]
-            if version == 0:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-                )
-                sample = next(iter(adds.values()), None)
-                schema = (
-                    _delta_schema_string(
-                        add_file_path(self.path, sample["path"]),
-                        partition_cols=list(self.partition_by),
-                        partition_values=[
-                            a["partitionValues"] for a in adds.values()
-                        ],
-                    )
-                    if sample
-                    else json.dumps({"type": "struct", "fields": []})
-                )
-                actions.append(
-                    {
-                        "metaData": {
-                            # deterministic table id: re-exports of the same
-                            # lake identify as the same Delta table
-                            "id": str(
-                                _uuid.uuid5(
-                                    _uuid.NAMESPACE_URL, os.path.abspath(self.path)
-                                )
-                            ),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": schema,
-                            "partitionColumns": list(self.partition_by),
-                            "configuration": {},
-                            "createdTime": ts,
-                        }
-                    }
-                )
-            for p in removed:
-                actions.append(
-                    {"remove": {"path": p, "deletionTimestamp": ts,
-                                "dataChange": True}}
-                )
-            for p in added:
-                actions.append({"add": adds[p]})
-
-            if not put_if_absent(
-                os.path.join(log_dir, f"{version:020d}.json"),
-                "\n".join(json.dumps(a) for a in actions) + "\n",
-            ):
-                continue  # lost the race: re-replay, diff at next version
-
-            # Opt-in checkpointing: every `checkpoint_interval` versions,
-            # compact the full live state into NNN.checkpoint.parquet +
-            # _last_checkpoint so log replay is O(tail), not O(history).
-            # Off by default: the JSON chain stays complete from version 0
-            # either way, and a reader that trusts _last_checkpoint then
-            # needs this checkpoint schema too — opting in is a statement
-            # that your readers (read_delta here, or a real Delta engine)
-            # consume checkpoints.
-            if (
-                checkpoint_interval
-                and version > 0
-                and version % checkpoint_interval == 0
-            ):
-                # prev_meta/prev_proto came out of the same replay that
-                # produced `live`; version 0's metaData is in `actions`.
-                # Tombstones = the replayed ones still standing (a path
-                # re-added now clears its tombstone) + this version's
-                # removes — PROTOCOL.md expects checkpoints to carry
-                # un-expired remove tombstones so a reader trusting
-                # _last_checkpoint keeps vacuum-safety metadata. Expiry
-                # is the vacuum's concern; the export carries them all.
-                meta = prev_meta or next(
-                    (a["metaData"] for a in actions if "metaData" in a), None
-                )
-                tombs = {
-                    p: r for p, r in prev_tombs.items() if p not in adds
-                }
-                for p in removed:
-                    tombs[p] = {
-                        "path": p,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                    }
-                from incubator_gobblin_spark.sources.delta_import import (
-                    last_txn_actions,
-                )
-
-                _write_delta_checkpoint(
-                    log_dir,
-                    version,
-                    list(adds.values()),
-                    meta,
-                    prev_proto,
-                    removes=sorted(tombs.values(), key=lambda r: r["path"]),
-                    part_size=checkpoint_part_size,
-                    txns=[
-                        t
-                        for _, t in sorted(
-                            last_txn_actions(log_dir, version).items()
-                        )
-                    ],
-                )
-            return log_dir
-        raise RuntimeError(
-            f"export_delta_log: lost the commit-file race 64 times under "
-            f"{log_dir} — a runaway concurrent exporter is appending "
-            f"versions faster than this one can replay"
+        return export_delta_log(
+            self, as_of_run, checkpoint_interval, checkpoint_part_size
         )
 
     def expire_delta_log(self) -> int:
@@ -1305,6 +989,8 @@ class FileSink:
         the retention trade every Delta deployment makes. Returns the
         number of files removed. No-op (0) until a checkpoint exists —
         the full JSON chain is the only replay source before that."""
+        from incubator_gobblin_spark.sinks.delta_export import _expire_delta_log_dir
+
         return _expire_delta_log_dir(os.path.join(self.path, "_delta_log"))
 
     def read_changes(
@@ -1473,8 +1159,12 @@ class FileSink:
         candidate files; every untouched file — and its manifest group —
         is carried into the new snapshot by reference. The commit writes
         one new run (survivor rows + upserts) and O(touched groups)
-        metadata; a crash before the pointer swap leaves the parent
-        snapshot current (same guarantee as every manifest commit).
+        metadata; a crash before the commit-log put leaves the parent
+        snapshot current (same guarantee as every manifest commit, see
+        :meth:`_commit`). A commit that lands after the merge read its
+        snapshot takes the log entry this merge needs, which raises
+        :class:`ManifestConflictError` (after ``max_conflict_retries``
+        full recomputes).
         """
         if self.commit_mode != "manifest":
             raise ValueError("merge_into requires commit_mode='manifest'")
@@ -1487,14 +1177,14 @@ class FileSink:
             )
         rid = run_id or new_run_id()
         on = list(on)
-        # Crashed-AFTER-commit retry: if this rid already won a pointer
-        # swap, the merge is fully applied — replaying it must be an
+        # Crashed-AFTER-commit retry: if this rid already put its log
+        # entry, the merge is fully applied — replaying it must be an
         # idempotent NO-OP. Recomputing against the current snapshot
         # (which now contains rid itself) would mark only the files
         # holding source keys as touched and then republish rid from
         # that partial staging, deleting every untouched file of the
         # committed run (data loss). Crashed-BEFORE-commit retries fall
-        # through: the pointer still names the parent, so the merge
+        # through: the head is still the parent, so the merge
         # recomputes against the same snapshot and converges.
         if rid in self.manifest_history():
             self.abort(rid)  # drop any stale partial staging
@@ -1523,7 +1213,7 @@ class FileSink:
             source.persist()
         try:
             # Optimistic-concurrency loop: a ManifestConflictError from
-            # the CAS pointer swap means another commit landed during
+            # the commit-log put means another commit landed during
             # our read-plan-write window. The merge result depends on
             # the snapshot it read, so the ONLY correct response is a
             # full recompute against the new snapshot — which this loop
@@ -1613,7 +1303,7 @@ class FileSink:
             # (O(live) metadata reads) and commit an empty run
             return rid
         ptr0 = self._read_pointer()
-        manifest = self._load_manifest_rel(ptr0)
+        manifest = ptr0.manifest
         if manifest is None:  # first commit: plain publish of upserts
             self.write_staging(upserts, rid)
             self._publish_manifest(rid, expected_ptr=ptr0)
@@ -1634,23 +1324,14 @@ class FileSink:
                 filters.extend([(k, ">=", lo), (k, "<=", hi)])
         part_by = manifest.get("partition_by") or []
         cand_groups: set[str] = set()
-        if "groups" in manifest:
-            cand_entries = []
-            for g in manifest["groups"]:
-                if not _entry_matches(g, filters, part_by):
-                    continue
-                cand_groups.add(g["file"])
-                cand_entries.extend(
-                    e
-                    for e in self._load_group(g)
-                    if _entry_matches(e, filters, part_by)
-                )
-        else:
-            cand_entries = [
-                e
-                for e in manifest["entries"]
-                if _entry_matches(e, filters, part_by)
-            ]
+        cand_entries = []
+        for g in manifest["groups"]:
+            if not _entry_matches(g, filters, part_by):
+                continue
+            cand_groups.add(g["file"])
+            cand_entries.extend(
+                e for e in self._load_group(g) if _entry_matches(e, filters, part_by)
+            )
         cand_entries = self._bloom_refine_candidates(cand_entries, src_keys, on)
 
         if matched == "ignore":
@@ -1677,7 +1358,7 @@ class FileSink:
             self._publish_manifest(
                 rid,
                 removed_files=set(),
-                candidate_groups=set() if "groups" in manifest else None,
+                candidate_groups=set(),
                 expected_ptr=ptr0,
             )
             return rid
@@ -1757,7 +1438,7 @@ class FileSink:
         self._publish_manifest(
             rid,
             removed_files=touched,
-            candidate_groups=cand_groups if "groups" in manifest else None,
+            candidate_groups=cand_groups,
             expected_ptr=ptr0,
         )
         return rid
@@ -1765,16 +1446,11 @@ class FileSink:
     def _target_columns(self, spark, manifest: dict) -> list[str] | None:
         """Column names of the live table, from ONE live file's footer
         (metadata read, no data). None for an empty table."""
-        if "groups" in manifest:
-            for g in manifest["groups"]:
-                ents = self._load_group(g)
-                if ents:
-                    return self._read_entries(spark, ents[:1]).columns
-            return None
-        ents = manifest.get("entries") or []
-        if not ents:
-            return None
-        return self._read_entries(spark, ents[:1]).columns
+        for g in manifest["groups"]:
+            ents = self._load_group(g)
+            if ents:
+                return self._read_entries(spark, ents[:1]).columns
+        return None
 
     def compact_runs(self, spark, run_id: str | None = None) -> str:
         """Rewrite the CURRENT snapshot as one fresh run and commit a
@@ -1785,10 +1461,10 @@ class FileSink:
 
         The rewrite reads layout-preserving (partition values must
         survive byte-for-byte — see sources.read_layout_preserving) and
-        the commit reuses the normal atomic pointer swap — CONDITIONED
-        on the exact pointer the rewrite read (the merge path's CAS
-        discipline): a commit landing between the snapshot read and the
-        publish makes compaction fail with ManifestConflictError
+        the commit is the normal put-if-absent log entry after the head
+        the rewrite read (the merge path's discipline): a commit landing
+        between the snapshot read and the publish takes that entry and
+        makes compaction fail with ManifestConflictError
         instead of silently erasing that commit's rows with a rewrite
         of the older snapshot. A crash mid-compaction leaves the
         previous snapshot current."""
@@ -1823,21 +1499,21 @@ class FileSink:
         newest ``keep_last`` committed snapshots. This is the ONLY
         destructive operation in manifest mode — everything else only
         adds immutable files — so retention of time travel is exactly
-        ``keep_last`` snapshots deep. Returns counts of what was
-        removed.
+        ``keep_last`` snapshots deep. Commit-log entries below the
+        oldest kept snapshot go too, after the ``_CURRENT`` hint is
+        pointed at the head, so head resolution never needs them.
+        Returns counts of what was removed.
 
         ``grace_seconds`` protects IN-FLIGHT committers (the Delta
         VACUUM retention-window idea): a run dir younger than the grace
         window may belong to a concurrent publish that has moved its
-        staging into ``_data/`` but not yet won the pointer swap —
+        staging into ``_data/`` but not yet put its log entry —
         deleting it would yank data out from under a commit about to
         succeed. Unreferenced-but-young runs (and their manifests) are
         skipped and collected by a later vacuum."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1 (the current snapshot)")
-        import time as _time
-
-        now = _time.time()
+        now = time.time()
 
         def _young(p: str) -> bool:
             try:
@@ -1846,16 +1522,14 @@ class FileSink:
                 return True  # vanished/unstattable: leave it alone
         history = self.manifest_history()
         keep_ids = set(history[:keep_last])
+        kept = [self.current_manifest(rid) for rid in keep_ids]
         live_runs: set[str] = set()
         live_groups: set[str] = set()
         data_root = os.path.join(self.path, "_data")
-        for rid in keep_ids:
-            m = self.current_manifest(rid, materialize=False)
-            for g in m.get("groups", []):
+        for m in kept:
+            for g in m["groups"]:
                 live_groups.add(os.path.basename(g["file"]))
-            for e in m.get("entries") or (
-                [x for g in m.get("groups", []) for x in self._load_group(g)]
-            ):
+            for e in m["entries"]:
                 rel = os.path.relpath(
                     os.path.join(self.path, e["file"]), data_root
                 )
@@ -1867,11 +1541,17 @@ class FileSink:
                 if rid not in live_runs and not _young(p):
                     _rm(p)
                     removed_runs += 1
+        if kept:
+            self._write_hint(manifest_rel(history[0]))
+            oldest = min(m.get("seq", 0) for m in kept)
+            for seq in log_seqs(self.path):
+                if seq < oldest:
+                    _rm(log_entry(self.path, seq))
         removed_manifests = 0
         mdir = os.path.join(self.path, "_manifests")
         if os.path.isdir(mdir):
             for mf in sorted(os.listdir(mdir)):
-                if mf == "groups" or mf.startswith("."):
+                if mf in ("groups", "log") or mf.startswith("."):
                     continue
                 rid = mf[: -len(".json")] if mf.endswith(".json") else mf
                 p = os.path.join(mdir, mf)
@@ -2180,19 +1860,6 @@ def new_run_id() -> str:
     return f"{int(time.time())}-{uuid.uuid4().hex[:8]}"
 
 
-def time_partition_column(
-    ts_col: str | Column, pattern: str = "yyyy/MM/dd", out: str = "dt"
-) -> tuple[str, Column]:
-    """Derived partition column from a record timestamp
-    (TimeBasedWriterPartitioner.partitionForRecord:147). Returned as
-    (name, expr) for ``withColumn`` + ``partition_by=[name]``. Pattern
-    '/' separators are mapped to '-' because partition values cannot
-    contain path separators in hive-style layouts; use nested patterns
-    (list of columns) for true yyyy/MM/dd directory trees."""
-    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    return out, F.date_format(c, pattern.replace("/", "-"))
-
-
 def schema_partition_column(
     df: DataFrame, out: str = "schema_name", name: str | None = None
 ) -> tuple[str, Column]:
@@ -2285,380 +1952,3 @@ def orc_tuned_options(
         "orc.compress": compression.upper(),
         "orc.rows.between.memory.checks": str(max(1, rows_per_stripe // 16)),
     }
-
-
-def _delta_schema_string(
-    parquet_file: str,
-    partition_cols: list[str] | None = None,
-    partition_values: list[dict] | None = None,
-) -> str:
-    """Spark-StructType-JSON schema string for a Delta ``metaData``
-    action, derived from one committed parquet file's footer (no Spark
-    session needed at export time). Covers the scalar/array/struct
-    types this lake writes; an unmapped physical type raises loudly
-    rather than emitting a schema a Delta reader would misparse.
-
-    Hive-partitioned data files don't store the partition columns, so
-    those are appended from the manifest's partition values with the
-    only type evidence the path encoding keeps: all-integer values
-    export as ``long``, anything else as ``string`` (the same
-    inference Spark's own partition discovery applies before casting)."""
-    import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def spark_type(t: pa.DataType):
-        if pa.types.is_boolean(t):
-            return "boolean"
-        if pa.types.is_int8(t):
-            return "byte"
-        if pa.types.is_int16(t):
-            return "short"
-        if pa.types.is_int32(t):
-            return "integer"
-        if pa.types.is_int64(t):
-            return "long"
-        if pa.types.is_float32(t):
-            return "float"
-        if pa.types.is_float64(t):
-            return "double"
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return "string"
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            return "binary"
-        if pa.types.is_date(t):
-            return "date"
-        if pa.types.is_timestamp(t):
-            return "timestamp"
-        if pa.types.is_decimal(t):
-            return f"decimal({t.precision},{t.scale})"
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return {
-                "type": "array",
-                "elementType": spark_type(t.value_type),
-                "containsNull": True,
-            }
-        if pa.types.is_struct(t):
-            return {
-                "type": "struct",
-                "fields": [
-                    {
-                        "name": t.field(i).name,
-                        "type": spark_type(t.field(i).type),
-                        "nullable": True,
-                        "metadata": {},
-                    }
-                    for i in range(t.num_fields)
-                ],
-            }
-        raise ValueError(f"export_delta_log: unmapped parquet type {t}")
-
-    schema = pq.ParquetFile(parquet_file).schema_arrow
-    fields = [
-        {
-            "name": f.name,
-            "type": spark_type(f.type),
-            "nullable": True,
-            "metadata": {},
-        }
-        for f in schema
-    ]
-    present = {f["name"] for f in fields}
-    for c in partition_cols or []:
-        if c in present:
-            continue
-        vals = [
-            pv.get(c) for pv in (partition_values or []) if pv.get(c) is not None
-        ]
-        all_int = bool(vals) and all(
-            v.lstrip("-").isdigit() for v in vals
-        )
-        fields.append(
-            {
-                "name": c,
-                "type": "long" if all_int else "string",
-                "nullable": True,
-                "metadata": {},
-            }
-        )
-    return json.dumps({"type": "struct", "fields": fields})
-
-
-def _expire_delta_log_dir(log_dir: str) -> int:
-    """Shared body of Delta log retention (see
-    ``FileSink.expire_delta_log``): delete commit JSONs and checkpoints
-    strictly older than the newest checkpoint. Standalone tables call
-    this through ``delta_maintenance.expire_delta_log``."""
-    import json as _json
-
-    lc_path = os.path.join(log_dir, "_last_checkpoint")
-    if not os.path.exists(lc_path):
-        return 0
-    with open(lc_path) as fh:
-        cp_v = int(_json.load(fh)["version"])
-    removed = 0
-    for f in os.listdir(log_dir):
-        if ".tmp-" in f:
-            continue  # a concurrent exporter's in-flight write
-        v: int | None = None
-        if f.endswith(".json") and f[:-5].isdigit():
-            v = int(f[:-5])
-            if v >= cp_v:
-                continue
-        elif ".checkpoint" in f and f.split(".")[0].isdigit():
-            v = int(f.split(".")[0])
-            if v >= cp_v:
-                continue
-        if v is None:
-            continue
-        try:
-            os.remove(os.path.join(log_dir, f))
-            removed += 1
-        except OSError:
-            pass
-    return removed
-
-
-def _delta_file_stats(entry: dict, ts_cols: set[str]) -> str | None:
-    """One manifest entry's Delta ``add.stats`` JSON string
-    (PROTOCOL.md Per-file Statistics: numRecords, minValues,
-    maxValues). Values of TIMESTAMP-typed columns (``ts_cols``, from
-    the table schema — never guessed from the value's shape, which
-    would corrupt string columns that merely look like timestamps and
-    desynchronize exported bounds from space-form filter literals) are
-    re-separated with 'T' (the manifest stores ISO with a space; Delta
-    readers parse the 'T' form). Returns None when the entry carries no
-    row count — stats are an optimization, never a requirement."""
-    import json as _json
-
-    rows = entry.get("rows")
-    if rows is None:
-        return None
-    out: dict = {"numRecords": int(rows)}
-    stats = entry.get("stats") or {}
-    if stats:
-
-        def _norm(c, v):
-            if c in ts_cols and isinstance(v, str):
-                return v.replace(" ", "T", 1)
-            return v
-
-        out["minValues"] = {c: _norm(c, v[0]) for c, v in stats.items()}
-        out["maxValues"] = {c: _norm(c, v[1]) for c, v in stats.items()}
-    nulls = entry.get("nulls") or {}
-    if nulls:
-        out["nullCount"] = {c: int(n) for c, n in nulls.items()}
-    return _json.dumps(out)
-
-
-def _write_delta_checkpoint(
-    log_dir: str,
-    version: int,
-    adds: list[dict],
-    meta: dict | None,
-    proto: dict,
-    removes: list[dict] | None = None,
-    part_size: int | None = None,
-    txns: list[dict] | None = None,
-) -> None:
-    """Write a Delta checkpoint parquet (one row per action: protocol,
-    metaData, every live add, every un-expired remove tombstone, every
-    appId's latest txn/SetTransaction — dropping those would reset
-    idempotent streaming writers' epoch watermarks) + the
-    ``_last_checkpoint`` pointer — pyarrow-direct, no Spark session at
-    export time. Schema follows the checkpoint-files section of
-    delta-io PROTOCOL.md (nullable action structs; partitionValues/
-    options/configuration as string maps). Tombstones matter to foreign
-    engines that trust ``_last_checkpoint``: without them a reader
-    loses vacuum-safety visibility even though live-state replay stays
-    correct."""
-    import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    smap = pa.map_(pa.string(), pa.string())
-    # deletion vectors MUST survive a checkpoint (PROTOCOL.md: the
-    # checkpoint is a complete replay source) — a schema without the
-    # descriptor would silently resurrect deleted rows for any reader
-    # trusting _last_checkpoint
-    dv_t = pa.struct(
-        [
-            ("storageType", pa.string()),
-            ("pathOrInlineDv", pa.string()),
-            ("offset", pa.int32()),
-            ("sizeInBytes", pa.int32()),
-            ("cardinality", pa.int64()),
-        ]
-    )
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", smap),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("stats", pa.string()),
-            ("deletionVector", dv_t),
-        ]
-    )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct([("provider", pa.string()), ("options", smap)])),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-            ("configuration", smap),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    # table-features form (3,7) carries feature LISTS; dropping them
-    # in a checkpoint would strip obligations (deletionVectors,
-    # columnMapping...) from checkpoint-trusting replays
-    proto_t = pa.struct(
-        [
-            ("minReaderVersion", pa.int32()),
-            ("minWriterVersion", pa.int32()),
-            ("readerFeatures", pa.list_(pa.string())),
-            ("writerFeatures", pa.list_(pa.string())),
-        ]
-    )
-
-    removes = removes or []
-    txns = txns or []
-    txn_t = pa.struct(
-        [
-            ("appId", pa.string()),
-            ("version", pa.int64()),
-            ("lastUpdated", pa.int64()),
-        ]
-    )
-    remove_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("deletionTimestamp", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("deletionVector", dv_t),
-        ]
-    )
-    rows_proto = [proto] + [None] * (
-        1 + len(adds) + len(removes) + len(txns)
-    )
-    meta_row = (
-        {
-            "id": meta.get("id") if meta else None,
-            "format": (meta or {}).get("format", {"provider": "parquet", "options": {}}),
-            "schemaString": (meta or {}).get("schemaString"),
-            "partitionColumns": (meta or {}).get("partitionColumns", []),
-            "configuration": list(((meta or {}).get("configuration") or {}).items()),
-            "createdTime": (meta or {}).get("createdTime"),
-        }
-        if meta
-        else None
-    )
-    if meta_row and meta_row["format"]:
-        meta_row["format"] = {
-            "provider": meta_row["format"].get("provider"),
-            "options": list((meta_row["format"].get("options") or {}).items()),
-        }
-    rows_meta = [None, meta_row] + [None] * (
-        len(adds) + len(removes) + len(txns)
-    )
-    def _dv_row(action: dict):
-        dv = action.get("deletionVector")
-        if not dv:
-            return None
-        return {
-            "storageType": dv.get("storageType"),
-            "pathOrInlineDv": dv.get("pathOrInlineDv"),
-            "offset": dv.get("offset"),
-            "sizeInBytes": dv.get("sizeInBytes"),
-            "cardinality": dv.get("cardinality"),
-        }
-
-    rows_add = [None, None] + [
-        {
-            "path": a["path"],
-            "partitionValues": list((a.get("partitionValues") or {}).items()),
-            "size": a.get("size"),
-            "modificationTime": a.get("modificationTime"),
-            "dataChange": bool(a.get("dataChange", True)),
-            "stats": a.get("stats"),
-            "deletionVector": _dv_row(a),
-        }
-        for a in adds
-    ] + [None] * (len(removes) + len(txns))
-    rows_remove = [None] * (2 + len(adds)) + [
-        {
-            "path": r["path"],
-            "deletionTimestamp": r.get("deletionTimestamp"),
-            "dataChange": bool(r.get("dataChange", True)),
-            "deletionVector": _dv_row(r),
-        }
-        for r in removes
-    ] + [None] * len(txns)
-    rows_txn = [None] * (2 + len(adds) + len(removes)) + [
-        {
-            "appId": t["appId"],
-            "version": t.get("version"),
-            "lastUpdated": t.get("lastUpdated"),
-        }
-        for t in txns
-    ]
-    total = len(rows_proto)
-
-    def _write_part(path: str, sl: slice) -> None:
-        table = pa.table(
-            {
-                "protocol": pa.array(rows_proto[sl], type=proto_t),
-                "metaData": pa.array(rows_meta[sl], type=meta_t),
-                "add": pa.array(rows_add[sl], type=add_t),
-                "remove": pa.array(rows_remove[sl], type=remove_t),
-                "txn": pa.array(rows_txn[sl], type=txn_t),
-            }
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-
-    parts_n = None
-    if part_size and total > part_size:
-        # multi-part checkpoint (PROTOCOL.md {v}.checkpoint.{i}.{n}
-        # .parquet, 1-indexed): at 100 TB a live set of millions of
-        # adds in ONE parquet serializes the write and the read —
-        # parts let both sides parallelize; the reader
-        # (_checkpoint_files) already consumes this form
-        parts_n = (total + part_size - 1) // part_size
-        for i in range(parts_n):
-            _write_part(
-                os.path.join(
-                    log_dir,
-                    f"{version:020d}.checkpoint."
-                    f"{i + 1:010d}.{parts_n:010d}.parquet",
-                ),
-                slice(i * part_size, (i + 1) * part_size),
-            )
-    else:
-        _write_part(
-            os.path.join(log_dir, f"{version:020d}.checkpoint.parquet"),
-            slice(None),
-        )
-    lc_path = os.path.join(log_dir, "_last_checkpoint")
-    # never REGRESS the pointer: a slow exporter finishing an older
-    # checkpoint after a newer one landed (or after expire_delta_log
-    # deleted its pre-checkpoint files) must not point readers at a
-    # checkpoint that may no longer exist
-    try:
-        with open(lc_path) as fh:
-            if int(json.load(fh).get("version", -1)) >= version:
-                return
-    except (OSError, ValueError):
-        pass
-    lc_tmp = os.path.join(log_dir, f"_last_checkpoint.tmp-{os.getpid()}")
-    with open(lc_tmp, "w") as fh:
-        lc: dict = {"version": version, "size": total}
-        if parts_n:
-            lc["parts"] = parts_n
-        json.dump(lc, fh)
-    os.replace(lc_tmp, lc_path)

@@ -883,15 +883,10 @@ def export_iceberg(
 
     if sink.fmt != "parquet":
         raise ValueError("export_iceberg requires a parquet lake")
-    manifest = sink.current_manifest(as_of_run, materialize=False)
+    manifest = sink.current_manifest(as_of_run)
     if manifest is None:
         raise FileNotFoundError(f"no committed manifest under {sink.path}")
-    if "groups" in manifest:
-        entries = [
-            e for g in manifest["groups"] for e in sink._load_group(g)
-        ]
-    else:
-        entries = manifest["entries"]
+    entries = manifest["entries"]
 
     location = os.path.abspath(sink.path)
     meta_dir = os.path.join(location, "metadata")

@@ -40,7 +40,6 @@ any batch.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -49,35 +48,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from incubator_gobblin_spark.sources.manifest_import import (
+    load_entries,
+    load_run,
+    read_head,
+)
+
 # ---------------------------------------------------------------- manifests
-
-
-def _read_pointer(root: str) -> str | None:
-    ptr = os.path.join(root, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        rel = fh.read().strip()
-    with open(os.path.join(root, rel)) as fh:
-        return json.load(fh)["run_id"]
-
-
-def _load_manifest(root: str, rid: str) -> dict:
-    mpath = os.path.join(root, "_manifests", f"{rid}.json")
-    if not os.path.exists(mpath):
-        raise ValueError(
-            f"manifest for run {rid!r} is gone (vacuumed?) — "
-            "re-baseline the consumer"
-        )
-    with open(mpath) as fh:
-        m = json.load(fh)
-    if "entries" not in m:
-        ents = []
-        for g in m.get("groups", []):
-            with open(os.path.join(root, g["file"])) as fh:
-                ents.extend(json.load(fh)["entries"])
-        m["entries"] = ents
-    return m
 
 
 def _chain(root: str, from_rid: str | None, to_rid: str) -> list[dict]:
@@ -86,7 +63,8 @@ def _chain(root: str, from_rid: str | None, to_rid: str) -> list[dict]:
     out: list[dict] = []
     rid: str | None = to_rid
     while rid is not None and rid != from_rid:
-        m = _load_manifest(root, rid)
+        m = load_run(root, rid)
+        m["entries"] = load_entries(root, m)
         out.append(m)
         rid = m.get("parent")
     if rid != from_rid and from_rid is not None:
@@ -120,7 +98,7 @@ def _commit_actions(
             parent_files = {e["file"] for e in parent_m["entries"]}
         else:
             parent_files = {
-                e["file"] for e in _load_manifest(root, parent)["entries"]
+                e["file"] for e in load_entries(root, load_run(root, parent))
             }
     cur_files = {e["file"] for e in m["entries"]}
     actions = [
@@ -184,13 +162,12 @@ def snapshot_ddl(root: str, include_ordinal: bool = True) -> str:
     multi-commit batches."""
     import pyarrow.parquet as pq
 
-    rid = _read_pointer(root)
-    if rid is None:
+    m = read_head(root).manifest
+    if m is None:
         raise FileNotFoundError(f"no committed manifest under {root}")
-    m = _load_manifest(root, rid)
     # with schema evolution the NEWEST run's files carry the widest
     # schema; entries are ordered carried-first, so scan from the end
-    for e in reversed(m["entries"]):
+    for e in reversed(load_entries(root, m)):
         f = os.path.join(root, e["file"])
         if os.path.exists(f):
             schema = pq.ParquetFile(f).schema_arrow
@@ -226,11 +203,12 @@ class LakeCdfStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self.start_opt == "latest":
-            return {"run": _read_pointer(self.root) or ""}
+            return self.latestOffset()
         return {"run": ""}
 
     def latestOffset(self) -> dict:
-        return {"run": _read_pointer(self.root) or ""}
+        m = read_head(self.root).manifest
+        return {"run": m["run_id"] if m else ""}
 
     def partitions(self, start: dict, end: dict):
         from_rid = start.get("run") or None

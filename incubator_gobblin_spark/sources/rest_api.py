@@ -525,12 +525,17 @@ def ingest_rest_incremental(
     derived from the LOW watermark; then commit the new high watermark.
     Mirrors jobs/kafka_ingest.ingest_kafka_batch.
 
-    Idempotent replay: keying the run id on (table, low) — NOT the
-    interval — makes a crash between publish and state commit converge
-    even when the source GREW in between: the replay re-queries a
-    higher high and re-publishes (low, high'] under the SAME run id,
-    which the manifest sink's same-run republish supersedes (drops the
-    partial attempt's files) instead of double-appending the overlap."""
+    Idempotent replay: the run id is keyed on (table, low). A crash
+    between publish and state commit leaves that run committed, and a
+    committed run is never republished (the manifest sink makes that
+    publish a no-op). The replay therefore first finishes the crashed
+    run's state commit at the highest watermark that run actually
+    published, read back from its committed snapshot (that replay
+    returns the committed run), and then ingests the rest — the rows
+    the source GREW by in between — as the next run, so the overlap is
+    never double-appended or lost."""
+    import hashlib
+
     from incubator_gobblin_spark.state import TableState
 
     if getattr(sink, "commit_mode", None) != "manifest":
@@ -538,24 +543,47 @@ def ingest_rest_incremental(
             "exactly-once REST ingestion requires a manifest-mode sink"
         )
     table = table or f"rest:{source.resource}"
+    wm = source.wm_column
     st = store.get(table)
     low = st.high_watermark
-    high = endpoint.high_watermark(source.resource, source.wm_column)
+
+    def run_id_for(low) -> str:
+        return "rest-" + hashlib.md5(f"{table}|{low}".encode()).hexdigest()[:16]
+
+    run_id = run_id_for(low)
+    high = endpoint.high_watermark(source.resource, wm)
+    if run_id in sink.manifest_history():
+        done = sink.read_committed(
+            spark,
+            as_of_run=run_id,
+            filters=None if low is None else [(wm, ">", low)],
+        )
+        reached = done.agg(F.max(wm)).first()[0]
+        if reached is None:
+            raise RuntimeError(
+                f"run {run_id!r} is committed but holds no {wm!r} value above "
+                f"{low!r} (did transform drop every row?): the watermark it "
+                "reached is unknown — re-baseline the table state"
+            )
+        store.commit(
+            table,
+            TableState(high_watermark=reached, last_run_id=run_id, extra=st.extra),
+        )
+        if high is None or high <= reached:
+            return {"published": True, "low": low, "high": reached, "run_id": run_id}
+        low, run_id = reached, run_id_for(reached)
     if high is None or (low is not None and high <= low):
         return {"published": False, "low": low, "high": high}
     df = read_rest(
         spark,
         source,
         endpoint,
-        WatermarkInterval(source.wm_column, low, high),
+        WatermarkInterval(wm, low, high),
         num_partitions=num_partitions,
         order_by=order_by,
     )
     if transform is not None:
         df = transform(df)
-    import hashlib
-
-    run_id = "rest-" + hashlib.md5(f"{table}|{low}".encode()).hexdigest()[:16]
     sink.write_staging(df, run_id)
     sink.publish(run_id)
     store.commit(

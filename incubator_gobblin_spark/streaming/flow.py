@@ -376,10 +376,10 @@ class StreamPipeline:
         compaction, and vacuum all compose with streaming output.
 
         Exactly-once: the run id is the epoch id. A batch retried after
-        a crash re-publishes the same ``epoch-N`` run — manifest publish
-        with an existing run_id rebuilds that run's entries instead of
-        appending twice, and the pointer swap is atomic, so readers see
-        each epoch exactly once regardless of retries."""
+        a crash re-publishes the same ``epoch-N`` run — a manifest
+        publish of an already-committed run id is a no-op instead of a
+        second append, and the commit is one put-if-absent log entry,
+        so readers see each epoch exactly once regardless of retries."""
 
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
             rid = f"epoch-{epoch_id:012d}"

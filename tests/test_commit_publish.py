@@ -191,7 +191,8 @@ def test_delta_dml_failure_before_publish_leaves_nothing(
     """A MERGE or DELETE that raises after it staged files (here: while
     staging its change data files) removes every file it staged — the
     deletion vector bitmaps and the MERGE's new data files — so the
-    table tree is exactly what it was before the call."""
+    table tree is exactly what it was before the call, and unpersists
+    every frame it cached."""
     from incubator_gobblin_spark.sinks import delta_maintenance as DM
 
     root = str(tmp_path / "cdf")
@@ -206,6 +207,7 @@ def test_delta_dml_failure_before_publish_leaves_nothing(
         raise OSError("injected: change data staging failed")
 
     monkeypatch.setattr(DM, "stage_cdc_files", broken_stage)
+    spark.catalog.clearCache()
     with pytest.raises(OSError, match="injected"):
         if op == "merge":
             src = spark.createDataFrame([(3, 0), (99, 0)], "k long, v long")
@@ -215,6 +217,7 @@ def test_delta_dml_failure_before_publish_leaves_nothing(
     monkeypatch.undo()
 
     assert _tree(root) == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize("fault", ["link_eio", "unserializable"])

@@ -25,6 +25,7 @@ from incubator_gobblin_spark.session import load_table
 from incubator_gobblin_spark.sinks.jdbc import (
     publish_plan,
     staging_table_name,
+    write_jdbc_staged,
 )
 from incubator_gobblin_spark.sources import jdbc as J
 from incubator_gobblin_spark.sources import kafka_batch as K
@@ -190,6 +191,27 @@ def test_jdbc_publish_replace_mode():
     for stmt in plan.insert_final_from_staging.split("; "):
         con.sql(stmt)
     assert [r[0] for r in con.sql("SELECT v FROM snap").fetchall()] == [2]
+
+
+def test_jdbc_staged_write_on_derby(spark):
+    """write_jdbc_staged loads the run-scoped staging table through
+    Spark's JDBC writer (embedded in-memory Derby, from Spark's own
+    jars) and returns the publish plan that moves it into the final
+    table."""
+    url = "jdbc:derby:memory:jdbc_staged;create=true"
+    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(7)], "id INT, v STRING"
+    )
+    plan = write_jdbc_staged(
+        df, url, "EVT", "r1", properties=props, num_partitions=2
+    )
+    staging = staging_table_name("EVT", "r1")
+    assert plan == publish_plan("EVT", staging)
+    back = spark.read.jdbc(url, staging, properties=props)
+    assert sorted((r.id, r.v) for r in back.collect()) == [
+        (i, f"v{i}") for i in range(7)
+    ]
 
 
 # ------------------------------------------------------- Hive materialization

@@ -3,8 +3,8 @@
 Rename-based publish (BaseDataPublisher.movePath:496) is atomic per
 path only on POSIX/HDFS; on S3/GCS a rename is copy+delete. Manifest
 mode keeps data files in immutable run dirs and commits with ONE
-atomic pointer swap; a crash anywhere before the swap leaves the
-previous snapshot intact and readable."""
+put-if-absent commit-log entry; a crash anywhere before the put leaves
+the previous snapshot intact and readable."""
 
 import os
 
@@ -73,22 +73,22 @@ def test_snapshot_append_partition_swap(spark, sf_dir, tmp_path):
 
 
 def test_crash_before_pointer_swap_preserves_snapshot(spark, sf_dir, tmp_path, monkeypatch):
-    """Crash after data move + manifest write but BEFORE the pointer
-    swap: readers still see run1; retrying the publish converges."""
+    """Crash after data move + manifest write but BEFORE the commit-log
+    put: readers still see run1; retrying the publish converges."""
     df = load_table(spark, sf_dir, "region")
     sink = _sink(tmp_path / "t")
     sink.write_staging(df, "run1")
     sink.publish("run1")
 
     sink.write_staging(df, "run2")
-    real_replace = os.replace
+    real_link = os.link
 
-    def _crashing_replace(src, dst):
-        if dst.endswith("_CURRENT"):
+    def _crashing_link(src, dst):
+        if os.path.join("_manifests", "log") in dst:
             raise OSError("simulated crash during commit")
-        return real_replace(src, dst)
+        return real_link(src, dst)
 
-    monkeypatch.setattr(os, "replace", _crashing_replace)
+    monkeypatch.setattr(os, "link", _crashing_link)
     with pytest.raises(OSError, match="simulated crash"):
         sink.publish("run2")
     monkeypatch.undo()
@@ -711,6 +711,158 @@ def test_concurrent_commit_conflict_detected(spark, sf_dir, tmp_path):
     assert sink.manifest_history() == ["c2", "c1", "base"]
 
 
+def test_lost_log_put_raises_conflict_and_leaves_no_temp(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A racer commits on the same base while this commit is between its
+    manifest write and its commit-log put: the racer's log entry for the
+    seq appears first, this put loses, the commit raises
+    ManifestConflictError, the racer stays the head, and no ``*.tmp-*``
+    file is left behind."""
+    from incubator_gobblin_spark.sinks.files import ManifestConflictError
+    from incubator_gobblin_spark.sources.manifest_import import log_entry
+
+    region = load_table(spark, sf_dir, "region")
+    root = str(tmp_path / "t")
+    sink = _sink(root)
+    sink.write_staging(region, "base")
+    sink.publish("base")
+    racer = _sink(root)
+    racer.write_staging(region.limit(1), "racer")
+    sink.write_staging(region.limit(2), "loser")
+    real_link = os.link
+    raced = []
+
+    def racing_link(src, dst):
+        if dst == log_entry(root, 2) and not raced:
+            raced.append(dst)
+            racer.publish("racer")  # takes log entry 2 first
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", racing_link)
+    with pytest.raises(ManifestConflictError):
+        sink.publish("loser")
+    monkeypatch.undo()
+
+    assert raced
+    assert sink.manifest_history() == ["racer", "base"]
+    assert sink.read_committed(spark).count() == 5 + 1
+    leftovers = [
+        f for _, _, fs in os.walk(root) for f in fs if ".tmp-" in f
+    ]
+    assert leftovers == []
+    # the loser's manifest is named by no log entry: its retry commits
+    sink.publish("loser")
+    assert sink.manifest_history() == ["loser", "racer", "base"]
+    assert sink.read_committed(spark).count() == 5 + 1 + 2
+
+
+def _crash_hint(monkeypatch):
+    def crash(self, mrel):
+        raise OSError("simulated crash before the hint write")
+
+    monkeypatch.setattr(FileSink, "_write_hint", crash)
+
+
+def test_crash_between_log_put_and_hint_keeps_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash after the commit-log put but before the ``_CURRENT`` hint
+    write loses nothing: current_manifest(), the next commit's base and
+    the lakecdf stream's latestOffset all follow the log past the stale
+    hint, and retrying the publish is a no-op."""
+    from incubator_gobblin_spark.sources.lake_cdf import LakeCdfStreamReader
+
+    region = load_table(spark, sf_dir, "region")
+    root = str(tmp_path / "t")
+    sink = _sink(root)
+    sink.write_staging(region, "run1")
+    sink.publish("run1")
+    sink.write_staging(region, "run2")
+    _crash_hint(monkeypatch)
+    with pytest.raises(OSError, match="simulated crash"):
+        sink.publish("run2")
+    monkeypatch.undo()
+
+    with open(os.path.join(root, "_CURRENT")) as fh:
+        assert fh.read() == os.path.join("_manifests", "run1.json")
+    assert sink.current_manifest()["run_id"] == "run2"
+    assert sink.read_committed(spark).count() == 10
+    reader = LakeCdfStreamReader({"path": root}, ["r_regionkey", "_change_type"])
+    assert reader.latestOffset() == {"run": "run2"}
+    assert sink.publish("run2") == []  # committed: the retry is a no-op
+    sink.write_staging(region, "run3")
+    sink.publish("run3")
+    assert sink.manifest_history() == ["run3", "run2", "run1"]
+    assert sink.read_committed(spark).count() == 15
+
+
+def test_vacuum_after_hint_crash_keeps_head(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """vacuum expires commit-log entries below the oldest kept snapshot
+    (and only those) without losing the head, even when the last
+    commit's hint write crashed: current_manifest(), manifest_history()
+    and one more commit all still resolve it."""
+    from incubator_gobblin_spark.sources.manifest_import import log_seqs
+
+    region = load_table(spark, sf_dir, "region")
+    root = str(tmp_path / "t")
+    sink = _sink(root)
+    for rid in ("run1", "run2"):
+        sink.write_staging(region, rid)
+        sink.publish(rid)
+    sink.write_staging(region, "run3")
+    _crash_hint(monkeypatch)
+    with pytest.raises(OSError, match="simulated crash"):
+        sink.publish("run3")
+    monkeypatch.undo()
+
+    res = sink.vacuum(keep_last=1, grace_seconds=0)
+    assert res["manifests_deleted"] == 2
+    assert log_seqs(root) == [3]
+    assert sink.current_manifest()["run_id"] == "run3"
+    assert sink.manifest_history() == ["run3"]
+    sink.write_staging(region, "run4")
+    sink.publish("run4")
+    assert sink.manifest_history() == ["run4", "run3"]
+    assert sink.read_committed(spark).count() == 20
+
+
+def test_lake_without_commit_log_reads_and_commits(spark, sf_dir, tmp_path):
+    """A lake written before the commit log existed (the ``_CURRENT``
+    pointer and manifests without a ``seq``) stays readable at seq 0 and
+    takes its next commit at log entry 1."""
+    import json
+    import shutil
+
+    from incubator_gobblin_spark.sources.manifest_import import log_seqs
+
+    region = load_table(spark, sf_dir, "region")
+    root = str(tmp_path / "t")
+    sink = _sink(root)
+    for rid in ("run1", "run2"):
+        sink.write_staging(region, rid)
+        sink.publish(rid)
+    shutil.rmtree(os.path.join(root, "_manifests", "log"))
+    for rid in ("run1", "run2"):
+        mpath = os.path.join(root, "_manifests", f"{rid}.json")
+        with open(mpath) as fh:
+            m = json.load(fh)
+        del m["seq"]
+        with open(mpath, "w") as fh:
+            json.dump(m, fh)
+
+    assert sink.current_manifest()["run_id"] == "run2"
+    assert sink.read_committed(spark).count() == 10
+    sink.write_staging(region, "run3")
+    sink.publish("run3")
+    assert log_seqs(root) == [1]
+    assert sink.current_manifest()["seq"] == 1
+    assert sink.manifest_history() == ["run3", "run2", "run1"]
+    assert sink.read_committed(spark).count() == 15
+
+
 def test_merge_commit_reads_only_candidate_groups(
     spark, sf_dir, tmp_path, monkeypatch
 ):
@@ -917,9 +1069,9 @@ def test_lake_lifecycle_merge_compact_vacuum(spark, sf_dir, tmp_path):
 
 def test_merge_into_threaded_contention_all_applied(spark, sf_dir, tmp_path):
     """Four writers merging DISJOINT key ranges into one lake
-    concurrently, each with a conflict-retry budget: the flock-CAS
-    pointer must serialize them so every merge lands (no lost update)
-    and every row carries exactly one writer's stamp."""
+    concurrently, each with a conflict-retry budget: the put-if-absent
+    commit-log entry must serialize them so every merge lands (no lost
+    update) and every row carries exactly one writer's stamp."""
     import threading
 
     df = spark.createDataFrame(
@@ -2760,7 +2912,7 @@ def test_delta_last_checkpoint_never_regresses(spark, sf_dir, tmp_path):
     the older checkpoint file may not even exist anymore)."""
     import json as _json
 
-    from incubator_gobblin_spark.sinks.files import _write_delta_checkpoint
+    from incubator_gobblin_spark.sinks.delta_export import _write_delta_checkpoint
 
     df = load_table(spark, sf_dir, "region")
     root = str(tmp_path / "lcreg")
