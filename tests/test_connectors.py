@@ -198,20 +198,30 @@ def test_jdbc_staged_write_on_derby(spark):
     Spark's JDBC writer (embedded in-memory Derby, from Spark's own
     jars) and returns the publish plan that moves it into the final
     table."""
-    url = "jdbc:derby:memory:jdbc_staged;create=true"
+    import contextlib
+
+    db = "jdbc:derby:memory:jdbc_staged"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(7)], "id INT, v STRING"
     )
-    plan = write_jdbc_staged(
-        df, url, "EVT", "r1", properties=props, num_partitions=2
-    )
-    staging = staging_table_name("EVT", "r1")
-    assert plan == publish_plan("EVT", staging)
-    back = spark.read.jdbc(url, staging, properties=props)
-    assert sorted((r.id, r.v) for r in back.collect()) == [
-        (i, f"v{i}") for i in range(7)
-    ]
+    try:
+        plan = write_jdbc_staged(
+            df, f"{db};create=true", "EVT", "r1", properties=props,
+            num_partitions=2,
+        )
+        staging = staging_table_name("EVT", "r1")
+        assert plan == publish_plan("EVT", staging)
+        back = spark.read.jdbc(db, staging, properties=props)
+        assert sorted((r.id, r.v) for r in back.collect()) == [
+            (i, f"v{i}") for i in range(7)
+        ]
+    finally:
+        # an in-memory Derby database left open slowed this session's
+        # later hive-jdbc gateway tests by minutes; Derby reports a
+        # successful drop as an exception
+        with contextlib.suppress(Exception):
+            spark._jvm.java.sql.DriverManager.getConnection(f"{db};drop=true")
 
 
 # ------------------------------------------------------- Hive materialization
