@@ -75,6 +75,7 @@ from incubator_gobblin_spark.sources.delta_import import (
     column_layout,
     column_mapping_mode,
 )
+from incubator_gobblin_spark.sources.files import scan_files
 
 #: writer features a value-preserving file rewrite cannot violate.
 #: rowTracking is NOT here: rewriting moves rows across files, and a
@@ -615,7 +616,7 @@ def compact_delta_files(
     try:
         for key, sel in plan:
             files = [add_file_path(path, rel) for rel, _ in sel]
-            scan = spark.read.schema(data_schema).parquet(*files)
+            scan = scan_files(spark, files, schema=data_schema)
             df = anti_join_dvs(
                 spark,
                 scan.select(

@@ -54,6 +54,8 @@ from incubator_gobblin_spark.sources.manifest_import import (
     HINT,
     LOG_DIR,
     Head,
+    history,
+    is_committed,
     load_entries,
     load_group,
     load_run,
@@ -470,20 +472,9 @@ class FileSink:
         return load_group(self.path, group)
 
     def manifest_history(self) -> list[str]:
-        """Committed run ids, newest first, by walking the parent chain
-        from the head (only COMMITTED snapshots appear — a manifest
-        file that lost its log put is not in any chain)."""
-        chain: list[str] = []
-        m = self.current_manifest(materialize=False)
-        while m is not None:
-            chain.append(m["run_id"])
-            if not m["parent"]:
-                break
-            try:
-                m = self.current_manifest(m["parent"], materialize=False)
-            except FileNotFoundError:  # parent vacuumed away
-                break
-        return chain
+        """Committed run ids, newest first (see
+        :func:`~incubator_gobblin_spark.sources.manifest_import.history`)."""
+        return history(self.path)
 
     def _publish_manifest(
         self,
@@ -502,7 +493,7 @@ class FileSink:
         that landed since makes it raise :class:`ManifestConflictError`.
         A crash anywhere before the put leaves the previous snapshot
         fully readable; re-running publish with the same run_id
-        converges. A run id already in :meth:`manifest_history` is
+        converges. A run id already committed (:func:`is_committed`) is
         committed: publishing it again drops its staging and returns
         ``[]``, before ``_data/<run_id>`` is touched.
 
@@ -521,7 +512,7 @@ class FileSink:
         + unioned column stats, letting readers prune partitions
         without fetching their group files.
         """
-        if run_id in self.manifest_history():
+        if is_committed(self.path, run_id):
             self.abort(run_id)
             return []
         head = expected_ptr if expected_ptr is not None else self._read_pointer()
@@ -707,9 +698,12 @@ class FileSink:
         scale the win is skipping the GETs entirely, not just row
         groups. The same predicates are then applied as real Spark
         filters, so results are exact whether or not a file could be
-        pruned (stats are an optimization, never semantics)."""
-        from incubator_gobblin_spark.formats.avro_ocf import resolve_format as _rf
+        pruned (stats are an optimization, never semantics).
 
+        The frame scans the manifest's file list as committed: its
+        partition columns are the manifest's ``partition_by`` (a sink
+        constructed without them still reads them back), and building
+        it starts no Spark job (see :meth:`_read_entries`)."""
         manifest = self.current_manifest(as_of_run, materialize=False)
         if manifest is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
@@ -741,35 +735,48 @@ class FileSink:
                     f"snapshot under {self.path} is empty (zero data files) — "
                     "no schema available to build a typed empty frame"
                 )
-            empty = self._read_entries(spark, [sample]).limit(0)
+            empty = self._read_entries(spark, [sample], manifest).limit(0)
             return _apply_filters(empty, filters)
-        return _apply_filters(self._read_entries(spark, entries), filters)
+        return _apply_filters(self._read_entries(spark, entries, manifest), filters)
 
-    def _read_entries(self, spark, entries: list[dict]) -> DataFrame:
-        """Scan exactly these manifest entries' files. Partition columns
-        resolve against a per-run basePath (the run-id path segment is
-        not a key=value dir); one read per live run dir, unioned by
-        name. Live-run count is bounded — compaction rewrites old runs
-        into one."""
+    def _read_entries(
+        self, spark, entries: list[dict], manifest: dict
+    ) -> DataFrame:
+        """Scan exactly these entries of ``manifest``, through
+        :func:`~incubator_gobblin_spark.sources.files.scan_files`: the
+        schema comes from one footer and the files are statted on the
+        driver, so building the frame starts no Spark job. Format and
+        partition columns are the manifest's, not this sink's
+        constructor arguments. Partition columns resolve against a
+        per-run basePath (the run-id path segment is not a key=value
+        dir); one scan per live run dir, unioned by name. Live-run
+        count is bounded — compaction rewrites old runs into one.
+
+        The one exception: an unpartitioned ``schema_evolution`` lake
+        keeps ``mergeSchema`` inference, so its read starts a Spark
+        job."""
         from incubator_gobblin_spark.formats.avro_ocf import resolve_format as _rf
+        from incubator_gobblin_spark.sources.files import scan_files
 
+        fmt = manifest.get("fmt", self.fmt)
         files = [os.path.join(self.path, e["file"]) for e in entries]
-        if not self.partition_by:
-            reader = spark.read.format(_rf(self.fmt))
-            if self.schema_evolution and self.fmt == "parquet":
+        if not manifest.get("partition_by"):
+            if self.schema_evolution and fmt == "parquet":
                 # footer-merge so an evolved (widened) run's new column
                 # survives schema inference; absent files null-fill
-                reader = reader.option("mergeSchema", "true")
-            return reader.load(files)
+                return (
+                    spark.read.format(_rf(fmt))
+                    .option("mergeSchema", "true")
+                    .load(files)
+                )
+            return scan_files(spark, files, fmt)
         by_run: dict[str, list[str]] = {}
         data_root = os.path.join(self.path, "_data")
         for f_ in files:
             rid = os.path.relpath(f_, data_root).split(os.sep, 1)[0]
             by_run.setdefault(rid, []).append(f_)
         parts = [
-            spark.read.format(_rf(self.fmt))
-            .option("basePath", os.path.join(data_root, rid))
-            .load(fs)
+            scan_files(spark, fs, fmt, base_path=os.path.join(data_root, rid))
             for rid, fs in sorted(by_run.items())
         ]
         df = parts[0]
@@ -820,7 +827,7 @@ class FileSink:
         if head.manifest is None:
             raise FileNotFoundError(f"nothing committed under {self.path}")
         rid = run_id or f"rollback-{new_run_id()}"
-        if rid in self.manifest_history():
+        if is_committed(self.path, rid):
             return rid
         target = self.current_manifest(target_run_id)
         missing = [
@@ -1044,8 +1051,8 @@ class FileSink:
                 .limit(0)
                 .withColumn(ct, F.lit("").cast("string"))
             )
-        added_df = self._read_entries(spark, added) if added else None
-        removed_df = self._read_entries(spark, removed) if removed else None
+        added_df = self._read_entries(spark, added, new_m) if added else None
+        removed_df = self._read_entries(spark, removed, old_m) if removed else None
         if added_df is not None and removed_df is not None:
             if self.schema_evolution and set(added_df.columns) != set(
                 removed_df.columns
@@ -1114,7 +1121,7 @@ class FileSink:
                 .withColumn("_change_type", F.lit("").cast("string"))
             )
             return empty, commit
-        if from_run not in self.manifest_history():
+        if not is_committed(self.path, from_run):
             raise ValueError(
                 f"consumed-through run {from_run!r} is no longer in the "
                 "manifest history (vacuumed?) — re-baseline the consumer"
@@ -1186,7 +1193,7 @@ class FileSink:
         # committed run (data loss). Crashed-BEFORE-commit retries fall
         # through: the head is still the parent, so the merge
         # recomputes against the same snapshot and converges.
-        if rid in self.manifest_history():
+        if is_committed(self.path, rid):
             self.abort(rid)  # drop any stale partial staging
             return rid
         upserts = source
@@ -1341,7 +1348,7 @@ class FileSink:
             # rows keep their files, stats, and blooms untouched
             inserts = upserts
             if cand_entries:
-                existing = self._read_entries(spark, cand_entries).select(*on)
+                existing = self._read_entries(spark, cand_entries, manifest).select(*on)
                 inserts = upserts.join(existing, on=on, how="left_anti")
             target_cols = self._target_columns(spark, manifest)
             if not (self.schema_evolution or not target_cols):
@@ -1365,7 +1372,7 @@ class FileSink:
 
         touched: set[str] = set()
         if cand_entries:
-            tagged = self._read_entries(spark, cand_entries).withColumn(
+            tagged = self._read_entries(spark, cand_entries, manifest).withColumn(
                 "__file", F.input_file_name()
             )
             # exact membership check over candidates only; the collect
@@ -1393,7 +1400,7 @@ class FileSink:
         touched_entries = [e for e in cand_entries if e["file"] in touched]
         deletes_df = None
         if touched_entries:
-            tdf = self._read_entries(spark, touched_entries)
+            tdf = self._read_entries(spark, touched_entries, manifest)
             kept = tdf.join(src_keys, on=on, how="left_anti")
             if self.cdf_materialize:
                 deletes_df = tdf.join(src_keys, on=on, how="left_semi")
@@ -1449,7 +1456,7 @@ class FileSink:
         for g in manifest["groups"]:
             ents = self._load_group(g)
             if ents:
-                return self._read_entries(spark, ents[:1]).columns
+                return self._read_entries(spark, ents[:1], manifest).columns
         return None
 
     def compact_runs(self, spark, run_id: str | None = None) -> str:

@@ -74,6 +74,7 @@ from incubator_gobblin_spark.sinks.iceberg_export import (
     _unpartitioned_spec,
     _write_manifest,
 )
+from incubator_gobblin_spark.sources.files import scan_files
 from incubator_gobblin_spark.sources.iceberg_import import (
     current_schema,
     load_metadata,
@@ -355,7 +356,7 @@ def rewrite_iceberg_data_files(
         # the delete parquets' file_path column names the targets;
         # distinct data-file count is metadata-scale
         hit = (
-            spark.read.parquet(*pos_del_paths)
+            scan_files(spark, pos_del_paths)
             .select("file_path")
             .distinct()
             .collect()

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gobblin_spark.sources.files import scan_files
 
 #: Broadcasting row-level tombstones is only safe while the tombstone
 #: set is metadata-scale. Past this many deleted rows (summed from the
@@ -70,7 +71,11 @@ def materialize_small(df):
     extra Spark job per delete group at plan-construction time (a
     measurable fixed cost on small reads), while the lazy form
     computes inside the first consuming job and every later reference
-    shares the same RDD blocks. Only ever called on frames already
+    shares the same RDD blocks. So no exchange (``repartition``,
+    ``distinct``, a shuffle join) may sit under it: under AQE even the
+    lazy checkpoint executes the plan's shuffle stages while the plan
+    is being built, one Spark job per exchange before the caller asked
+    for any result. Only ever called on frames already
     bounded by ``TOMBSTONE_BROADCAST_MAX_ROWS``-scale gates, so the
     blocks are metadata-scale by construction."""
     return df.localCheckpoint(eager=False)
@@ -869,16 +874,16 @@ def anti_join_dvs(spark: SparkSession, df: DataFrame, path: str, adds) -> DataFr
 
     _ship_package(spark)
     table_root = os.path.abspath(path)
+    # built already split into its decode tasks: a repartition here
+    # would be an exchange under materialize_small
+    rows = [
+        (os.path.abspath(add_file_path(path, a["path"])), json.dumps(a["deletionVector"]))
+        for a in dvs
+    ]
     desc_df = spark.createDataFrame(
-        [
-            (
-                os.path.abspath(add_file_path(path, a["path"])),
-                json.dumps(a["deletionVector"]),
-            )
-            for a in dvs
-        ],
+        spark.sparkContext.parallelize(rows, min(len(dvs), 64)),
         "_del_path string, _dv string",
-    ).repartition(min(len(dvs), 64))
+    )
 
     def expand(batches):
         import json as _json
@@ -981,7 +986,7 @@ def assemble_snapshot(
             f"-{suffix_n}, {suffix_n})), '+', '%2B'))"
         )
         df = (
-            _with_pos(spark.read.schema(data_schema).parquet(*all_files))
+            _with_pos(scan_files(spark, all_files, schema=data_schema))
             .withColumn("_file", file_key)
             .join(F.broadcast(map_df), "_file")
         )
@@ -993,7 +998,7 @@ def assemble_snapshot(
     for key, files in sorted(
         groups.items(), key=lambda kv: tuple((v is None, v or "") for v in kv[0])
     ):
-        df = _with_pos(spark.read.schema(data_schema).parquet(*sorted(files)))
+        df = _with_pos(scan_files(spark, sorted(files), schema=data_schema))
         for c, v in zip(part_cols, key):
             lit = (
                 F.lit(None) if v is None else F.lit(v)

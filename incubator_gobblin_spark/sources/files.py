@@ -13,14 +13,19 @@ conversion are all Spark built-ins; WorkUnits are Spark's own input
 splits. What the engine adds is (a) nanosecond-timestamp tolerance for
 parquet written by pandas/arrow, (b) date-partition-layout pruning
 helpers that turn a watermark interval into partition-path filters,
-(c) a single file's parquet schema converted from its footer on the
-driver instead of by a schema-inference Spark job.
+(c) reads of a known file list (a single file, or the files a lake's
+manifest, Delta log or Iceberg metadata committed) that start no Spark
+job while the DataFrame is built: the parquet schema is converted from
+one footer on the driver instead of by a schema-inference job, and the
+listed files are statted on the driver instead of by Spark's parallel
+listing job (:func:`scan_files`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +35,10 @@ from pyspark.sql.types import StructType
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 _NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
 _VARIANT_CONF = "spark.sql.parquet.ignoreVariantAnnotation"
+_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# serializes scan_files' listing-threshold window: two overlapping
+# windows would restore each other's raised value as the session's
+_LISTING_LOCK = threading.Lock()
 
 # Fan-out is pointless for dimension-sized tables: the repartition
 # shuffle stage would cost more than single-task processing saves.
@@ -203,6 +212,49 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ):
         df = fan_out(df, target)
     return df
+
+
+def scan_files(
+    spark: SparkSession,
+    files: list[str],
+    fmt: str = "parquet",
+    schema: StructType | None = None,
+    base_path: str | None = None,
+) -> DataFrame:
+    """Scan exactly ``files``, a file list a lake already committed
+    (manifest entries, Delta adds, Iceberg data or delete files), and
+    start no Spark job while the DataFrame is built.
+
+    Without ``schema``, a parquet scan takes the schema of ``files[0]``
+    from its footer (:func:`_footer_schema`, what inference reads when
+    no schema merge is asked for); any other format, or a footer that
+    cannot be read that way, keeps Spark's inference. Partition columns
+    still come from the paths under ``base_path``, as with inference.
+
+    Spark lists more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    input paths with a listing job. These paths are files, not
+    directories, so the threshold is raised to ``len(files)`` for the
+    ``load`` alone and they are statted on the driver; every other read
+    of the session keeps Spark's listing."""
+    from incubator_gobblin_spark.formats.avro_ocf import resolve_format
+
+    if schema is None and fmt == "parquet":
+        schema = _footer_schema(spark, files[0])
+    reader = spark.read.format(resolve_format(fmt))
+    if schema is not None:
+        reader = reader.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    with _LISTING_LOCK:
+        prev = spark.conf.get(_LISTING_CONF)
+        if len(files) <= int(prev):
+            return reader.load(files)
+        spark.conf.set(_LISTING_CONF, str(len(files)))
+        try:
+            return reader.load(files)
+        finally:
+            spark.conf.set(_LISTING_CONF, prev)
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:

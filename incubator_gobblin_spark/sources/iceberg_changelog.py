@@ -55,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from incubator_gobblin_spark.sources.delta_import import decoded_file_path
+from incubator_gobblin_spark.sources.files import scan_files
 from incubator_gobblin_spark.sources.iceberg_import import (
     _assemble_iceberg,
     _parsed_name_mapping,
@@ -380,9 +381,7 @@ def read_iceberg_changelog(
         out = None
         for seq, sub in sorted(by_seq.items()):
             one = (
-                spark.read.parquet(
-                    *[norm_file_ref(d["path"], path) for d in sub]
-                )
+                scan_files(spark, [norm_file_ref(d["path"], path) for d in sub])
                 .select(
                     decoded_file_path(F.col("file_path")).alias(
                         f"_dp_g{gi}"
@@ -443,8 +442,8 @@ def read_iceberg_changelog(
             ).append((d, sv))
         keys = None
         for (seq, _svk), pairs in sorted(sub.items()):
-            one = spark.read.parquet(
-                *[norm_file_ref(d["path"], path) for d, _ in pairs]
+            one = scan_files(
+                spark, [norm_file_ref(d["path"], path) for d, _ in pairs]
             ).select(
                 *[F.col(c).alias(f"_k{gi}_{c}") for c in cols]
             ).withColumn(f"_dseq_g{gi}", F.lit(seq).cast("long"))

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructField, StructType
 
+from incubator_gobblin_spark.sources.files import scan_files
+
 
 def _spark_type(t) -> T.DataType:
     """Iceberg schema type (JSON shape) -> Spark type."""
@@ -1215,9 +1217,7 @@ def read_iceberg(
         dels = None
         for seq, ds in sorted(by_seq.items()):
             one = (
-                spark.read.parquet(
-                    *[norm_file_ref(d["path"], path) for d in ds]
-                )
+                scan_files(spark, [norm_file_ref(d["path"], path) for d in ds])
                 .select(
                     decoded_file_path(F.col("file_path")).alias("_del_path"),
                     F.col("pos").cast("long").alias("_del_pos"),
@@ -1313,8 +1313,8 @@ def read_iceberg(
                 ).append((d, sv))
             parts_df = None
             for (seq, _svk), ds in sorted(sub.items()):
-                one = spark.read.parquet(
-                    *[norm_file_ref(d["path"], path) for d, _ in ds]
+                one = scan_files(
+                    spark, [norm_file_ref(d["path"], path) for d, _ in ds]
                 ).select(
                     *[F.col(c).alias(f"_eq_{c}") for c in cols]
                 ).withColumn("_del_seq", F.lit(seq))

@@ -97,6 +97,47 @@ def load_run(root: str, run_id: str) -> dict:
         ) from None
 
 
+def history(root: str) -> list[str]:
+    """Committed run ids, newest first, by walking the parent chain
+    from the head (only COMMITTED snapshots appear — a manifest file
+    that lost its log put is not in any chain). O(retained history)
+    manifest reads: a test of one run id goes through
+    :func:`is_committed`."""
+    chain: list[str] = []
+    m = read_head(root).manifest
+    while m is not None:
+        chain.append(m["run_id"])
+        if not m["parent"]:
+            break
+        try:
+            m = load_run(root, m["parent"])
+        except FileNotFoundError:  # parent vacuumed away
+            break
+    return chain
+
+
+def is_committed(root: str, run_id: str) -> bool:
+    """Whether ``run_id`` is in :func:`history`, from at most two small
+    reads: its manifest exists, carries ``seq``, and ``log/<seq>`` names
+    it. A log entry naming another manifest means this one lost its put.
+    A manifest without ``seq`` (a lake written before the commit log),
+    or whose log entry is gone (never put, or vacuumed while the
+    manifest was still inside the grace window), falls back to the
+    walk."""
+    rel = manifest_rel(run_id)
+    try:
+        seq = _read(root, rel).get("seq")
+    except FileNotFoundError:
+        return False
+    if seq is not None:
+        try:
+            with open(log_entry(root, seq)) as fh:
+                return fh.read().strip() == rel
+        except FileNotFoundError:
+            pass
+    return run_id in history(root)
+
+
 def load_group(root: str, group: dict) -> list[dict]:
     return _read(root, group["file"])["entries"]
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_gobblin_spark.operators.watermark import WatermarkInterval
+from incubator_gobblin_spark.sources.manifest_import import is_committed
 
 __all__ = [
     "RestApiSource",
@@ -552,7 +553,7 @@ def ingest_rest_incremental(
 
     run_id = run_id_for(low)
     high = endpoint.high_watermark(source.resource, wm)
-    if run_id in sink.manifest_history():
+    if is_committed(sink.path, run_id):
         done = sink.read_committed(
             spark,
             as_of_run=run_id,

@@ -3984,3 +3984,82 @@ def test_logicalize_value_map_and_missing_member_edges():
         {"k": {"a": 1, "late": None}},
         None,
     ]
+
+
+def test_read_committed_takes_partition_columns_from_manifest(spark, tmp_path):
+    """A sink constructed without ``partition_by`` reads a partitioned
+    lake's partition column back: the read follows the committed
+    manifest's ``partition_by``, not the constructor's."""
+    root = str(tmp_path / "t")
+    df = spark.range(12).selectExpr("id", "concat('k', id % 3) AS p")
+    writer = _sink(root, partition_by=["p"])
+    writer.write_staging(df, "run1")
+    writer.publish("run1")
+    got = _sink(root).read_committed(spark)
+    assert sorted(got.columns) == ["id", "p"]
+    assert sorted(map(tuple, got.select("id", "p").collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    assert got.collect() == writer.read_committed(spark).collect()
+
+
+def test_is_committed_agrees_with_manifest_history(tmp_path):
+    """``is_committed`` answers from the run's manifest and its log entry
+    and agrees with the ``manifest_history`` walk for a committed run,
+    a manifest that lost its put, vacuumed runs (with and without the
+    grace window keeping their manifests) and a lake without a log."""
+    import json
+    import shutil
+
+    from incubator_gobblin_spark.sinks.files import ManifestConflictError
+    from incubator_gobblin_spark.sources.manifest_import import is_committed
+
+    ids = ["run1", "run2", "run3", "loser", "never"]
+
+    def commit(sink, rid, head=None):
+        head = head or sink._read_pointer()
+        parent = head.manifest["run_id"] if head.manifest else None
+        sink._commit(
+            {"run_id": rid, "format_version": 2, "parent": parent, "groups": []},
+            head,
+        )
+
+    def agree(sink):
+        hist = sink.manifest_history()
+        got = {r: is_committed(sink.path, r) for r in ids}
+        assert got == {r: r in hist for r in ids}
+        return got
+
+    def lake(name):
+        sink = _sink(tmp_path / name)
+        commit(sink, "run1")
+        commit(sink, "run2")
+        stale = sink._read_pointer()
+        commit(sink, "run3")
+        with pytest.raises(ManifestConflictError):
+            commit(sink, "loser", stale)  # log/3 already names run3
+        return sink
+
+    sink = lake("committed")
+    got = agree(sink)
+    assert [r for r in ids if got[r]] == ["run1", "run2", "run3"]
+
+    sink = lake("vacuumed")
+    sink.vacuum(keep_last=1, grace_seconds=0)
+    assert [r for r in ids if agree(sink)[r]] == ["run3"]
+
+    sink = lake("grace")  # log entries expire, young manifests stay
+    sink.vacuum(keep_last=1, grace_seconds=3600)
+    assert not os.path.exists(os.path.join(sink.path, "_manifests", "log", f"{1:020d}.json"))
+    assert [r for r in ids if agree(sink)[r]] == ["run1", "run2", "run3"]
+
+    sink = lake("no-log")
+    shutil.rmtree(os.path.join(sink.path, "_manifests", "log"))
+    for rid in ("run1", "run2", "run3", "loser"):
+        mpath = os.path.join(sink.path, "_manifests", f"{rid}.json")
+        with open(mpath) as fh:
+            m = json.load(fh)
+        del m["seq"]
+        with open(mpath, "w") as fh:
+            json.dump(m, fh)
+    assert [r for r in ids if agree(sink)[r]] == ["run1", "run2", "run3"]

@@ -4,6 +4,7 @@ instead of a schema-inference Spark job, and the py4j budget of the
 heaviest generated builds."""
 
 import contextlib
+import itertools
 import math
 import os
 import struct
@@ -232,3 +233,149 @@ def test_load_table_starts_no_spark_job(spark, sf_dir):
         df = load_table(spark, sf_dir, "orders")
         assert jobs() == []
     assert "o_orderkey" in df.columns
+
+
+# ---- committed file lists ---------------------------------------------------
+
+
+_SCANS = itertools.count()
+
+
+def _no_job_parity(monkeypatch, spark, build, key):
+    """``build()`` starts no Spark job, and its schema and rows equal
+    the same build with the footer schema switched off (Spark's
+    inference)."""
+    with _job_group(spark, f"committed-scan-{next(_SCANS)}") as jobs:
+        df = build()
+        assert jobs() == []
+    with monkeypatch.context() as m:
+        m.setattr(files, "_footer_schema", lambda spark, file: None)
+        ref = build()
+    assert df.schema == ref.schema
+    assert df.orderBy(key).collect() == ref.orderBy(key).collect()
+    return df
+
+
+def _manifest_lake(spark, root, **kw):
+    from incubator_gobblin_spark.sinks.files import FileSink
+
+    sink = FileSink(path=root, commit_mode="manifest", **kw)
+    # run1 writes more files than Spark's parallel-listing threshold (32)
+    run1 = spark.range(0, 400, 1, 40).selectExpr(
+        "id", "CAST(id * 2 AS DOUBLE) AS v", "concat('k', id % 2) AS p"
+    )
+    run2 = spark.range(400, 420, 1, 2).selectExpr(
+        "id", "CAST(id * 2 AS DOUBLE) AS v", "concat('k', id % 2) AS p"
+    )
+    for rid, df in (("run1", run1), ("run2", run2)):
+        sink.write_staging(df, rid)
+        sink.publish(rid)
+    return sink, run1.unionByName(run2)
+
+
+@pytest.mark.parametrize("partition_by", [["p"], []])
+def test_read_committed_starts_no_spark_job(spark, tmp_path, monkeypatch, partition_by):
+    sink, data = _manifest_lake(
+        spark, str(tmp_path / "lake"), partition_by=partition_by
+    )
+    run1 = [e for e in sink.current_manifest()["entries"] if "/run1/" in e["file"]]
+    assert len(run1) > 32
+    df = _no_job_parity(monkeypatch, spark, lambda: sink.read_committed(spark), "id")
+    assert df.select(*data.columns).orderBy("id").collect() == data.orderBy("id").collect()
+
+
+def test_merge_into_snapshot_reads_start_no_spark_job(spark, tmp_path, monkeypatch):
+    import shutil
+
+    from incubator_gobblin_spark.sinks.files import FileSink
+
+    sink, _ = _manifest_lake(spark, str(tmp_path / "lake"), partition_by=["p"])
+    shutil.copytree(sink.path, str(tmp_path / "ref"))
+    ref_sink = FileSink(
+        path=str(tmp_path / "ref"), commit_mode="manifest", partition_by=["p"]
+    )
+    source = spark.range(390, 410).selectExpr(
+        "id", "CAST(-id AS DOUBLE) AS v", "concat('k', id % 2) AS p"
+    )
+    read_entries = FileSink._read_entries
+    builds = []
+
+    def counted(self, spark, entries, manifest):
+        with _job_group(spark, f"merge-read-{len(builds)}") as jobs:
+            df = read_entries(self, spark, entries, manifest)
+            builds.append(jobs())
+        return df
+
+    with monkeypatch.context() as m:
+        m.setattr(FileSink, "_read_entries", counted)
+        sink.merge_into(spark, source, on=["id"], run_id="m1")
+    assert builds and all(b == [] for b in builds)
+    with monkeypatch.context() as m:
+        m.setattr(files, "_footer_schema", lambda spark, file: None)
+        ref_sink.merge_into(spark, source, on=["id"], run_id="m1")
+    got, ref = sink.read_committed(spark), ref_sink.read_committed(spark)
+    assert got.schema == ref.schema
+    assert got.orderBy("id").collect() == ref.orderBy("id").collect()
+    assert got.filter("id BETWEEN 390 AND 409").agg(F.sum("v")).first()[0] == -sum(range(390, 410))
+
+
+def test_read_delta_with_deletion_vectors_starts_no_spark_job(
+    spark, tmp_path, monkeypatch
+):
+    from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows
+    from incubator_gobblin_spark.sources.delta_import import read_delta
+
+    sink, data = _manifest_lake(spark, str(tmp_path / "lake"), partition_by=["p"])
+    sink.export_delta_log()
+    res = delete_delta_rows(spark, sink.path, "id % 7 = 3")
+    assert res["dv_files"] >= 1
+    df = _no_job_parity(monkeypatch, spark, lambda: read_delta(spark, sink.path), "id")
+    want = data.filter("id % 7 != 3")
+    assert df.select(*data.columns).orderBy("id").collect() == want.orderBy("id").collect()
+
+
+def test_read_iceberg_with_deletes_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    from incubator_gobblin_spark.sinks.iceberg_delete import delete_iceberg_rows
+    from incubator_gobblin_spark.sinks.iceberg_export import append_equality_deletes
+    from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
+
+    sink, data = _manifest_lake(spark, str(tmp_path / "lake"), partition_by=["p"])
+    sink.export_iceberg()
+    assert delete_iceberg_rows(spark, sink.path, "id % 7 = 3")["delete_files"] >= 1
+    append_equality_deletes(sink.path, [{"id": 5}, {"id": 401}], ["id"])
+    df = _no_job_parity(
+        monkeypatch, spark, lambda: read_iceberg(spark, sink.path), "id"
+    )
+    want = data.filter("id % 7 != 3 AND id NOT IN (5, 401)")
+    assert df.select(*data.columns).orderBy("id").collect() == want.orderBy("id").collect()
+
+
+def test_non_parquet_and_evolving_lakes_keep_inference(spark, tmp_path, monkeypatch):
+    """An ORC lake's schema comes from Spark's inference (the footer
+    converter is parquet-only); an unpartitioned ``schema_evolution``
+    lake keeps ``mergeSchema`` inference, the one lake read that still
+    starts a Spark job."""
+    from incubator_gobblin_spark.sinks.files import FileSink
+
+    def no_footer(spark, file):
+        raise AssertionError("parquet footer read for a non-parquet lake")
+
+    sink, data = _manifest_lake(
+        spark, str(tmp_path / "orc"), partition_by=["p"], fmt="orc"
+    )
+    with monkeypatch.context() as m:
+        m.setattr(files, "_footer_schema", no_footer)
+        df = sink.read_committed(spark)
+    assert df.schema == spark.read.orc(
+        os.path.join(sink.path, "_data", "run1")
+    ).schema
+    assert df.select(*data.columns).orderBy("id").collect() == data.orderBy("id").collect()
+
+    evolving = FileSink(
+        path=str(tmp_path / "evolving"), commit_mode="manifest", schema_evolution=True
+    )
+    evolving.write_staging(spark.range(5).selectExpr("id"), "run1")
+    evolving.publish("run1")
+    with _job_group(spark, "merge-schema") as jobs:
+        evolving.read_committed(spark)
+        assert jobs() != []

@@ -1,17 +1,32 @@
 #!/usr/bin/env python
-"""Interleaved same-host A/B between two committed trees' bench.py runs
-(the BENCH_AB_r11 method, VERDICT r12 ask 2): alternate A,B pairs on a
-quiet host, compare SHARED-query subtotals, report per-query min-deltas
-for the focus queries the per-round noise check skipped.
+"""Interleaved same-host A/B between two committed trees: alternate an
+A run and a B run per pair on a quiet host, so host drift hits both
+sides alike.
 
-Usage: python tools/ab_bench.py <treeA> <treeB> <pairs> <out.json>
-Each tree must be a checkout with its own bench.py; runs use the same
+Usage:
+  python tools/ab_bench.py <treeA> <treeB> <pairs> <out.json>
+  python tools/ab_bench.py --perfbench WORKLOAD <treeA> <treeB> <seeds> <out.json>
+
+Default mode runs each tree's bench.py, compares SHARED-query
+subtotals and reports per-query min-deltas; runs use the same
 $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS contract as the driver.
+
+``--perfbench`` runs each tree's
+``perfbench/run.py --workload WORKLOAD --seed i --seconds 1 --trace 0``
+for seeds 1..<seeds>, alternating which tree runs first, and writes
+both sides' result records plus the per-metric medians of
+``perfbench/compare.py``.
 """
 
+import argparse
 import json
+import os
 import subprocess
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.compare import compare  # noqa: E402
 
 
 def run_bench(tree: str) -> dict:
@@ -28,13 +43,22 @@ def run_bench(tree: str) -> dict:
     return json.loads(line)
 
 
-def main():
-    tree_a, tree_b, pairs, out_path = (
-        sys.argv[1],
-        sys.argv[2],
-        int(sys.argv[3]),
-        sys.argv[4],
+def run_perfbench(tree: str, workload: str, seed: int) -> dict:
+    """One untraced perfbench run of ``tree``; returns the record it
+    wrote under ``<tree>/.perfbench/out/``."""
+    subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", "1", "--trace", "0"],
+        cwd=tree,
+        check=True,
+        timeout=3600,
     )
+    out = os.path.join(tree, ".perfbench", "out", f"{workload}-seed{seed}-trace0.json")
+    with open(out) as fh:
+        return json.load(fh)
+
+
+def bench_ab(tree_a: str, tree_b: str, pairs: int) -> dict:
     runs_a, runs_b = [], []
     for i in range(pairs):
         print(f"pair {i + 1}/{pairs}: A", file=sys.stderr, flush=True)
@@ -59,7 +83,7 @@ def main():
             "b_min": round(b_min, 3),
             "ratio_min": round(b_min / a_min, 3) if a_min else None,
         }
-    out = {
+    return {
         "metric": "bench_ab_interleaved",
         "tree_a": tree_a,
         "tree_b": tree_b,
@@ -70,9 +94,52 @@ def main():
         "interleaved_ratio_min": round(min(sub_b) / min(sub_a), 3),
         "per_query_min": per_query,
     }
-    with open(out_path, "w") as fh:
+
+
+def perfbench_ab(workload: str, tree_a: str, tree_b: str, seeds: int) -> dict:
+    recs = {"A": [], "B": []}
+    trees = {"A": tree_a, "B": tree_b}
+    for seed in range(1, seeds + 1):
+        # the side that runs first alternates, so neither always runs
+        # on the warmer host
+        for side in ("A", "B") if seed % 2 else ("B", "A"):
+            print(f"seed {seed}/{seeds}: {side}", file=sys.stderr, flush=True)
+            recs[side].append(run_perfbench(trees[side], workload, seed))
+    recs_a, recs_b = recs["A"], recs["B"]
+    medians = {
+        name: {"a": a, "b": b, "ratio": round(b / a, 3) if a else None}
+        for name, a, b in compare(recs_a, recs_b)
+    }
+    return {
+        "metric": "perfbench_ab_interleaved",
+        "workload": workload,
+        "tree_a": tree_a,
+        "tree_b": tree_b,
+        "seeds": seeds,
+        "medians": medians,
+        "a_records": recs_a,
+        "b_records": recs_b,
+    }
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--perfbench", metavar="WORKLOAD",
+                    help="A/B perfbench/run.py on WORKLOAD instead of bench.py")
+    ap.add_argument("tree_a")
+    ap.add_argument("tree_b")
+    ap.add_argument("pairs", type=int, help="A,B pairs (perfbench: seeds 1..N)")
+    ap.add_argument("out")
+    args = ap.parse_args()
+    if args.perfbench:
+        out = perfbench_ab(args.perfbench, args.tree_a, args.tree_b, args.pairs)
+        summary = {k: v["ratio"] for k, v in out["medians"].items()}
+    else:
+        out = bench_ab(args.tree_a, args.tree_b, args.pairs)
+        summary = {"ratio_min": out["interleaved_ratio_min"]}
+    with open(args.out, "w") as fh:
         json.dump(out, fh, indent=1)
-    print(json.dumps({"ratio_min": out["interleaved_ratio_min"]}))
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":
