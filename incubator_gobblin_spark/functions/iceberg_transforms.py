@@ -403,3 +403,25 @@ def transform_expr(transform: str, col: Column, ice_type: str) -> Column:
                      "hour", "hours"):
         return time_transform_col(transform, col, ice_type)
     raise ValueError(f"unknown Iceberg partition transform {transform!r}")
+
+
+def check_transform(transform: str, ice_type: str) -> None:
+    """ValueError unless :func:`transform_expr` and :func:`transform_py`
+    both evaluate ``transform`` over an ``ice_type`` source — the
+    driver-side check for callers that must refuse before evaluating."""
+    if transform in ("identity", "void"):
+        return
+    if _BUCKET_RE.match(transform):
+        ok = ice_type in (*_INT_FAMILY, "string", "binary")
+    elif _TRUNCATE_RE.match(transform):
+        ok = ice_type in ("int", "long", "string")
+    elif transform in ("year", "years", "month", "months", "day", "days"):
+        ok = ice_type in ("date", "timestamp", "timestamptz")
+    elif transform in ("hour", "hours"):
+        ok = ice_type in ("timestamp", "timestamptz")
+    else:
+        raise ValueError(f"unknown Iceberg partition transform {transform!r}")
+    if not ok:
+        raise ValueError(
+            f"{transform} transform unsupported for source type {ice_type!r}"
+        )

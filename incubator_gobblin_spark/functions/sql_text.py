@@ -48,6 +48,12 @@ def double_array_col(xs: Iterable[float]) -> Column:
     return F.expr(double_array(xs))
 
 
+def string(s: str) -> str:
+    """Spark SQL STRING literal of ``s`` (the parser's default
+    backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def ident(name: str) -> str:
     """A top-level column name as a quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"

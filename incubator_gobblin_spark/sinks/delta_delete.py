@@ -439,7 +439,7 @@ def delete_delta_rows(
     matched = (
         filtered
         .select(
-            decoded_file_path(F.col("_file_path")).alias("_path"),
+            decoded_file_path("_file_path").alias("_path"),
             F.col("_row_index").alias("_pos"),
         )
     )

@@ -782,7 +782,7 @@ def merge_delta_rows(
                 # full table scan + key join twice
                 matched_rows = cached = matched_rows.persist()
             matched = matched_rows.select(
-                decoded_file_path(F.col("_file_path")).alias("_path"),
+                decoded_file_path("_file_path").alias("_path"),
                 F.col("_row_index").alias("_pos"),
             )
             desc_rows = build_dv_descriptors(spark, matched, path, live)

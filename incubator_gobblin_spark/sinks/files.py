@@ -180,8 +180,9 @@ class FileSink:
                 *self.cluster_by
             )
         writer = df.write.mode("overwrite").format(resolve_format(self.fmt))
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
+        part_by = self._layout()
+        if part_by:
+            writer = writer.partitionBy(*part_by)
         if self.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
         for k, v in self.options.items():
@@ -380,6 +381,25 @@ class FileSink:
 
     # -- manifest commit (object-store-safe publish) ----------------------
 
+    def _layout(self, head: Head | None = None) -> list[str]:
+        """The partition columns a new run is laid out and recorded
+        with. On a manifest lake with a head they are the head
+        manifest's: a run laid out otherwise would commit a manifest
+        whose ``partition_by`` drops those columns from every read. A
+        sink whose own non-empty ``partition_by`` differs raises."""
+        if self.commit_mode != "manifest":
+            return self.partition_by
+        head = head if head is not None else self._read_pointer()
+        if head.manifest is None:
+            return self.partition_by
+        lake = head.manifest.get("partition_by") or []
+        if self.partition_by and self.partition_by != lake:
+            raise ValueError(
+                f"FileSink partition_by {self.partition_by} differs from "
+                f"the lake's {lake} at {self.path}"
+            )
+        return lake
+
     def _read_pointer(self) -> Head:
         """The committed head a commit composes against (see
         :mod:`~incubator_gobblin_spark.sources.manifest_import`).
@@ -517,6 +537,7 @@ class FileSink:
             return []
         head = expected_ptr if expected_ptr is not None else self._read_pointer()
         parent = head.manifest
+        part_by = self._layout(head)
 
         staging = self.staging_dir(run_id)
         data_dir = os.path.join(self.path, "_data", run_id)
@@ -527,7 +548,7 @@ class FileSink:
         elif not os.path.isdir(data_dir):
             raise FileNotFoundError(f"no staging or data dir for run {run_id}")
 
-        depth = len(self.partition_by)
+        depth = len(part_by)
         blooms = None
         bloom_sidecar = os.path.join(data_dir, "_blooms.json")
         if os.path.exists(bloom_sidecar):
@@ -623,7 +644,7 @@ class FileSink:
                 "format_version": 2,
                 "table_type": self.table_type.value,
                 "fmt": self.fmt,
-                "partition_by": self.partition_by,
+                "partition_by": part_by,
                 "parent": parent["run_id"] if parent else None,
                 "groups": groups,
             },

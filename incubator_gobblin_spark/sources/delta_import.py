@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gobblin_spark.functions.sql_text import ident, string
 from incubator_gobblin_spark.sources.files import scan_files
 
 #: Broadcasting row-level tombstones is only safe while the tombstone
@@ -81,9 +82,10 @@ def materialize_small(df):
     return df.localCheckpoint(eager=False)
 
 
-def decoded_file_path(col):
-    """Normalize a URI-form path Column (``_metadata.file_path``, a
-    manifest-carried location) to a bare decoded absolute path.
+def decoded_file_path_sql(name: str) -> str:
+    """SQL text normalizing the URI-form path column ``name``
+    (``_metadata.file_path``, a manifest-carried location) to a bare
+    decoded absolute path.
 
     Spark's ``_metadata.file_path`` is a percent-encoded ``file:`` URI
     while the replayed log/manifest paths are decoded absolute paths —
@@ -96,14 +98,16 @@ def decoded_file_path(col):
     path is the one remaining ambiguity, pathological). A raw path
     whose '%' forms an INVALID escape ('100%done') must not kill the
     read — try_url_decode falls back to the raw value."""
-    return F.regexp_replace(
-        F.coalesce(
-            F.try_url_decode(F.replace(col, F.lit("+"), F.lit("%2B"))),
-            col,
-        ),
-        "^file:/+",
-        "/",
+    c = ident(name)
+    return (
+        f"regexp_replace(coalesce(try_url_decode(replace({c}, '+', '%2B')), "
+        f"{c}), '^file:/+', '/')"
     )
+
+
+def decoded_file_path(name: str):
+    """:func:`decoded_file_path_sql` as a Column."""
+    return F.expr(decoded_file_path_sql(name))
 
 
 def add_file_path(table_path: str, raw: str) -> str:
@@ -912,7 +916,7 @@ def anti_join_dvs(spark: SparkSession, df: DataFrame, path: str, adds) -> DataFr
     # _del_path is a decoded abspath — decode before comparing, or a
     # path with a space/'+'/'%' silently resurrects its deleted rows
     return df.withColumn(
-        "_dv_norm_path", decoded_file_path(F.col("_file_path"))
+        "_dv_norm_path", decoded_file_path("_file_path")
     ).join(
         tombs,
         (F.col("_dv_norm_path") == F.col("_del_path"))
@@ -993,17 +997,28 @@ def assemble_snapshot(
         return df.select(*ordered)
 
     out: DataFrame | None = None
+    pos = (
+        ["_metadata.file_path AS _file_path", "_metadata.row_index AS _row_index"]
+        if with_positions
+        else []
+    )
     # null partition values are legal adds ("partitionValues": {"c": null});
     # sort with a None-safe key so the plan order stays deterministic
     for key, files in sorted(
         groups.items(), key=lambda kv: tuple((v is None, v or "") for v in kv[0])
     ):
-        df = _with_pos(scan_files(spark, sorted(files), schema=data_schema))
-        for c, v in zip(part_cols, key):
-            lit = (
-                F.lit(None) if v is None else F.lit(v)
-            ).cast(types[c])
-            df = df.withColumn(c, lit)
-        df = df.select(*ordered)
+        vals = dict(zip(part_cols, key))
+        # SQL text: the group's typed partition literals and positions
+        # in one py4j round-trip
+        df = scan_files(spark, sorted(files), schema=data_schema).selectExpr(
+            *[
+                f"CAST({'NULL' if vals[c] is None else string(vals[c])} "
+                f"AS {types[c].simpleString()}) AS {ident(c)}"
+                if c in vals
+                else ident(c)
+                for c in types
+            ],
+            *pos,
+        )
         out = df if out is None else out.unionAll(df)
     return out

@@ -44,6 +44,8 @@ table is read O(1) times per changelog call, not O(snapshots).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -54,18 +56,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from incubator_gobblin_spark.functions.sql_text import ident
 from incubator_gobblin_spark.sources.delta_import import decoded_file_path
-from incubator_gobblin_spark.sources.files import scan_files
 from incubator_gobblin_spark.sources.iceberg_import import (
-    _assemble_iceberg,
-    _parsed_name_mapping,
-    _spark_type,
     assemble_file_set,
     current_metadata,
     current_schema,
+    group_deletes,
     norm_file_ref,
+    plan_delete_group,
     read_iceberg,
     snapshot_files,
+    table_layout,
+    with_data_seq,
 )
 
 
@@ -98,6 +101,43 @@ def _lineage(metadata: dict, from_id: int | None, to_id: int) -> list[dict]:
             break
         cur = by_id[parent]
     return list(reversed(chain))
+
+
+def check_interval(
+    metadata: dict,
+    snaps: list[dict],
+    who: str,
+    where: str,
+    schema_hint: str,
+    parent_hint: str,
+) -> None:
+    """Refuse a changelog interval whose changes cannot be
+    reconstructed, with the calling reader's guidance:
+
+    - a schema change inside it whose top-level (id, name) field set
+      differs from the current schema would make the parent recovery
+      misresolve columns (the delta_cdf rule);
+    - a snapshot other than a ``replace`` whose parent was expired
+      (foreign-style expiry keeps dangling parent pointers, iceberg-core
+      RemoveSnapshots): its delta is no longer reconstructible."""
+    cur = {(f["id"], f["name"]) for f in current_schema(metadata)["fields"]}
+    schemas = {s["schema-id"]: s for s in metadata["schemas"]}
+    retained = {s["snapshot-id"] for s in metadata.get("snapshots", [])}
+    for snap in snaps:
+        sid, parent = snap["snapshot-id"], snap.get("parent-snapshot-id")
+        s = schemas.get(snap.get("schema-id"))
+        if s is not None and {(f["id"], f["name"]) for f in s["fields"]} != cur:
+            raise ValueError(
+                f"{who}: the table schema changed at snapshot {sid}, "
+                f"inside {where} — {schema_hint}"
+            )
+        op = (snap.get("summary") or {}).get("operation")
+        if parent is not None and parent not in retained and op != "replace":
+            raise ValueError(
+                f"{who}: snapshot {sid}'s parent {parent} was expired — "
+                "changes before the oldest retained ancestry are not "
+                f"reconstructible; {parent_hint}"
+            )
 
 
 #: Default per-call snapshot-interval bound. The plan unions one
@@ -137,30 +177,7 @@ def read_iceberg_changelog(
         else int(to_snapshot_id)
     )
     schema_json = current_schema(metadata)
-    schema = StructType(
-        [
-            StructField(
-                f["name"], _spark_type(f["type"]), not f.get("required")
-            )
-            for f in schema_json["fields"]
-        ]
-    )
-    field_name = {f["id"]: f["name"] for f in schema_json["fields"]}
-    spec = next(
-        s
-        for s in metadata["partition-specs"]
-        if s["spec-id"] == metadata["default-spec-id"]
-    )
-    part_cols = [
-        field_name[f["source-id"]]
-        for f in spec["fields"]
-        if f["transform"] == "identity"
-    ]
-    out_cols = [f.name for f in schema.fields] + [
-        CHANGE_TYPE_COL,
-        CHANGE_ORDINAL_COL,
-        COMMIT_SNAPSHOT_COL,
-    ]
+    schema, _ = table_layout(metadata, schema_json)
     empty_schema = StructType(
         list(schema.fields)
         + [
@@ -185,59 +202,26 @@ def read_iceberg_changelog(
             "acceptable"
         )
 
-    def _stamp(df: DataFrame, kind: str, ordinal: int, sid: int) -> DataFrame:
-        return (
-            df.withColumn(CHANGE_TYPE_COL, F.lit(kind))
-            .withColumn(CHANGE_ORDINAL_COL, F.lit(ordinal).cast("int"))
-            .withColumn(COMMIT_SNAPSHOT_COL, F.lit(sid).cast("long"))
-            .select(*out_cols)
+    data_cols = [ident(f.name) for f in schema.fields]
+
+    def _stamp(df: DataFrame, kind: str, ordinal, sid) -> DataFrame:
+        # SQL text: one py4j round-trip for the whole projection
+        return df.selectExpr(
+            *data_cols,
+            f"'{kind}' AS {CHANGE_TYPE_COL}",
+            f"CAST({ordinal} AS INT) AS {CHANGE_ORDINAL_COL}",
+            f"CAST({sid} AS BIGINT) AS {COMMIT_SNAPSHOT_COL}",
         )
 
-    # a schema change INSIDE the interval whose top-level (id, name)
-    # field set differs from the current schema would make the parent
-    # recovery select fail opaquely (or serve old rows under the wrong
-    # column set) — refuse with split guidance, the delta_cdf rule
-    cur_fields = {
-        (f["id"], f["name"]) for f in schema_json["fields"]
-    }
-    schemas_by_id = {s["schema-id"]: s for s in metadata["schemas"]}
-    for snap in chain:
-        s_id = snap.get("schema-id")
-        if s_id is None or s_id == metadata["current-schema-id"]:
-            continue
-        s = schemas_by_id.get(s_id)
-        if s is None:
-            continue
-        if {(f["id"], f["name"]) for f in s["fields"]} != cur_fields:
-            raise ValueError(
-                "read_iceberg_changelog: the table schema changed at "
-                f"snapshot {snap['snapshot-id']}, inside the requested "
-                "interval — read the changelog in two calls split at "
-                "that snapshot"
-            )
-
-    def _bounded_broadcast(frame: DataFrame, rows: int) -> DataFrame:
-        # tombstone sets are metadata-scale in practice, but a
-        # pathological delete file must not OOM the broadcast — past
-        # the bound (known from manifest record counts, zero extra
-        # I/O) fall back to a shuffle join: identical result, bounded
-        # memory (the read_iceberg rule)
-        from incubator_gobblin_spark.sources.delta_import import (
-            TOMBSTONE_BROADCAST_MAX_ROWS,
-        )
-
-        return (
-            F.broadcast(frame)
-            if rows <= TOMBSTONE_BROADCAST_MAX_ROWS
-            else frame
-        )
-
-    retained = {s["snapshot-id"] for s in metadata.get("snapshots", [])}
-    frames: list[DataFrame] = []
-
-    from incubator_gobblin_spark.sources.delta_import import (
-        materialize_small,
+    check_interval(
+        metadata,
+        chain,
+        "read_iceberg_changelog",
+        "the requested interval",
+        "read the changelog in two calls split at that snapshot",
+        "pass from_snapshot_id of a retained snapshot",
     )
+    frames: list[DataFrame] = []
 
     # --- one driver-side walk over the chain -------------------------
     # Chain positions: 0 = the base parent (from_snapshot_id, when
@@ -324,16 +308,6 @@ def read_iceberg_changelog(
             # snapshot's parent state.
             prev_paths, prev_del_paths = paths_s, del_paths_s
             continue
-        if parent_id is not None and parent_id not in retained:
-            # foreign-style expiry keeps dangling parent pointers
-            # (iceberg-core RemoveSnapshots): this snapshot's delta is
-            # no longer reconstructible
-            raise ValueError(
-                f"read_iceberg_changelog: snapshot {sid}'s parent "
-                f"{parent_id} was expired — changes before the oldest "
-                "retained ancestry are not reconstructible; pass "
-                "from_snapshot_id of a retained snapshot"
-            )
         if parent_id is None and dels_s:
             # an expiry-truncated head (this engine's expire clears
             # the survivor's parent pointer): raw file reads would
@@ -359,230 +333,62 @@ def read_iceberg_changelog(
             recoveries.append((ordinal, sid, position - 1))
         prev_paths, prev_del_paths = paths_s, del_paths_s
 
-    # --- delete-group frames, decoded ONCE and shared -----------------
-    # A group = delete files identical in (content, equality ids, spec,
-    # membership signature); its frame serves BOTH the same-snapshot
-    # insert anti-join and every parent-position kill marker, so each
-    # delete file is read exactly once no matter how many snapshots it
-    # stays live in. Join conditions carry the spec's sequence rules
-    # verbatim from read_iceberg (pos: data seq <= delete seq, eq:
-    # STRICTLY <) — structurally true for parent rows vs a NEW delete
-    # file (every parent data file predates it), and load-bearing when
-    # the same group later acts as an accumulated kill marker (a CDC
-    # upsert's same-sequence appended rows must survive their own
-    # commit's equality delete).
+    # --- delete groups, planned ONCE and shared -----------------------
+    # A group = plan_delete_group's grouping plus the membership
+    # signature (the chain positions whose snapshot holds the file); its
+    # frame serves BOTH the same-snapshot insert anti-join and every
+    # parent-position kill marker, so each delete file is read exactly
+    # once no matter how many snapshots it stays live in. The planner's
+    # sequence gates are structurally true for parent rows vs a NEW
+    # delete file (every parent data file predates it), and
+    # load-bearing when the same group later acts as an accumulated
+    # kill marker (a CDC upsert's same-sequence appended rows must
+    # survive their own commit's equality delete).
+    def _members(d: dict) -> tuple:
+        return tuple(sorted(del_facts[norm_file_ref(d["path"], path)]["pos"]))
 
-    def _pos_group_frame(gi: int, ds: list[dict]) -> DataFrame:
-        # one scan per distinct data sequence, not per delete file (a
-        # commit stages its coordinates across N shuffle partitions)
-        by_seq: dict[int, list[dict]] = {}
-        for d in ds:
-            by_seq.setdefault(int(d["seq"]), []).append(d)
-        out = None
-        for seq, sub in sorted(by_seq.items()):
-            one = (
-                scan_files(spark, [norm_file_ref(d["path"], path) for d in sub])
-                .select(
-                    decoded_file_path(F.col("file_path")).alias(
-                        f"_dp_g{gi}"
-                    ),
-                    F.col("pos").cast("long").alias(f"_dpos_g{gi}"),
-                )
-                .withColumn(f"_dseq_g{gi}", F.lit(seq).cast("long"))
-                .distinct()
-            )
-            out = one if out is None else out.unionByName(one)
-        return materialize_small(out)
-
-    def _eq_group_frame(gi: int, ids: tuple, ds: list[dict]):
-        from incubator_gobblin_spark.functions.iceberg_transforms import (
-            epoch_norm,
+    groups = [
+        (set(_members(ds[0])), ds)
+        for ds in group_deletes(
+            [e["del"] for _, e in sorted(del_facts.items())], _members
         )
-        from incubator_gobblin_spark.sources.iceberg_import import (
-            equality_delete_scope_expr,
+    ]
+    data_seqs = [int(e["file"].get("seq") or 0) for e in data_facts.values()]
+
+    @functools.cache
+    def _plan(gi: int):
+        return plan_delete_group(
+            spark, metadata, schema_json, path, groups[gi][1], f"_g{gi}", data_seqs
         )
 
-        specs_by_id = {
-            s["spec-id"]: s for s in metadata.get("partition-specs", [])
-        }
-        field_type_all = {
-            f["id"]: f["type"] for f in schema_json["fields"]
-        }
-        cols = [field_name[i] for i in ids]
-        scope_cols = sorted(
-            {
-                k
-                for d in ds
-                for k, v in (d.get("partition") or {}).items()
-                if v is not None
-            }
-        )
-        scope_exprs = {
-            sc: equality_delete_scope_expr(
-                ds[0],
-                sc,
-                specs_by_id=specs_by_id,
-                field_name_all=field_name,
-                field_type_all=field_type_all,
-                current_part_cols=part_cols,
-            )
-            for sc in scope_cols
-        }
-        # one scan per distinct (sequence, scope tuple), not per file
-        sub: dict[tuple, list] = {}
-        for d in ds:
-            sv = []
-            for sc in scope_cols:
-                v = (d.get("partition") or {}).get(sc)
-                if not scope_exprs[sc][1]:
-                    v = epoch_norm(v)
-                sv.append(v)
-            sub.setdefault(
-                (int(d["seq"]), tuple(repr(v) for v in sv)), []
-            ).append((d, sv))
-        keys = None
-        for (seq, _svk), pairs in sorted(sub.items()):
-            one = scan_files(
-                spark, [norm_file_ref(d["path"], path) for d, _ in pairs]
-            ).select(
-                *[F.col(c).alias(f"_k{gi}_{c}") for c in cols]
-            ).withColumn(f"_dseq_g{gi}", F.lit(seq).cast("long"))
-            for sc, v in zip(scope_cols, pairs[0][1]):
-                one = one.withColumn(f"_k{gi}_part_{sc}", F.lit(v))
-            # distinct per (seq, scope) sub-scan, mirroring
-            # _pos_group_frame: eq keys CAN repeat across the files of
-            # one group, and every duplicate multiplies the matched
-            # rows of the SHARED parent scan multiplicatively across
-            # groups before the single coordinate dedupe — correct
-            # (marker truth is idempotent) but a hot-key inflation
-            # hazard at scale (r13 ADVICE)
-            one = one.distinct()
-            keys = one if keys is None else keys.unionByName(one)
-        # the marker column (not the key columns, which may be
-        # legitimately NULL under null-safe equality) proves a match
-        # after the outer join
-        keys = materialize_small(keys.withColumn(f"_hit_g{gi}", F.lit(1)))
-        cond = F.col("_data_seq") < F.col(f"_dseq_g{gi}")
-        for c in cols:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"_k{gi}_{c}"))
-        for sc in scope_cols:
-            expr, stringify = scope_exprs[sc]
-            rhs = F.col(f"_k{gi}_part_{sc}")
-            comp = (
-                (expr == rhs.cast("string"))
-                if stringify
-                else (expr == rhs)
-            )
-            # null scope component = global for that column
-            cond = cond & (rhs.isNull() | comp)
-        return keys, cond
-
-    group_cache: dict = {}
-
-    def _groups() -> list[dict]:
-        """Distinct delete groups (frames built lazily via _frame_of,
-        cached across the insert anti-joins and the recovery markers)."""
-        if "groups" not in group_cache:
-            by_key: dict[tuple, list[str]] = {}
-            for p, e in sorted(del_facts.items()):
-                d = e["del"]
-                by_key.setdefault(
-                    (
-                        d["content"],
-                        tuple(sorted(d["equality_ids"])),
-                        int(d.get("spec_id", 0)),
-                        tuple(sorted(e["pos"])),
-                    ),
-                    [],
-                ).append(p)
-            group_cache["groups"] = [
-                {
-                    "gi": gi,
-                    "content": key[0],
-                    "ids": key[1],
-                    "pos": set(key[3]),
-                    "dels": [del_facts[p]["del"] for p in paths_g],
-                    "rows": sum(
-                        del_facts[p]["del"].get("record_count") or 0
-                        for p in paths_g
-                    ),
-                }
-                for gi, (key, paths_g) in enumerate(sorted(by_key.items()))
-            ]
-        return group_cache["groups"]
-
-    def _frame_of(g: dict) -> DataFrame:
-        if "frame" not in g:
-            gi = g["gi"]
-            if g["content"] == 1:
-                g["frame"] = _pos_group_frame(gi, g["dels"])
-                g["cond"] = (
-                    (F.col("_norm_path") == F.col(f"_dp_g{gi}"))
-                    & (F.col("_row_index") == F.col(f"_dpos_g{gi}"))
-                    & (F.col("_data_seq") <= F.col(f"_dseq_g{gi}"))
-                )
-                g["marker"] = F.col(f"_dp_g{gi}").isNotNull()
-            else:
-                g["frame"], g["cond"] = _eq_group_frame(
-                    gi, g["ids"], g["dels"]
-                )
-                g["marker"] = F.col(f"_hit_g{gi}").isNotNull()
-        return g["frame"]
-
-    def _new_at(g: dict, position: int) -> bool:
-        return position in g["pos"] and (position - 1) not in g["pos"]
+    def _new_at(members: set, position: int) -> bool:
+        return position in members and (position - 1) not in members
 
     # --- inserts: data files each snapshot added ----------------------
     for ordinal, sid, added, position in insert_jobs:
-        groups_files: dict[tuple, list[str]] = {}
-        for f in added:
-            pv = f.get("partition") or {}
-            key = tuple(
-                None if pv.get(c) is None else str(pv.get(c))
-                for c in part_cols
-            )
-            groups_files.setdefault(key, []).append(
-                norm_file_ref(f["path"], path)
-            )
-        new_pos_groups = [
-            g
-            for g in _groups()
-            if g["content"] == 1 and _new_at(g, position)
+        # position deletes MAY target data files added in the SAME
+        # snapshot (spec: pos deletes apply at seq <=, unlike
+        # equality's strictly-before — the Flink same-checkpoint dedupe
+        # shape): those rows were never live and must not surface as
+        # inserts (iceberg-core attaches the snapshot's deletes to
+        # AddedRowsScanTask)
+        new_pos = [
+            _plan(gi)
+            for gi, (members, ds) in enumerate(groups)
+            if ds[0]["content"] == 1 and _new_at(members, position)
         ]
-        # id-resolution split mirrors the snapshot reader: foreign
-        # files carrying parquet field ids resolve by ID (rename-
-        # safe), this engine's plain exports by name — without the
-        # split a renamed column would silently null-fill in
-        # changelog output only (r11 ADVICE low).
-        ins = _assemble_iceberg(
-            spark,
-            groups_files,
-            schema_json,
-            schema,
-            part_cols,
-            union_threshold,
-            with_positions=bool(new_pos_groups),
-            name_mapping=_parsed_name_mapping(metadata),
+        ins = assemble_file_set(
+            spark, metadata, path, added, schema_json, schema,
+            union_threshold, with_positions=bool(new_pos),
         )
-        if new_pos_groups:
-            # position deletes MAY target data files added in the
-            # SAME snapshot (spec: pos deletes apply at seq <=,
-            # unlike equality's strictly-before — the Flink
-            # same-checkpoint dedupe shape): those rows were never
-            # live and must not surface as inserts (iceberg-core
-            # attaches the snapshot's deletes to AddedRowsScanTask)
-            for g in new_pos_groups:
-                gi = g["gi"]
-                ins = ins.join(
-                    _bounded_broadcast(_frame_of(g), g["rows"]),
-                    (
-                        decoded_file_path(F.col("_file_path"))
-                        == F.col(f"_dp_g{gi}")
-                    )
-                    & (F.col("_row_index") == F.col(f"_dpos_g{gi}")),
-                    "left_anti",
-                )
-            ins = ins.drop("_file_path", "_row_index")
+        if new_pos:
+            ins = ins.withColumn(
+                "_norm_path", decoded_file_path("_file_path")
+            )
+            if any(p.needs_seq for p in new_pos):
+                ins = with_data_seq(spark, ins, path, added)
+            for p in new_pos:
+                ins = ins.join(p.build_side(), p.cond, "left_anti")
         frames.append(_stamp(ins, "insert", ordinal, sid))
 
     # --- deletes: ONE shared parent scan for every snapshot -----------
@@ -617,7 +423,7 @@ def read_iceberg_changelog(
                 union_threshold,
                 with_positions=True,
             ).withColumn(
-                "_norm_path", decoded_file_path(F.col("_file_path"))
+                "_norm_path", decoded_file_path("_file_path")
             )
             # O(files) driver-side metadata — the read_iceberg seq-map
             # rule: every comparison keys on the DECODED absolute path
@@ -633,85 +439,49 @@ def read_iceberg_changelog(
                 "_f_path string, _data_seq long, _f_pos array<int>",
             )
             joined = parent.join(
-                F.broadcast(facts),
-                F.col("_norm_path") == F.col("_f_path"),
-                "left",
+                F.broadcast(facts), F.expr("_norm_path = _f_path"), "left"
             )
-            marker_groups = []
-            for g in _groups():
+            # distinct above the materialized frame: a duplicate
+            # tombstone would multiply the matched rows of the shared
+            # parent scan before the one coordinate dedupe below
+            markers = []
+            for gi, (members, _) in enumerate(groups):
                 if not (
-                    g["pos"] & parent_positions
-                    or any(_new_at(g, p + 1) for p in parent_positions)
+                    members & parent_positions
+                    or any(_new_at(members, p + 1) for p in parent_positions)
                 ):
                     continue
+                p = _plan(gi)
                 joined = joined.join(
-                    _bounded_broadcast(_frame_of(g), g["rows"]),
-                    g["cond"],
-                    "left_outer",
+                    p.build_side(p.frame.distinct()), p.cond, "left_outer"
                 )
-                marker_groups.append(g)
+                markers.append((members, f"({p.marker} IS NOT NULL)"))
 
-            def _any(conds):
-                out = None
-                for c in conds:
-                    out = c if out is None else (out | c)
-                return out
-
+            # the per-snapshot predicates as SQL text: one expression
+            # each for the filter and the explode, however long the chain
             dead_structs = []
             dead_conds = []
             for ordinal, sid, ppos in recoveries:
-                present_p = F.array_contains(F.col("_f_pos"), ppos)
-                present_s = F.array_contains(F.col("_f_pos"), ppos + 1)
-                killed = _any(
-                    [g["marker"] for g in marker_groups if ppos in g["pos"]]
-                )
-                new_hit = _any(
-                    [
-                        g["marker"]
-                        for g in marker_groups
-                        if _new_at(g, ppos + 1)
-                    ]
-                )
-                live = (
-                    present_p if killed is None else (present_p & ~killed)
-                )
-                hit = (
-                    ~present_s
-                    if new_hit is None
-                    else (~present_s | new_hit)
-                )
-                dead = live & hit
-                dead_conds.append(dead)
+                killed = [m for members, m in markers if ppos in members]
+                new_hit = [m for members, m in markers if _new_at(members, ppos + 1)]
+                live = " AND NOT ".join([f"array_contains(_f_pos, {ppos})", *killed])
+                hit = " OR ".join([f"NOT array_contains(_f_pos, {ppos + 1})", *new_hit])
+                dead = f"({live}) AND ({hit})"
+                dead_conds.append(f"({dead})")
                 dead_structs.append(
-                    F.when(
-                        dead,
-                        F.struct(
-                            F.lit(ordinal).cast("int").alias("o"),
-                            F.lit(sid).cast("long").alias("s"),
-                        ),
-                    )
+                    f"CASE WHEN {dead} THEN named_struct('o', {ordinal}, "
+                    f"'s', CAST({sid} AS BIGINT)) END"
                 )
             dead_rows = (
-                joined.filter(_any(dead_conds))
+                joined.filter(F.expr(" OR ".join(dead_conds)))
                 .dropDuplicates(["_norm_path", "_row_index"])
-                .select(
-                    *[f.name for f in schema.fields],
-                    F.explode(
-                        F.filter(
-                            F.array(*dead_structs),
-                            lambda x: x.isNotNull(),
-                        )
-                    ).alias("_ord"),
+                .selectExpr(
+                    *data_cols,
+                    f"explode(filter(array({', '.join(dead_structs)}), "
+                    "x -> x IS NOT NULL)) AS _ord",
                 )
             )
-            frames.append(
-                dead_rows.select(
-                    *[f.name for f in schema.fields],
-                    F.lit("delete").alias(CHANGE_TYPE_COL),
-                    F.col("_ord.o").alias(CHANGE_ORDINAL_COL),
-                    F.col("_ord.s").alias(COMMIT_SNAPSHOT_COL),
-                ).select(*out_cols)
-            )
+            frames.append(_stamp(dead_rows, "delete", "_ord.o", "_ord.s"))
 
     if not frames:
         return spark.createDataFrame([], empty_schema)
@@ -734,24 +504,20 @@ def read_iceberg_changelog(
         # Identifier fields are required non-null per the Iceberg spec
         # (identifier-field-ids must reference required fields), so
         # window null-grouping vs join null semantics cannot diverge.
-        from pyspark.sql.window import Window as _W
-
-        w = _W.partitionBy(COMMIT_SNAPSHOT_COL, *identifier_fields)
-        is_del = F.when(F.col(CHANGE_TYPE_COL) == "delete", 1).otherwise(0)
-        is_ins = F.when(F.col(CHANGE_TYPE_COL) == "insert", 1).otherwise(0)
-        both = (F.max(is_del).over(w) == 1) & (F.max(is_ins).over(w) == 1)
+        t = CHANGE_TYPE_COL
+        w = ", ".join(ident(c) for c in [COMMIT_SNAPSHOT_COL, *identifier_fields])
+        both = " AND ".join(
+            f"max(IF({t} = '{k}', 1, 0)) OVER (PARTITION BY {w}) = 1"
+            for k in ("delete", "insert")
+        )
         out = out.withColumn(
-            CHANGE_TYPE_COL,
-            F.when(
-                both & (F.col(CHANGE_TYPE_COL) == "delete"),
-                F.lit("update_preimage"),
-            )
-            .when(
-                both & (F.col(CHANGE_TYPE_COL) == "insert"),
-                F.lit("update_postimage"),
-            )
-            .otherwise(F.col(CHANGE_TYPE_COL)),
-        ).select(*out_cols)
+            t,
+            F.expr(
+                f"CASE WHEN {both} AND {t} = 'delete' THEN 'update_preimage' "
+                f"WHEN {both} AND {t} = 'insert' THEN 'update_postimage' "
+                f"ELSE {t} END"
+            ),
+        )
     return out
 
 

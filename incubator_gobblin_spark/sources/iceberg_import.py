@@ -32,12 +32,28 @@ from __future__ import annotations
 
 import json
 import os
+from functools import reduce
+from operator import and_
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructField, StructType
 
+from incubator_gobblin_spark.functions.iceberg_transforms import (
+    check_transform,
+    epoch_norm,
+    transform_expr,
+)
+from incubator_gobblin_spark.functions.sql_text import ident
+from incubator_gobblin_spark.sources import delta_import
+from incubator_gobblin_spark.sources.delta_import import (
+    assemble_snapshot,
+    decoded_file_path,
+    decoded_file_path_sql,
+    materialize_small,
+)
 from incubator_gobblin_spark.sources.files import scan_files
 
 
@@ -788,8 +804,6 @@ def _assemble_plain_with_mapping(
     caveat as the streaming reader's id resolution; a well-formed
     mapping keeps names unique across fields (spec requirement), which
     is what makes first-present-name resolution exact."""
-    from incubator_gobblin_spark.sources.delta_import import assemble_snapshot
-
     names_of_id = {
         e.get("field-id"): list(e.get("names") or [])
         for e in (name_mapping or [])
@@ -875,8 +889,6 @@ def _assemble_iceberg(
     (:func:`_assemble_plain_with_mapping`) and by identity name
     otherwise (this engine's own exports); the classes read separately
     and union."""
-    from incubator_gobblin_spark.sources.delta_import import assemble_snapshot
-
     with_ids, plain = _split_groups_by_field_ids(groups)
     parts: list[DataFrame] = []
     if plain:
@@ -1006,26 +1018,9 @@ def read_iceberg(
     directly — the derived partition values are just not usable for
     metadata pruning here, costing at most a skipped skip.
 
-    v2 row-level deletes written by a foreign engine are applied:
-
-    - POSITION deletes (spec §Position Delete Files — parquet of
-      ``file_path``, ``pos``) anti-join the scan's ``_metadata``
-      (file_path, row_index) coordinates, restricted to data rows
-      whose data sequence number is <= the delete file's (the spec's
-      scan-planning rule — under Iceberg's unique-immutable-path
-      assumption the restriction is usually vacuous, but it makes the
-      read spec-exact if a path were ever re-added after removal).
-    - EQUALITY deletes (spec §Equality Delete Files — parquet of the
-      ``equality_ids`` columns) anti-join on those columns, restricted
-      to data rows whose data sequence number is STRICTLY LESS than
-      the delete file's (the spec's apply-to-older-data rule). Null
-      semantics follow SQL ``IS NOT DISTINCT FROM`` via null-safe
-      equality.
-
-    Both kinds read the row's data sequence from one broadcast
-    file→seq map keyed on the DECODED absolute ``_metadata`` file path
-    (the scan path is a percent-encoded URI; manifest paths are not —
-    see ``delta_import.decoded_file_path``).
+    v2 row-level deletes written by a foreign engine (position and
+    equality, partition-scoped or global) are applied per delete group
+    through :func:`plan_delete_group`, which states the rules.
 
     ``_coords=True`` (internal — sinks.iceberg_delete) additionally
     returns the scan coordinates ``_norm_path`` (decoded absolute data
@@ -1033,14 +1028,9 @@ def read_iceberg(
     DELETE can turn matched rows into spec position-delete
     coordinates without a second scan.
 
-    Scale shape: every delete set is scanned once and broadcast while
-    its manifest-declared record count stays under
-    ``delta_import.TOMBSTONE_BROADCAST_MAX_ROWS`` (shuffle-join
-    fallback past it — identical result, bounded memory); the data
-    side stays a single whole-stage-codegen scan with no extra
-    shuffle."""
-    from incubator_gobblin_spark.sources.delta_import import assemble_snapshot
-
+    Scale shape: the data side stays a single whole-stage-codegen scan
+    with no extra shuffle; each delete group is scanned once and joined
+    as a bounded broadcast."""
     metadata = current_metadata(path)
     # a STRING snapshot_id is a ref (spec §refs: branch/tag names map
     # to snapshot ids) — resolve it, loudly refusing unknown names
@@ -1073,31 +1063,7 @@ def read_iceberg(
         (s for s in metadata["schemas"] if s["schema-id"] == schema_id),
         None,
     ) or current_schema(metadata)
-    schema = StructType(
-        [
-            StructField(
-                f["name"], _spark_type(f["type"]), not f.get("required")
-            )
-            for f in schema_json["fields"]
-        ]
-    )
-    spec = next(
-        s
-        for s in metadata["partition-specs"]
-        if s["spec-id"] == metadata["default-spec-id"]
-    )
-    field_name = {
-        f["id"]: f["name"] for f in schema_json["fields"]
-    }
-    # restore only IDENTITY transforms; hidden-partitioning fields
-    # (bucket/truncate/day/...) keep their source columns inside the
-    # data files, so the scan serves them without restore
-    part_cols = [
-        field_name[f["source-id"]]
-        for f in spec["fields"]
-        if f["transform"] == "identity"
-    ]
-
+    schema, part_cols = table_layout(metadata, schema_json)
     files, delete_files = snapshot_files(
         metadata, path, snapshot_id, collect_deletes=True
     )
@@ -1126,296 +1092,276 @@ def read_iceberg(
     # per-FILE-spec grouping + identity restore + id/name resolution
     # live in assemble_file_set (shared with the changelog's one-pass
     # parent recovery)
-    def _assemble_all(with_positions: bool) -> DataFrame:
-        return assemble_file_set(
-            spark,
-            metadata,
-            path,
-            files,
-            schema_json,
-            schema,
-            union_threshold,
-            with_positions,
-        )
-
-    if not delete_files:
-        out = _assemble_all(_coords)
-        if _coords:
-            from incubator_gobblin_spark.sources.delta_import import (
-                decoded_file_path as _dfp,
-            )
-
-            out = out.select(
-                *[f.name for f in schema.fields],
-                _dfp(F.col("_file_path")).alias("_norm_path"),
-                "_row_index",
-            )
-        return out
-
-    # row-level deletes present: carry the scan's (file_path,
-    # row_index) coordinates through assembly, anti-join the tombstones
-    from incubator_gobblin_spark.sources.delta_import import (
-        TOMBSTONE_BROADCAST_MAX_ROWS,
-        decoded_file_path,
-        materialize_small,
+    coords = _coords or bool(delete_files)
+    df = assemble_file_set(
+        spark, metadata, path, files, schema_json, schema, union_threshold, coords
     )
-
-    df = _assemble_all(True)
-
-    # Every comparison keys on the DECODED absolute path: the scan's
-    # _metadata.file_path is a percent-encoded URI while the replayed
-    # manifest paths (and the file_path column inside position-delete
-    # files) are decoded — a raw comparison silently misses any path
-    # containing a space/'+'/'%', resurrecting deleted rows (and
-    # nulling _data_seq so equality deletes never apply).
-    df = df.withColumn("_norm_path", decoded_file_path(F.col("_file_path")))
-
-    # The row's DATA sequence number, from a broadcast file→seq map
-    # keyed on the decoded scan path (no shuffle; the map is O(files)
-    # driver-side metadata). It gates both delete kinds per the spec's
-    # sequence rules: position deletes apply to data sequenced <= the
-    # delete file, equality deletes STRICTLY < (spec §Scan Planning).
-    # The join is added LAZILY — only when some gate can actually bind
-    # (the manifests carry every seq, so vacuity is a driver-side
-    # min/max check) — keeping the common one-delete-snapshot read at
-    # one anti-join with no extra plan nodes.
+    if not coords:
+        return df
+    df = df.withColumn("_norm_path", decoded_file_path("_file_path"))
+    # Both kinds read the row's data sequence from one broadcast
+    # file->seq map, joined only when some gate can bind (the manifests
+    # carry every seq, so vacuity is a driver-side check) — keeping the
+    # common one-delete-snapshot read at one anti-join per group
     data_seqs = [int(f.get("seq") or 0) for f in files]
-    seq_joined = False
-
-    def _with_seq(frame: DataFrame) -> DataFrame:
-        nonlocal seq_joined
-        if seq_joined:
-            return frame
-        seq_joined = True
-        seq_map = spark.createDataFrame(
-            [(norm_file_ref(f["path"], path), int(f.get("seq") or 0))
-             for f in files],
-            "_seq_path string, _data_seq long",
-        )
-        return frame.join(
-            F.broadcast(seq_map),
-            F.col("_norm_path") == F.col("_seq_path"),
-            "left",
-        )
-
-    def _bounded_broadcast(frame: DataFrame, rows: int) -> DataFrame:
-        # tombstone sets are metadata-scale in practice, but a
-        # pathological table must not OOM the broadcast — past the
-        # bound (known from manifest record counts, zero extra I/O)
-        # fall back to a shuffle join: identical result, bounded memory
-        return F.broadcast(frame) if rows <= TOMBSTONE_BROADCAST_MAX_ROWS else frame
-
-    pos_deletes = [d for d in delete_files if d["content"] == 1]
-    if pos_deletes:
-        # one scan per distinct data sequence, not per delete file: a
-        # commit staging its coordinates across N shuffle partitions
-        # yields N files that differ only in content — reading them as
-        # N union arms made the plan linear in the file count
-        by_seq: dict[int, list[dict]] = {}
-        for d in pos_deletes:
-            by_seq.setdefault(int(d["seq"]), []).append(d)
-        dels = None
-        for seq, ds in sorted(by_seq.items()):
-            one = (
-                scan_files(spark, [norm_file_ref(d["path"], path) for d in ds])
-                .select(
-                    decoded_file_path(F.col("file_path")).alias("_del_path"),
-                    F.col("pos").cast("long").alias("_del_pos"),
-                )
-                .withColumn("_del_seq", F.lit(seq))
-            )
-            dels = one if dels is None else dels.unionByName(one)
-        # decode + union of the delete files happens ONCE — Catalyst's
-        # semi/anti pushdown through the scan union would otherwise
-        # re-read every position-delete file once per union arm
-        dels = materialize_small(dels)
-        cond = (F.col("_norm_path") == F.col("_del_path")) & (
-            F.col("_row_index") == F.col("_del_pos")
-        )
-        # the <= gate only binds when some data file is NEWER than some
-        # delete file (a path re-added after removal); otherwise it is
-        # provably vacuous and the seq join is skipped
-        if max(data_seqs, default=0) > min(d["seq"] for d in pos_deletes):
-            df = _with_seq(df)
-            cond = cond & (F.col("_data_seq") <= F.col("_del_seq"))
-        df = df.join(
-            _bounded_broadcast(
-                dels, sum(d["record_count"] for d in pos_deletes)
-            ),
-            cond,
-            "left_anti",
-        )
-
-    eq_deletes = [d for d in delete_files if d["content"] == 2]
-    if eq_deletes:
-        # equality deletes always need the row's data sequence: the
-        # strictly-less rule is what lets a re-inserted key survive
-        df = _with_seq(df)
-        field_name_all = {f["id"]: f["name"] for f in schema_json["fields"]}
-        field_type_all = {f["id"]: f["type"] for f in schema_json["fields"]}
-        specs_by_id = {
-            s["spec-id"]: s for s in metadata.get("partition-specs", [])
-        }
-
-        def _scope_expr(d: dict, sc: str):
-            return equality_delete_scope_expr(
-                d,
-                sc,
-                specs_by_id=specs_by_id,
-                field_name_all=field_name_all,
-                field_type_all=field_type_all,
-                current_part_cols=part_cols,
-            )
-
-        def _plain_scope_value(v):
-            # Avro-decoded day/timestamp partition values may arrive as
-            # date/datetime objects; the transform results are epoch
-            # ints — normalize the literal side to match
-            from incubator_gobblin_spark.functions.iceberg_transforms import (
-                epoch_norm as _norm,
-            )
-
-            return _norm(v)
-
-        # group by (equality ids, spec id): scope transforms must be
-        # uniform within a group, and a table evolved across specs may
-        # carry same-named fields with different transforms
-        by_ids: dict[tuple, list[dict]] = {}
-        for d in eq_deletes:
-            key = (tuple(sorted(d["equality_ids"])), d.get("spec_id", 0))
-            by_ids.setdefault(key, []).append(d)
-        for (ids, _spec_id), dels_of_group in sorted(by_ids.items()):
-            cols = [field_name_all[i] for i in ids]
-            scope_cols = sorted(
-                {
-                    k
-                    for d in dels_of_group
-                    for k, v in d["partition"].items()
-                    if v is not None
-                }
-            )
-            scope_exprs = {
-                sc: _scope_expr(dels_of_group[0], sc) for sc in scope_cols
-            }
-            # one scan per distinct (sequence, scope tuple), not per
-            # delete file: a CDC commit stages its key set across N
-            # shuffle partitions -> N files sharing seq and scope
-            sub: dict[tuple, list[dict]] = {}
-            for d in dels_of_group:
-                sv = []
-                for sc in scope_cols:
-                    v = d["partition"].get(sc)
-                    if not scope_exprs[sc][1]:
-                        v = _plain_scope_value(v)
-                    sv.append(v)
-                sub.setdefault(
-                    (int(d["seq"]), tuple(repr(v) for v in sv)), []
-                ).append((d, sv))
-            parts_df = None
-            for (seq, _svk), ds in sorted(sub.items()):
-                one = scan_files(
-                    spark, [norm_file_ref(d["path"], path) for d, _ in ds]
-                ).select(
-                    *[F.col(c).alias(f"_eq_{c}") for c in cols]
-                ).withColumn("_del_seq", F.lit(seq))
-                for sc, v in zip(scope_cols, ds[0][1]):
-                    one = one.withColumn(f"_eq_part_{sc}", F.lit(v))
-                parts_df = one if parts_df is None else parts_df.unionByName(one)
-            parts_df = materialize_small(parts_df)
-            cond = F.col("_data_seq") < F.col("_del_seq")
-            for c in cols:
-                # null-safe equality: a null delete value matches a
-                # null row value (Iceberg equality semantics)
-                cond = cond & F.col(c).eqNullSafe(F.col(f"_eq_{c}"))
-            for sc in scope_cols:
-                expr, stringify = scope_exprs[sc]
-                rhs = F.col(f"_eq_part_{sc}")
-                comp = (
-                    (expr == rhs.cast("string")) if stringify else (expr == rhs)
-                )
-                # null scope component = global for that column
-                cond = cond & (rhs.isNull() | comp)
-            df = df.join(
-                _bounded_broadcast(
-                    parts_df,
-                    sum(d["record_count"] for d in dels_of_group),
-                ),
-                cond,
-                "left_anti",
-            )
-
+    plans = [
+        plan_delete_group(spark, metadata, schema_json, path, g, f"_{i}", data_seqs)
+        for i, g in enumerate(group_deletes(delete_files))
+    ]
+    if any(p.needs_seq for p in plans):
+        df = with_data_seq(spark, df, path, files)
+    for p in plans:
+        df = df.join(p.build_side(), p.cond, "left_anti")
     keep = [f.name for f in schema.fields]
     if _coords:
         keep += ["_norm_path", "_row_index"]
     return df.select(*keep)
 
 
-def equality_delete_scope_expr(
-    d: dict,
-    sc: str,
-    *,
-    specs_by_id: dict,
-    field_name_all: dict,
-    field_type_all: dict,
-    current_part_cols: list[str],
-):
-    """Row-side Column comparable to equality delete ``d``'s scope
-    value on partition field ``sc`` — resolved through the DELETE
-    FILE's own spec (spec §Scan Planning). Identity fields compare the
-    source column; transform fields (bucket/truncate/year/month/day/
-    hour) evaluate the transform JVM-side
-    (functions.iceberg_transforms). Returns ``(expr, stringify)``.
-    ValueError refuses the read — applying the delete globally would
-    over-delete. Shared by the snapshot reader and the changelog
-    scan."""
-    spec_d = specs_by_id.get(d.get("spec_id", 0))
-    pf = None
-    if spec_d:
-        pf = next(
-            (
-                f
-                for f in spec_d["fields"]
-                if (f.get("name") or field_name_all.get(f["source-id"]))
-                == sc
-            ),
-            None,
-        )
-    if pf is None:
-        if sc in current_part_cols:
-            # identity column of the current spec, restored by the
-            # scan (the q137-pinned path)
-            return F.col(sc).cast("string"), True
-        raise ValueError(
-            f"read_iceberg: equality delete {d['path']} is "
-            f"scoped to partition field {sc!r} not present in "
-            f"its spec {d.get('spec_id')} — refusing to apply "
-            "the delete globally (it would over-delete)"
-        )
-    src = field_name_all.get(pf["source-id"])
-    ice_t = field_type_all.get(pf["source-id"])
-    if pf["transform"] == "identity" and src is not None:
-        return F.col(src).cast("string"), True
-    from incubator_gobblin_spark.functions.iceberg_transforms import (
-        transform_expr,
+def with_data_seq(
+    spark: SparkSession, df: DataFrame, path: str, files: list[dict]
+) -> DataFrame:
+    """``df`` (carrying ``_norm_path``) plus each row's DATA sequence
+    number ``_data_seq``, from one broadcast file->seq map of
+    ``files`` keyed on the decoded absolute path (no shuffle; the map
+    is O(files) driver-side metadata)."""
+    seq_map = spark.createDataFrame(
+        [(norm_file_ref(f["path"], path), int(f.get("seq") or 0)) for f in files],
+        "_seq_path string, _data_seq long",
     )
+    return df.join(F.broadcast(seq_map), F.expr("_norm_path = _seq_path"), "left")
 
-    if src is None or not isinstance(ice_t, str):
+
+def table_layout(metadata: dict, schema_json: dict) -> tuple[StructType, list[str]]:
+    """The Spark schema of ``schema_json`` and the default spec's
+    IDENTITY partition columns — the ones a scan restores from
+    manifest partition values (hidden-partitioning transforms keep
+    their source columns inside the data files)."""
+    schema = StructType(
+        [
+            StructField(f["name"], _spark_type(f["type"]), not f.get("required"))
+            for f in schema_json["fields"]
+        ]
+    )
+    name = {f["id"]: f["name"] for f in schema_json["fields"]}
+    spec = next(
+        s
+        for s in metadata["partition-specs"]
+        if s["spec-id"] == metadata["default-spec-id"]
+    )
+    return schema, [
+        name[f["source-id"]] for f in spec["fields"] if f["transform"] == "identity"
+    ]
+
+
+def group_deletes(dels: list[dict], signature=None) -> list[list[dict]]:
+    """Delete files grouped for :func:`plan_delete_group`: by content,
+    equality ids and (for equality deletes) spec id — scope transforms
+    must be uniform within a group, and a table evolved across specs
+    may carry same-named fields with different transforms. A caller
+    may add a ``signature(d)`` to the key (the changelog's snapshot
+    membership). Groups come out in key order, files in input order."""
+    groups: dict[tuple, list[dict]] = {}
+    for d in dels:
+        eq = d["content"] == 2
+        key = (
+            d["content"],
+            tuple(sorted(d["equality_ids"])),
+            int(d.get("spec_id", 0)) if eq else 0,
+            signature(d) if signature else (),
+        )
+        groups.setdefault(key, []).append(d)
+    return [groups[k] for k in sorted(groups)]
+
+
+def resolve_delete_scope(
+    metadata: dict, schema_json: dict, d: dict, sc: str
+) -> tuple[str, str, str]:
+    """``(source column, transform, Iceberg type)`` of equality delete
+    ``d``'s scope on partition field ``sc``, resolved through the
+    DELETE FILE's own spec (spec §Scan Planning); a field its spec does
+    not name resolves only as an identity column of the current spec.
+    ValueError refuses the read: applying the delete globally would
+    over-delete. Pure Python — the stream reader calls it where no
+    Spark session exists."""
+    fields = {f["id"]: f for f in schema_json["fields"]}
+    spec = next(
+        (
+            s
+            for s in metadata.get("partition-specs", [])
+            if s["spec-id"] == d.get("spec_id", 0)
+        ),
+        {"fields": []},
+    )
+    pf = next(
+        (
+            f
+            for f in spec["fields"]
+            if (f.get("name") or fields.get(f["source-id"], {}).get("name")) == sc
+        ),
+        None,
+    )
+    refuse = f"equality delete {d['path']} is scoped to partition field {sc!r}"
+    guard = "refusing to apply the delete globally (it would over-delete)"
+    if pf is None:
+        if sc in table_layout(metadata, schema_json)[1]:
+            src = next(f for f in schema_json["fields"] if f["name"] == sc)
+            return sc, "identity", src["type"]
         raise ValueError(
-            f"read_iceberg: equality delete {d['path']} scope "
-            f"field {sc!r} has a nested or unresolvable source "
-            "column — refusing to apply the delete globally "
-            "(it would over-delete)"
+            f"{refuse} not present in its spec {d.get('spec_id')} — {guard}"
+        )
+    src = fields.get(pf["source-id"])
+    if src is None or not isinstance(src["type"], str):
+        raise ValueError(
+            f"{refuse}, whose source column is nested or unresolvable — {guard}"
         )
     try:
-        return transform_expr(pf["transform"], F.col(src), ice_t), False
+        check_transform(pf["transform"], src["type"])
     except ValueError as e:
         raise ValueError(
-            f"read_iceberg: equality delete {d['path']} is "
-            f"scoped to partition field {sc!r} "
-            f"({pf['transform']} over {ice_t}) this engine "
-            f"cannot evaluate ({e}) — refusing to apply the "
-            "delete globally (it would over-delete)"
+            f"{refuse} ({pf['transform']} over {src['type']}) this engine "
+            f"cannot evaluate ({e}) — {guard}"
         ) from e
+    return src["name"], pf["transform"], src["type"]
+
+
+def scope_literal(transform: str, value):
+    """A delete file's scope value in the form its row side compares
+    with: identity values raw (both sides compare as strings),
+    transform results in epoch space — Avro decodes day/timestamp
+    partition values to date/datetime, the transforms yield epoch ints
+    (``iceberg_transforms.epoch_norm``)."""
+    return value if transform == "identity" else epoch_norm(value)
+
+
+class DeleteGroup(NamedTuple):
+    """One delete group planned by :func:`plan_delete_group`."""
+
+    frame: DataFrame  # materialized tombstones, columns suffixed
+    cond: Column  # match against the row columns
+    rows: int  # manifest record count
+    marker: str  # column non-null after an outer join iff the row matched
+    needs_seq: bool  # ``cond`` reads ``_data_seq``
+
+    def build_side(self, frame: DataFrame | None = None) -> DataFrame:
+        """``frame`` (default: the group's) as a join's build side,
+        broadcast while the manifest row count is at most
+        ``delta_import.TOMBSTONE_BROADCAST_MAX_ROWS`` and shuffle-joined
+        past it: identical result, bounded memory."""
+        frame = self.frame if frame is None else frame
+        if self.rows <= delta_import.TOMBSTONE_BROADCAST_MAX_ROWS:
+            return F.broadcast(frame)
+        return frame
+
+
+def plan_delete_group(
+    spark: SparkSession,
+    metadata: dict,
+    schema_json: dict,
+    path: str,
+    dels: list[dict],
+    sfx: str,
+    data_seqs: list[int],
+) -> DeleteGroup:
+    """Plan one group of v2 row-level delete files (one
+    :func:`group_deletes` group) against rows of data sequenced
+    ``data_seqs`` — the one place Iceberg delete application is
+    derived, the twin of ``delta_import.anti_join_dvs``. Its rules:
+
+    - POSITION deletes (spec §Position Delete Files — parquet of
+      ``file_path``, ``pos``) match the row's ``_norm_path`` (the
+      DECODED absolute scan path: the scan's ``_metadata.file_path``
+      is a percent-encoded URI, delete-file paths are not) and
+      ``_row_index``, for data sequenced <= the delete file.
+    - EQUALITY deletes (spec §Equality Delete Files — parquet of the
+      ``equality_ids`` columns) match the row's data columns with
+      null-safe equality (SQL ``IS NOT DISTINCT FROM``: a null delete
+      value kills a null row value), for data sequenced STRICTLY
+      before the delete file — what lets a re-inserted key survive.
+    - A partition-scoped equality delete applies only within its
+      partition (spec §Scan Planning; a null component is global for
+      that field). Each scope field resolves through the delete file's
+      OWN spec (:func:`resolve_delete_scope`, which refuses what it
+      cannot resolve); identity scopes compare as strings, transform
+      scopes (bucket/truncate/year/month/day/hour) evaluate the
+      transform over the source column (``transform_expr``) against
+      the epoch-normalized literal (:func:`scope_literal`).
+    - The sequence gate is added only when it can bind (some data
+      sequence can fail it); ``needs_seq`` then tells the caller to
+      give the rows a ``_data_seq`` column.
+    - The group's files are read with one scan per distinct (sequence,
+      scope tuple), not one per file — a commit stages its keys across
+      N shuffle partitions, N files sharing seq and scope — unioned
+      and materialized once (``materialize_small``, no exchange under
+      it), so a pushdown through a scan union does not re-read them
+      per arm. ``build_side`` broadcasts them within the cap.
+
+    Frame columns carry ``sfx``, so several groups join one frame."""
+    eq = dels[0]["content"] == 2
+    names = {f["id"]: f["name"] for f in schema_json["fields"]}
+    keys = [names[i] for i in sorted(dels[0]["equality_ids"])]
+    scope_cols = sorted(
+        {k for d in dels for k, v in d["partition"].items() if v is not None}
+        if eq
+        else ()
+    )
+    scopes = [
+        resolve_delete_scope(metadata, schema_json, dels[0], sc) for sc in scope_cols
+    ]
+    subs: dict[tuple, tuple[list, list[dict]]] = {}
+    for d in dels:
+        sv = [
+            scope_literal(tf, d["partition"].get(sc))
+            for sc, (_, tf, _) in zip(scope_cols, scopes)
+        ]
+        subs.setdefault((int(d["seq"]), repr(sv)), (sv, []))[1].append(d)
+    # SQL text: one py4j round-trip per select and per condition
+    frame = None
+    for (seq, _), (sv, ds) in sorted(subs.items()):
+        if eq:
+            sel = [f"{ident(c)} AS {ident(f'_k{sfx}_{c}')}" for c in keys]
+        else:
+            sel = [
+                f"{decoded_file_path_sql('file_path')} AS _dp{sfx}",
+                f"CAST(pos AS BIGINT) AS _dpos{sfx}",
+            ]
+        one = scan_files(
+            spark, [norm_file_ref(d["path"], path) for d in ds]
+        ).selectExpr(*sel, f"CAST({seq} AS BIGINT) AS _dseq{sfx}")
+        for sc, v in zip(scope_cols, sv):
+            one = one.withColumn(f"_s{sfx}_{sc}", F.lit(v))
+        frame = one if frame is None else frame.unionByName(one)
+    transformed = []
+    if eq:
+        conds = [f"{ident(c)} <=> {ident(f'_k{sfx}_{c}')}" for c in keys]
+        for sc, (src, tf, ice_t) in zip(scope_cols, scopes):
+            rhs = ident(f"_s{sfx}_{sc}")
+            if tf == "identity":
+                conds.append(
+                    f"({rhs} IS NULL OR "
+                    f"CAST({ident(src)} AS STRING) = CAST({rhs} AS STRING))"
+                )
+            else:
+                transformed.append(
+                    F.col(rhs).isNull()
+                    | (transform_expr(tf, F.col(ident(src)), ice_t) == F.col(rhs))
+                )
+    else:
+        conds = [f"_norm_path = _dp{sfx}", f"_row_index = _dpos{sfx}"]
+    # the gate binds when some data sequence is > (position) or >=
+    # (equality) the group's oldest delete sequence
+    needs_seq = max(data_seqs, default=0) > min(int(d["seq"]) for d in dels) - eq
+    if needs_seq:
+        conds.append(f"_data_seq {'<' if eq else '<='} _dseq{sfx}")
+    return DeleteGroup(
+        materialize_small(frame),
+        reduce(and_, [F.expr(" AND ".join(conds)), *transformed]),
+        sum(int(d.get("record_count") or 0) for d in dels),
+        # never null in the frame, so null after an outer join iff
+        # the row matched nothing (key columns may be legitimately null)
+        f"_dseq{sfx}",
+        needs_seq,
+    )
 
 
 def read_iceberg_incremental(
@@ -1456,42 +1402,7 @@ def read_iceberg_incremental(
     if until not in by_id:
         raise FileNotFoundError(f"snapshot {until} not present")
     schema_json = current_schema(metadata)
-    schema = StructType(
-        [
-            StructField(
-                f["name"], _spark_type(f["type"]), not f.get("required")
-            )
-            for f in schema_json["fields"]
-        ]
-    )
-    spec = next(
-        s
-        for s in metadata["partition-specs"]
-        if s["spec-id"] == metadata["default-spec-id"]
-    )
-    field_name = {f["id"]: f["name"] for f in schema_json["fields"]}
-    # per-FILE-SPEC identity restore (the read_iceberg rule): a file
-    # written before partition evolution stores the column the current
-    # spec derives — restoring from the default spec would null it
-    specs_by_id_all = {
-        s["spec-id"]: s for s in metadata.get("partition-specs", [])
-    }
-    ident_cache: dict[int, list[tuple[str, str]]] = {}
-
-    def _ident(spec_id: int) -> list[tuple[str, str]]:
-        if spec_id not in ident_cache:
-            sp2 = specs_by_id_all.get(spec_id) or spec
-            ident_cache[spec_id] = [
-                (
-                    f2.get("name") or field_name[f2["source-id"]],
-                    field_name[f2["source-id"]],
-                )
-                for f2 in sp2["fields"]
-                if f2["transform"] == "identity"
-                and f2["source-id"] in field_name
-            ]
-        return ident_cache[spec_id]
-
+    schema, _ = table_layout(metadata, schema_json)
     # snapshot order: the metadata list is append-ordered; the range is
     # (after, until] by position
     order = [s["snapshot-id"] for s in snaps]
@@ -1501,7 +1412,7 @@ def read_iceberg_incremental(
             f"until_snapshot_id {until} precedes after_snapshot_id "
             f"{after_snapshot_id}"
         )
-    per_spec: dict[int, dict[tuple, list[str]]] = {}
+    added: list[dict] = []
     for sid in order[lo + 1 : hi + 1]:
         snap = by_id[sid]
         op = snap.get("summary", {}).get("operation", "append")
@@ -1526,31 +1437,18 @@ def read_iceberg_incremental(
                 ):
                     continue
                 df_ = entry["data_file"]
-                f_sid = int(mf.get("partition_spec_id") or 0)
-                idf = _ident(f_sid)
-                pv = df_.get("partition") or {}
-                key = tuple(
-                    None if pv.get(p) is None else str(pv[p])
-                    for p, _ in idf
+                added.append(
+                    {
+                        "path": norm_file_ref(df_["file_path"], path),
+                        "partition": df_.get("partition") or {},
+                        "spec_id": int(mf.get("partition_spec_id") or 0),
+                    }
                 )
-                per_spec.setdefault(f_sid, {}).setdefault(key, []).append(
-                    norm_file_ref(df_["file_path"], path)
-                )
-    if not per_spec:
+    if not added:
         return spark.createDataFrame([], schema)
-    parts = [
-        _assemble_iceberg(
-            spark,
-            per_spec[f_sid],
-            schema_json,
-            schema,
-            [src for _, src in _ident(f_sid)],
-            union_threshold,
-            name_mapping=_parsed_name_mapping(metadata),
-        )
-        for f_sid in sorted(per_spec)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # per-FILE-spec identity restore and id/name resolution: the
+    # read_iceberg rule (a file written before partition evolution
+    # stores the column the current spec derives)
+    return assemble_file_set(
+        spark, metadata, path, added, schema_json, schema, union_threshold
+    )

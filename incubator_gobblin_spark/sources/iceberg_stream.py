@@ -38,8 +38,9 @@ snapshot per data file, executor-side with pyarrow (no Spark session
 inside a Python DataSource — the lakecdf precedent): removed data
 files contribute their parent-live rows, new position-delete files
 their (file, pos) hits, new equality-delete files their key matches
-(identity partition scope honored; transform-scoped delete files
-refuse with guidance to the batch reader). ``replace`` snapshots
+(partition scopes resolved by ``iceberg_import.resolve_delete_scope``,
+transforms evaluated per row with ``transform_py``, as
+``plan_delete_group`` states the rules). ``replace`` snapshots
 (compaction) are invisible, exactly like iceberg-core's
 IncrementalChangelogScan. A fresh earliest-stream on an
 expiry-truncated head serves the survivor's EFFECTIVE state (its own
@@ -62,15 +63,18 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from incubator_gobblin_spark.sources.iceberg_changelog import check_interval
 from incubator_gobblin_spark.sources.iceberg_import import (
     _decode_manifest,
     _decode_manifest_list,
     _parsed_name_mapping,
-    _spark_type,
     current_metadata,
     current_schema,
     norm_file_ref,
+    resolve_delete_scope,
+    scope_literal,
     snapshot_files,
+    table_layout,
 )
 
 
@@ -89,7 +93,7 @@ class _ChangeSplit(InputPartition):
     for effective-state inserts, at the served snapshot); ``new_*``
     are the snapshot's new tombstones whose hits BECOME the deletes.
     ``new_eq``/``standing_eq`` entries are ``(path, key_cols,
-    [(scope_src_col, scope_value_str), ...])``."""
+    [(source_col, transform, iceberg_type, scope_literal), ...])``."""
 
     def __init__(
         self,
@@ -128,29 +132,9 @@ def _field_id_map(path: str) -> dict[str, int]:
 
 
 def _table_schema(path: str):
-    from pyspark.sql.types import StructField, StructType
-
     md = current_metadata(path)
     schema_json = current_schema(md)
-    schema = StructType(
-        [
-            StructField(
-                f["name"], _spark_type(f["type"]), not f.get("required")
-            )
-            for f in schema_json["fields"]
-        ]
-    )
-    spec = next(
-        s
-        for s in md["partition-specs"]
-        if s["spec-id"] == md["default-spec-id"]
-    )
-    fname = {f["id"]: f["name"] for f in schema_json["fields"]}
-    part_cols = [
-        fname[f["source-id"]]
-        for f in spec["fields"]
-        if f["transform"] == "identity"
-    ]
+    schema, part_cols = table_layout(md, schema_json)
     ftype = {f["name"]: f["type"] for f in schema_json["fields"]}
     return schema, part_cols, ftype
 
@@ -263,26 +247,22 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["seq"]), int(end["seq"])
-        if self.read_change_feed:
-            return self._changelog_partitions(lo, hi)
         snaps = self._snaps()
         in_range = [s for s in snaps if lo < self._seq_of(s) <= hi]
         # truncation guard (the delta_stream discipline): a previously
         # CHECKPOINTED offset that predates the surviving chain means
         # expire_iceberg_snapshots dropped unconsumed snapshots —
         # their rows are only reachable through a full re-read
-        if (
-            lo > 0
-            and snaps
-            and self._seq_of(snaps[0]) > lo + 1
-            and in_range
-        ):
+        if lo > 0 and in_range and self._seq_of(snaps[0]) > lo + 1:
             raise ValueError(
                 f"icebergstream: snapshots ({lo}, "
                 f"{self._seq_of(snaps[0])}) were expired; the stream's "
                 "checkpointed offset predates the surviving history — "
                 "restart from a fresh checkpoint"
             )
+        if self.read_change_feed:
+            return self._changelog_partitions(lo, in_range)
+
         def _op(s: dict) -> str:
             return s.get("summary", {}).get("operation", "append")
 
@@ -366,117 +346,44 @@ class IcebergStreamReader(DataSourceStreamReader):
                 _emit(snap, full_state=False)
         return parts or [_AddedFile("", {})]
 
-    def _changelog_partitions(self, lo: int, hi: int):
+    def _changelog_partitions(self, lo: int, in_range: list[dict]):
         """Changelog micro-batch planning (driver-side manifest
-        metadata only): per snapshot in (lo, hi] by sequence number,
+        metadata only): per snapshot in range by sequence number,
         added data files become raw ``insert`` splits and every parent
         data file touched by removals / new delete files becomes one
         recovery split (the batch read_iceberg_changelog semantics,
         shipped as per-file pyarrow work instead of union plans)."""
-        if hi <= lo:
-            return [_ChangeSplit("", {}, 0, 0, "insert")]
-        metadata = current_metadata(self.root)
-        snaps = self._snaps()
-        in_range = [s for s in snaps if lo < self._seq_of(s) <= hi]
         if not in_range:
             return [_ChangeSplit("", {}, 0, 0, "insert")]
-        if lo > 0 and snaps and self._seq_of(snaps[0]) > lo + 1:
-            raise ValueError(
-                f"icebergstream: snapshots ({lo}, "
-                f"{self._seq_of(snaps[0])}) were expired; the stream's "
-                "checkpointed offset predates the surviving history — "
-                "restart from a fresh checkpoint"
-            )
+        metadata = current_metadata(self.root)
         schema_json = current_schema(metadata)
-        # a schema change inside the batch whose (id, name) field set
-        # differs from the current schema would misresolve the parent
-        # recovery — refuse with split guidance (the batch reader's
-        # rule)
-        cur_fields = {(f["id"], f["name"]) for f in schema_json["fields"]}
-        schemas_by_id = {s["schema-id"]: s for s in metadata["schemas"]}
-        for s in in_range:
-            s_id = s.get("schema-id")
-            if s_id is None or s_id == metadata["current-schema-id"]:
-                continue
-            sj = schemas_by_id.get(s_id)
-            if sj and {(f["id"], f["name"]) for f in sj["fields"]} \
-                    != cur_fields:
-                raise ValueError(
-                    "icebergstream changelog: the table schema changed "
-                    f"at snapshot {s['snapshot-id']}, inside this "
-                    "micro-batch — restart the stream from a fresh "
-                    "checkpoint after the change, or consume the "
-                    "pre-change history with the batch "
-                    "read_iceberg_changelog first"
-                )
+        check_interval(
+            metadata,
+            in_range,
+            "icebergstream changelog",
+            "this micro-batch",
+            "restart the stream from a fresh checkpoint after the "
+            "change, or consume the pre-change history with the batch "
+            "read_iceberg_changelog first",
+            "restart from a fresh checkpoint",
+        )
         field_name = {f["id"]: f["name"] for f in schema_json["fields"]}
-        specs_by_id = {
-            s["spec-id"]: s for s in metadata.get("partition-specs", [])
-        }
-        retained = {s["snapshot-id"] for s in metadata.get("snapshots", [])}
-
-        def _eq_scopes(d: dict) -> list[tuple[str, str]]:
-            """(source_col, scope_value_str) per non-null scope entry
-            of equality delete ``d``, resolved through the delete
-            file's own spec. Identity transforms only — a
-            transform-scoped delete (bucket/truncate/day...) cannot be
-            re-evaluated here without the JVM expression library, so
-            it refuses with guidance rather than over- or
-            under-deleting."""
-            scopes: list[tuple[str, str]] = []
-            spec_d = specs_by_id.get(d.get("spec_id", 0))
-            for sc, v in sorted((d.get("partition") or {}).items()):
-                if v is None:
-                    continue  # null scope component = global
-                pf = None
-                if spec_d:
-                    pf = next(
-                        (
-                            f
-                            for f in spec_d["fields"]
-                            if (
-                                f.get("name")
-                                or field_name.get(f["source-id"])
-                            )
-                            == sc
-                        ),
-                        None,
-                    )
-                if pf is None:
-                    if sc not in self.part_cols:
-                        # the batch reader's rule (iceberg_import.
-                        # equality_delete_scope_expr): an unresolvable
-                        # scope field must refuse — matching a guessed
-                        # column would silently under- or over-delete
-                        raise ValueError(
-                            "icebergstream changelog: equality delete "
-                            f"{d['path']} is scoped to partition field "
-                            f"{sc!r} not present in its spec "
-                            f"{d.get('spec_id')} — refusing to apply "
-                            "the delete globally"
-                        )
-                    src = sc  # identity column of the current spec
-                elif pf["transform"] == "identity":
-                    src = field_name.get(pf["source-id"], sc)
-                else:
-                    raise ValueError(
-                        "icebergstream changelog: equality delete "
-                        f"{d['path']} is scoped to TRANSFORM partition "
-                        f"field {sc!r} ({pf['transform']}) — not "
-                        "evaluable in the stream reader; use the batch "
-                        "read_iceberg_changelog for this table"
-                    )
-                scopes.append((src, str(v)))
-            return scopes
 
         def _op(s: dict) -> str:
             return (s.get("summary") or {}).get("operation", "append")
 
         def _eq_entry(d: dict) -> tuple:
+            scopes = []
+            for sc, v in sorted(d["partition"].items()):
+                if v is not None:  # null scope component = global
+                    src, tf, ice_t = resolve_delete_scope(
+                        metadata, schema_json, d, sc
+                    )
+                    scopes.append((src, tf, ice_t, scope_literal(tf, v)))
             return (
                 norm_file_ref(d["path"], self.root),
                 [field_name[i] for i in d["equality_ids"]],
-                _eq_scopes(d),
+                scopes,
             )
 
         parts: list[_ChangeSplit] = []
@@ -499,13 +406,6 @@ class IcebergStreamReader(DataSourceStreamReader):
                 # branch below. The replace's file set stays cached:
                 # it IS the next snapshot's parent state.
                 continue
-            if parent_id is not None and parent_id not in retained:
-                raise ValueError(
-                    f"icebergstream changelog: snapshot {sid}'s parent "
-                    f"{parent_id} was expired — changes before the "
-                    "oldest retained ancestry are not reconstructible; "
-                    "restart from a fresh checkpoint"
-                )
             if parent_id is None:
                 if lo > 0:
                     raise ValueError(
@@ -730,6 +630,10 @@ class IcebergStreamReader(DataSourceStreamReader):
             return
         import pyarrow.parquet as pq
 
+        from incubator_gobblin_spark.functions.iceberg_transforms import (
+            transform_py,
+        )
+
         table = pq.read_table(part.path)
         n = table.num_rows
         cols = self._columns(
@@ -761,19 +665,25 @@ class IcebergStreamReader(DataSourceStreamReader):
                     continue
                 row_keys = [cols.get(c, [None] * n) for c in key_cols]
                 scope_vals = [
-                    (cols.get(src, [None] * n), sval)
-                    for src, sval in scopes
+                    (cols.get(src, [None] * n), tf, ice_t,
+                     str(lit) if tf == "identity" else lit)
+                    for src, tf, ice_t, lit in scopes
                 ]
                 for i in range(n):
                     if tuple(rk[i] for rk in row_keys) not in keys:
                         continue
-                    # identity partition scope: every component must
-                    # match (None row value never matches a scope)
-                    in_scope = all(
-                        vals[i] is not None and str(vals[i]) == sval
-                        for vals, sval in scope_vals
-                    )
-                    if in_scope:
+                    # every scope component must match (a null row
+                    # value never matches a scope)
+                    if all(
+                        vals[i] is not None
+                        and (
+                            str(vals[i])
+                            if tf == "identity"
+                            else transform_py(tf, vals[i], ice_t)
+                        )
+                        == want
+                        for vals, tf, ice_t, want in scope_vals
+                    ):
                         hits.add(i)
             return hits
 

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from incubator_gobblin_spark.functions.iceberg_transforms import (  # noqa: E402
+    bucket_py,
+)
 from incubator_gobblin_spark.session import load_table  # noqa: E402
 from incubator_gobblin_spark.sinks.iceberg_delete import (  # noqa: E402
     delete_iceberg_rows,
@@ -399,29 +402,17 @@ def test_replicate_window_caps_validate(spark, sf_dir, tmp_path):
         )
 
 
-def test_changelog_stream_refuses_transform_scoped_eq_delete(
-    spark, sf_dir, tmp_path
-):
-    """A TRANSFORM-scoped equality delete (truncate[100] bucket, the
-    q139 shape) cannot be re-evaluated inside the pure-Python stream
-    reader — the stream must refuse with guidance to the batch
-    changelog (which evaluates the transform JVM-side and succeeds)
-    rather than over- or under-deleting."""
+def _transform_scoped_table(spark, sf_dir, root, spec_field):
+    """An unpartitioned documents table (s0) whose default spec is
+    then rewritten to ``spec_field`` over ``doc_id``, the way a foreign
+    writer with hidden partitioning declares it (the data files keep
+    every source column)."""
     import json
 
     from incubator_gobblin_spark.sinks.files import FileSink, TableType
-    from incubator_gobblin_spark.sinks.iceberg_export import (
-        _metadata_versions,
-        append_equality_deletes,
-    )
-    from incubator_gobblin_spark.sources.iceberg_changelog import (
-        read_iceberg_changelog,
-    )
-    from incubator_gobblin_spark.sources.iceberg_import import (
-        current_metadata,
-    )
+    from incubator_gobblin_spark.sinks.iceberg_export import _metadata_versions
+    from incubator_gobblin_spark.sources.iceberg_import import current_metadata
 
-    root = str(tmp_path / "tscope")
     sink = FileSink(
         path=root, commit_mode="manifest", table_type=TableType.APPEND_ONLY
     )
@@ -429,55 +420,129 @@ def test_changelog_stream_refuses_transform_scoped_eq_delete(
     sink.write_staging(docs, "base")
     sink.publish("base")
     sink.export_iceberg()  # s0
-    meta_dir = os.path.join(root, "metadata")
-    meta = current_metadata(root)
     key_id = next(
-        f["id"] for f in meta["schemas"][0]["fields"]
+        f["id"] for f in current_metadata(root)["schemas"][0]["fields"]
         if f["name"] == "doc_id"
     )
-    v = _metadata_versions(meta_dir)[-1]
-    mpath = os.path.join(meta_dir, f"v{v}.metadata.json")
-    mjson = json.load(open(mpath))
-    mjson["partition-specs"][0]["fields"] = [{
-        "name": "doc_trunc", "transform": "truncate[100]",
-        "source-id": key_id, "field-id": 1000,
-    }]
-    json.dump(mjson, open(mpath, "w"))
-    keys = [
+    meta_dir = os.path.join(root, "metadata")
+    mpath = os.path.join(
+        meta_dir, f"v{_metadata_versions(meta_dir)[-1]}.metadata.json"
+    )
+    with open(mpath) as fh:
+        mjson = json.load(fh)
+    mjson["partition-specs"][0]["fields"] = [
+        {**spec_field, "source-id": key_id, "field-id": 1000}
+    ]
+    with open(mpath, "w") as fh:
+        json.dump(mjson, fh)
+    return docs, mpath
+
+
+@pytest.mark.parametrize(
+    "transform,scope_of",
+    [
+        ("truncate[100]", lambda k: k - k % 100),
+        ("bucket[16]", lambda k: bucket_py(k, 16, "long")),
+    ],
+    ids=["truncate", "bucket"],
+)
+def test_changelog_stream_transform_scoped_eq_delete_matches_batch(
+    spark, sf_dir, tmp_path, transform, scope_of
+):
+    """A TRANSFORM-scoped equality delete (the q139 shape) streams the
+    same change rows as the batch changelog: the stream resolves the
+    scope through the shared resolver and evaluates the transform per
+    row in Python, killing only the keys inside the scope."""
+    from incubator_gobblin_spark.sinks.iceberg_export import (
+        append_equality_deletes,
+    )
+    from incubator_gobblin_spark.sources.iceberg_changelog import (
+        read_iceberg_changelog,
+    )
+
+    root = str(tmp_path / "tscope")
+    docs, _ = _transform_scoped_table(
+        spark, sf_dir, root, {"name": "doc_part", "transform": transform}
+    )
+    keys = sorted(
         int(r.doc_id)
         for r in docs.filter("doc_id % 10 = 0").select("doc_id").collect()
-    ]
+    )
+    scope = scope_of(keys[len(keys) // 2])
     append_equality_deletes(
         root,
-        [{"doc_id": k} for k in sorted(keys)],
+        [{"doc_id": k} for k in keys],
         ["doc_id"],
-        partition_scope={"doc_trunc": 300},
+        partition_scope={"doc_part": scope},
     )  # s1
 
-    # batch face succeeds (JVM transform evaluation)
-    s0 = next(
-        s["snapshot-id"]
-        for s in current_metadata(root)["snapshots"]
-        if s.get("parent-snapshot-id") is None
-    )
-    ch = read_iceberg_changelog(spark, root, s0)
-    want = {k for k in keys if k - k % 100 == 300}
-    assert {r.doc_id for r in ch.collect()} == want
+    batch = read_iceberg_changelog(spark, root, None)
+    want = {k for k in keys if scope_of(k) == scope}
+    assert 0 < len(want) < len(keys)
+    assert {
+        r.doc_id for r in batch.filter("_change_type = 'delete'").collect()
+    } == want
 
-    # stream face refuses with guidance
     register(spark)
-    q = (
-        spark.readStream.format("icebergstream")
-        .option("path", root)
-        .option("readchangefeed", "true")
-        .load()
-        .writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    out = str(tmp_path / "out")
+    _drain(spark, root, out, str(tmp_path / "ckpt"))
+    got = spark.read.parquet(out).select(*CHANGE_COLS)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, batch.select(*CHANGE_COLS).collect())
     )
-    with pytest.raises(Exception, match="TRANSFORM partition field"):
-        q.awaitTermination(120)
+
+
+@pytest.mark.parametrize("case", ["unknown_transform", "field_not_in_spec"])
+def test_changelog_stream_refuses_unresolvable_scope(
+    spark, sf_dir, tmp_path, case
+):
+    """An equality delete whose scope cannot be resolved — a transform
+    this engine cannot evaluate, or a field its own spec does not name
+    — refuses in the stream exactly as in the batch reader: applying
+    it globally would over-delete."""
+    import json
+
+    from incubator_gobblin_spark.sinks.iceberg_export import (
+        append_equality_deletes,
+    )
+    from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
+    from incubator_gobblin_spark.sources.iceberg_stream import (
+        IcebergStreamReader,
+        _table_schema,
+    )
+
+    root = str(tmp_path / "badscope")
+    transform = "zorder[2]" if case == "unknown_transform" else "truncate[100]"
+    _, mpath = _transform_scoped_table(
+        spark, sf_dir, root, {"name": "doc_part", "transform": transform}
+    )
+    append_equality_deletes(
+        root, [{"doc_id": 0}], ["doc_id"], partition_scope={"doc_part": 7}
+    )  # s1
+    if case == "field_not_in_spec":
+        # the delete file's spec (id 0) stops naming its scope field
+        from incubator_gobblin_spark.sinks.iceberg_export import (
+            _metadata_versions,
+        )
+
+        meta_dir = os.path.dirname(mpath)
+        mpath = os.path.join(
+            meta_dir, f"v{_metadata_versions(meta_dir)[-1]}.metadata.json"
+        )
+        with open(mpath) as fh:
+            mjson = json.load(fh)
+        mjson["partition-specs"][0]["fields"][0]["name"] = "renamed"
+        with open(mpath, "w") as fh:
+            json.dump(mjson, fh)
+
+    with pytest.raises(ValueError, match="over-delete"):
+        read_iceberg(spark, root).collect()
+    schema, part_cols, part_types = _table_schema(root)
+    reader = IcebergStreamReader(
+        {"path": root, "readchangefeed": "true"}, schema, part_cols, part_types
+    )
+    with pytest.raises(ValueError, match="over-delete"):
+        reader.partitions({"seq": 0}, reader.latestOffset())
 
 
 def test_changelog_stream_mid_stream_expired_parent_refuses(

@@ -532,6 +532,29 @@ def test_merge_into_upsert_insert_delete(spark, sf_dir, tmp_path):
     assert old.filter(F.col("o_orderkey").isin(del_keys)).count() == len(del_keys)
 
 
+def test_merge_into_keeps_the_lake_partition_layout(spark, tmp_path):
+    """A run's partition layout comes from the lake's head manifest,
+    not from the sink's constructor: a merge through a sink built
+    without ``partition_by`` on a lake partitioned by ``p`` still lays
+    its run out by ``p`` and records it, so ``read_committed`` keeps
+    ``p`` for every run. A sink whose own layout differs refuses."""
+    def rows(lo, hi, sign):
+        return spark.range(lo, hi).selectExpr(
+            "id", f"CAST({sign} * id AS DOUBLE) AS v", "concat('k', id % 2) AS p"
+        )
+
+    lake = _sink(tmp_path / "lake", partition_by=["p"])
+    lake.write_staging(rows(0, 20, 1), "base")
+    lake.publish("base")
+    plain = _sink(tmp_path / "lake")
+    plain.merge_into(spark, rows(15, 25, -1), on=["id"], run_id="m1")
+    assert plain.current_manifest()["partition_by"] == ["p"]
+    got = {tuple(r) for r in plain.read_committed(spark).select("id", "v", "p").collect()}
+    assert got == {tuple(r) for r in rows(0, 15, 1).union(rows(15, 25, -1)).collect()}
+    with pytest.raises(ValueError, match=r"\['v'\].*\['p'\]"):
+        _sink(tmp_path / "lake", partition_by=["v"]).write_staging(rows(0, 1, 1), "m2")
+
+
 def test_merge_into_partitioned_touches_one_partition(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")

@@ -210,8 +210,21 @@ def test_directories_keep_inference(spark, tmp_path, monkeypatch):
 
 # ---- plan-build budget ------------------------------------------------------
 
+# the changelog builds over q151's cached 4-snapshot fixture: 741 and
+# 745 commands measured at sf0.001 (2,392 and 2,688 before the delete
+# planner and the SQL-text projections), budgets ~10% above
+BUDGET_Q151 = 820
+BUDGET_Q152 = 820
+
+
 @pytest.mark.parametrize(
-    "name,budget", [("q99_pq_topk", 250), ("q31_minhash_candidates", 1000)]
+    "name,budget",
+    [
+        ("q99_pq_topk", 250),
+        ("q31_minhash_candidates", 1000),
+        ("q151_iceberg_changelog_agg", BUDGET_Q151),
+        ("q152_iceberg_changelog_updates_agg", BUDGET_Q152),
+    ],
 )
 def test_generated_build_py4j_budget(spark, sf_dir, name, budget):
     from perfbench.tracing import Tracer  # counts as the benchmark does
@@ -334,20 +347,34 @@ def test_read_delta_with_deletion_vectors_starts_no_spark_job(
     assert df.select(*data.columns).orderBy("id").collect() == want.orderBy("id").collect()
 
 
-def test_read_iceberg_with_deletes_starts_no_spark_job(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("reader", ["read_iceberg", "read_iceberg_changelog"])
+def test_read_iceberg_with_deletes_starts_no_spark_job(
+    spark, tmp_path, monkeypatch, reader
+):
     from incubator_gobblin_spark.sinks.iceberg_delete import delete_iceberg_rows
     from incubator_gobblin_spark.sinks.iceberg_export import append_equality_deletes
+    from incubator_gobblin_spark.sources.iceberg_changelog import (
+        read_iceberg_changelog,
+    )
     from incubator_gobblin_spark.sources.iceberg_import import read_iceberg
 
     sink, data = _manifest_lake(spark, str(tmp_path / "lake"), partition_by=["p"])
     sink.export_iceberg()
     assert delete_iceberg_rows(spark, sink.path, "id % 7 = 3")["delete_files"] >= 1
     append_equality_deletes(sink.path, [{"id": 5}, {"id": 401}], ["id"])
-    df = _no_job_parity(
-        monkeypatch, spark, lambda: read_iceberg(spark, sink.path), "id"
+    dead = "id % 7 = 3 OR id IN (5, 401)"
+    if reader == "read_iceberg":
+        build, key, want = lambda: read_iceberg(spark, sink.path), "id", data.filter(f"NOT ({dead})")
+    else:
+        # from the first snapshot: every row inserted, then each delete
+        # commit's kills
+        build = lambda: read_iceberg_changelog(spark, sink.path, None)  # noqa: E731
+        key = ["id", "_change_ordinal"]
+        want = data.unionByName(data.filter(dead))
+    df = _no_job_parity(monkeypatch, spark, build, key)
+    assert df.select(*data.columns).orderBy(*data.columns).collect() == (
+        want.orderBy(*data.columns).collect()
     )
-    want = data.filter("id % 7 != 3 AND id NOT IN (5, 401)")
-    assert df.select(*data.columns).orderBy("id").collect() == want.orderBy("id").collect()
 
 
 def test_non_parquet_and_evolving_lakes_keep_inference(spark, tmp_path, monkeypatch):
