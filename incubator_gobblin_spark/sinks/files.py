@@ -1227,7 +1227,7 @@ class FileSink:
                 (F.col(op_col) != delete_value) | F.col(op_col).isNull()
             ).drop(op_col)
         # The merge evaluates the source lineage several times
-        # (emptiness probe, key bounds, touched-file semi-join, the
+        # (row count and key bounds, touched-file semi-join, the
         # staged write — plus the CDF sidecar, plus every conflict
         # retry): persist the parent frame once so an expensive
         # upstream plan (a multi-join CDC extraction) is computed once,
@@ -1325,7 +1325,18 @@ class FileSink:
         rid: str,
         matched: str = "replace",
     ) -> str:
-        if source.isEmpty():
+        # the source keys, with duplicates: every join below is a
+        # semi/anti join, which ignores them
+        src_keys = source.select(*on)
+        # one 1-row collect: the row count and [min, max] per key column
+        # for driver-side stats pruning — a SUPERSET of files that can
+        # match; correctness never depends on it
+        bounds = src_keys.agg(
+            F.count(F.lit(1)).alias("__rows"),
+            *[F.min(k).alias(f"lo_{k}") for k in on],
+            *[F.max(k).alias(f"hi_{k}") for k in on],
+        ).collect()[0]
+        if bounds["__rows"] == 0:
             # an empty CDC batch is a semantic no-op: without this guard
             # the empty key bounds would match EVERY candidate group
             # (O(live) metadata reads) and commit an empty run
@@ -1337,14 +1348,6 @@ class FileSink:
             self._publish_manifest(rid, expected_ptr=ptr0)
             return rid
 
-        src_keys = source.select(*on).distinct()
-        # driver-side stats pruning: [min, max] per key column (a 1-row
-        # collect) — a SUPERSET of files that can match; correctness
-        # never depends on it
-        bounds = src_keys.agg(
-            *[F.min(k).alias(f"lo_{k}") for k in on],
-            *[F.max(k).alias(f"hi_{k}") for k in on],
-        ).collect()[0]
         filters = []
         for k in on:
             lo, hi = bounds[f"lo_{k}"], bounds[f"hi_{k}"]

@@ -53,7 +53,9 @@ from incubator_gobblin_spark.sources.files import scan_files
 #: vacuumed) must not OOM the broadcast. Binds every Delta DV anti-join
 #: (:func:`anti_join_dvs` — the snapshot read, DELETE/MERGE CDF
 #: staging, OPTIMIZE, the CDF read) and the Iceberg position-delete
-#: joins.
+#: joins. For Delta it also chooses where the vectors decode: on the
+#: driver within the cap (the broadcast holds them there anyway), in an
+#: executor ``mapInPandas`` past it.
 TOMBSTONE_BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -63,14 +65,14 @@ def materialize_small(df):
 
     Catalyst's ``PushdownLeftSemiAntiJoin`` pushes a semi/anti join
     below a Union, copying the BUILD side into every arm — for the
-    lake readers that means the tombstone/delete-key subtree (DV
-    decode ``mapInPandas``, delete-file parquet scans) re-executes
-    once per partition-group arm. ``localCheckpoint`` truncates the
-    lineage to the computed blocks, so the copies degenerate to reads
-    of the same small RDD and AQE's exchange reuse collapses the
-    broadcasts. LAZY on purpose: an eager checkpoint would run one
-    extra Spark job per delete group at plan-construction time (a
-    measurable fixed cost on small reads), while the lazy form
+    lake readers that means the tombstone/delete-key subtree (the
+    past-cap DV decode ``mapInPandas``, delete-file parquet scans)
+    re-executes once per partition-group arm. ``localCheckpoint``
+    truncates the lineage to the computed blocks, so the copies
+    degenerate to reads of the same small RDD and AQE's exchange reuse
+    collapses the broadcasts. LAZY on purpose: an eager checkpoint
+    would run one extra Spark job per delete group at plan-construction
+    time (a measurable fixed cost on small reads), while the lazy form
     computes inside the first consuming job and every later reference
     shares the same RDD blocks. So no exchange (``repartition``,
     ``distinct``, a shuffle join) may sit under it: under AQE even the
@@ -865,25 +867,79 @@ def anti_join_dvs(spark: SparkSession, df: DataFrame, path: str, adds) -> DataFr
     carrying a ``deletionVector`` count. Returns exactly ``df``'s
     columns — ``df`` itself when no action carries a vector.
 
-    Each bitmap decodes EXECUTOR-side, one task per vector up to 64
-    (the driver never holds O(deleted rows)), ONCE: the tombstones are
-    materialized (:func:`materialize_small`) so a semi/anti pushdown
-    below a partition union does not re-run the decode per arm. They
-    are broadcast while the summed descriptor ``cardinality`` is at
-    most ``TOMBSTONE_BROADCAST_MAX_ROWS``, shuffle-joined past it."""
+    The summed descriptor ``cardinality`` (metadata, no job) picks one
+    of two paths:
+
+    - at most ``TOMBSTONE_BROADCAST_MAX_ROWS``: every bitmap decodes on
+      the DRIVER into one local row per vector (``_del_path``,
+      ``_del_pos`` array), exploded in the plan and broadcast. A
+      broadcast collects every tombstone on the driver anyway, so this
+      holds nothing more there; the frame is a ``LocalRelation``, so
+      building it starts no Spark job and neither join side starts a
+      Python worker. One row per vector, not per position: with 500k
+      tombstones a flat local relation builds slower than the
+      executor decode.
+    - past the cap: each bitmap decodes EXECUTOR-side in an Arrow
+      ``mapInPandas``, one task per vector up to 64, so the driver
+      never holds O(deleted rows); the tombstones are materialized
+      once (:func:`materialize_small`, so a semi/anti pushdown below a
+      partition union does not re-run the decode per arm) and
+      shuffle-joined.
+
+    Both give the same rows."""
     dvs = [a for a in adds if a.get("deletionVector")]
     if not dvs:
         return df
+    table_root = os.path.abspath(path)
+    paths = [os.path.abspath(add_file_path(path, a["path"])) for a in dvs]
+    cardinality = sum(int(a["deletionVector"].get("cardinality") or 0) for a in dvs)
+    if cardinality <= TOMBSTONE_BROADCAST_MAX_ROWS:
+        tombs = F.broadcast(_driver_tombstones(spark, table_root, paths, dvs))
+    else:
+        tombs = _executor_tombstones(spark, table_root, paths, dvs)
+    # the scan's _metadata.file_path is a percent-encoded URI while
+    # _del_path is a decoded abspath — decode before comparing, or a
+    # path with a space/'+'/'%' silently resurrects its deleted rows
+    return df.withColumn(
+        "_dv_norm_path", decoded_file_path("_file_path")
+    ).join(
+        tombs,
+        (F.col("_dv_norm_path") == F.col("_del_path"))
+        & (F.col("_row_index") == F.col("_del_pos")),
+        "left_anti",
+    ).select(*df.columns)
+
+
+def _driver_tombstones(spark: SparkSession, table_root: str, paths, dvs) -> DataFrame:
+    """``(_del_path, _del_pos)`` of every vector, decoded here into a
+    local relation of one row per vector and exploded in the plan."""
+    import pyarrow as pa
+
+    from incubator_gobblin_spark.formats.deletion_vectors import read_dv_positions
+
+    table = pa.table(
+        {
+            "_del_path": pa.array(paths, pa.string()),
+            "_del_pos": pa.array(
+                [read_dv_positions(table_root, a["deletionVector"]) for a in dvs],
+                pa.list_(pa.int64()),
+            ),
+        }
+    )
+    return spark.createDataFrame(
+        table, "_del_path string, _del_pos array<bigint>"
+    ).selectExpr("_del_path", "explode(_del_pos) AS _del_pos")
+
+
+def _executor_tombstones(spark: SparkSession, table_root: str, paths, dvs) -> DataFrame:
+    """``(_del_path, _del_pos)`` of every vector, decoded in one
+    executor task per vector (up to 64) and materialized once."""
     from incubator_gobblin_spark.sources.mock_kafka import _ship_package
 
     _ship_package(spark)
-    table_root = os.path.abspath(path)
     # built already split into its decode tasks: a repartition here
     # would be an exchange under materialize_small
-    rows = [
-        (os.path.abspath(add_file_path(path, a["path"])), json.dumps(a["deletionVector"]))
-        for a in dvs
-    ]
+    rows = [(p, json.dumps(a["deletionVector"])) for p, a in zip(paths, dvs)]
     desc_df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, min(len(dvs), 64)),
         "_del_path string, _dv string",
@@ -906,23 +962,9 @@ def anti_join_dvs(spark: SparkSession, df: DataFrame, path: str, adds) -> DataFr
                         {"_del_path": p, "_del_pos": pd.Series(poss, dtype="int64")}
                     )
 
-    tombs = materialize_small(
+    return materialize_small(
         desc_df.mapInPandas(expand, "_del_path string, _del_pos long")
     )
-    cardinality = sum(int(a["deletionVector"].get("cardinality") or 0) for a in dvs)
-    if cardinality <= TOMBSTONE_BROADCAST_MAX_ROWS:
-        tombs = F.broadcast(tombs)
-    # the scan's _metadata.file_path is a percent-encoded URI while
-    # _del_path is a decoded abspath — decode before comparing, or a
-    # path with a space/'+'/'%' silently resurrects its deleted rows
-    return df.withColumn(
-        "_dv_norm_path", decoded_file_path("_file_path")
-    ).join(
-        tombs,
-        (F.col("_dv_norm_path") == F.col("_del_path"))
-        & (F.col("_row_index") == F.col("_del_pos")),
-        "left_anti",
-    ).select(*df.columns)
 
 
 def assemble_snapshot(

@@ -246,13 +246,19 @@ def scan_files(
         reader = reader.schema(schema)
     if base_path is not None:
         reader = reader.option("basePath", base_path)
+    # pyspark hands a path list over one py4j command per path; one
+    # NUL-joined string (no path contains NUL) split by the JVM keeps
+    # the count constant in the number of files
+    paths = getattr(spark._jvm, "org.apache.commons.lang3.StringUtils").split(
+        "\0".join(files), "\0"
+    )
     with _LISTING_LOCK:
         prev = spark.conf.get(_LISTING_CONF)
         if len(files) <= int(prev):
-            return reader.load(files)
+            return reader._df(reader._jreader.load(paths))
         spark.conf.set(_LISTING_CONF, str(len(files)))
         try:
-            return reader.load(files)
+            return reader._df(reader._jreader.load(paths))
         finally:
             spark.conf.set(_LISTING_CONF, prev)
 

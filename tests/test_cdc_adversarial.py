@@ -34,11 +34,17 @@ pytestmark = pytest.mark.slow
 CDF_CONF = {"delta.enableChangeDataFeed": "true"}
 
 
-def test_cdf_derives_remove_of_dv_carrying_file(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("cap", [None, 0], ids=["broadcast", "shuffle"])
+def test_cdf_derives_remove_of_dv_carrying_file(spark, sf_dir, tmp_path, monkeypatch, cap):
     """A cdc-less commit that REMOVES a file carrying a standing DV
     (foreign whole-file delete): the derived CDF deletes must be the
     file's LIVE rows — emitting the DV-dead positions too would
-    resurrect already-reported deletes downstream."""
+    resurrect already-reported deletes downstream. cap=0 decodes the
+    vector on executors and shuffle-joins it; the rows must not change."""
+    from incubator_gobblin_spark.sources import delta_import
+
+    if cap is not None:
+        monkeypatch.setattr(delta_import, "TOMBSTONE_BROADCAST_MAX_ROWS", cap)
     from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows
     from incubator_gobblin_spark.sinks.delta_maintenance import (
         write_delta_table,

@@ -34,6 +34,7 @@ from incubator_gobblin_spark.sinks.delta_maintenance import (  # noqa: E402
 from incubator_gobblin_spark.sources.delta_cdf import (  # noqa: E402
     read_delta_changes,
 )
+from incubator_gobblin_spark.sources import delta_import  # noqa: E402
 from incubator_gobblin_spark.sources.delta_import import (  # noqa: E402
     read_delta,
 )
@@ -115,10 +116,22 @@ def test_engine_cdf_merge_delete_roundtrip(spark, sf_dir, tmp_path):
     assert _rows(last, cols[:3]) == _rows(final, cols[:3])
 
 
-def test_cdf_delete_skips_already_dv_dead_rows(spark, sf_dir, tmp_path):
+# cap=0: the DV anti-join decodes the standing vectors on executors and
+# shuffle-joins them instead of decoding them on the driver and
+# broadcasting them; the change set must not change
+CAPS = pytest.mark.parametrize(
+    "cap",
+    [delta_import.TOMBSTONE_BROADCAST_MAX_ROWS, 0],
+    ids=["broadcast", "shuffle"],
+)
+
+
+@CAPS
+def test_cdf_delete_skips_already_dv_dead_rows(spark, sf_dir, tmp_path, monkeypatch, cap):
     """The second DELETE's change set must exclude rows the first
     DELETE already killed — re-reporting them would double-count in
     any downstream replication."""
+    monkeypatch.setattr(delta_import, "TOMBSTONE_BROADCAST_MAX_ROWS", cap)
     root = str(tmp_path / "cdf2")
     nat = load_table(spark, sf_dir, "nation")
     write_delta_table(spark, nat, root, configuration=CDF_CONF, coalesce_output=False)
@@ -130,6 +143,36 @@ def test_cdf_delete_skips_already_dv_dead_rows(spark, sf_dir, tmp_path):
     got = sorted(r.n_nationkey for r in ch.collect())
     assert got == [7]
     assert ch.select("_change_type").distinct().collect()[0][0] == "delete"
+
+
+@CAPS
+def test_cdf_merge_preimage_skips_dv_dead_rows(spark, sf_dir, tmp_path, monkeypatch, cap):
+    """A MERGE over standing deletion vectors reports as preimages only
+    the matched rows still live; a source key whose row a DELETE
+    already killed is an insert."""
+    monkeypatch.setattr(delta_import, "TOMBSTONE_BROADCAST_MAX_ROWS", cap)
+    root = str(tmp_path / "cdf_merge_dv")
+    nat = load_table(spark, sf_dir, "nation")
+    write_delta_table(spark, nat, root, configuration=CDF_CONF, coalesce_output=False)
+    delete_delta_rows(spark, root, "n_nationkey % 2 = 0")  # v1
+    source = nat.filter("n_nationkey BETWEEN 1 AND 6").withColumn(
+        "n_regionkey", F.col("n_regionkey") + 10
+    )
+    merge_delta_rows(spark, root, source, on="n_nationkey")  # v2
+
+    v2 = read_delta_changes(spark, root, 2, 2)
+    kinds = {}
+    for r in v2.collect():
+        kinds.setdefault(r._change_type, []).append(r.n_nationkey)
+    assert {k: sorted(v) for k, v in kinds.items()} == {
+        "update_preimage": [1, 3, 5],
+        "update_postimage": [1, 3, 5],
+        "insert": [2, 4, 6],
+    }
+    assert _rows(read_delta(spark, root), nat.columns) == _rows(
+        nat.filter("n_nationkey % 2 = 1 AND n_nationkey > 6").unionByName(source),
+        nat.columns,
+    )
 
 
 def test_cdf_overwrite_and_append_derive(spark, sf_dir, tmp_path):

@@ -40,9 +40,9 @@ def _docs(spark, sf_dir):
 
 
 def test_read_delta_dv_decode_not_in_query_plan(spark, sf_dir, tmp_path):
-    """The DV bitmap decode must run once at read construction
-    (materialized tombstones), never as a per-union-arm MapInPandas
-    inside the query plan."""
+    """The DV bitmap decode must run once at read construction (on the
+    driver within the broadcast cap), never as a per-union-arm
+    MapInPandas inside the query plan."""
     from incubator_gobblin_spark.sinks.delta_delete import delete_delta_rows
     from incubator_gobblin_spark.sinks.delta_maintenance import (
         write_delta_table,
@@ -55,7 +55,7 @@ def test_read_delta_dv_decode_not_in_query_plan(spark, sf_dir, tmp_path):
     plan = _formatted(read_delta(spark, root))
     assert "MapInPandas" not in plan, (
         "DV decode re-entered the query plan (pushdown duplication): "
-        "decode once via materialize_small"
+        "decode once, at construction"
     )
     # the anti-join itself must still be there, broadcast-built
     assert "LeftAnti" in plan

@@ -102,15 +102,15 @@ MAP_IN_PANDAS_BY_DESIGN = {
 }
 
 # Deletion-vector decode is a binary roaring-bitmap codec (Python-
-# library territory, like the multimodal codecs): one Arrow
-# mapInPandas task per DV builds the TOMBSTONE side only — the data
-# row path stays whole-stage codegen + broadcast anti-join. Since the
-# round-13 optimization the decode runs ONCE at read construction
-# (delta_import.materialize_small, so Catalyst's anti-join pushdown
-# through the partition-group union cannot re-execute it per arm) —
-# the final query plan therefore shows NO Python node at all; the
-# single-decode shape is pinned by
-# tests/test_optimization_shapes.py::test_read_delta_dv_decode_not_in_query_plan.
+# library territory, like the multimodal codecs). It builds the
+# TOMBSTONE side only — the data row path stays whole-stage codegen +
+# broadcast anti-join. Within TOMBSTONE_BROADCAST_MAX_ROWS (every
+# fixture here) the bitmaps decode on the driver while the read is
+# built, into a local relation of one row per vector that the plan
+# explodes and broadcasts (delta_import.anti_join_dvs): the query plan
+# shows a LocalTableScan and NO Python node at all. Past the cap the
+# decode is an executor mapInPandas, materialized once; both shapes are
+# pinned by tests/test_plan_build.py::test_read_delta_decodes_vectors_by_cap.
 DV_DECODE_MATERIALIZED = {
     "q131_delta_dv_agg",
     # same tombstone-decode contract reading back the engine's OWN
@@ -157,13 +157,14 @@ def test_python_by_necessity_is_arrow_batched(spark, sf_dir):
         assert "BatchEvalPython" not in plan, f"{name} is row-at-a-time Python"
         assert "MapInPandas" in plan, f"{name} should be an Arrow mapInPandas stage"
     for name in DV_DECODE_MATERIALIZED:
-        # the decode happened once at construction: the query plan must
-        # show NO Python node (the anti-join reads the materialized RDD)
+        # the decode happened on the driver at construction: the query
+        # plan must show NO Python node (the anti-join reads a local
+        # relation)
         plan = _plan(Q.queries()[name](spark, sf_dir))
         for node in _PY_NODES:
             assert node not in plan, f"{name} re-entered Python ({node})"
-        assert "Scan ExistingRDD" in plan, (
-            f"{name} should anti-join a materialized tombstone frame"
+        assert "LocalTableScan" in plan, (
+            f"{name} should anti-join a driver-decoded tombstone relation"
         )
 
 
